@@ -10,6 +10,8 @@ and never a silently duplicated output column."""
 
 from __future__ import annotations
 
+from pathlib import Path
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -250,3 +252,18 @@ def test_shared_helper_is_the_enforcement_path(
     assert calls, (f"{mod_name} raised without going through "
                    "_contracts.require_free_columns — local copy "
                    "reintroduced?")
+
+
+def test_operators_round_scores_only_through_the_cosine_kernel():
+    """np.round rounds half to even, unlike the DuckDB oracle and
+    F.round, so a numpy kernel that calls it scores exact ties
+    differently from its oracle. Numpy rounding lives in one place,
+    functions/vectors.py (_round_half_up, used by cosine_blocks)."""
+    import unilever_scraping_etl_spark.operators as operators
+
+    root = Path(operators.__file__).parent
+    hits = [f"{path.relative_to(root)}:{i}"
+            for path in sorted(root.rglob("*.py"))
+            for i, line in enumerate(path.read_text().splitlines(), 1)
+            if "np.round(" in line]
+    assert not hits, f"np.round under operators/: {hits}"

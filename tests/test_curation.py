@@ -16,6 +16,7 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
+from unilever_scraping_etl_spark.functions import vectors
 from unilever_scraping_etl_spark.operators import curation
 from unilever_scraping_etl_spark.plans.registry import QUERIES
 
@@ -243,32 +244,6 @@ def test_semdedup_matches_hand_fixture(spark):
     assert not out[3][2] and not out[4][2] and not out[5][2]
 
 
-def test_semdedup_gemm_rounds_half_up(spark):
-    """r16 ADVICE (medium): the GEMM kernel must round pair cosines
-    HALF_UP (away from zero — F.round's and the oracle's mode), not
-    numpy's default half-even. Pins the divergence case directly: a
-    pair cosine of exactly 0.25 (representable in binary) at
-    round_pair=1 rounds to 0.3 under HALF_UP (qualifying at
-    threshold 0.3) and to 0.2 under np.round (not qualifying)."""
-    import numpy as np
-
-    # Spark-side semantics we mirror:
-    assert spark.range(1).select(
-        F.round(F.lit(0.25), 1).alias("r")).first()["r"] == 0.3
-    assert float(np.round(0.25, 1)) == 0.2  # the bug this guards
-    got = curation._round_half_up(np.array([0.25, -0.25, 0.15, 1.0]), 1)
-    assert got.tolist() == [0.3, -0.3, 0.2, 1.0]  # 0.15 is not exact
-    # Kernel-level: dot = 1.0, carried norms 1.0 * 4.0 -> cos 0.25.
-    av = spark.createDataFrame(
-        [(1, 0, 0.9, [1.0, 0.0], 1.0), (2, 0, 0.1, [1.0, 0.0], 4.0)],
-        "vec_id long, cluster_id long, centroid_sim double, "
-        "__e array<double>, __n double")
-    removed = {r["vec_id"] for r in curation._semdedup_prune_gemm(
-        av, "vec_id", threshold=0.3, round_pair=1).collect()}
-    assert removed == {1}  # qualifies under HALF_UP; loser is the
-    # member closer to the centroid (keep-far rule)
-
-
 def test_semdedup_gemm_degenerate_inputs_match_expr(spark):
     """r16 ADVICE (low): degenerate vectors must behave identically in
     both pair kernels. NULL vectors null-propagate (their pairs never
@@ -307,7 +282,9 @@ def test_semdedup_gemm_blocked_path_matches(spark, monkeypatch):
     BLOCKED GEMM (bounded B x K pair-matrix slices, no O(K^2)
     allocation) and still reproduce the expression kernel exactly.
     Forces every vector into one cluster (n_seeds=1) and a tiny block
-    so the hot path is exercised, not whitelisted away."""
+    so the hot path is exercised, not whitelisted away. The block size
+    is read when the plan is built, so patching it on the driver
+    reaches the Python workers."""
     import random
 
     rng = random.Random(7)
@@ -317,12 +294,11 @@ def test_semdedup_gemm_blocked_path_matches(spark, monkeypatch):
         v = [x + rng.uniform(-0.02, 0.02) for x in base[i % 3]]
         rows.append((i, v))
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    monkeypatch.setenv("SPARK_GRAFT_SEMDEDUP_BLOCK", "16")
-    blocked = sorted(map(tuple, curation.semdedup(
+    whole = sorted(map(tuple, curation.semdedup(
         emb, "vec_id", "embedding", n_seeds=1, threshold=0.999,
         pairs="gemm").collect()))
-    monkeypatch.delenv("SPARK_GRAFT_SEMDEDUP_BLOCK")
-    whole = sorted(map(tuple, curation.semdedup(
+    monkeypatch.setattr(vectors, "COSINE_BLOCK_ROWS", 16)
+    blocked = sorted(map(tuple, curation.semdedup(
         emb, "vec_id", "embedding", n_seeds=1, threshold=0.999,
         pairs="gemm").collect()))
     expr = sorted(map(tuple, curation.semdedup(

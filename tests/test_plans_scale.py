@@ -544,15 +544,16 @@ def test_prefix_filter_jaccard_equals_naive(spark):
 
 
 def test_gemm_topk_equals_expression_topk(spark):
-    """The GEMM kernel must reproduce the expression-level brute force
-    exactly (rounded scores, id tiebreak)."""
+    """The GEMM kernel on a single grid cell (the whole corpus in one
+    cosine_blocks call) must reproduce the expression-level brute
+    force exactly (rounded scores, id tiebreak)."""
     from unilever_scraping_etl_spark.operators.similarity import (
-        brute_force_topk, brute_force_topk_gemm)
+        brute_force_topk, brute_force_topk_grid)
 
     emb = load_table(spark, SF_SMOKE, "embeddings")
     queries = emb.filter(F.col("vec_id") < 8)
     a = brute_force_topk(queries, emb, k=5)
-    b = brute_force_topk_gemm(queries, emb, k=5)
+    b = brute_force_topk_grid(queries, emb, k=5, n_blocks=1)
     assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
 
 
@@ -736,16 +737,18 @@ def test_upsert_snapshot_replaces_only_touched_partitions(spark, tmp_path):
                    (3, 33.0, "2024-01-02"), (4, 40.0, "2024-01-02")}
 
 
-def test_grid_gemm_pairs_equal_broadcast_gemm(spark):
-    # the distributed block-grid path (no driver collect, no corpus
-    # broadcast) must produce byte-identical pairs to the broadcast
-    # kernel — same float64 GEMM, same rounding, same orientation.
+def test_grid_gemm_pairs_equal_one_block_and_expression(spark):
+    # the 4-block grid (diagonal and off-diagonal cells) must produce
+    # the same pairs as the single cell — same float64 kernel, same
+    # rounding, same orientation — and as the expression pair join.
     emb = load_table(spark, SF_SMOKE, "embeddings")
-    bc = {tuple(r) for r in dedup.embedding_near_pairs_gemm(
-        emb, "vec_id", "embedding", threshold=0.4).collect()}
+    one = {tuple(r) for r in dedup.embedding_near_pairs_grid(
+        emb, "vec_id", "embedding", threshold=0.4, n_blocks=1).collect()}
     gr = {tuple(r) for r in dedup.embedding_near_pairs_grid(
         emb, "vec_id", "embedding", threshold=0.4, n_blocks=4).collect()}
-    assert bc == gr and len(gr) > 0
+    ex = {tuple(r) for r in dedup.embedding_near_pairs(
+        emb, "vec_id", "embedding", threshold=0.4).collect()}
+    assert one == gr == ex and len(gr) > 0
 
 
 def test_simhash_guard_identity_below_cap(spark):
@@ -907,16 +910,16 @@ def test_editdist_rejects_unkeyed_join(spark):
     assert "BroadcastNestedLoopJoin" not in plan
 
 
-def test_grid_topk_equals_broadcast_topk(spark):
+def test_grid_topk_equals_expression_topk(spark):
     from unilever_scraping_etl_spark.operators import similarity
 
     emb = load_table(spark, SF_SMOKE, "embeddings")
     qs = emb.filter(F.col("vec_id") < 8)
-    bc = {tuple(r) for r in similarity.brute_force_topk_gemm(
+    ex = {tuple(r) for r in similarity.brute_force_topk(
         qs, emb, k=5).collect()}
     gr = {tuple(r) for r in similarity.brute_force_topk_grid(
         qs, emb, k=5, n_blocks=4).collect()}
-    assert bc == gr and len(gr) == 40
+    assert ex == gr and len(gr) == 40
 
 
 def test_grid_range_search_equals_broadcast_range_search(spark):
@@ -2239,6 +2242,8 @@ try:
         excluded, independent of how the corpus hashes into blocks."""
         import numpy as _np
 
+        from unilever_scraping_etl_spark.functions.vectors import \
+            _round_half_up
         from unilever_scraping_etl_spark.operators.similarity import \
             range_search_grid
         from unilever_scraping_etl_spark.session import get_session
@@ -2253,7 +2258,7 @@ try:
 
         m = _np.array([v for _, v in rows], dtype="float64")
         m = m / _np.maximum(_np.linalg.norm(m, axis=1, keepdims=True), 1e-300)
-        sim = _np.round(m @ m.T, 4)
+        sim = _round_half_up(m @ m.T, 4)
         want = {(qi, ci, float(sim[qi, ci]))
                 for qi in range(len(rows)) if qi % 2 == 0
                 for ci in range(len(rows))

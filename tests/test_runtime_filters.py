@@ -94,19 +94,38 @@ def test_probe_is_pure_expression(spark):
     assert "getbit" in plan or "Filter" in plan
 
 
-def test_probe_plan_builds_fast(spark):
+def test_probe_plan_builds_fast(spark, monkeypatch):
     """The word table must enter the plan as ONE parsed SQL literal.
-    F.lit(python_list) crosses py4j per element: at 2^20 bits (16384
-    words) that is ~8-10 s of pure driver time; the parsed form is
-    well under a second. Generous 3 s bound — far above parser noise,
-    far below the per-element path."""
-    import time
-    bf = rf.BloomFilter(tuple(range(16384)), 5)
+    F.lit(python_list) crosses py4j once per element (at 2^20 bits,
+    16384 words, ~8-10 s of driver time). Structural pin instead of a
+    wall-clock bound: building the probe for 16384 words makes exactly
+    as many lit() calls as for 64 words, so no per-element path is
+    left, and the optimized plan carries the whole table as one array
+    literal."""
+    from pyspark.sql.functions import builtin
+
+    calls = []
+
+    def counting(orig):
+        def lit(col):
+            calls.append(1)
+            return orig(col)
+        return lit
+
+    # F.lit(list) recurses through builtin's module-global lit, so both
+    # names are counted.
+    monkeypatch.setattr(F, "lit", counting(F.lit))
+    monkeypatch.setattr(builtin, "lit", counting(builtin.lit))
     df = spark.range(10).select(F.col("id").alias("k"))
-    t0 = time.perf_counter()
-    out = df.filter(rf.bloom_probe("k", bf))
-    out.explain(mode="simple")  # force analysis, not just construction
-    assert time.perf_counter() - t0 < 3.0
+    counts = {}
+    for n in (64, 16384):
+        calls.clear()
+        words = tuple(range(n))
+        out = df.filter(rf.bloom_probe("k", rf.BloomFilter(words, 5)))
+        counts[n] = len(calls)
+    assert counts[64] == counts[16384]
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    assert "[" + ",".join(map(str, words)) + "]" in plan
 
 
 def test_suggest_bloom_bits():

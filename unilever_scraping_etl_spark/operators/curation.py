@@ -298,15 +298,15 @@ def semdedup(emb: DataFrame, id_col: str, vec_col: str,
     (more seeds). ``pairs`` selects its kernel (r16 OPTIMIZATION):
 
     - ``"gemm"`` (default): one Arrow-batched task per cluster
-      (grouped applyInPandas) whose single numpy GEMM scores the
-      block and emits each pair's loser directly — the paper's own
-      within-cluster matrix product, and the engine's established
-      BLAS lane (dedup.embedding_near_pairs_grid has shipped the
-      same kernel family against the same sequential-fold oracle
-      since r9). Measured at sf0.1 (2000 x 64, 8 clusters): the
-      pair stage fell 3.5 s -> 0.35 s — the expression form's
-      ~250k interpreted higher-order-function dot products (HOFs
-      never whole-stage-codegen) were the whole cost. The loser set
+      (grouped applyInPandas) whose numpy GEMM (vectors.cosine_blocks)
+      scores the cluster and emits each pair's loser directly — the
+      paper's own within-cluster matrix product, and the engine's
+      established BLAS lane (dedup.embedding_near_pairs_grid runs the
+      same kernel against the same sequential-fold oracle). Measured
+      at sf0.1 (2000 x 64, 8 clusters): the pair stage fell 3.5 s ->
+      0.35 s — the expression form's ~250k interpreted
+      higher-order-function dot products (HOFs never
+      whole-stage-codegen) were the whole cost. The loser set
       is unique per cluster by construction, so the cross-pair
       ``distinct`` exchange disappears too.
     - ``"expr"``: the previous pure-expression equi-join kernel
@@ -417,33 +417,6 @@ def semdedup(emb: DataFrame, id_col: str, vec_col: str,
                         .alias("removed")))
 
 
-_SEMDEDUP_GEMM_BLOCK = 8192
-"""Row-block bound for the semdedup GEMM kernel (r16 VERDICT item 2 /
-ADVICE): above this cluster size the K x K pair matrix is computed in
-B x K blocks so one hot cluster costs O(B*K) fp64 per step (~512 MB at
-K=8M rows), never an O(K^2) allocation — an executor OOM becomes a
-slow-but-bounded task. 8192 x 8192 fp64 is ~512 MB, the same envelope
-as the grid-GEMM dedup kernels; override via
-``SPARK_GRAFT_SEMDEDUP_BLOCK`` for tighter workers."""
-
-
-def _round_half_up(x, digits: int):
-    """Round half AWAY FROM ZERO at ``digits`` decimals — the rounding
-    F.round applies JVM-side (HALF_UP on the double's decimal value)
-    and the one the DuckDB oracle uses, where numpy's np.round is
-    HALF_EVEN: a cosine landing exactly on a half at round_pair digits
-    (e.g. 0.40005 at 4) must round to the same side in both kernels or
-    the >= threshold decision silently diverges (r16 ADVICE, medium).
-    floor(|x|*10^d + 0.5) on the scaled double is HALF_UP wherever the
-    scaling is exact; the residual exposure is the double-rounding of
-    x*10^d itself — the same documented exposure dedup.py's GEMM
-    kernels carry, and orders rarer than the half-even/half-up
-    divergence this fixes."""
-    import numpy as np
-    scale = 10.0 ** digits
-    return np.sign(x) * np.floor(np.abs(x) * scale + 0.5) / scale
-
-
 def _semdedup_prune_gemm(av: DataFrame, id_col: str, threshold: float,
                          round_pair: int) -> DataFrame:
     """The within-cluster duplicate-pair loser set as one numpy GEMM
@@ -456,38 +429,37 @@ def _semdedup_prune_gemm(av: DataFrame, id_col: str, threshold: float,
     by id inside the kernel, so for every in-cluster pair (i < j by
     id) with round(dot/(n_i*n_j), round_pair) >= threshold the loser
     is i when centroid_sim_i > centroid_sim_j else j (keep-far rule,
-    ties keep the smaller id); rounding is HALF_UP via _round_half_up
-    (matching F.round and the oracle — the only float-path difference
-    vs the expression kernel is the GEMM's dot accumulation order,
-    absorbed by round_pair on every measured corpus). Degenerate
-    inputs (r16 ADVICE): a NULL vector null-propagates in the
-    expression kernel (its pairs never qualify), so this kernel drops
-    such rows from the pair scan — they stay non-removed upstream. A
-    ZERO-NORM vector is a loud DIVIDE_BY_ZERO in the shared
-    assignment stage under ANSI mode (Spark 4's default — both
-    kernels fail identically before any pair runs); under non-ANSI
-    sessions Spark's Divide returns NULL instead, the expression
-    kernel again never qualifies the pair, and this kernel's isfinite
-    term mirrors that (numpy yields NaN/Inf where Spark yields NULL).
+    ties keep the smaller id). Scoring is vectors.cosine_blocks with
+    the carried norms, rounded by the oracle's rule — the float-path
+    differences vs the expression kernel are the GEMM's dot
+    accumulation order, absorbed by round_pair on every measured
+    corpus, and F.round's shortest-decimal ties (see
+    vectors._round_half_up). Degenerate inputs (r16 ADVICE): a NULL
+    vector null-propagates in the expression kernel (its pairs never
+    qualify), so this kernel drops such rows from the pair scan —
+    they stay non-removed upstream. A ZERO-NORM vector is a loud
+    DIVIDE_BY_ZERO in the shared assignment stage under ANSI mode
+    (Spark 4's default — both kernels fail identically before any
+    pair runs); under non-ANSI sessions Spark's Divide returns NULL
+    instead, the expression kernel again never qualifies the pair,
+    and this kernel's isfinite term mirrors that (numpy yields
+    NaN/Inf where Spark yields NULL).
 
     Memory per task: the cluster's rows plus ONE B x K block of the
-    pair matrix (B = _SEMDEDUP_GEMM_BLOCK; clusters at or below B pay
-    a single K x K GEMM exactly as before). A pathologically hot
-    cluster is thus a bounded sequence of GEMM blocks instead of one
-    O(K^2) allocation (r16 VERDICT item 2) — though the paper's own
-    remedy (raise n_seeds so clusters bound the quadratic term)
-    remains the real fix; the applyInPandas lane still materializes
-    the cluster's ROWS in one task by construction."""
-    import os
-
+    pair matrix (B = vectors.COSINE_BLOCK_ROWS, read when the plan is
+    built; clusters at or below B pay a single K x K GEMM). A
+    pathologically hot cluster is thus a bounded sequence of GEMM
+    blocks instead of one O(K^2) allocation (r16 VERDICT item 2) —
+    though the paper's own remedy (raise n_seeds so clusters bound the
+    quadratic term) remains the real fix; the applyInPandas lane
+    still materializes the cluster's ROWS in one task by construction."""
     import numpy as np
     import pandas as pd
     from pyspark.sql import types as T
 
     id_field = av.select(id_col).schema[0]
     out_schema = T.StructType([id_field])
-    block = int(os.environ.get("SPARK_GRAFT_SEMDEDUP_BLOCK", 0)) \
-        or _SEMDEDUP_GEMM_BLOCK
+    block = vectors.COSINE_BLOCK_ROWS
 
     def prune(pdf: pd.DataFrame) -> pd.DataFrame:
         # NULL vectors null-propagate like the expression kernel: a
@@ -499,19 +471,15 @@ def _semdedup_prune_gemm(av: DataFrame, id_col: str, threshold: float,
         pdf = pdf.sort_values(id_col)
         ids = pdf[id_col].to_numpy()
         cs = pdf["centroid_sim"].to_numpy()
-        m = np.vstack(pdf["__e"].to_numpy()).astype("float64")
+        e = pdf["__e"]
         # __n is the JVM-side sequential-fold norm carried on the row —
         # reusing it (rather than renorming here) keeps the cosine's op
         # tree identical to the expression kernel's dot/(n_i*n_j)
         # except for the GEMM's dot accumulation order.
         n = pdf["__n"].to_numpy()
         loser_parts = []
-        k = len(pdf)
-        for lo in range(0, k, block):
-            hi = min(lo + block, k)
-            with np.errstate(divide="ignore", invalid="ignore"):
-                cos = _round_half_up(
-                    (m[lo:hi] @ m.T) / np.outer(n[lo:hi], n), round_pair)
+        for lo, cos in vectors.cosine_blocks(e, e, round_pair, block,
+                                             norms=(n, n)):
             # isfinite mirrors non-ANSI Spark's NULL on zero-divisor
             # (never qualifies); under ANSI the assignment stage has
             # already raised before any zero norm reaches this kernel.
@@ -523,9 +491,7 @@ def _semdedup_prune_gemm(av: DataFrame, id_col: str, threshold: float,
             bi, jj = bi[keep], jj[keep]
             ii = bi + lo
             loser_parts.append(np.where(cs[ii] > cs[jj], ids[ii], ids[jj]))
-        losers = (np.concatenate(loser_parts) if loser_parts
-                  else ids[:0])
-        return pd.DataFrame({id_col: np.unique(losers)})
+        return pd.DataFrame({id_col: np.unique(np.concatenate(loser_parts))})
 
     return (av.select("cluster_id", id_col, "centroid_sim", "__e", "__n")
             .groupBy("cluster_id")

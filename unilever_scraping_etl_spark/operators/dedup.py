@@ -637,7 +637,7 @@ def embedding_near_pairs(emb: DataFrame, id_col: str, vec_col: str,
                          round_digits: int = 4) -> DataFrame:
     """Embedding-cosine near-dup pairs via an expression-level pair join.
     Oracle-identical float semantics (sequential fold dot product), but
-    O(pairs * dim) inside codegen — prefer embedding_near_pairs_gemm for
+    O(pairs * dim) inside codegen — prefer embedding_near_pairs_grid for
     bulk work. Pass ``block_col`` (e.g. an LSH bucket from
     similarity.hyperplane_bucket) to turn the cross into a blocked
     equi-join at production scale."""
@@ -704,8 +704,9 @@ def embedding_lsh_pairs(emb: DataFrame, id_col: str, vec_col: str,
     cos-pattern weights as the expression-level hyperplane_bucket), so
     the bucket step costs one BLAS call per batch instead of ~6k
     sequential expression ops per row. The exact-cosine verify is
-    likewise an Arrow-batched numpy kernel (normalize + row-wise dot,
-    the same kernel family as embedding_near_pairs_gemm, rounded BEFORE
+    likewise an Arrow-batched numpy kernel (vectors.cosine_blocks'
+    stacking, normalization and rounding around a row-wise dot, the
+    same kernel as embedding_near_pairs_grid, rounded BEFORE
     thresholding) — on a clustered corpus the candidate set is a large
     fraction of all pairs, and interpreted higher-order-function
     cosines over it dominate the whole query.
@@ -734,6 +735,8 @@ def embedding_lsh_pairs(emb: DataFrame, id_col: str, vec_col: str,
     import numpy as np
     from pyspark.sql import types as T
 
+    from ..functions.vectors import _round_half_up, _stack, _unit_rows
+
     cand = hyperplane_lsh_candidates(emb, id_col, vec_col, n_bands,
                                      n_planes, dim, max_bucket_size)
     v = emb.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
@@ -761,20 +764,12 @@ def embedding_lsh_pairs(emb: DataFrame, id_col: str, vec_col: str,
         for pdf in batches:
             if pdf.empty:
                 continue
-            a = np.vstack(pdf["va"].to_numpy()).astype("float64")
-            b = np.vstack(pdf["vb"].to_numpy()).astype("float64")
-            a /= np.maximum(np.linalg.norm(a, axis=1, keepdims=True), 1e-300)
-            b /= np.maximum(np.linalg.norm(b, axis=1, keepdims=True), 1e-300)
-            raw = np.einsum("ij,ij->i", a, b)
-            # np.round (IEEE half-even), matching the EXACT companion
-            # kernels this output must be a subset of: the grid GEMM
-            # (embedding_near_pairs_grid, the registered dedup_embedding
-            # path) and the broadcast GEMM both round with np.round in
-            # the same numpy float64 kernel family. Emulating Spark's
-            # F.round here instead would diverge from them on half-even
-            # ties — the subset-of-exact property is defined against the
-            # numpy kernels, not against F.round.
-            cos = np.round(raw, round_digits)
+            # Row-wise form of vectors.cosine_blocks: the same stacking,
+            # normalization and rounding as embedding_near_pairs_grid,
+            # the exact kernel this output must be a subset of.
+            cos = _round_half_up(
+                np.einsum("ij,ij->i", _unit_rows(_stack(pdf["va"])),
+                          _unit_rows(_stack(pdf["vb"]))), round_digits)
             keep = cos >= threshold
             yield pd.DataFrame({
                 "id_a": pdf["id_a"].to_numpy()[keep].astype("int64"),
@@ -783,58 +778,6 @@ def embedding_lsh_pairs(emb: DataFrame, id_col: str, vec_col: str,
             })
 
     return paired.mapInPandas(verify, out_schema)
-
-
-def embedding_near_pairs_gemm(emb: DataFrame, id_col: str, vec_col: str,
-                              threshold: float = 0.95,
-                              round_digits: int = 4) -> DataFrame:
-    """Embedding-cosine near-dup pairs as a blocked matrix product: the
-    corpus is L2-normalized once, the smaller side is broadcast (here:
-    the whole corpus — a dim-table-sized 64-dim float matrix), and each
-    partition computes a numpy GEMM block against it, emitting only
-    pairs above threshold — one BLAS call per (partition x
-    broadcast-block) instead of 2 x dim array ops per pair.
-
-    Small-corpus fast path: at larger-than-broadcast sizes use
-    embedding_near_pairs_grid, which runs the identical kernel per
-    (block_i, block_j) cogroup cell with no driver collect (the
-    broadcast here is its degenerate 1-block grid; test-pinned
-    byte-identical)."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    spark = emb.sparkSession
-    small = emb.select(id_col, vec_col).toPandas()
-    ids_all = small[id_col].to_numpy()
-    m_all = np.vstack(small[vec_col].to_numpy()).astype("float64")
-    m_all /= np.maximum(np.linalg.norm(m_all, axis=1, keepdims=True), 1e-300)
-    bc = spark.sparkContext.broadcast((ids_all, m_all))
-
-    out_schema = T.StructType([
-        T.StructField("id_a", T.LongType()),
-        T.StructField("id_b", T.LongType()),
-        T.StructField("cos", T.DoubleType()),
-    ])
-
-    def gen(batches):
-        ids_b, m_b = bc.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            ids_a = pdf[id_col].to_numpy()
-            m_a = np.vstack(pdf[vec_col].to_numpy()).astype("float64")
-            m_a /= np.maximum(np.linalg.norm(m_a, axis=1, keepdims=True), 1e-300)
-            sim = np.round(m_a @ m_b.T, round_digits)
-            ia, ib = np.nonzero(sim >= threshold)
-            keep = ids_a[ia] < ids_b[ib]
-            yield pd.DataFrame({
-                "id_a": ids_a[ia[keep]].astype("int64"),
-                "id_b": ids_b[ib[keep]].astype("int64"),
-                "cos": sim[ia[keep], ib[keep]],
-            })
-
-    return emb.select(id_col, vec_col).mapInPandas(gen, out_schema)
 
 
 _LAST_CC_ROUNDS: int | None = None
@@ -1199,18 +1142,22 @@ def embedding_near_pairs_grid(emb: DataFrame, id_col: str, vec_col: str,
                               threshold: float = 0.95, n_blocks: int = 4,
                               round_digits: int = 4) -> DataFrame:
     """Embedding-cosine near-pairs as a DISTRIBUTED block-grid GEMM —
-    the 100 TB form of embedding_near_pairs_gemm, with no driver-side
+    the numpy-kernel form of embedding_near_pairs, with no driver-side
     collect and no corpus broadcast. The corpus is hashed into
     ``n_blocks`` blocks; every unordered block pair (ba <= bb) becomes
     one cogroup task whose two pandas frames are the two blocks, scored
-    with a single numpy GEMM. Each row is shuffled to ~n_blocks grid
+    with vectors.cosine_blocks. Each row is shuffled to ~n_blocks grid
     cells, so shuffle volume is O(N * n_blocks) — size n_blocks so one
     block (N/n_blocks rows x dim floats) fits executor memory; the pair
-    space never materializes outside a task. Output is identical to the
-    broadcast variant (same float64 kernel, same rounding, id_a < id_b).
+    space never materializes outside a task, and inside one it is
+    bounded to vectors.COSINE_BLOCK_ROWS left rows at a time. Output
+    does not depend on ``n_blocks`` (same kernel, same rounding,
+    id_a < id_b; test-pinned).
     """
     import numpy as np
     from pyspark.sql import types as T
+
+    from ..functions import vectors
 
     spark = emb.sparkSession
     grid = spark.createDataFrame(
@@ -1228,33 +1175,34 @@ def embedding_near_pairs_grid(emb: DataFrame, id_col: str, vec_col: str,
         T.StructField("cos", T.DoubleType()),
     ])
 
+    block = vectors.COSINE_BLOCK_ROWS
+
     def score(key, lpdf, rpdf):
         if lpdf.empty or rpdf.empty:
             return pd.DataFrame({"id_a": [], "id_b": [], "cos": []})
         ids_l = lpdf["id"].to_numpy()
         ids_r = rpdf["id"].to_numpy()
-        ml = np.vstack(lpdf["v"].to_numpy()).astype("float64")
-        mr = np.vstack(rpdf["v"].to_numpy()).astype("float64")
-        ml /= np.maximum(np.linalg.norm(ml, axis=1, keepdims=True), 1e-300)
-        mr /= np.maximum(np.linalg.norm(mr, axis=1, keepdims=True), 1e-300)
-        sim = np.round(ml @ mr.T, round_digits)
-        ia, ib = np.nonzero(sim >= threshold)
-        la, rb = ids_l[ia], ids_r[ib]
-        if key[0] == key[1]:
-            # diagonal cell: both frames are the same block — keeping
-            # id_a < id_b drops self-pairs and each pair's mirror dup
-            keep = la < rb
-            la, rb, sims = la[keep], rb[keep], sim[ia[keep], ib[keep]]
-        else:
-            # off-diagonal: blocks are disjoint, every pair appears in
-            # exactly this one cell — orient it, never drop it
-            la, rb, sims = (np.minimum(la, rb), np.maximum(la, rb),
-                            sim[ia, ib])
-        return pd.DataFrame({
-            "id_a": la.astype("int64"),
-            "id_b": rb.astype("int64"),
-            "cos": sims,
-        })
+        frames = []
+        for lo, sim in vectors.cosine_blocks(lpdf["v"], rpdf["v"],
+                                             round_digits, block):
+            ia, ib = np.nonzero(sim >= threshold)
+            la, rb = ids_l[lo + ia], ids_r[ib]
+            if key[0] == key[1]:
+                # diagonal cell: both frames are the same block — keeping
+                # id_a < id_b drops self-pairs and each pair's mirror dup
+                keep = la < rb
+                la, rb, sims = la[keep], rb[keep], sim[ia[keep], ib[keep]]
+            else:
+                # off-diagonal: blocks are disjoint, every pair appears in
+                # exactly this one cell — orient it, never drop it
+                la, rb, sims = (np.minimum(la, rb), np.maximum(la, rb),
+                                sim[ia, ib])
+            frames.append(pd.DataFrame({
+                "id_a": la.astype("int64"),
+                "id_b": rb.astype("int64"),
+                "cos": sims,
+            }))
+        return pd.concat(frames)
 
     return (left.groupby("ba", "bb")
             .cogroup(right.groupby("ba", "bb"))

@@ -19,7 +19,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.vectors import cosine, dot, norm
+from ..functions import vectors
+from ..functions.vectors import dot, norm
 
 
 def brute_force_topk(queries: DataFrame, corpus: DataFrame, k: int,
@@ -78,59 +79,6 @@ def range_search(queries: DataFrame, corpus: DataFrame, threshold: float,
                                         round_digits))
              .filter(F.col("cos") >= threshold)
              .select("query_id", "neighbor_id", "cos"))
-
-
-def brute_force_topk_gemm(queries: DataFrame, corpus: DataFrame, k: int,
-                          id_col: str = "vec_id", vec_col: str = "embedding",
-                          round_digits: int = 4) -> DataFrame:
-    """Exact top-k cosine as a blocked matrix product: the corpus is
-    L2-normalized once and broadcast; each partition of queries does ONE
-    numpy GEMM against it and emits its top-k rows. Same results as
-    brute_force_topk (rounded scores, id tiebreak) at a fraction of the
-    cost — per-pair expression work becomes a BLAS call per (partition x
-    corpus block). Small-corpus fast path: when the corpus outgrows a
-    broadcast, use brute_force_topk_grid — the same kernel per
-    (query x corpus-block) grid cell, no driver collect."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    spark = queries.sparkSession
-    small = corpus.select(id_col, vec_col).toPandas()
-    ids_all = small[id_col].to_numpy()
-    m_all = np.vstack(small[vec_col].to_numpy()).astype("float64")
-    m_all /= np.maximum(np.linalg.norm(m_all, axis=1, keepdims=True), 1e-300)
-    bc = spark.sparkContext.broadcast((ids_all, m_all))
-
-    out_schema = T.StructType([
-        T.StructField("query_id", T.LongType()),
-        T.StructField("neighbor_id", T.LongType()),
-        T.StructField("cos", T.DoubleType()),
-        T.StructField("rank", T.IntegerType()),
-    ])
-
-    def gen(batches):
-        ids_c, m_c = bc.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            ids_q = pdf[id_col].to_numpy()
-            m_q = np.vstack(pdf[vec_col].to_numpy()).astype("float64")
-            m_q /= np.maximum(np.linalg.norm(m_q, axis=1, keepdims=True), 1e-300)
-            sim = np.round(m_q @ m_c.T, round_digits)
-            for qi in range(len(ids_q)):
-                row = sim[qi]
-                mask = ids_c != ids_q[qi]          # exclude self
-                order = np.lexsort((ids_c[mask], -row[mask]))[:k]
-                nids = ids_c[mask][order]
-                yield pd.DataFrame({
-                    "query_id": np.full(len(order), ids_q[qi], dtype="int64"),
-                    "neighbor_id": nids.astype("int64"),
-                    "cos": row[mask][order],
-                    "rank": np.arange(1, len(order) + 1, dtype="int32"),
-                })
-
-    return queries.select(id_col, vec_col).mapInPandas(gen, out_schema)
 
 
 def assign_ivf_buckets(emb: DataFrame, nlist: int = 16,
@@ -237,9 +185,10 @@ def adaptive_n_blocks(df: DataFrame, target_block_bytes: int = 64 << 20,
     a parquet scan this is file-length metadata — no job, no scan) and
     split into ceil(size / target_block_bytes) blocks, so one block's
     vectors fit comfortably in an executor task. Below the threshold
-    this returns 1 and the grid degenerates to the broadcast-equivalent
-    single cell (test-pinned byte-identical to the broadcast GEMM);
-    above it the grid engages with shuffle O(N * n_blocks).
+    this returns 1 and the grid degenerates to a single cell (one
+    cosine_blocks call over the whole corpus, test-pinned equal to the
+    multi-block grid); above it the grid engages with shuffle
+    O(N * n_blocks).
 
     Sources without stats report spark.sql.defaultSizeInBytes
     (Long.MaxValue) — e.g. a createDataFrame/RDD-backed frame — and the
@@ -318,19 +267,18 @@ def brute_force_topk_grid(queries: DataFrame, corpus: DataFrame, k: int,
                           n_blocks: int = 4, id_col: str = "vec_id",
                           vec_col: str = "embedding",
                           round_digits: int = 4) -> DataFrame:
-    """Exact top-k cosine at cluster scale — the distributed form of
-    brute_force_topk_gemm, with no driver collect and no corpus
-    broadcast. The corpus is hashed into ``n_blocks`` blocks; queries
-    replicate to every block (queries are the small side — replicating
-    the corpus instead would be the wrong orientation); each cogroup
-    cell GEMMs its corpus block against all queries and emits only its
+    """Exact top-k cosine at cluster scale: the numpy-kernel form of
+    brute_force_topk, with no driver collect and no corpus broadcast.
+    The corpus is hashed into ``n_blocks`` blocks; queries replicate to
+    every block (queries are the small side — replicating the corpus
+    instead would be the wrong orientation); each cogroup cell scores
+    its corpus block against all queries with vectors.cosine_blocks
+    (bounded query-row blocks, oracle rounding) and emits only its
     LOCAL top-k per query, so the global merge (one window over
     <= k * n_blocks candidate rows per query) is tiny. The union of
-    per-block top-k sets contains the global top-k, so results are
-    IDENTICAL to the broadcast variant: same kernel, same rounding,
-    same (cos desc, id) tiebreak."""
-    import numpy as np
-    import pandas as pd
+    per-block top-k sets contains the global top-k, so results do not
+    depend on ``n_blocks``: same kernel, same rounding, same
+    (cos desc, id) tiebreak."""
     from pyspark.sql import types as T
 
     spark = queries.sparkSession
@@ -348,28 +296,26 @@ def brute_force_topk_grid(queries: DataFrame, corpus: DataFrame, k: int,
         T.StructField("cos", T.DoubleType()),
     ])
 
+    block = vectors.COSINE_BLOCK_ROWS
+
     def local_topk(qpdf, cpdf):
         if qpdf.empty or cpdf.empty:
             return pd.DataFrame({"query_id": [], "neighbor_id": [], "cos": []})
         ids_q = qpdf["query_id"].to_numpy()
         ids_c = cpdf["nid"].to_numpy()
-        mq = np.vstack(qpdf["qv"].to_numpy()).astype("float64")
-        mc = np.vstack(cpdf["cv"].to_numpy()).astype("float64")
-        mq /= np.maximum(np.linalg.norm(mq, axis=1, keepdims=True), 1e-300)
-        mc /= np.maximum(np.linalg.norm(mc, axis=1, keepdims=True), 1e-300)
-        sim = np.round(mq @ mc.T, round_digits)
         frames = []
-        for qi in range(len(ids_q)):
-            row = sim[qi]
-            mask = ids_c != ids_q[qi]          # exclude self
-            order = np.lexsort((ids_c[mask], -row[mask]))[:k]
-            frames.append(pd.DataFrame({
-                "query_id": np.full(len(order), ids_q[qi], dtype="int64"),
-                "neighbor_id": ids_c[mask][order].astype("int64"),
-                "cos": row[mask][order],
-            }))
-        return pd.concat(frames) if frames else pd.DataFrame(
-            {"query_id": [], "neighbor_id": [], "cos": []})
+        for lo, sim in vectors.cosine_blocks(qpdf["qv"], cpdf["cv"],
+                                             round_digits, block):
+            for qi, row in enumerate(sim, start=lo):
+                mask = ids_c != ids_q[qi]          # exclude self
+                order = np.lexsort((ids_c[mask], -row[mask]))[:k]
+                frames.append(pd.DataFrame({
+                    "query_id": np.full(len(order), ids_q[qi],
+                                        dtype="int64"),
+                    "neighbor_id": ids_c[mask][order].astype("int64"),
+                    "cos": row[mask][order],
+                }))
+        return pd.concat(frames)
 
     cand = (q.groupby("blk").cogroup(c.groupby("blk"))
             .applyInPandas(local_topk, out_schema))
@@ -390,22 +336,22 @@ def range_search_grid(queries: DataFrame, corpus: DataFrame,
     limit (that form streams queries against a broadcast corpus, so the
     CORPUS side could never outgrow a broadcast). Here the corpus is
     hashed into ``n_blocks`` blocks and queries replicate to every
-    block (queries are the small side); each cogroup cell runs ONE
-    numpy GEMM and emits every pair whose ROUNDED cosine clears the
-    threshold. Unlike top-k there is no global merge at all: the
-    corpus blocks partition the corpus, so the union of cell outputs
-    IS the exact answer — no window, no second shuffle. Results are
-    byte-identical to range_search for NONZERO vectors at POSITIVE
-    thresholds (same rounding, same self-exclusion; test-pinned), so
-    the same DuckDB oracle covers both. Degenerate inputs diverge by
-    design (r6 ADVICE): on a zero-norm vector the broadcast twin's
+    block (queries are the small side); each cogroup cell scores its
+    block with vectors.cosine_blocks and emits every pair whose
+    ROUNDED cosine clears the threshold. Unlike top-k there is no
+    global merge at all: the corpus blocks partition the corpus, so
+    the union of cell outputs IS the exact answer — no window, no
+    second shuffle. Results equal range_search's for NONZERO vectors
+    at POSITIVE thresholds (same self-exclusion; test-pinned), except
+    on a cosine landing on a shortest-decimal tie, where F.round and
+    the kernel's oracle rule part ways (vectors._round_half_up); the
+    same DuckDB oracle covers both. Degenerate inputs diverge by
+    design (r6 ADVICE): on a zero-norm vector range_search's
     expression-level cosine divides by zero -> NULL -> row filtered,
     while this kernel's 1e-300 norm floor scores cos = 0.0, which a
     threshold <= 0 would admit. The floor is the right scale behavior
     (a zero embedding is a data bug, not a reason for NULL-sensitive
     output); the equality pin is scoped accordingly."""
-    import numpy as np
-    import pandas as pd
     from pyspark.sql import types as T
 
     spark = queries.sparkSession
@@ -423,23 +369,25 @@ def range_search_grid(queries: DataFrame, corpus: DataFrame,
         T.StructField("cos", T.DoubleType()),
     ])
 
+    block = vectors.COSINE_BLOCK_ROWS
+
     def cell_range(qpdf, cpdf):
         if qpdf.empty or cpdf.empty:
             return pd.DataFrame({"query_id": [], "neighbor_id": [], "cos": []})
         ids_q = qpdf["query_id"].to_numpy()
         ids_c = cpdf["nid"].to_numpy()
-        mq = np.vstack(qpdf["qv"].to_numpy()).astype("float64")
-        mc = np.vstack(cpdf["cv"].to_numpy()).astype("float64")
-        mq /= np.maximum(np.linalg.norm(mq, axis=1, keepdims=True), 1e-300)
-        mc /= np.maximum(np.linalg.norm(mc, axis=1, keepdims=True), 1e-300)
-        sim = np.round(mq @ mc.T, round_digits)
-        keep = (sim >= threshold) & (ids_q[:, None] != ids_c[None, :])
-        qi, ci = np.nonzero(keep)
-        return pd.DataFrame({
-            "query_id": ids_q[qi].astype("int64"),
-            "neighbor_id": ids_c[ci].astype("int64"),
-            "cos": sim[qi, ci],
-        })
+        frames = []
+        for lo, sim in vectors.cosine_blocks(qpdf["qv"], cpdf["cv"],
+                                             round_digits, block):
+            qb = ids_q[lo:lo + len(sim)]
+            qi, ci = np.nonzero((sim >= threshold)
+                                & (qb[:, None] != ids_c[None, :]))
+            frames.append(pd.DataFrame({
+                "query_id": qb[qi].astype("int64"),
+                "neighbor_id": ids_c[ci].astype("int64"),
+                "cos": sim[qi, ci],
+            }))
+        return pd.concat(frames)
 
     return (q.groupby("blk").cogroup(c.groupby("blk"))
             .applyInPandas(cell_range, out_schema))

@@ -1174,10 +1174,10 @@ SELECT id_a, id_b, cos FROM (
          "O(N * n_blocks). n_blocks is DATA-AWARE (adaptive_n_blocks: "
          "Catalyst size estimate / 64 MB, like Spark's own broadcast "
          "threshold), so a corpus under one block degenerates to the "
-         "single-cell grid == broadcast GEMM (test-pinned byte-"
-         "identical) instead of paying a 36-cell grid for data that "
-         "fits in one task; at 100 TB the same call sizes the grid up "
-         "automatically.")
+         "single-cell grid (test-pinned equal to the multi-block grid "
+         "and the expression kernel) instead of paying a 36-cell grid "
+         "for data that fits in one task; at 100 TB the same call "
+         "sizes the grid up automatically.")
 def dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _t(spark, sf_dir, "embeddings")
     return dedup.embedding_near_pairs_grid(
@@ -1280,7 +1280,7 @@ FROM scored QUALIFY rank <= 5
          "the small side), one BLAS call + local top-k per cell, then "
          "a k*n_blocks-row window merge per query — no driver collect, "
          "no corpus broadcast; identical results to sim_topk (same "
-         "oracle; broadcast variant test-pinned byte-identical). "
+         "oracle; 1-block and 4-block grids test-pinned equal to it). "
          "n_blocks is data-aware (adaptive_n_blocks over the corpus "
          "scan's Catalyst size estimate): 1 block at local scale, grid "
          "engaged above the 64 MB block budget.")
@@ -1305,10 +1305,9 @@ SELECT query_id, neighbor_id, cos FROM (
          "replicated to each block, one GEMM + threshold per cell — "
          "no corpus broadcast, no driver collect, and (unlike top-k) "
          "no merge window at all, because the corpus blocks partition "
-         "the output disjointly. Byte-identical to the broadcast "
-         "range_search twin (test-pinned); thresholding on the rounded "
-         "score keeps the result set stable under accumulation-order "
-         "differences.")
+         "the output disjointly. Equal to the expression range_search "
+         "(test-pinned); thresholding on the rounded score keeps the "
+         "result set stable under accumulation-order differences.")
 def sim_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _t(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") % 50 == 0)
