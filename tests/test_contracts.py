@@ -267,3 +267,24 @@ def test_operators_round_scores_only_through_the_cosine_kernel():
             for i, line in enumerate(path.read_text().splitlines(), 1)
             if "np.round(" in line]
     assert not hits, f"np.round under operators/: {hits}"
+
+
+def test_graph_loops_live_in_the_shared_cores():
+    """hits/salsa share one alternating-walk loop and reachability/
+    k_core/core_number one bounded-fixpoint loop (graph._alternating_walk,
+    graph._until_stable); a public operator that grows its own `for`
+    loop again, or a second copy of the fixpoint argument checks, is a
+    hand-copied twin of a core."""
+    import ast
+
+    from unilever_scraping_etl_spark.operators import graph
+
+    src = Path(graph.__file__).read_text()
+    funcs = {node.name: node for node in ast.parse(src).body
+             if isinstance(node, ast.FunctionDef)}
+    for name in ("hits", "salsa", "reachability", "k_core", "core_number"):
+        loops = [n.lineno for n in ast.walk(funcs[name])
+                 if isinstance(n, (ast.For, ast.AsyncFor))]
+        assert not loops, f"graph.{name} has its own loop at {loops}"
+    msg = "on_cap must be 'silent', 'warn', or 'raise'"
+    assert src.count(msg) == 1, "fixpoint argument checks copied again"

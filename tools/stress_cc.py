@@ -72,7 +72,7 @@ def main() -> None:
         raise SystemExit(f"LABEL MISMATCH: {sums}")
 
     if "local" in ops:
-        bound = dedup._cc_local_edges()
+        bound = dedup._CC_LOCAL_EDGES_DEFAULT
         sub = edges.limit(bound).localCheckpoint()
         print(f"subgraph at fast-path bound: {sub.count()} edges")
         t = time.perf_counter()

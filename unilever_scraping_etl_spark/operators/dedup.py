@@ -789,14 +789,8 @@ convergence tests — not part of the operator contract."""
 
 _CC_LOCAL_EDGES_DEFAULT = 1_000_000
 """Default edge-count bound for the single-task union-find fast path
-(see connected_components). Overridable per call (``local_edges``) or
-per deployment (``SPARK_GRAFT_CC_LOCAL_EDGES``); 0 disables."""
-
-
-def _cc_local_edges() -> int:
-    import os
-    v = os.environ.get("SPARK_GRAFT_CC_LOCAL_EDGES")
-    return int(v) if v else _CC_LOCAL_EDGES_DEFAULT
+(see connected_components). Overridable per call (``local_edges``);
+0 disables."""
 
 
 def connected_components(edges: DataFrame, src: str, dst: str,
@@ -915,9 +909,9 @@ def connected_components(edges: DataFrame, src: str, dst: str,
     # parallelism; at 100 TB a pair graph past the bound takes the
     # distributed loop unchanged. ~1M edges is ~1-2 s and ~100 MB in
     # one Python worker — far under one distributed round's barrier
-    # cost at that scale. ``local_edges=0`` (or the env override)
-    # disables; tests that pin distributed round counts use that.
-    limit = _cc_local_edges() if local_edges is None else local_edges
+    # cost at that scale. ``local_edges=0`` disables; tests that pin
+    # distributed round counts use that.
+    limit = _CC_LOCAL_EDGES_DEFAULT if local_edges is None else local_edges
     if limit and directed.count() <= limit:
         _LAST_CC_ROUNDS = 0
         return _local_components(directed)

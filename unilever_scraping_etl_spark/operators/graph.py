@@ -56,6 +56,8 @@ CC convergence checksum).
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -110,6 +112,64 @@ def _on_cap_signal(name: str, rounds: int, on_cap: str,
         import warnings
         warnings.warn(msg, RuntimeWarning, stacklevel=3)
 
+
+def _check_fixpoint_args(rounds: int, until_stable: bool,
+                         materialize: bool, on_cap: str) -> None:
+    """Argument checks shared by every :func:`_until_stable` caller."""
+    if rounds < 1:
+        raise ValueError("rounds must be >= 1")
+    if until_stable and not materialize:
+        raise ValueError("until_stable requires materialize=True "
+                         "(each stability probe evaluates the plan)")
+    if on_cap not in ("silent", "warn", "raise"):
+        raise ValueError("on_cap must be 'silent', 'warn', or 'raise'")
+    if on_cap != "silent" and not until_stable:
+        raise ValueError("on_cap escalation requires until_stable=True "
+                         "(fixed-rounds runs never probe the fixpoint, "
+                         "so a cap-hit signal could not fire)")
+
+
+def _until_stable(state: DataFrame,
+                  step: Callable[[DataFrame], DataFrame],
+                  probe: Callable[[DataFrame], object],
+                  rounds: int, until_stable: bool, materialize: bool,
+                  first_probe: object = None
+                  ) -> tuple[DataFrame, int, bool | None]:
+    """The bounded-fixpoint loop shared by :func:`reachability`,
+    :func:`k_core` and :func:`core_number`: up to ``rounds`` times,
+    ``state = step(state)``, snapshot it lazily, then (under
+    ``until_stable``) compare ``probe(state)`` — one bounded scalar of
+    a MONOTONE state, so an unchanged value is the fixed point — with
+    the previous round's. ``first_probe`` is the baseline when the
+    caller already paid for it (k_core's gate count); otherwise the
+    initial state is probed here. Returns ``(state, executed,
+    converged)``: ``converged`` is None under fixed rounds (no probe
+    runs), False when the cap hit with the state still changing.
+
+    The snapshot is LAZY (r16): under until_stable the probe right
+    after it materializes the snapshot in ITS job instead of a
+    separate synchronous one per round (the CC discipline); under
+    fixed rounds the chain materializes once inside the consumer's
+    action cascade (or the next round's broadcast build)."""
+    prev = first_probe
+    if until_stable and prev is None:
+        prev = probe(state)
+    executed, converged = 0, None
+    for _ in range(rounds):
+        state = step(state)
+        if materialize:
+            state = state.localCheckpoint(eager=False)
+        executed += 1
+        if until_stable:
+            now = probe(state)
+            if now == prev:
+                converged = True
+                break
+            prev = now
+    if until_stable and converged is None:
+        converged = False
+    return state, executed, converged
+
 # The bounded-probe broadcast discipline (pagerank, round 11), shared
 # by the whole structural family since round 14: every iterative
 # operator here joins a NODE-bounded frame (ranks, scores, labels,
@@ -152,6 +212,23 @@ def _resolve_score_gate(nodes: DataFrame,
         n = nodes.count()
         return _gate_broadcast(None, n), n == 0
     return bool(flag), (nodes.isEmpty() if need_empty else False)
+
+
+def _undirected(edges: DataFrame, src: str, dst: str,
+                materialize: bool) -> DataFrame:
+    """The symmetric neighbor list ``(__a, __b)`` of the edge list read
+    as UNDIRECTED: NULL endpoints and self-loops drop, every edge
+    appears in both directions, parallel edges collapse. Snapshotted
+    once under ``materialize`` — every caller joins it per round."""
+    nbr = (edges
+           .filter(F.col(src).isNotNull() & F.col(dst).isNotNull()
+                   & (F.col(src) != F.col(dst)))
+           .select(F.col(src).alias("__a"), F.col(dst).alias("__b")))
+    nbr = nbr.union(nbr.select(F.col("__b").alias("__a"),
+                               F.col("__a").alias("__b"))).distinct()
+    if materialize:
+        nbr = nbr.localCheckpoint()
+    return nbr
 
 
 def pagerank(edges: DataFrame, src: str, dst: str,
@@ -461,6 +538,102 @@ def pagerank(edges: DataFrame, src: str, dst: str,
     return ranks
 
 
+def _alternating_walk(edges: DataFrame, a: str, b: str,
+                      iterations: int, w_fwd: Column | None,
+                      w_bwd: Column | None,
+                      norm: Callable[[Column], Column],
+                      materialize: bool, broadcast: bool | None,
+                      digits: int | None) -> DataFrame:
+    """The alternating sparse half-step walk shared by :func:`hits`
+    and :func:`salsa`. From h₀ ≡ 1 on every endpoint of ``edges[a, b]``,
+    each iteration runs
+
+        a(v) = Σ_{u→v} h(u) · w_fwd,   then a /= norm(a)
+        h(u) = Σ_{u→v} a(v) · w_bwd,   then h /= norm(h)
+
+    over ``edges[a, b]`` (``None`` weights multiply nothing, so an
+    unweighted plan carries no 1.0-multiply noise), and returns
+    ``(node, hub, authority)`` for every node, rounded to ``digits``.
+    The caller owns validation and its edge preparation; an empty
+    edge list returns the empty frame.
+
+    Scale posture: the edge list arrives materialized (the caller
+    snapshots it once) and the node set is snapshotted here; each
+    half-step is ONE join of the (node-bounded) score table against
+    the cached edges plus a partial-aggregated sum, and each
+    normalization is a 1-row
+    aggregate entering the plan as a broadcast (never a driver
+    collect, never a SinglePartition funnel of the score table).
+    ``broadcast`` follows pagerank's bounded-probe discipline (r13
+    VERDICT #1): ``None`` broadcasts the score side of each half-step
+    join only when the node count reads ≤ 1M — host graphs get the
+    exchange-free plan, page-level graphs ship the join unhinted and
+    let AQE pick (a forced 90M-row broadcast per half-step would OOM
+    the build side). Iterations are O(K) shuffles total either way.
+
+    The loop runs on SPARSE score frames — only nodes that received
+    mass this half-step. Nodes absent from a sparse frame have score
+    exactly 0.0, and 0.0 is an exact no-op in every place such a row
+    could flow: a 0-score term adds nothing to the next half-step's
+    sums (x + 0.0*w == x in IEEE), and contributes nothing to an L1
+    or L2 norm — so a dense per-half-step `nodes` LEFT-join + coalesce
+    would be pure overhead: one extra join and one extra |V|-row pass
+    PER HALF-STEP. The dense completion happens ONCE, after the loop.
+    Scores are bit-identical to the dense form (same join terms, same
+    norm value)."""
+    nodes = (edges.select(F.col(a).alias("node"))
+             .union(edges.select(F.col(b).alias("node")))
+             .distinct())
+    if materialize:
+        nodes = nodes.localCheckpoint()
+    broadcast, empty = _resolve_score_gate(nodes, broadcast)
+    if empty:
+        return nodes.select("node", F.lit(0.0).alias("hub"),
+                            F.lit(0.0).alias("authority"))
+
+    def _half_step(score: DataFrame, frm: str, to: str, col: str,
+                   out: str, w: Column | None) -> DataFrame:
+        side = F.broadcast(score) if broadcast else score
+        contrib = F.col(col) if w is None else F.col(col) * w
+        raw = (edges.join(side, edges[frm] == side["node"])
+               .select(F.col(to).alias("node"), contrib.alias(col))
+               .groupBy("node").agg(F.sum(col).alias(out)))
+        if materialize:
+            # snapshot the RAW half-step sums LAZILY: the norm is an
+            # aggregate OF this frame and the normalized scores divide
+            # it again, so without the checkpoint each half-step's
+            # join+agg subtree is planned (and, across the norm's
+            # broadcast build plus the next half-step's score build,
+            # executed) twice; eager=False materializes it inside the
+            # norm's broadcast job instead of paying a separate
+            # synchronous job per half-step
+            raw = raw.localCheckpoint(eager=False)
+        z = raw.agg(norm(F.col(out)).alias("__z"))
+        return (raw.crossJoin(F.broadcast(z))
+                .select("node", (F.col(out) / F.col("__z")).alias(out)))
+
+    hub = nodes.select("node", F.lit(1.0).alias("hub"))
+    auth = None
+    for _ in range(iterations):
+        auth = _half_step(hub, a, b, "hub", "authority", w_fwd)
+        hub = _half_step(auth, b, a, "authority", "hub", w_bwd)
+    # dense completion ONCE: every graph node appears in the output,
+    # nodes that never received mass at exactly 0.0 (the value the
+    # per-half-step dense form carried for them all along)
+    dense = (nodes
+             .join(hub, "node", "left")
+             .join(auth, "node", "left")
+             .select("node",
+                     F.coalesce(F.col("hub"), F.lit(0.0)).alias("hub"),
+                     F.coalesce(F.col("authority"), F.lit(0.0))
+                     .alias("authority")))
+    if digits is not None:
+        dense = dense.select("node", F.round("hub", digits).alias("hub"),
+                             F.round("authority", digits)
+                             .alias("authority"))
+    return dense.select("node", "hub", "authority")
+
+
 def hits(edges: DataFrame, src: str, dst: str,
          iterations: int = 5,
          hub_digits: int | None = None,
@@ -506,19 +679,9 @@ def hits(edges: DataFrame, src: str, dst: str,
     form — the scale factor cancels in every norm
     (property-tested).
 
-    Scale posture: identical to ``pagerank`` — the edge list and node
-    set are materialized once; each half-iteration is ONE join of the
-    (node-bounded) score table against the cached edges plus a
-    partial-aggregated sum, and each normalization is a 1-row L2
-    aggregate entering the plan as a broadcast (never a driver
-    collect, never a SinglePartition funnel of the score table).
-    ``broadcast_scores`` follows pagerank's bounded-probe discipline
-    (r13 VERDICT #1): ``None`` broadcasts the score side of each
-    half-step join only when the node count reads ≤ 1M — host graphs
-    get the exchange-free plan, page-level graphs ship the join
-    unhinted and let AQE pick (a forced 90M-row broadcast per
-    half-step would OOM the build side). Iterations are O(K)
-    shuffles total either way.
+    Scale posture: the edge list is materialized once and the walk
+    runs in :func:`_alternating_walk`;
+    ``broadcast_scores`` is its bounded-probe gate.
     """
     if iterations < 1:
         raise ValueError("iterations must be >= 1")
@@ -532,83 +695,10 @@ def hits(edges: DataFrame, src: str, dst: str,
                              & (F.col(weight_col) > 0))
     if materialize:
         edges = edges.localCheckpoint()
-    nodes = (edges.select(F.col(src).alias("node"))
-             .union(edges.select(F.col(dst).alias("node")))
-             .distinct())
-    if materialize:
-        nodes = nodes.localCheckpoint()
-    broadcast_scores, empty = _resolve_score_gate(nodes,
-                                                  broadcast_scores)
-    if empty:
-        return nodes.select("node", F.lit(0.0).alias("hub"),
-                            F.lit(0.0).alias("authority"))
-
-    # The loop runs on SPARSE score frames — only nodes that received
-    # mass this half-step. Nodes absent from a sparse frame have score
-    # exactly 0.0, and 0.0 is an exact no-op in every place such a row
-    # could flow: a 0-score term adds nothing to the next half-step's
-    # sums (x + 0.0*w == x in IEEE), and contributes nothing to an L2
-    # norm — so the dense per-half-step `nodes` LEFT-join + coalesce
-    # of the previous shape was pure overhead: one extra join and one
-    # extra |V|-row pass PER HALF-STEP (2K joins for K iterations) at
-    # 100 TB, each carried before the norm could be taken. The dense
-    # completion happens ONCE, after the loop. Scores are bit-identical
-    # to the dense form (same join terms, same norm value).
-    def _normalized(raw: DataFrame, col: str) -> DataFrame:
-        norm = raw.agg(
-            F.sqrt(F.sum(F.col(col) * F.col(col))).alias("__z"))
-        return (raw.crossJoin(F.broadcast(norm))
-                .select("node",
-                        (F.col(col) / F.col("__z")).alias(col)))
-
-    hub = nodes.select("node", F.lit(1.0).alias("hub"))
-    auth = None
-    # weighted contribution: score × edge weight; unweighted keeps the
-    # plain column (no 1.0-multiply noise in the unweighted plan)
-    def _wmul(score: Column) -> Column:
-        if weight_col is None:
-            return score
-        return score * F.col(weight_col).cast("double")
-    for i in range(iterations):
-        hside = F.broadcast(hub) if broadcast_scores else hub
-        araw = (edges.join(hside, edges[src] == hside["node"])
-                .select(F.col(dst).alias("node"),
-                        _wmul(F.col("hub")).alias("hub"))
-                .groupBy("node").agg(F.sum("hub").alias("authority")))
-        if materialize:
-            # snapshot the RAW half-step sums LAZILY: the norm is an
-            # aggregate OF this frame and the normalized scores divide
-            # it again, so without the checkpoint each half-step's
-            # join+agg subtree is planned (and, across the norm's
-            # broadcast build plus the next half-step's score build,
-            # executed) twice; eager=False materializes it inside the
-            # norm's broadcast job instead of paying a separate
-            # synchronous job per half-step
-            araw = araw.localCheckpoint(eager=False)
-        auth = _normalized(araw, "authority")
-        aside = F.broadcast(auth) if broadcast_scores else auth
-        hraw = (edges.join(aside, edges[dst] == aside["node"])
-                .select(F.col(src).alias("node"),
-                        _wmul(F.col("authority")).alias("authority"))
-                .groupBy("node").agg(F.sum("authority").alias("hub")))
-        if materialize:
-            hraw = hraw.localCheckpoint(eager=False)
-        hub = _normalized(hraw, "hub")
-    # dense completion ONCE: every graph node appears in the output,
-    # nodes that never received mass at exactly 0.0 (the value the
-    # per-half-step dense form carried for them all along)
-    out = (nodes
-           .join(hub, "node", "left")
-           .join(auth, "node", "left")
-           .select("node",
-                   F.coalesce(F.col("hub"), F.lit(0.0)).alias("hub"),
-                   F.coalesce(F.col("authority"), F.lit(0.0))
-                   .alias("authority")))
-    if hub_digits is not None:
-        out = out.select("node", F.round("hub", hub_digits).alias("hub"),
-                         F.round("authority", hub_digits)
-                         .alias("authority"))
-    return out.select("node", "hub", "authority")
+    w = None if weight_col is None else F.col(weight_col).cast("double")
+    return _alternating_walk(edges, src, dst, iterations, w, w,
+                             lambda x: F.sqrt(F.sum(x * x)),
+                             materialize, broadcast_scores, hub_digits)
 
 
 def salsa(edges: DataFrame, src: str, dst: str,
@@ -650,19 +740,13 @@ def salsa(edges: DataFrame, src: str, dst: str,
     edge list. ``score_digits`` rounds both scores (the cross-engine
     float-sum rule).
 
-    Scale posture: identical to :func:`hits` — the distinct edge
-    list is materialized ONCE carrying its two reciprocal-degree
-    columns (1/outdeg(src) for the authority step, 1/indeg(dst) for
-    the hub step), so each half-iteration is one join of the
-    (node-bounded) score table against the cached weighted edges
-    plus a partial-aggregated sum, and each L1 norm is a 1-row
-    aggregate entering the plan as a broadcast — never a driver
-    collect. The one-time degree joins that build the edge weights
-    ship unhinted (AQE decides — they are paid once, the keep-set
-    rule); the per-iteration score joins follow pagerank's
-    bounded-probe gate: ``broadcast_scores=None`` probes the node
-    count and force-broadcasts only when it reads ≤ 1M, page-scale
-    graphs ship unhinted."""
+    Scale posture: the distinct edge list is materialized ONCE
+    carrying its two reciprocal-degree columns (1/outdeg(src) for the
+    authority step, 1/indeg(dst) for the hub step), and the walk runs
+    in :func:`_alternating_walk` with ``broadcast_scores`` as its
+    bounded-probe gate. The one-time degree joins that build the edge
+    weights ship unhinted (AQE decides — they are paid once, the
+    keep-set rule)."""
     if iterations < 1:
         raise ValueError("iterations must be >= 1")
     require_free_columns("salsa", edges.columns,
@@ -688,64 +772,9 @@ def salsa(edges: DataFrame, src: str, dst: str,
                   (F.lit(1.0) / F.col("__id")).alias("__wh")))
     if materialize:
         en = en.localCheckpoint()
-    nodes = (en.select(F.col("__a").alias("node"))
-             .union(en.select(F.col("__b").alias("node")))
-             .distinct())
-    if materialize:
-        nodes = nodes.localCheckpoint()
-    broadcast_scores, empty = _resolve_score_gate(nodes,
-                                                  broadcast_scores)
-    if empty:
-        return nodes.select("node", F.lit(0.0).alias("hub"),
-                            F.lit(0.0).alias("authority"))
-
-    # Sparse half-steps + one dense completion, exactly hits()'s shape
-    # (see the comment there): absent rows are exact 0.0 no-ops in both
-    # the walk sums and the L1 norms, so the per-half-step dense
-    # `nodes` LEFT-join of the previous form was 2K redundant joins.
-    def _l1(raw: DataFrame, col: str) -> DataFrame:
-        norm = raw.agg(F.sum(F.col(col)).alias("__z"))
-        return (raw.crossJoin(F.broadcast(norm))
-                .select("node",
-                        (F.col(col) / F.col("__z")).alias(col)))
-
-    hub = nodes.select("node", F.lit(1.0).alias("hub"))
-    auth = None
-    for _ in range(iterations):
-        hside = F.broadcast(hub) if broadcast_scores else hub
-        araw = (en.join(hside, en["__a"] == hside["node"])
-                .select(F.col("__b").alias("node"),
-                        (F.col("hub") * F.col("__wa")).alias("hub"))
-                .groupBy("node").agg(F.sum("hub").alias("authority")))
-        if materialize:
-            # lazy raw-sum snapshot — the hits() rule: the norm
-            # aggregates this frame and the normalized scores divide
-            # it again, so the checkpoint stops the half-step subtree
-            # from being planned and executed twice
-            araw = araw.localCheckpoint(eager=False)
-        auth = _l1(araw, "authority")
-        aside = F.broadcast(auth) if broadcast_scores else auth
-        hraw = (en.join(aside, en["__b"] == aside["node"])
-                .select(F.col("__a").alias("node"),
-                        (F.col("authority") * F.col("__wh"))
-                        .alias("authority"))
-                .groupBy("node").agg(F.sum("authority").alias("hub")))
-        if materialize:
-            hraw = hraw.localCheckpoint(eager=False)
-        hub = _l1(hraw, "hub")
-    out = (nodes
-           .join(hub, "node", "left")
-           .join(auth, "node", "left")
-           .select("node",
-                   F.coalesce(F.col("hub"), F.lit(0.0)).alias("hub"),
-                   F.coalesce(F.col("authority"), F.lit(0.0))
-                   .alias("authority")))
-    if score_digits is not None:
-        out = out.select("node",
-                         F.round("hub", score_digits).alias("hub"),
-                         F.round("authority", score_digits)
-                         .alias("authority"))
-    return out.select("node", "hub", "authority")
+    return _alternating_walk(en, "__a", "__b", iterations,
+                             F.col("__wa"), F.col("__wh"), F.sum,
+                             materialize, broadcast_scores, score_digits)
 
 
 _LAST_REACH_ROUNDS: int | None = None
@@ -796,17 +825,7 @@ def reachability(edges: DataFrame, src: str, dst: str,
     diagnostics)."""
     if direction not in ("forward", "backward"):
         raise ValueError("direction must be 'forward' or 'backward'")
-    if rounds < 1:
-        raise ValueError("rounds must be >= 1")
-    if until_stable and not materialize:
-        raise ValueError("until_stable requires materialize=True "
-                         "(each stability probe evaluates the plan)")
-    if on_cap not in ("silent", "warn", "raise"):
-        raise ValueError("on_cap must be 'silent', 'warn', or 'raise'")
-    if on_cap != "silent" and not until_stable:
-        raise ValueError("on_cap escalation requires until_stable=True "
-                         "(fixed-rounds runs never probe the fixpoint, "
-                         "so a cap-hit signal could not fire)")
+    _check_fixpoint_args(rounds, until_stable, materialize, on_cap)
     require_free_columns("reachability", edges.columns,
                          _WORKING + ("__a", "__b"))
     require_free_columns("reachability", edges.columns, ("node",),
@@ -835,32 +854,20 @@ def reachability(edges: DataFrame, src: str, dst: str,
         # lazy: the until_stable baseline count (or round 1's semi-join
         # side / broadcast build) materializes it — no dedicated job
         reached = reached.localCheckpoint(eager=False)
-    global _LAST_REACH_ROUNDS, _LAST_REACH_CONVERGED
-    executed, converged = 0, None
-    n_prev = reached.count() if until_stable else None
-    for _ in range(rounds):
-        rside = (F.broadcast(reached.withColumnRenamed("node", "__a"))
-                 if broadcast_frontier
-                 else reached.withColumnRenamed("node", "__a"))
+
+    def _hop(reached: DataFrame) -> DataFrame:
+        rside = reached.withColumnRenamed("node", "__a")
+        if broadcast_frontier:
+            rside = F.broadcast(rside)
         step = (el.join(rside, "__a", "left_semi")
                 .select(F.col("__b").alias("node")))
-        reached = reached.union(step).distinct()
-        if materialize:
-            # LAZY (r16): under until_stable the count probe right
-            # below materializes the snapshot in ITS job instead of a
-            # separate synchronous one per round (the CC discipline);
-            # under fixed rounds the chain materializes once inside
-            # the consumer's action cascade.
-            reached = reached.localCheckpoint(eager=False)
-        executed += 1
-        if until_stable:
-            n_now = reached.count()  # monotone: unchanged == closed
-            if n_now == n_prev:
-                converged = True
-                break
-            n_prev = n_now
-    if until_stable and converged is None:
-        converged = False
+        return reached.union(step).distinct()
+
+    global _LAST_REACH_ROUNDS, _LAST_REACH_CONVERGED
+    # the reached set only grows: an unchanged count is the closure
+    reached, executed, converged = _until_stable(
+        reached, _hop, lambda df: df.count(), rounds, until_stable,
+        materialize)
     _LAST_REACH_ROUNDS, _LAST_REACH_CONVERGED = executed, converged
     if converged is False:
         _on_cap_signal("reachability", rounds, on_cap,
@@ -919,14 +926,7 @@ def label_propagation(edges: DataFrame, src: str, dst: str,
                          _WORKING + ("__a", "__b", "__c"))
     require_free_columns("label_propagation", edges.columns,
                          ("node", "community"), kind="output")
-    nbr = (edges
-           .filter(F.col(src).isNotNull() & F.col(dst).isNotNull()
-                   & (F.col(src) != F.col(dst)))
-           .select(F.col(src).alias("__a"), F.col(dst).alias("__b")))
-    nbr = nbr.union(nbr.select(F.col("__b").alias("__a"),
-                               F.col("__a").alias("__b"))).distinct()
-    if materialize:
-        nbr = nbr.localCheckpoint()
+    nbr = _undirected(edges, src, dst, materialize)
     labels = (nbr.select(F.col("__a").alias("node"))
               .distinct()
               .select("node", F.col("node").alias("community")))
@@ -1124,29 +1124,12 @@ def k_core(edges: DataFrame, src: str, dst: str, k: int,
     silently disarm it."""
     if k < 1:
         raise ValueError("k must be >= 1")
-    if rounds < 1:
-        raise ValueError("rounds must be >= 1")
-    if until_stable and not materialize:
-        raise ValueError("until_stable requires materialize=True "
-                         "(each stability probe evaluates the plan)")
-    if on_cap not in ("silent", "warn", "raise"):
-        raise ValueError("on_cap must be 'silent', 'warn', or 'raise'")
-    if on_cap != "silent" and not until_stable:
-        raise ValueError("on_cap escalation requires until_stable=True "
-                         "(fixed-rounds runs never probe the fixpoint, "
-                         "so a cap-hit signal could not fire)")
+    _check_fixpoint_args(rounds, until_stable, materialize, on_cap)
     require_free_columns("k_core", edges.columns,
                          _WORKING + ("__a", "__b"))
     require_free_columns("k_core", edges.columns, ("node", "degree"),
                          kind="output")
-    nbr = (edges
-           .filter(F.col(src).isNotNull() & F.col(dst).isNotNull()
-                   & (F.col(src) != F.col(dst)))
-           .select(F.col(src).alias("__a"), F.col(dst).alias("__b")))
-    nbr = nbr.union(nbr.select(F.col("__b").alias("__a"),
-                               F.col("__a").alias("__b"))).distinct()
-    if materialize:
-        nbr = nbr.localCheckpoint()
+    nbr = _undirected(edges, src, dst, materialize)
     survivors = nbr.select(F.col("__a").alias("node")).distinct()
     if materialize:
         survivors = survivors.localCheckpoint()
@@ -1171,24 +1154,12 @@ def k_core(edges: DataFrame, src: str, dst: str, k: int,
                 .agg(F.count(F.lit(1)).alias("degree")))
 
     global _LAST_KCORE_ROUNDS, _LAST_KCORE_CONVERGED
-    executed, converged = 0, None
-    for _ in range(rounds):
-        survivors = (_alive_degrees(survivors)
-                     .filter(F.col("degree") >= k).select("node"))
-        if materialize:
-            # LAZY (r16): the stability probe (or the next round's
-            # semi-join sides) materializes the snapshot inside its
-            # own job — one job per peel round instead of two
-            survivors = survivors.localCheckpoint(eager=False)
-        executed += 1
-        if until_stable:
-            n_now = survivors.count()  # bounded probe: one scalar
-            if n_now == n_prev:
-                converged = True
-                break
-            n_prev = n_now
-    if until_stable and converged is None:
-        converged = False
+    survivors, executed, converged = _until_stable(
+        survivors,
+        lambda alive: (_alive_degrees(alive)
+                       .filter(F.col("degree") >= k).select("node")),
+        lambda df: df.count(), rounds, until_stable, materialize,
+        first_probe=n_prev)
     # diagnostics recorded BEFORE the escalation so a raise still
     # leaves the cap-hit observable
     _LAST_KCORE_ROUNDS, _LAST_KCORE_CONVERGED = executed, converged
@@ -1244,14 +1215,7 @@ def triangle_count(edges: DataFrame, src: str, dst: str,
     require_free_columns("triangle_count", edges.columns,
                          ("node", "degree", "triangles", "clustering"),
                          kind="output")
-    nbr = (edges
-           .filter(F.col(src).isNotNull() & F.col(dst).isNotNull()
-                   & (F.col(src) != F.col(dst)))
-           .select(F.col(src).alias("__a"), F.col(dst).alias("__b")))
-    nbr = nbr.union(nbr.select(F.col("__b").alias("__a"),
-                               F.col("__a").alias("__b"))).distinct()
-    if materialize:
-        nbr = nbr.localCheckpoint()
+    nbr = _undirected(edges, src, dst, materialize)
     deg = (nbr.groupBy(F.col("__a").alias("node"))
            .agg(F.count(F.lit(1)).alias("__deg")))
     if materialize:
@@ -1370,29 +1334,12 @@ def core_number(edges: DataFrame, src: str, dst: str,
     the combination would silently disarm it)."""
     from pyspark.sql import Window
 
-    if rounds < 1:
-        raise ValueError("rounds must be >= 1")
-    if until_stable and not materialize:
-        raise ValueError("until_stable requires materialize=True "
-                         "(each stability probe evaluates the plan)")
-    if on_cap not in ("silent", "warn", "raise"):
-        raise ValueError("on_cap must be 'silent', 'warn', or 'raise'")
-    if on_cap != "silent" and not until_stable:
-        raise ValueError("on_cap escalation requires until_stable=True "
-                         "(fixed-rounds runs never probe the fixpoint, "
-                         "so a cap-hit signal could not fire)")
+    _check_fixpoint_args(rounds, until_stable, materialize, on_cap)
     require_free_columns("core_number", edges.columns,
                          _WORKING + ("__a", "__b", "__c", "__rn"))
     require_free_columns("core_number", edges.columns,
                          ("node", "core"), kind="output")
-    nbr = (edges
-           .filter(F.col(src).isNotNull() & F.col(dst).isNotNull()
-                   & (F.col(src) != F.col(dst)))
-           .select(F.col(src).alias("__a"), F.col(dst).alias("__b")))
-    nbr = nbr.union(nbr.select(F.col("__b").alias("__a"),
-                               F.col("__a").alias("__b"))).distinct()
-    if materialize:
-        nbr = nbr.localCheckpoint()
+    nbr = _undirected(edges, src, dst, materialize)
     vals = (nbr.groupBy(F.col("__a").alias("node"))
             .agg(F.count(F.lit(1)).alias("__c")))
     if materialize:
@@ -1400,39 +1347,27 @@ def core_number(edges: DataFrame, src: str, dst: str,
     if broadcast_values is None:
         # bounded probe: the value table is one row per node
         broadcast_values = _gate_broadcast(None, vals.count())
-    s_prev = None
-    if until_stable:
-        s_prev = vals.agg(F.sum("__c")).first()[0]
     w = (Window.partitionBy("__a")
          .orderBy(F.col("__c").desc(), F.col("__b")))
-    global _LAST_CORE_ROUNDS, _LAST_CORE_CONVERGED
-    executed, converged = 0, None
-    for _ in range(rounds):
+
+    def _h_index(vals: DataFrame) -> DataFrame:
         vside = F.broadcast(vals) if broadcast_values else vals
         # H-index of the neighbor multiset: sort desc, rank, take
         # max(min(rank, value)) — a window over ONE adjacency list
-        vals = (nbr.join(vside, nbr["__b"] == vside["node"])
+        return (nbr.join(vside, nbr["__b"] == vside["node"])
                 .select("__a", "__b", "__c")
                 .withColumn("__rn", F.row_number().over(w))
                 .groupBy(F.col("__a").alias("node"))
                 .agg(F.max(F.least(F.col("__rn").cast("long"),
                                    F.col("__c")))
                      .alias("__c")))
-        if materialize:
-            # LAZY (r16): the sum probe (or next round's join side)
-            # materializes it — one job per H-index round, not two
-            vals = vals.localCheckpoint(eager=False)
-        executed += 1
-        if until_stable:
-            # monotone non-increasing values: an unchanged sum means
-            # every value is unchanged — one bounded scalar probe
-            s_now = vals.agg(F.sum("__c")).first()[0]
-            if s_now == s_prev:
-                converged = True
-                break
-            s_prev = s_now
-    if until_stable and converged is None:
-        converged = False
+
+    global _LAST_CORE_ROUNDS, _LAST_CORE_CONVERGED
+    # monotone non-increasing values: an unchanged sum means every
+    # value is unchanged — one bounded scalar probe per round
+    vals, executed, converged = _until_stable(
+        vals, _h_index, lambda df: df.agg(F.sum("__c")).first()[0],
+        rounds, until_stable, materialize)
     # diagnostics recorded BEFORE the escalation so a raise still
     # leaves the cap-hit observable
     _LAST_CORE_ROUNDS, _LAST_CORE_CONVERGED = executed, converged

@@ -84,9 +84,6 @@ def _spread(df: DataFrame) -> DataFrame:
     thousands of splits — it is a no-op.
     """
     import math
-    import os
-    if os.environ.get("SPARK_GRAFT_NO_SPREAD"):
-        return df
     from ..operators.similarity import plan_size_bytes
     spark = df.sparkSession
     try:
@@ -6623,7 +6620,10 @@ def host_bowtie(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sets so interleaving cannot change them). Measured at sf0.1:
     # host_bowtie 4.47 -> 2.86 s isolated, same total work —
     # overlapped barriers (pool-thread jobs leave the probe's job
-    # group, so per-group job counts undercount here).
+    # group, so per-group job counts undercount here). Both threads
+    # write graph._LAST_REACH_ROUNDS/_CONVERGED, so after this block
+    # those diagnostics hold whichever closure finished last; the
+    # on_cap="raise" signal is per call and unaffected.
     from concurrent.futures import ThreadPoolExecutor
     with ThreadPoolExecutor(max_workers=2) as pool:
         f_fw = pool.submit(graph.reachability, edges, "src", "dst",

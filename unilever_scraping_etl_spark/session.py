@@ -19,9 +19,16 @@ from pyspark.sql import SparkSession
 
 def default_parallelism() -> int:
     cpus = os.environ.get("SPARK_GRAFT_CPUS")
-    if cpus:
-        return int(cpus)
-    return os.cpu_count() or 8
+    if not cpus:
+        return os.cpu_count() or 8
+    try:
+        n = int(cpus)
+    except ValueError:
+        n = 0
+    if n < 1:
+        raise ValueError(f"SPARK_GRAFT_CPUS must be an integer >= 1, "
+                         f"got {cpus!r}")
+    return n
 
 
 def get_session(app_name: str = "unilever_scraping_etl_spark",
