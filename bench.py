@@ -9,7 +9,9 @@ driver-side — and timed wall-clock after a warmup of the session +
 parquet footers. Each query runs $SPARK_GRAFT_BENCH_RUNS passes
 (default 2, suite-interleaved) and the headline is the per-query min,
 so the committed artifact is reproducible on a noisy shared host; raw
-per-pass timings land in bench_detail.json.
+per-pass timings land in bench_detail.json, next to the codegen classes
+each pass compiled per query (pass 1 cold, pass 2 warm), so a warm-pass
+gain that comes from the compiled-code cache shows as caching.
 """
 
 from __future__ import annotations
@@ -18,12 +20,13 @@ import json
 import os
 import sys
 import time
+from itertools import zip_longest
 
 import pandas as pd
 from pyspark.sql import functions as F
 
 from unilever_scraping_etl_spark.plans.registry import QUERIES
-from unilever_scraping_etl_spark.session import get_session
+from unilever_scraping_etl_spark.session import classes_compiled, get_session
 
 
 def collect_timings(names, run_one, n_runs: int, budget: float,
@@ -110,9 +113,13 @@ def main() -> None:
     budget = float(os.environ.get("SPARK_GRAFT_BENCH_BUDGET_SEC", "900"))
     t_suite = time.perf_counter()
 
+    compiled: dict[str, list[int]] = {name: [] for name in QUERIES}
+
     def run_one(name: str) -> None:
+        c0 = classes_compiled(spark)
         QUERIES[name].spark(spark, sf_dir).write.format("noop") \
             .mode("overwrite").save()
+        compiled[name].append(classes_compiled(spark) - c0)
 
     runs, failures, flaky_failures = collect_timings(
         list(QUERIES), run_one, n_runs, budget)
@@ -156,6 +163,10 @@ def main() -> None:
         "queries": timings,
         "runs_per_query": n_runs,
         "raw_runs": {name: ts for name, ts in runs.items() if ts},
+        # codegen classes compiled per pass, aligned with raw_runs
+        "classes_compiled": {name: cs for name, cs in compiled.items() if cs},
+        "classes_compiled_per_pass": [
+            sum(p) for p in zip_longest(*compiled.values(), fillvalue=0)],
         "sf": float(sf),
         "scrape_pages_per_sec": round(scrape_pps, 1),
         "scrape_pps_runs": [round(p, 1) for p in pps_runs],

@@ -2,7 +2,9 @@
 the bench's exact methodology (warmed session, noop sink), dump
 ``.explain("formatted")`` for the plan record, and count the Spark jobs
 each query launches (eager checkpoints / convergence probes each cost a
-job — the per-iteration overhead signal at local scale).
+job — the per-iteration overhead signal at local scale) and the codegen
+classes it compiles (nonzero on a warm run means code the compiled-code
+cache could not serve).
 
 Usage:
     python tools/opt_probe.py [--sf DIR] [--runs N] [--plans SUFFIX] q1 q2 ...
@@ -36,7 +38,7 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     from unilever_scraping_etl_spark.plans.registry import QUERIES
-    from unilever_scraping_etl_spark.session import get_session
+    from unilever_scraping_etl_spark.session import classes_compiled, get_session
 
     spark = get_session("opt_probe")
     sc = spark.sparkContext
@@ -61,16 +63,19 @@ def main() -> None:
         spec = QUERIES[name]
         times = []
         n_jobs = []
+        n_compiled = []
         for run_i in range(args.runs):
             group = f"{name}-run{run_i}"
             sc.setJobGroup(group, name)
             sc.setJobDescription(f"{name} run {run_i}")
+            c0 = classes_compiled(spark)
             t0 = time.perf_counter()
             df = spec.spark(spark, args.sf)
             t_build = time.perf_counter() - t0
             df.write.format("noop").mode("overwrite").save()
             times.append(time.perf_counter() - t0)
             n_jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+            n_compiled.append(classes_compiled(spark) - c0)
             sc.setJobGroup("", "")
             if run_i == 0:
                 build_s = t_build
@@ -81,7 +86,8 @@ def main() -> None:
                 .ExplainMode.fromString("formatted"))
             (plan_dir / f"{name}_{args.plans}.txt").write_text(plan)
         print(f"{name:36s} min={min(times):7.3f}s  runs={[round(t,3) for t in times]}"
-              f"  build(run0)={build_s:6.3f}s  jobs/run={n_jobs}")
+              f"  build(run0)={build_s:6.3f}s  jobs/run={n_jobs}"
+              f"  compiled/run={n_compiled}")
 
 
 if __name__ == "__main__":

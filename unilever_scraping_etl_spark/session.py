@@ -3,11 +3,13 @@
 Local testing runs ``local[N]`` (single JVM); the config posture is
 nonetheless written for a multi-executor cluster: AQE handles runtime
 re-planning (skew joins, partition coalescing), shuffle partitions are
-explicit, Arrow is on for every Python<->JVM boundary, and the session
-timezone is pinned to UTC so timestamp semantics are deterministic and
-engine-independent (the reference pipeline instead stamped dates with a
-module-import-time constant — scrap_tokopedia.py:23 — a semantics we
-deliberately replace, see SURVEY.md §7.4).
+explicit, Arrow is on for every Python<->JVM boundary, the compiled-code
+cache holds the whole catalogue's generated classes so a long-lived
+session does not recompile them (``CODEGEN_CACHE_ENTRIES``), and the
+session timezone is pinned to UTC so timestamp semantics are
+deterministic and engine-independent (the reference pipeline instead
+stamped dates with a module-import-time constant — scrap_tokopedia.py:23
+— a semantics we deliberately replace, see SURVEY.md §7.4).
 """
 
 from __future__ import annotations
@@ -15,6 +17,18 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+# Entries in the JVM-wide LRU cache of compiled codegen classes (static
+# conf spark.sql.codegen.cache.maxEntries). At Spark's default of 100, a
+# warm pass over the catalogue recompiles nearly all of it. One cold
+# pass over all 200 registered queries, with a cache too large to evict,
+# compiles 2,570 distinct classes at sf0.01 and 2,570 at sf0.1 (2,600
+# with bench.py's warm-up); this is the smallest power of two >= 1.5x
+# that. Envelope, enforced by the cache's maximumSize: ~8 KB Metaspace
+# and ~34 KB heap per entry (full catalogue resident: +21 MB Metaspace,
+# +88 MB heap after GC over the default), so at most ~35 MB Metaspace
+# and ~140 MB heap more than the default at the cap.
+CODEGEN_CACHE_ENTRIES = 4096
 
 
 def default_parallelism() -> int:
@@ -62,6 +76,7 @@ def get_session(app_name: str = "unilever_scraping_etl_spark",
         .config("spark.sql.parquet.aggregatePushdown", "true")
         .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )
@@ -70,3 +85,10 @@ def get_session(app_name: str = "unilever_scraping_etl_spark",
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def classes_compiled(spark: SparkSession) -> int:
+    """Classes Spark's code generator has compiled so far in this JVM:
+    one per cache miss, so a cached plan adds nothing."""
+    return (spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+            .METRIC_COMPILATION_TIME().getCount())
