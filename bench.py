@@ -126,7 +126,7 @@ def main() -> None:
     timings = {name: min(ts) for name, ts in runs.items() if ts}
 
     # Scrape-path throughput: pages/s through fetch-shaped rows -> DOM
-    # extraction UDF -> typed parse (the reference's ceiling is ~0.5-5
+    # extraction -> typed parse (the reference's ceiling is ~0.5-5
     # products/s from its 5x5 process pools, BASELINE.md).
     from unilever_scraping_etl_spark.plans import fixtures
     from unilever_scraping_etl_spark.sources import ingest
@@ -141,15 +141,43 @@ def main() -> None:
     # honors the same wall-clock budget (r6 ADVICE): on a host window
     # slow enough to exhaust it, extra passes are skipped (one always
     # runs) instead of risking an external timeout.
-    pps_runs = []
-    for probe_i in range(max(1, n_runs)):
-        if probe_i > 0 and time.perf_counter() - t_suite > budget:
-            break
-        t0 = time.perf_counter()
-        ingest.parse_products(pages).write.format("noop") \
-            .mode("overwrite").save()
-        pps_runs.append(n_pages / (time.perf_counter() - t0))
+    def rates(n_items: int, run) -> list[float]:
+        out = []
+        for probe_i in range(max(1, n_runs)):
+            if probe_i > 0 and time.perf_counter() - t_suite > budget:
+                break
+            t0 = time.perf_counter()
+            run()
+            out.append(n_items / (time.perf_counter() - t0))
+        return out
+
+    pps_runs = rates(n_pages, lambda: ingest.parse_products(pages)
+                     .write.format("noop").mode("overwrite").save())
     scrape_pps = max(pps_runs)
+
+    # Whole-scrape throughput: the probe above starts from HTML already
+    # in the frame, so it never sees the fetch levels. This one runs
+    # scrape_to_snapshot + count() over a fixture site (4 shops x 5
+    # catalog pages x 25 products), counted in product pages/s.
+    from unilever_scraping_etl_spark.sources.fetcher import FixtureFetcher
+
+    shops, n_catalog, per_catalog = [f"shop{i}" for i in range(4)], 5, 25
+    site = {}
+    for shop in shops:
+        for p in range(1, n_catalog + 1):
+            links = [f"{shop}/item-{p}-{i}" for i in range(per_catalog)]
+            suffix = "" if p == 1 else f"/page/{p}"
+            site[f"https://www.tokopedia.com/{shop}{suffix}"] = \
+                fixtures.catalog_html([(link, False) for link in links])
+            for i, link in enumerate(links):
+                site[f"https://www.tokopedia.com/{link}"] = \
+                    fixtures.product_html(link, f"Rp{1000 + i}.000")
+    site_fetcher = FixtureFetcher(site)
+    site_runs = rates(
+        len(shops) * n_catalog * per_catalog,
+        lambda: ingest.scrape_to_snapshot(
+            spark, shops, site_fetcher,
+            {shop: n_catalog for shop in shops})[0].count())
 
     # Per-query detail goes to a file; stdout gets ONE compact line LAST.
     # (Round 1 lesson: the full 83-query timing dict overflowed the
@@ -170,6 +198,8 @@ def main() -> None:
         "sf": float(sf),
         "scrape_pages_per_sec": round(scrape_pps, 1),
         "scrape_pps_runs": [round(p, 1) for p in pps_runs],
+        "scrape_site_pages_per_s": round(max(site_runs), 1),
+        "scrape_site_pps_runs": [round(p, 1) for p in site_runs],
     }
     if failures:
         detail["failures"] = failures

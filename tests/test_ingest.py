@@ -51,14 +51,73 @@ def test_scrape_to_snapshot_end_to_end(spark, shop_fixture):
     assert bad[0]["quarantine_reason"] == ["missing_price"]
 
 
+def _physical_nodes(plan):
+    """Every operator of an executed plan, looking through adaptive
+    execution's wrapper and query stages, and into the plan behind a
+    cached relation (another test may have persisted the same plan)."""
+    name = plan.nodeName()
+    if name == "AdaptiveSparkPlan":
+        yield from _physical_nodes(plan.executedPlan())
+        return
+    if name.endswith("QueryStage"):
+        yield from _physical_nodes(plan.plan())
+        return
+    yield plan
+    if name == "InMemoryTableScan":
+        yield from _physical_nodes(plan.relation().cachedPlan())
+    kids = plan.children()
+    for i in range(kids.size()):
+        yield from _physical_nodes(kids.apply(i))
+
+
+def _executed_nodes(df):
+    df.collect()
+    return list(_physical_nodes(df._jdf.queryExecution().executedPlan()))
+
+
+def test_scrape_plan_is_one_python_pass_per_fetch_level(spark, shop_fixture):
+    """Each fetch level fetches and extracts in the same worker: two
+    MapInPandas nodes, no UDF node for Catalyst to re-evaluate under an
+    inferred filter, and no operator that carries the HTML."""
+    _, fetcher = shop_fixture
+    valid, _ = ingest.scrape_to_snapshot(spark, ["shopx"], fetcher, {"shopx": 2})
+    nodes = _executed_nodes(valid)
+    names = [n.nodeName() for n in nodes]
+    assert names.count("MapInPandas") == 2, names
+    assert not {"ArrowEvalPython", "BatchEvalPython"} & set(names), names
+    for n in nodes:
+        out = n.output()
+        cols = {out.apply(i).name() for i in range(out.size())}
+        assert "html" not in cols, (n.nodeName(), cols)
+
+
+def test_fetch_partitions_repartitions_each_fetch_level(spark, shop_fixture):
+    """The CLI's --fetch-partitions: same rows as the default, and both
+    fetch levels run on that many partitions."""
+    _, fetcher = shop_fixture
+
+    def rows(df):
+        return sorted(map(str, df.collect()))
+
+    default = ingest.scrape_to_snapshot(spark, ["shopx"], fetcher, {"shopx": 2})
+    three = ingest.scrape_to_snapshot(
+        spark, ["shopx"], fetcher, {"shopx": 2}, fetch_partitions=3)
+    assert rows(three[0]) == rows(default[0])
+    assert rows(three[1]) == rows(default[1])
+    levels = [n for n in _executed_nodes(three[0])
+              if n.nodeName() == "MapInPandas"]
+    assert len(levels) == 2
+    assert [n.outputPartitioning().numPartitions() for n in levels] == [3, 3]
+    assert three[0].rdd.getNumPartitions() == 3
+
+
 def test_catalog_stats_and_links(spark, shop_fixture):
     base, fetcher = shop_fixture
     urls = spark.createDataFrame([(1, base), (2, f"{base}/page/2")], "page int, url string")
-    fetched = ingest.fetch_pages(urls, fetcher)
     stats = {r["page"]: (r["valid"], r["invalid"], r["page_ok"])
-             for r in ingest.catalog_page_stats(fetched).collect()}
+             for r in ingest.catalog_page_stats(urls, fetcher).collect()}
     assert stats == {1: (1, 1, True), 2: (2, 0, True)}
-    links = sorted(r["link"] for r in ingest.catalog_links(fetched).collect())
+    links = sorted(r["link"] for r in ingest.catalog_links(urls, fetcher).collect())
     assert links == ["shopx/p1", "shopx/p3", "shopx/p4"]
 
 

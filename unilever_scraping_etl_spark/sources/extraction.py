@@ -4,14 +4,14 @@ The reference drives extraction with eight BeautifulSoup selector
 constants (scrap_tokopedia.py:30-73) applied imperatively per page. We
 keep the same *shape* — a selector is (tag name, required attrs) — but
 make the whole spec a declarative table (``ExtractionSpec``) consumed by
-generic Arrow-batched extract functions, and implement matching on a
+generic row-level extract functions, and implement matching on a
 minimal stdlib ``html.parser`` DOM (clean-room; bs4 is not a
 dependency).
 
-Extraction UDFs emit RAW STRINGS; typing/parsing (Rupiah, percent) is
+Extraction emits RAW STRINGS; typing/parsing (Rupiah, percent) is
 done afterwards by JVM-side expressions in functions/scalars.py — the
-Python boundary does only what Python must (DOM walking), everything
-else stays in codegen.
+Python boundary does only what Python must (fetching and DOM walking),
+everything else stays in codegen.
 """
 
 from __future__ import annotations
@@ -169,7 +169,8 @@ DEFAULT_SPEC = ExtractionSpec(
 
 
 # ---------------------------------------------------------------------------
-# Row-level extract functions (wrapped into Arrow-batched UDFs by ingest.py)
+# Row-level extract functions (run by ingest.py in the worker that fetched
+# the page, inside one mapInPandas per fetch level)
 # ---------------------------------------------------------------------------
 
 def extract_links(html: str | None, spec: ExtractionSpec = DEFAULT_SPEC) -> list[str]:
@@ -219,9 +220,9 @@ def links_udtf(spec: ExtractionSpec = DEFAULT_SPEC):
     """U2 as a real Python UDTF (Spark 3.5+ table function): one catalog
     page row in, one row per active product link out — the table-valued
     form of extract_links for SQL users (``SELECT u.* FROM pages,
-    LATERAL extract_links(html) u``). The Arrow-batched array+explode
-    path in ingest.catalog_links remains the bulk route; this is the
-    SQL-surface equivalent."""
+    LATERAL extract_links(html) u``) over HTML already in a table. The
+    scrape itself uses ingest.catalog_links, which fetches each catalog
+    page and explodes its links in the same Python worker."""
     from pyspark.sql.functions import udtf
 
     @udtf(returnType="link string")

@@ -4,15 +4,20 @@ Reference architecture (scrap_tokopedia.py:299-328): a per-shop Python
 loop, two levels of nested ProcessPoolExecutor(5), per-row INSERTs.
 Spark-first architecture here:
 
-    seed shops ──▶ explode page sequence ──▶ mapInPandas(fetch)
-      ──▶ extract links (Arrow UDF) ──▶ explode ──▶ mapInPandas(fetch)
-      ──▶ extract raw fields (Arrow UDF) ──▶ JVM-side parse/typing
-      ──▶ quarantine split ──▶ partitioned parquet snapshot / JDBC
+    seed shops ──▶ explode page sequence
+      ──▶ mapInPandas(fetch catalog page ─▶ extract active links ─▶ explode)
+      ──▶ product URL
+      ──▶ mapInPandas(fetch product page ─▶ extract raw fields)
+      ──▶ JVM-side parse/typing ──▶ quarantine split
+      ──▶ partitioned parquet snapshot / JDBC
 
-Every stage is narrow (no shuffle until a sink repartition), fetch
-parallelism is governed by partition count instead of hardcoded pool
-widths, and row-level tolerance is an explicit quarantine split instead
-of scattered try/except (SURVEY.md §4).
+Each fetch level is ONE Python pass: the worker that fetches a page
+also walks its DOM, so the HTML never crosses into the JVM and no UDF
+is left for Catalyst to evaluate twice. Every stage is narrow (no
+shuffle until a sink repartition), fetch parallelism is governed by
+partition count instead of hardcoded pool widths, and row-level
+tolerance is an explicit quarantine split instead of scattered
+try/except (SURVEY.md §4).
 """
 
 from __future__ import annotations
@@ -29,112 +34,100 @@ from .extraction import (DEFAULT_SPEC, ExtractionSpec, extract_links,
                          extract_product_raw, page_stats)
 from .fetcher import Fetcher
 
-FETCH_SCHEMA = T.StructType([
-    T.StructField("url", T.StringType()),
-    T.StructField("status", T.IntegerType()),
-    T.StructField("html", T.StringType()),
-    T.StructField("fetcher", T.StringType()),
-])
 
-
-def fetch_pages(urls: DataFrame, fetcher: Fetcher, url_col: str = "url",
+def _page_level(pages: DataFrame, kernel, fields: list[T.StructField],
+                fetcher: Fetcher | None = None,
                 partitions: int | None = None) -> DataFrame:
-    """Fetch every URL in the frame via mapInPandas. Parallelism = the
-    frame's partition count (the politeness knob that replaces the
-    reference's hardcoded 5×5 pools); other columns pass through."""
+    """One fetch level as ONE mapInPandas. Per row the worker takes
+    the page — ``fetcher(url)`` (its ``FetchResult.url`` replaces the
+    input url), or the frame's ``html`` column when no fetcher is given
+    — and emits one output row per tuple ``kernel(url, html)`` yields,
+    shaped like ``fields``. The other input columns pass through,
+    repeated per output row; ``url`` and ``html`` do not, so the HTML
+    never leaves the Python worker. Parallelism is the frame's
+    partition count: ``partitions`` repartitions first (the politeness
+    knob that replaces the reference's hardcoded 5×5 pools)."""
     if partitions:
-        urls = urls.repartition(partitions)
-    passthrough = [f for f in urls.schema.fields if f.name != url_col]
-    out_schema = T.StructType(list(FETCH_SCHEMA.fields) + passthrough)
+        pages = pages.repartition(partitions)
+    keep = [f for f in pages.schema.fields if f.name not in ("url", "html")]
+    keep_names = [f.name for f in keep]
+    names = [f.name for f in fields]
 
     def run(batches):
         for pdf in batches:
-            rows = []
-            for _, row in pdf.iterrows():
-                res = fetcher(row[url_col])
-                rec = {"url": res.url, "status": res.status,
-                       "html": res.html, "fetcher": res.fetcher}
-                for f in passthrough:
-                    rec[f.name] = row[f.name]
-                rows.append(rec)
-            yield pd.DataFrame(rows, columns=[f.name for f in out_schema.fields])
+            if fetcher is None:
+                docs = zip(pdf["url"], pdf["html"])
+            else:
+                docs = ((r.url, r.html) for r in map(fetcher, pdf["url"]))
+            at, rows = [], []
+            for i, (url, html) in enumerate(docs):
+                for row in kernel(url, html):
+                    at.append(i)
+                    rows.append(row)
+            out = pdf[keep_names].iloc[at].reset_index(drop=True)
+            yield pd.concat([out, pd.DataFrame(rows, columns=names)], axis=1)
 
-    return urls.mapInPandas(run, out_schema)
-
-
-LINKS_TYPE = T.ArrayType(T.StringType())
-STATS_TYPE = T.StructType([
-    T.StructField("valid", T.IntegerType()),
-    T.StructField("invalid", T.IntegerType()),
-    T.StructField("page_ok", T.BooleanType()),
-])
-RAW_PRODUCT_TYPE = T.StructType([
-    T.StructField("name_raw", T.StringType()),
-    T.StructField("detail_raw", T.StringType()),
-    T.StructField("price_raw", T.StringType()),
-    T.StructField("originalprice_raw", T.StringType()),
-    T.StructField("discount_raw", T.StringType()),
-])
+    return pages.mapInPandas(run, T.StructType(keep + fields))
 
 
-def _links_udf(spec: ExtractionSpec):
-    @F.pandas_udf(LINKS_TYPE)
-    def links(html: pd.Series) -> pd.Series:
-        return html.map(lambda h: extract_links(h, spec))
-    return links
+def catalog_links(urls: DataFrame, fetcher: Fetcher,
+                  spec: ExtractionSpec = DEFAULT_SPEC,
+                  partitions: int | None = None) -> DataFrame:
+    """Catalog URLs -> one row per active product ``link`` (SURVEY.md
+    §3.2), exploded in the worker. Empty/failed catalogs yield zero
+    rows and never abort siblings."""
+    return _page_level(
+        urls, lambda _, html: ((link,) for link in extract_links(html, spec)),
+        [T.StructField("link", T.StringType())], fetcher, partitions)
 
 
-def _stats_udf(spec: ExtractionSpec):
-    @F.pandas_udf(STATS_TYPE)
-    def stats(html: pd.Series) -> pd.DataFrame:
-        vals = html.map(lambda h: page_stats(h, spec))
-        return pd.DataFrame(
-            vals.tolist(), columns=["valid", "invalid", "page_ok"], index=html.index)
-    return stats
+def catalog_page_stats(urls: DataFrame, fetcher: Fetcher,
+                       spec: ExtractionSpec = DEFAULT_SPEC) -> DataFrame:
+    """Catalog URLs -> (valid, invalid, page_ok) per page, driving
+    last_valid_page (SURVEY.md A2/A3)."""
+    return _page_level(
+        urls, lambda _, html: (page_stats(html, spec),),
+        [T.StructField("valid", T.IntegerType()),
+         T.StructField("invalid", T.IntegerType()),
+         T.StructField("page_ok", T.BooleanType())], fetcher)
 
 
-def _product_udf(spec: ExtractionSpec):
-    @F.pandas_udf(RAW_PRODUCT_TYPE)
-    def product(html: pd.Series) -> pd.DataFrame:
-        recs = html.map(lambda h: extract_product_raw(h, spec))
-        return pd.DataFrame(recs.tolist(), index=html.index)
-    return product
+def _products(pages: DataFrame, spec: ExtractionSpec, platform: str,
+              fetcher: Fetcher | None = None,
+              partitions: int | None = None) -> DataFrame:
+    """Product pages -> typed rows matching the reference's
+    tr_raw_scrap_data (scrap_tokopedia.py:80-91). Raw strings come out
+    of the DOM walk; Rupiah/percent/date typing happens in JVM
+    expressions (functions/scalars.py)."""
+    raw_names = ("name_raw", "detail_raw", "price_raw",
+                 "originalprice_raw", "discount_raw")
 
+    def kernel(url, html):
+        raw = extract_product_raw(html, spec)
+        return ((url, *(raw[n] for n in raw_names)),)
 
-def catalog_links(pages: DataFrame, spec: ExtractionSpec = DEFAULT_SPEC) -> DataFrame:
-    """Fetched catalog pages -> one row per active product link
-    (SURVEY.md §3.2). Empty/failed catalogs yield zero rows and never
-    abort siblings."""
-    return (pages
-            .withColumn("links", _links_udf(spec)(F.col("html")))
-            .withColumn("link", F.explode("links"))
-            .drop("links", "html"))
-
-
-def catalog_page_stats(pages: DataFrame, spec: ExtractionSpec = DEFAULT_SPEC) -> DataFrame:
-    """Fetched catalog pages -> (page, valid, invalid, page_ok) stats
-    table driving last_valid_page (SURVEY.md A2/A3)."""
-    return (pages.withColumn("s", _stats_udf(spec)(F.col("html")))
-            .select(*[c for c in pages.columns if c != "html"], "s.*"))
+    raw = _page_level(
+        pages, kernel,
+        [T.StructField(n, T.StringType()) for n in ("url", *raw_names)],
+        fetcher, partitions)
+    return raw.select(
+        F.col("url"),
+        F.trim(F.col("name_raw")).alias("name"),
+        F.trim(F.col("detail_raw")).alias("detail"),
+        scalars.parse_rupiah(F.col("price_raw")).alias("price"),
+        scalars.parse_rupiah(F.col("originalprice_raw")).alias("originalprice"),
+        scalars.parse_percent(F.col("discount_raw")).alias("discountpercentage"),
+        F.lit(platform).alias("platform"),
+        scalars.scrape_date().alias("createdate"),
+    )
 
 
 def parse_products(pages: DataFrame, spec: ExtractionSpec = DEFAULT_SPEC,
                    platform: str = "tokopedia") -> DataFrame:
-    """Fetched product pages -> typed rows matching the reference's
-    tr_raw_scrap_data (scrap_tokopedia.py:80-91). Raw strings come out
-    of the Arrow UDF; Rupiah/percent/date typing happens in JVM
-    expressions (functions/scalars.py)."""
-    raw = pages.withColumn("p", _product_udf(spec)(F.col("html")))
-    return raw.select(
-        F.col("url"),
-        F.trim(F.col("p.name_raw")).alias("name"),
-        F.trim(F.col("p.detail_raw")).alias("detail"),
-        scalars.parse_rupiah(F.col("p.price_raw")).alias("price"),
-        scalars.parse_rupiah(F.col("p.originalprice_raw")).alias("originalprice"),
-        scalars.parse_percent(F.col("p.discount_raw")).alias("discountpercentage"),
-        F.lit(platform).alias("platform"),
-        scalars.scrape_date().alias("createdate"),
-    )
+    """Already-fetched ``(url, html)`` product pages -> typed product
+    rows, through the same kernel and typing as the scrape's product
+    level."""
+    return _products(pages, spec, platform)
 
 
 def scrape_to_snapshot(spark: SparkSession, shops: list[str], fetcher: Fetcher,
@@ -146,7 +139,8 @@ def scrape_to_snapshot(spark: SparkSession, shops: list[str], fetcher: Fetcher,
     """Full pipeline: shops -> catalog pages -> links -> product rows,
     split into (valid, quarantined). UNION-of-shops is inherent: all
     shops live in one frame (SURVEY.md O3) instead of the reference's
-    sequential loop (scrap_tokopedia.py:324-328).
+    sequential loop (scrap_tokopedia.py:324-328). ``fetch_partitions``
+    repartitions before each fetch level.
 
     ``persist=True`` caches the parsed-product frame BEFORE the
     quarantine split: both returned frames derive from it, so a caller
@@ -161,12 +155,10 @@ def scrape_to_snapshot(spark: SparkSession, shops: list[str], fetcher: Fetcher,
     pages = pages.withColumn(
         "url", scalars.page_url(F.concat(F.lit("https://www.tokopedia.com/"),
                                          F.col("shop")), F.col("page")))
-    fetched_catalogs = fetch_pages(pages, fetcher, partitions=fetch_partitions)
-    links = catalog_links(fetched_catalogs, spec)
-    product_urls = links.withColumn("url", scalars.product_url(F.col("link")))
-    fetched_products = fetch_pages(
-        product_urls.select("shop", "url"), fetcher, partitions=fetch_partitions)
-    products = parse_products(fetched_products, spec)
+    links = catalog_links(pages, fetcher, spec, fetch_partitions)
+    product_urls = links.select(scalars.product_url(F.col("link")).alias("url"))
+    products = _products(product_urls, spec, "tokopedia", fetcher,
+                         fetch_partitions)
     if persist:
         products = products.persist()
     valid, quarantined = quarantine_split(
@@ -378,8 +370,8 @@ def find_last_valid_page(spark: SparkSession, base_url: str, fetcher: Fetcher,
     def stats_for(page_nums: list[int]) -> dict[int, int]:
         urls = local_df(spark, [(p,) for p in page_nums], "page int") \
             .withColumn("url", scalars.page_url(F.lit(base_url), F.col("page")))
-        fetched = fetch_pages(urls, fetcher)
-        rows = catalog_page_stats(fetched, spec).select("page", "valid").collect()
+        rows = catalog_page_stats(urls, fetcher, spec).select(
+            "page", "valid").collect()
         return {r["page"]: r["valid"] for r in rows}
 
     probes = list(range(step, max_pages + 1, step))
