@@ -82,3 +82,15 @@ def pytest_collection_modifyitems(config, items):
 def spark():
     s = get_session("tests", shuffle_partitions=8)
     yield s
+
+
+@pytest.fixture
+def see_through_checkpoints(monkeypatch):
+    """Make ``localCheckpoint`` the identity for one test, so a plan
+    shows each round's join instead of a ``Scan ExistingRDD``. The
+    classic DataFrame is patched: on PySpark 4 the abstract
+    ``pyspark.sql.DataFrame`` is not the class sessions build."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    monkeypatch.setattr(DataFrame, "localCheckpoint",
+                        lambda self, eager=True, storageLevel=None: self)

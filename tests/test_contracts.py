@@ -288,3 +288,32 @@ def test_graph_loops_live_in_the_shared_cores():
         assert not loops, f"graph.{name} has its own loop at {loops}"
     msg = "on_cap must be 'silent', 'warn', or 'raise'"
     assert src.count(msg) == 1, "fixpoint argument checks copied again"
+
+
+def test_operators_take_no_execution_strategy_options():
+    """A strategy flag that no registered query or CLI path sets is a
+    second code path kept alive only by its tests. These were deleted
+    with the paths they selected; none may come back on a public
+    operator, nor the expression SimHash only one of them reached."""
+    import importlib
+    import inspect
+    import pkgutil
+
+    import unilever_scraping_etl_spark.operators as operators
+    from unilever_scraping_etl_spark.operators import dedup
+
+    banned = {"materialize", "checkpoint", "checkpoint_every",
+              "use_arrow", "broadcast_ranks"}
+    found = []
+    for info in pkgutil.iter_modules(operators.__path__):
+        if info.name.startswith("_"):
+            continue
+        mod = importlib.import_module(f"{operators.__name__}.{info.name}")
+        for name, fn in inspect.getmembers(mod, inspect.isfunction):
+            if name.startswith("_") or fn.__module__ != mod.__name__:
+                continue
+            taken = banned & set(inspect.signature(fn).parameters)
+            if taken:
+                found.append(f"{info.name}.{name}: {sorted(taken)}")
+    assert not found, f"execution-strategy options back: {found}"
+    assert not hasattr(dedup, "simhash64")

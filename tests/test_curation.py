@@ -349,13 +349,14 @@ def test_dsir_global_topk_is_take_ordered_not_global_window(spark):
     assert plan.index("TakeOrderedAndProject") < plan.index("FileScan")
 
 
-def test_semdedup_assignment_broadcasts_seed_frame(spark):
-    # checkpoint=False exposes the raw assignment plan: the k-row
-    # seed frame must ride a broadcast nested loop, never a cartesian
+def test_semdedup_assignment_broadcasts_seed_frame(
+        spark, see_through_checkpoints):
+    # seeing through the checkpoint exposes the raw assignment plan:
+    # the k-row seed frame must ride a broadcast nested loop, never a
+    # cartesian
     emb = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
     plan = _plan(curation.semdedup(emb, "vec_id", "embedding",
-                                   n_seeds=8, threshold=0.4,
-                                   checkpoint=False))
+                                   n_seeds=8, threshold=0.4))
     assert "BroadcastNestedLoopJoin" in plan  # k-row build side
     assert "CartesianProduct" not in plan
 

@@ -1,6 +1,6 @@
 """PageRank (operators/graph.py): hand-computed fixed points, the
-uniform-on-regular-graphs invariant, a python-reference property
-sweep, and the lineage-truncation path."""
+uniform-on-regular-graphs invariant, and a python-reference property
+sweep."""
 
 from __future__ import annotations
 
@@ -66,20 +66,6 @@ def test_ranks_sum_to_one_without_dangling_nodes(spark):
     assert total == pytest.approx(1.0, abs=1e-9)
 
 
-def test_checkpointing_changes_nothing_but_lineage(spark):
-    pairs = [(i, (i * 3 + 1) % 7) for i in range(7)] + [(2, 5), (6, 1)]
-    plain = graph.pagerank(_edges(spark, pairs), "src", "dst",
-                           iterations=6, rank_digits=10)
-    ck = graph.pagerank(_edges(spark, pairs), "src", "dst",
-                        iterations=6, rank_digits=10,
-                        checkpoint_every=2)
-    assert sorted(map(tuple, plain.collect())) == \
-        sorted(map(tuple, ck.collect()))
-    # the checkpointed plan must NOT contain the full 6-iteration tree
-    depth = ck._jdf.queryExecution().executedPlan().toString()
-    assert depth.count("HashAggregate") < 6
-
-
 def test_null_keyed_edges_are_dropped_not_phantom_nodes(spark):
     pairs = [(0, 1), (1, 0), (None, 1), (0, None)]
     df = spark.createDataFrame(pairs, "src long, dst long")
@@ -105,8 +91,6 @@ def test_validation(spark):
         graph.pagerank(e.withColumn("rank", F.lit(1)), "src", "dst")
     with pytest.raises(ValueError, match="tol"):
         graph.pagerank(e, "src", "dst", tol=-0.1)
-    with pytest.raises(ValueError, match="materialize"):
-        graph.pagerank(e, "src", "dst", tol=0.01, materialize=False)
 
 
 def test_dangling_redistribution_conserves_total_mass(spark):
@@ -845,9 +829,6 @@ def test_kcore_invalid_args(spark):
         graph.k_core(e, "src", "dst", k=0)
     with pytest.raises(ValueError, match="rounds"):
         graph.k_core(e, "src", "dst", k=2, rounds=0)
-    with pytest.raises(ValueError, match="until_stable"):
-        graph.k_core(e, "src", "dst", k=2, materialize=False,
-                     until_stable=True)
 
 
 def test_kcore_isolated_survivor_reports_degree_zero(spark):
@@ -1025,7 +1006,8 @@ def _gate_pairs():
                                                    (1, 3)]
 
 
-def test_structural_family_gate_off_plans_shuffle_join(spark):
+def test_structural_family_gate_off_plans_shuffle_join(
+        spark, see_through_checkpoints):
     """With the gate explicitly OFF (the >1M page-scale path) and
     Spark's size-based auto-broadcast disabled, every iteration join
     in the family must plan as a shuffle join (SMJ/shuffled-hash) —
@@ -1040,17 +1022,14 @@ def test_structural_family_gate_off_plans_shuffle_join(spark):
     try:
         plans = {
             "hits": _xplan(graph.hits(
-                e, "src", "dst", iterations=1, materialize=False,
-                broadcast_scores=False)),
+                e, "src", "dst", iterations=1, broadcast_scores=False)),
             "lpa": _xplan(graph.label_propagation(
-                e, "src", "dst", iterations=1, materialize=False,
-                broadcast_labels=False)),
+                e, "src", "dst", iterations=1, broadcast_labels=False)),
             "kcore": _xplan(graph.k_core(
-                e, "src", "dst", k=2, rounds=1, materialize=False,
+                e, "src", "dst", k=2, rounds=1,
                 broadcast_survivors=False)),
             "tri": _xplan(graph.triangle_count(
-                e, "src", "dst", materialize=False,
-                broadcast_degrees=False)),
+                e, "src", "dst", broadcast_degrees=False)),
             "coc": _xplan(graph.cocitation(
                 e, "src", "dst", broadcast_degrees=False)),
         }
@@ -1061,16 +1040,17 @@ def test_structural_family_gate_off_plans_shuffle_join(spark):
         assert ("SortMergeJoin" in p) or ("ShuffledHashJoin" in p), name
 
 
-def test_structural_family_gate_auto_broadcasts_small_graphs(spark):
+def test_structural_family_gate_auto_broadcasts_small_graphs(
+        spark, see_through_checkpoints):
     """The default (None) gate probes the bounded node count and
     KEEPS the broadcast on host-scale graphs — the fixture passes
     n <= 1M, so the hinted BroadcastHashJoin shape survives (the
     r13 stress showed the hint costs nothing where it is right)."""
     e = _edges(spark, _gate_pairs())
     assert "BroadcastHashJoin" in _xplan(graph.hits(
-        e, "src", "dst", iterations=1, materialize=False))
+        e, "src", "dst", iterations=1))
     assert "BroadcastHashJoin" in _xplan(graph.label_propagation(
-        e, "src", "dst", iterations=1, materialize=False))
+        e, "src", "dst", iterations=1))
     assert "BroadcastHashJoin" in _xplan(graph.cocitation(
         e, "src", "dst"))
 
@@ -1199,9 +1179,6 @@ def test_coreness_invalid_args(spark):
     e = _edges(spark, [(1, 2)])
     with pytest.raises(ValueError):
         graph.core_number(e, "src", "dst", rounds=0)
-    with pytest.raises(ValueError):
-        graph.core_number(e, "src", "dst", until_stable=True,
-                          materialize=False)
 
 
 try:
@@ -1240,13 +1217,13 @@ def test_coreness_degenerate_graphs_return_empty(spark):
     assert graph.core_number(loops, "src", "dst", rounds=2).count() == 0
 
 
-def test_coreness_window_is_node_keyed_never_global(spark):
+def test_coreness_window_is_node_keyed_never_global(
+        spark, see_through_checkpoints):
     """The H-index ranking window partitions BY NODE (one adjacency
     list per partition, degree-bounded) — a global window would
     funnel the whole graph through one partition at page scale."""
     e = _edges(spark, _gate_pairs())
-    p = _xplan(graph.core_number(e, "src", "dst", rounds=2,
-                                 materialize=False))
+    p = _xplan(graph.core_number(e, "src", "dst", rounds=2))
     assert "Exchange SinglePartition" not in p
     assert "CartesianProduct" not in p
     assert "BatchEvalPython" not in p
@@ -1488,7 +1465,7 @@ def test_hits_explicit_gate_skips_probe_and_handles_empty(spark):
     empty = spark.createDataFrame([], "src long, dst long")
     for flag in (True, False):
         out = graph.hits(empty, "src", "dst", iterations=1,
-                         materialize=False, broadcast_scores=flag)
+                         broadcast_scores=flag)
         assert out.count() == 0
         assert out.columns == ["node", "hub", "authority"]
 
@@ -1601,14 +1578,14 @@ def test_salsa_null_parallel_and_empty_edges(spark):
     empty = spark.createDataFrame([], "src long, dst long")
     for flag in (None, True, False):
         got = graph.salsa(empty, "src", "dst", iterations=1,
-                          materialize=False, broadcast_scores=flag)
+                          broadcast_scores=flag)
         assert got.count() == 0
         assert got.columns == ["node", "hub", "authority"]
     with pytest.raises(ValueError, match="iterations"):
         graph.salsa(df, "src", "dst", iterations=0)
 
 
-def test_salsa_gate_plans_and_equality(spark):
+def test_salsa_gate_plans_and_equality(spark, see_through_checkpoints):
     """salsa follows the family's bounded-probe broadcast gate: with
     the gate off and auto-broadcast disabled the score joins plan as
     shuffle joins (no forced build side at page scale); on the small
@@ -1619,14 +1596,13 @@ def test_salsa_gate_plans_and_equality(spark):
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
         off = _xplan(graph.salsa(e, "src", "dst", iterations=1,
-                                 materialize=False,
                                  broadcast_scores=False))
         assert "BroadcastHashJoin" not in off
         assert ("SortMergeJoin" in off) or ("ShuffledHashJoin" in off)
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
     assert "BroadcastHashJoin" in _xplan(
-        graph.salsa(e, "src", "dst", iterations=1, materialize=False))
+        graph.salsa(e, "src", "dst", iterations=1))
     rows_on = {(r["node"], round(r["hub"], 9), round(r["authority"], 9))
                for r in graph.salsa(e, "src", "dst", iterations=3,
                                     broadcast_scores=True).collect()}
@@ -1777,7 +1753,8 @@ def test_reachability_cap_hit_is_lower_bound_and_signals(spark):
                            direction="sideways")
 
 
-def test_reachability_gate_plans_both_ways(spark):
+def test_reachability_gate_plans_both_ways(spark,
+                                           see_through_checkpoints):
     """The family broadcast-gate discipline: gate off + auto-broadcast
     disabled plans the frontier semi-join as a shuffle join; the
     small-graph auto path keeps the hint; results equal."""
@@ -1788,7 +1765,6 @@ def test_reachability_gate_plans_both_ways(spark):
     try:
         off = _xplan(graph.reachability(e, "src", "dst", s, rounds=1,
                                         until_stable=False,
-                                        materialize=False,
                                         broadcast_frontier=False))
         assert "BroadcastHashJoin" not in off
         assert ("SortMergeJoin" in off) or ("ShuffledHashJoin" in off)

@@ -58,7 +58,6 @@ _LAST_HC_ROUNDS = 0
 
 def harmonic_centrality(edges: DataFrame, src: str, dst: str,
                         radius: int = 3,
-                        materialize: bool = True,
                         targets: DataFrame | None = None) -> DataFrame:
     """Exact truncated harmonic centrality. Returns ``(node,
     harmonic)`` for every node in the graph (0.0 for nodes nothing
@@ -68,10 +67,7 @@ def harmonic_centrality(edges: DataFrame, src: str, dst: str,
     NULL-endpoint edges drop; parallel duplicates are harmless (the
     frontier is distinct). One shuffle per BFS round plus the final
     aggregation; stops early when a round adds no new pairs (bounded
-    1-scalar driver probe per round — only under the default
-    ``materialize=True``: with an un-checkpointed lineage each probe
-    would re-execute every prior round, so ``materialize=False``
-    skips the probe and runs all ``radius`` rounds lazily).
+    1-scalar driver probe per round).
 
     ``targets`` (optional single-column frame of node ids) restricts
     the computation to exact centralities OF those nodes: the pair
@@ -85,7 +81,7 @@ def harmonic_centrality(edges: DataFrame, src: str, dst: str,
     require_free_columns("harmonic_centrality", edges.columns,
                          ("node", "harmonic"), kind="output")
     nodes, seen = _reach_pairs("harmonic_centrality", edges, src, dst,
-                               radius, materialize, targets)
+                               radius, targets)
     h = (seen.filter(F.col("__u") != F.col("__v"))
          .groupBy(F.col("__v").alias("node"))
          .agg(F.sum(F.lit(1.0) / F.col("__dist")).alias("harmonic")))
@@ -97,7 +93,6 @@ def harmonic_centrality(edges: DataFrame, src: str, dst: str,
 
 def centrality_profile(edges: DataFrame, src: str, dst: str,
                        radius: int = 3,
-                       materialize: bool = True,
                        targets: DataFrame | None = None) -> DataFrame:
     """Harmonic, closeness, and Lin centrality from ONE truncated BFS
     pair expansion — the full authority profile web rankings publish,
@@ -123,7 +118,7 @@ def centrality_profile(edges: DataFrame, src: str, dst: str,
                          ("node", "harmonic", "n_reached", "closeness",
                           "lin"), kind="output")
     nodes, seen = _reach_pairs("centrality_profile", edges, src, dst,
-                               radius, materialize, targets)
+                               radius, targets)
     agg = (seen.filter(F.col("__u") != F.col("__v"))
            .groupBy(F.col("__v").alias("node"))
            .agg(F.sum(F.lit(1.0) / F.col("__dist")).alias("__h"),
@@ -145,7 +140,7 @@ def centrality_profile(edges: DataFrame, src: str, dst: str,
 
 
 def _reach_pairs(op: str, edges: DataFrame, src: str, dst: str,
-                 radius: int, materialize: bool,
+                 radius: int,
                  targets: DataFrame | None) -> tuple[DataFrame,
                                                      DataFrame]:
     """Shared truncated-BFS pair expansion: returns ``(nodes, seen)``
@@ -153,26 +148,22 @@ def _reach_pairs(op: str, edges: DataFrame, src: str, dst: str,
     with ``__dist`` the true shortest distance ≤ radius (first
     arrival is shortest), and ``nodes`` the output node frame (all
     graph nodes, or the distinct targets). One shuffle per BFS round;
-    early exit on an exhausted frontier via a bounded 1-boolean probe
-    (materialize=True only). With ``targets`` the expansion runs
-    BACKWARD from the targets' in-edges so ``__v`` stays pinned."""
+    early exit on an exhausted frontier via a bounded 1-boolean probe.
+    With ``targets`` the expansion runs BACKWARD from the targets'
+    in-edges so ``__v`` stays pinned."""
     if radius < 1:
         raise ValueError("radius must be >= 1")
     require_free_columns(op, edges.columns, _WORKING)
     global _LAST_HC_ROUNDS
     _LAST_HC_ROUNDS = 0
     edges = edges.filter(F.col(src).isNotNull()
-                         & F.col(dst).isNotNull())
-    if materialize:
-        edges = edges.localCheckpoint()
+                         & F.col(dst).isNotNull()).localCheckpoint()
     pairs = (edges.select(F.col(src).alias("__u"),
                           F.col(dst).alias("__v"))
              .distinct())
     if targets is not None:
         tgt = (targets.select(F.col(targets.columns[0]).alias("node"))
-               .distinct())
-        if materialize:
-            tgt = tgt.localCheckpoint()
+               .distinct().localCheckpoint())
         # re-pin column ORDER after the USING-join (it fronts __v;
         # the BFS union below is positional)
         pairs = (pairs.join(tgt.select(F.col("node").alias("__v")),
@@ -183,9 +174,8 @@ def _reach_pairs(op: str, edges: DataFrame, src: str, dst: str,
         nodes = (edges.select(F.col(src).alias("node"))
                  .union(edges.select(F.col(dst).alias("node")))
                  .distinct())
-    if materialize:
-        pairs = pairs.localCheckpoint()
-        nodes = nodes.localCheckpoint()
+    pairs = pairs.localCheckpoint()
+    nodes = nodes.localCheckpoint()
     seen = pairs.withColumn("__dist", F.lit(1))
     frontier = pairs
     _LAST_HC_ROUNDS = 1
@@ -197,16 +187,15 @@ def _reach_pairs(op: str, edges: DataFrame, src: str, dst: str,
             # backward expansion keeps __v pinned on the target set
             nxt = (frontier.join(edges, frontier["__u"] == edges[dst])
                    .select(F.col(src).alias("__u"), "__v"))
+        # LAZY (r16): the isEmpty probe materializes the snapshot in
+        # its own job — no separate synchronous checkpoint job per BFS
+        # round
         nxt = (nxt.distinct()
                .join(seen.select("__u", "__v"), ["__u", "__v"],
-                     "left_anti"))
-        if materialize:
-            # LAZY (r16): the isEmpty probe materializes the snapshot
-            # in its own job — no separate synchronous checkpoint job
-            # per BFS round
-            nxt = nxt.localCheckpoint(eager=False)
-            if nxt.isEmpty():  # bounded probe: one boolean per round
-                break
+                     "left_anti")
+               .localCheckpoint(eager=False))
+        if nxt.isEmpty():  # bounded probe: one boolean per round
+            break
         _LAST_HC_ROUNDS = t
         seen = seen.union(nxt.withColumn("__dist", F.lit(t)))
         frontier = nxt
@@ -289,8 +278,7 @@ def _rho(x, p: int):
 
 
 def harmonic_centrality_sketch(edges: DataFrame, src: str, dst: str,
-                               radius: int = 3, p: int = 6,
-                               materialize: bool = True) -> DataFrame:
+                               radius: int = 3, p: int = 6) -> DataFrame:
     """HyperBall approximation of truncated harmonic centrality.
     State is (node, register, value) ROWS — 2^p registers per node at
     most, grown lazily from each node's own hash — so a round is:
@@ -316,12 +304,11 @@ def harmonic_centrality_sketch(edges: DataFrame, src: str, dst: str,
                         .alias("harmonic_est")))
 
     return _hyperball_scan("harmonic_centrality_sketch", edges, src,
-                           dst, radius, p, materialize, init, fold)
+                           dst, radius, p, init, fold)
 
 
 def centrality_profile_sketch(edges: DataFrame, src: str, dst: str,
-                              radius: int = 3, p: int = 6,
-                              materialize: bool = True) -> DataFrame:
+                              radius: int = 3, p: int = 6) -> DataFrame:
     """HyperBall approximation of the full centrality profile — the
     sketch twin of :func:`centrality_profile`, over the SAME register
     lattice as ``harmonic_centrality_sketch`` (the rounds are the
@@ -359,7 +346,7 @@ def centrality_profile_sketch(edges: DataFrame, src: str, dst: str,
                         F.col("__est").alias("__last")))
 
     acc = _hyperball_scan("centrality_profile_sketch", edges, src,
-                          dst, radius, p, materialize, init, fold)
+                          dst, radius, p, init, fold)
     reached = F.greatest(F.lit(0.0), F.col("__last") - 1)
     sd = F.col("__sd")
     return acc.select(
@@ -372,8 +359,7 @@ def centrality_profile_sketch(edges: DataFrame, src: str, dst: str,
 
 
 def _hyperball_scan(op: str, edges: DataFrame, src: str, dst: str,
-                    radius: int, p: int, materialize: bool,
-                    init, fold) -> DataFrame:
+                    radius: int, p: int, init, fold) -> DataFrame:
     """Shared HyperBall register lattice (Boldi, Rosa & Vigna 2011):
     build one (node, __reg, __val) register row set, run ``radius``
     ship-along-in-edges + elementwise-max rounds, and fold the
@@ -390,14 +376,10 @@ def _hyperball_scan(op: str, edges: DataFrame, src: str, dst: str,
     require_free_columns(op, edges.columns, _WORKING)
     m = 1 << p
     edges = edges.filter(F.col(src).isNotNull()
-                         & F.col(dst).isNotNull())
-    if materialize:
-        edges = edges.localCheckpoint()
+                         & F.col(dst).isNotNull()).localCheckpoint()
     nodes = (edges.select(F.col(src).alias("node"))
              .union(edges.select(F.col(dst).alias("node")))
-             .distinct())
-    if materialize:
-        nodes = nodes.localCheckpoint()
+             .distinct().localCheckpoint())
 
     h64 = F.xxhash64(F.col("node").cast("string"))
     # idx: low p bits (pmod — xxhash64 is signed); rho: leading zeros
@@ -406,9 +388,7 @@ def _hyperball_scan(op: str, edges: DataFrame, src: str, dst: str,
     idx = F.pmod(h64, F.lit(m))
     val = _rho(F.shiftrightunsigned(h64, p), p)
     regs = nodes.select("node", idx.cast("int").alias("__reg"),
-                        val.cast("int").alias("__val"))
-    if materialize:
-        regs = regs.localCheckpoint()
+                        val.cast("int").alias("__val")).localCheckpoint()
 
     prev = hll_ball_estimate(regs, p)
     acc = init(nodes, prev)
@@ -418,18 +398,15 @@ def _hyperball_scan(op: str, edges: DataFrame, src: str, dst: str,
         regs = (regs.unionByName(shipped)
                 .groupBy("node", "__reg")
                 .agg(F.max("__val").alias("__val")))
-        if materialize:
-            # EAGER kept deliberately (r16 measured): the lazy
-            # variant (regs+acc eager=False, 34→28 jobs) read ~0.8 s
-            # SLOWER at sf0.1 isolated min-of-4 (4.07→4.89 s) — this
-            # loop runs no per-round probe, so laziness defers every
-            # round's register fold into one deep final cascade whose
-            # nested materializations beat the dedicated parallel
-            # jobs' cost. Guide §1.1: measured beats ideal.
-            regs = regs.localCheckpoint()
+        # EAGER kept deliberately (r16 measured): the lazy variant
+        # (regs+acc eager=False, 34→28 jobs) read ~0.8 s SLOWER at
+        # sf0.1 isolated min-of-4 (4.07→4.89 s) — this loop runs no
+        # per-round probe, so laziness defers every round's register
+        # fold into one deep final cascade whose nested
+        # materializations beat the dedicated parallel jobs' cost.
+        # Guide §1.1: measured beats ideal.
+        regs = regs.localCheckpoint()
         cur = hll_ball_estimate(regs, p)
-        acc = fold(acc, t, cur, prev)
-        if materialize:
-            acc = acc.localCheckpoint()
+        acc = fold(acc, t, cur, prev).localCheckpoint()
         prev = cur
     return acc

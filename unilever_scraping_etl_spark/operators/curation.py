@@ -269,7 +269,6 @@ def semdedup(emb: DataFrame, id_col: str, vec_col: str,
              n_seeds: int = 8, threshold: float = 0.4,
              seeds: DataFrame | None = None,
              round_centroid: int = 6, round_pair: int = 4,
-             checkpoint: bool = True,
              pairs: str = "gemm") -> DataFrame:
     """SemDeDup (Abbas et al. 2023): assign every vector to its most
     similar cluster seed, compare pairs ONLY within a cluster, and
@@ -321,10 +320,8 @@ def semdedup(emb: DataFrame, id_col: str, vec_col: str,
     oracle-green at both scales). No driver collect anywhere. The
     assigned frame feeds multiple consumers and Spark does not
     reuse the exchange across them (measured: 3x the N*k assignment
-    subtree, 8 source scans in one plan), so by default it is
-    localCheckpointed once — the graph family's iteration
-    discipline; ``checkpoint=False`` opts out (plan-shape tests, or
-    callers managing their own persistence).
+    subtree, 8 source scans in one plan), so it is localCheckpointed
+    once — the graph family's iteration discipline.
     """
     require_free_columns("semdedup", emb.columns, _SEM_RESERVED)
     require_free_columns("semdedup", emb.columns,
@@ -376,10 +373,8 @@ def semdedup(emb: DataFrame, id_col: str, vec_col: str,
                                      F.col("__sid").alias("__tb")))
                     .alias("cluster_id"),
                    F.max("__csim").alias("centroid_sim")))
-    av = asg.join(v, id_col)
-    if checkpoint:
-        av = av.localCheckpoint()
-        asg = av.select(id_col, "cluster_id", "centroid_sim")
+    av = asg.join(v, id_col).localCheckpoint()
+    asg = av.select(id_col, "cluster_id", "centroid_sim")
     if pairs == "gemm":
         removed_ids = _semdedup_prune_gemm(av, id_col, float(threshold),
                                            round_pair)

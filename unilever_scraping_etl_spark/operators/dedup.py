@@ -457,29 +457,6 @@ def editdist_pairs(df: DataFrame, id_col: str, text_col: str,
             .select("id_a", "id_b", F.col("dist").cast("int").alias("dist")))
 
 
-def simhash64(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """64-bit SimHash: per token take xxhash64, then per bit position sum
-    +1/-1 across token occurrences; the sign of each sum is that bit of
-    the fingerprint. A per-document value, so computed as a NARROW MAP —
-    no explode, no shuffle: hash the token array once per row, then per
-    bit count set occurrences with a higher-order filter (bit set iff
-    2*count_set > n_tokens)."""
-    hashes = F.transform(F.split(F.lower(F.col(text_col)), " "),
-                         lambda t: F.xxhash64(t))
-    n = F.size(hashes)
-
-    def bit_set(mask):  # single-arg lambda factory (see minhash note)
-        return lambda h: h.bitwiseAND(mask) != 0
-
-    fp = None
-    for i in range(64):
-        mask = F.shiftleft(F.lit(1).cast("long"), i)
-        cnt = F.size(F.filter(hashes, bit_set(mask)))
-        bit = F.when(cnt * 2 > n, mask).otherwise(F.lit(0).cast("long"))
-        fp = bit if fp is None else fp.bitwiseOR(bit)
-    return df.select(F.col(id_col), fp.alias("simhash"))
-
-
 #: Executor-persistent token-hash memo for simhash64_arrow. Natural-language
 #: corpora reuse a small vocabulary, so across Arrow batches nearly every
 #: token is a cache hit and blake2b runs ~once per DISTINCT token per
@@ -495,12 +472,10 @@ def simhash64_arrow(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     dependence), memoized per distinct token, with the per-bit tally done
     as ONE numpy unpackbits + reduceat pass over the whole Arrow batch
     (segment boundaries = document token offsets) instead of a Python
-    loop per document. Same narrow-map plan shape as simhash64; the
-    round-1 per-document variant was Python-CPU-bound (~6.7 s at sf0.1),
-    this batch form cuts the Python work to cache-miss hashing only. The
-    fingerprint DEFINITION is unchanged from round 1 (same token hash)
-    but differs from simhash64 (different token hash) — both are valid
-    SimHashes; pick one per corpus."""
+    loop per document. The round-1 per-document variant was
+    Python-CPU-bound (~6.7 s at sf0.1), this batch form cuts the Python
+    work to cache-miss hashing only. The fingerprint DEFINITION is
+    unchanged from round 1 (same token hash)."""
     import hashlib
 
     import numpy as np
@@ -555,7 +530,7 @@ def simhash64_arrow(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
 
 
 def simhash_candidates(df: DataFrame, id_col: str, text_col: str,
-                       max_hamming: int = 3, use_arrow: bool = True,
+                       max_hamming: int = 3,
                        max_bucket_size: int | None = None) -> DataFrame:
     """SimHash candidate pairs BEFORE the hamming verify: band the
     64-bit fingerprint into ``max_hamming + 1`` chunks (pigeonhole:
@@ -567,8 +542,7 @@ def simhash_candidates(df: DataFrame, id_col: str, text_col: str,
     at any threshold — a fixed 4-chunk split is only complete for
     hamming <= 3. Returns (id_a, id_b, simhash_a, simhash_b) so the
     verifier needs no re-join of the fingerprint table."""
-    mk = simhash64_arrow if use_arrow else simhash64
-    fps = mk(df, id_col, text_col)
+    fps = simhash64_arrow(df, id_col, text_col)
     n_chunks = max_hamming + 1
     if not 1 <= max_hamming < 64:
         raise ValueError("max_hamming must be in [1, 63] for 64-bit simhash")
@@ -594,7 +568,6 @@ def simhash_candidates(df: DataFrame, id_col: str, text_col: str,
 
 def simhash_near_pairs(df: DataFrame, id_col: str, text_col: str,
                        max_hamming: int = 3,
-                       use_arrow: bool = True,
                        max_bucket_size: int | None = None) -> DataFrame:
     """Near-dup pairs by SimHash: simhash_candidates (pigeonhole chunk
     banding, optional hot-bucket guard) verified edge-by-edge with
@@ -618,7 +591,7 @@ def simhash_near_pairs(df: DataFrame, id_col: str, text_col: str,
     a cluster-split-intolerant call site, raise max_bucket_size or
     verify hub candidates before capping."""
     cand = simhash_candidates(df, id_col, text_col, max_hamming,
-                              use_arrow, max_bucket_size)
+                              max_bucket_size)
     # No trailing distinct: the candidates are DISTINCT by contract
     # (banded_pair_candidates) and hamming is a function of the carried
     # fingerprints, so a second dedup would only re-shuffle the pair

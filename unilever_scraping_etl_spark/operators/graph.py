@@ -38,15 +38,11 @@ iteration is localCheckpointed, so the probe never re-executes the
 iteration chain.
 
 Scale posture: the edge list, node set, and out-degrees are
-MATERIALIZED once up front (``materialize=True`` default) — a lazy
-plan would re-derive the whole upstream subtree (self-joins, scans)
-once per iteration reference, K+1 times; Spark's own iterative
-algorithms cache their graph for the same reason. Each iteration is
-then ONE shuffle of the rank table against the cached edges; the
-plan tree still grows linearly with K, so for deep runs pass
-``checkpoint_every`` to also truncate the RANK lineage (the standard
-Spark iterative-algorithm discipline — at cluster scale, a reliable
-checkpoint dir instead of localCheckpoint).
+MATERIALIZED once up front — a lazy plan would re-derive the whole
+upstream subtree (self-joins, scans) once per iteration reference,
+K+1 times; Spark's own iterative algorithms cache their graph for the
+same reason. Each iteration is
+then ONE shuffle of the rank table against the cached edges.
 Convergence is the caller's choice of K: PageRank contracts at rate
 d per iteration, so K = 5 bounds the error at d^5 ≈ 0.44 of the
 initial gap — pick K from the tolerance, or iterate in an outer loop
@@ -114,13 +110,10 @@ def _on_cap_signal(name: str, rounds: int, on_cap: str,
 
 
 def _check_fixpoint_args(rounds: int, until_stable: bool,
-                         materialize: bool, on_cap: str) -> None:
+                         on_cap: str) -> None:
     """Argument checks shared by every :func:`_until_stable` caller."""
     if rounds < 1:
         raise ValueError("rounds must be >= 1")
-    if until_stable and not materialize:
-        raise ValueError("until_stable requires materialize=True "
-                         "(each stability probe evaluates the plan)")
     if on_cap not in ("silent", "warn", "raise"):
         raise ValueError("on_cap must be 'silent', 'warn', or 'raise'")
     if on_cap != "silent" and not until_stable:
@@ -132,7 +125,7 @@ def _check_fixpoint_args(rounds: int, until_stable: bool,
 def _until_stable(state: DataFrame,
                   step: Callable[[DataFrame], DataFrame],
                   probe: Callable[[DataFrame], object],
-                  rounds: int, until_stable: bool, materialize: bool,
+                  rounds: int, until_stable: bool,
                   first_probe: object = None
                   ) -> tuple[DataFrame, int, bool | None]:
     """The bounded-fixpoint loop shared by :func:`reachability`,
@@ -156,9 +149,7 @@ def _until_stable(state: DataFrame,
         prev = probe(state)
     executed, converged = 0, None
     for _ in range(rounds):
-        state = step(state)
-        if materialize:
-            state = state.localCheckpoint(eager=False)
+        state = step(state).localCheckpoint(eager=False)
         executed += 1
         if until_stable:
             now = probe(state)
@@ -198,15 +189,13 @@ def _resolve_score_gate(nodes: DataFrame,
     (hits, salsa) — ONE source of truth for the probe-or-isEmpty
     discipline (r14 ADVICE low): the bounded node-count probe is
     paid only when the gate is on auto; an explicit flag uses the
-    cheap isEmpty check for the empty-graph early return (under
-    materialize=False a count would re-evaluate the full upstream
-    for a probe the gate never reads). Returns (broadcast, empty).
+    cheap isEmpty check for the empty-graph early return. Returns
+    (broadcast, empty).
 
     ``need_empty=False`` (r15 ADVICE low): callers that never consult
     the empty signal — reachability, whose seed semi-join against an
     empty graph is already empty — skip the isEmpty action entirely
-    on the explicit-flag path instead of paying a Spark job (and,
-    under materialize=False, a full upstream re-evaluation) for a
+    on the explicit-flag path instead of paying a Spark job for a
     value they discard."""
     if flag is None:
         n = nodes.count()
@@ -214,31 +203,25 @@ def _resolve_score_gate(nodes: DataFrame,
     return bool(flag), (nodes.isEmpty() if need_empty else False)
 
 
-def _undirected(edges: DataFrame, src: str, dst: str,
-                materialize: bool) -> DataFrame:
+def _undirected(edges: DataFrame, src: str, dst: str) -> DataFrame:
     """The symmetric neighbor list ``(__a, __b)`` of the edge list read
     as UNDIRECTED: NULL endpoints and self-loops drop, every edge
     appears in both directions, parallel edges collapse. Snapshotted
-    once under ``materialize`` — every caller joins it per round."""
+    once — every caller joins it per round."""
     nbr = (edges
            .filter(F.col(src).isNotNull() & F.col(dst).isNotNull()
                    & (F.col(src) != F.col(dst)))
            .select(F.col(src).alias("__a"), F.col(dst).alias("__b")))
-    nbr = nbr.union(nbr.select(F.col("__b").alias("__a"),
-                               F.col("__a").alias("__b"))).distinct()
-    if materialize:
-        nbr = nbr.localCheckpoint()
-    return nbr
+    return (nbr.union(nbr.select(F.col("__b").alias("__a"),
+                                 F.col("__a").alias("__b")))
+            .distinct().localCheckpoint())
 
 
 def pagerank(edges: DataFrame, src: str, dst: str,
              iterations: int = 5, damping: float = 0.85,
-             checkpoint_every: int | None = None,
              rank_digits: int | None = None,
-             materialize: bool = True,
              tol: float | None = None,
              redistribute_dangling: bool = False,
-             broadcast_ranks: bool | None = None,
              warm_start: DataFrame | None = None,
              weight_col: str | None = None,
              personalize: DataFrame | None = None) -> DataFrame:
@@ -253,19 +236,14 @@ def pagerank(edges: DataFrame, src: str, dst: str,
     a phantom node with the base rank).
 
     ``tol``: stop as soon as ``max|Δrank| <= tol`` between successive
-    iterations, with ``iterations`` as the cap (requires
-    ``materialize=True`` — the probe evaluates eagerly, and an
-    unmaterialized upstream would re-derive the graph every check).
+    iterations, with ``iterations`` as the cap.
     ``redistribute_dangling``: conserve dangling-node mass by uniform
     redistribution instead of dropping it (module docstring).
-    ``broadcast_ranks``: hint the (node, rank) side of each
-    iteration's join broadcast, removing the edge-side exchange
-    entirely — measured ~11% at sf0.1 and a bigger first-iteration
-    win (BASELINE.md round-11). The rank table is ONE ROW PER NODE,
-    so this is only sane on node-bounded graphs (host graphs, entity
-    graphs); default ``None`` auto-enables when the bounded node
-    probe reads ≤ 1M — page-level graphs fall back to the shuffle
-    plan, where AQE may still convert at runtime.
+    The (node, rank) side of each iteration's join is broadcast,
+    removing the edge-side exchange entirely — measured ~11% at sf0.1
+    and a bigger first-iteration win (BASELINE.md round-11) — only
+    when the bounded node probe reads ≤ 1M; page-level graphs fall
+    back to the shuffle plan, where AQE may still convert at runtime.
     ``warm_start``: a two-column ``(node, rank)`` frame (column
     names are positional) seeding the iteration instead of the
     uniform start — the INCREMENTAL re-rank path: when the graph is
@@ -309,9 +287,6 @@ def pagerank(edges: DataFrame, src: str, dst: str,
         raise ValueError("damping must be in (0, 1)")
     if tol is not None and tol < 0.0:
         raise ValueError("tol must be >= 0")
-    if tol is not None and not materialize:
-        raise ValueError("tol requires materialize=True (each "
-                         "convergence probe evaluates the plan)")
     require_free_columns("pagerank", edges.columns, _WORKING)
     require_free_columns("pagerank", edges.columns, ("node", "rank"),
                          kind="output")
@@ -322,12 +297,11 @@ def pagerank(edges: DataFrame, src: str, dst: str,
     if weight_col is not None:
         edges = edges.filter(F.col(weight_col).isNotNull()
                              & (F.col(weight_col) > 0))
-    if materialize:
-        # snapshot the RAW edges first, so nodes/degrees derive from
-        # the SAME evaluation of a possibly-nondeterministic upstream
-        # (a sampled edge list re-evaluated per branch could put a src
-        # in edges that nodes never saw — silently dropped mass)
-        edges = edges.localCheckpoint()
+    # snapshot the RAW edges first, so nodes/degrees derive from
+    # the SAME evaluation of a possibly-nondeterministic upstream
+    # (a sampled edge list re-evaluated per branch could put a src
+    # in edges that nodes never saw — silently dropped mass)
+    edges = edges.localCheckpoint()
     nodes = (edges.select(F.col(src).alias("node"))
              .union(edges.select(F.col(dst).alias("node")))
              .distinct())
@@ -340,10 +314,8 @@ def pagerank(edges: DataFrame, src: str, dst: str,
     else:
         deg = edges.groupBy(src).agg(
             F.sum(F.col(weight_col).cast("double")).alias("__outdeg"))
-    edges = edges.join(deg, src)
-    if materialize:
-        edges = edges.localCheckpoint()
-        nodes = nodes.localCheckpoint()
+    edges = edges.join(deg, src).localCheckpoint()
+    nodes = nodes.localCheckpoint()
     n = nodes.count()  # bounded driver probe: one scalar, like CC's
     if n == 0:
         # a fully-NULL or empty edge list has no nodes to rank —
@@ -361,9 +333,8 @@ def pagerank(edges: DataFrame, src: str, dst: str,
               .groupBy("node").agg(F.sum("__sv").alias("__sv")))
         nodes = (nodes.join(ps, "node", "left")
                  .select("node", F.coalesce(F.col("__sv"), F.lit(0.0))
-                         .alias("__sv")))
-        if materialize:
-            nodes = nodes.localCheckpoint()
+                         .alias("__sv"))
+                 .localCheckpoint())
         # bounded 1-row probe; `not stot > 0` is NaN-safe like the
         # warm_start total check
         stot = nodes.agg(F.sum("__sv")).first()[0]
@@ -373,9 +344,8 @@ def pagerank(edges: DataFrame, src: str, dst: str,
                 f"weight (total {stot}) — the seed distribution has "
                 f"nothing to normalize over")
         nodes = nodes.select(
-            "node", (F.col("__sv") / F.lit(float(stot))).alias("__sv"))
-        if materialize:
-            nodes = nodes.localCheckpoint()
+            "node", (F.col("__sv") / F.lit(float(stot))).alias("__sv")
+        ).localCheckpoint()
         base = F.lit(1.0 - damping) * F.col("__sv")
     else:
         base = F.lit((1.0 - damping) / n)
@@ -385,10 +355,8 @@ def pagerank(edges: DataFrame, src: str, dst: str,
         # mass re-enters uniformly each iteration
         dangling = nodes.join(
             edges.select(F.col(src).alias("node")).distinct(),
-            "node", "left_anti")
-        if materialize:
-            dangling = dangling.localCheckpoint()
-    broadcast_ranks = _gate_broadcast(broadcast_ranks, n)
+            "node", "left_anti").localCheckpoint()
+    broadcast = _gate_broadcast(None, n)
     if warm_start is not None:
         # defensive seed aggregation (r12 ADVICE): duplicate node rows
         # in the seed would otherwise fan out through the left join and
@@ -402,9 +370,8 @@ def pagerank(edges: DataFrame, src: str, dst: str,
         init = (nodes.join(ws, "node", "left")
                 .select("node",
                         F.coalesce(F.col("__wr"), F.lit(1.0 / n))
-                        .alias("rank")))
-        if materialize:
-            init = init.localCheckpoint()
+                        .alias("rank"))
+                .localCheckpoint())
         # bounded 1-row probe (same discipline as the node count): the
         # renormalization divides by this total, so a zero/negative/NaN
         # seed mass must fail loudly, not mint NULL/inf ranks silently
@@ -417,9 +384,8 @@ def pagerank(edges: DataFrame, src: str, dst: str,
                 f"renormalized to mass 1, so a non-positive or NaN "
                 f"total has no valid scaling")
         ranks = init.select(
-            "node", (F.col("rank") / F.lit(float(tot))).alias("rank"))
-        if materialize:
-            ranks = ranks.localCheckpoint()
+            "node", (F.col("rank") / F.lit(float(tot))).alias("rank")
+        ).localCheckpoint()
     else:
         ranks = nodes.select("node", F.lit(1.0 / n).alias("rank"))
     def _dense(contribs: DataFrame, dmass: DataFrame | None) -> DataFrame:
@@ -460,22 +426,20 @@ def pagerank(edges: DataFrame, src: str, dst: str,
         # deliver it)
         esv = nodes.select(F.col("node").alias(src),
                            F.col("__sv").alias("__esv"))
-        edges = edges.join(esv, src)
-        if materialize:
-            edges = edges.localCheckpoint()
+        edges = edges.join(esv, src).localCheckpoint()
     prev: tuple[DataFrame, DataFrame | None] | None = None
     for i in range(iterations):
         _LAST_PR_ITERATIONS = i + 1
         if prev is None:
             # first iteration: the explicit init frame (uniform or
             # warm-start seed) is the rank source
-            rside = F.broadcast(ranks) if broadcast_ranks else ranks
+            rside = F.broadcast(ranks) if broadcast else ranks
             joined = edges.join(rside, edges[src] == rside["node"])
             rank_u = F.col("rank")
         else:
             pc, pdm = prev
             cside = pc.withColumnRenamed("node", "__cn")
-            if broadcast_ranks:
+            if broadcast:
                 cside = F.broadcast(cside)
             joined = edges.join(cside, edges[src] == F.col("__cn"),
                                 "left")
@@ -527,9 +491,6 @@ def pagerank(edges: DataFrame, src: str, dst: str,
                 break
         else:
             prev = (contribs, dmass)
-            if checkpoint_every and (i + 1) % checkpoint_every == 0:
-                contribs = contribs.localCheckpoint()
-                prev = (contribs, dmass)
     if tol is None:
         ranks = _dense(*prev)
     if rank_digits is not None:
@@ -542,7 +503,7 @@ def _alternating_walk(edges: DataFrame, a: str, b: str,
                       iterations: int, w_fwd: Column | None,
                       w_bwd: Column | None,
                       norm: Callable[[Column], Column],
-                      materialize: bool, broadcast: bool | None,
+                      broadcast: bool | None,
                       digits: int | None) -> DataFrame:
     """The alternating sparse half-step walk shared by :func:`hits`
     and :func:`salsa`. From h₀ ≡ 1 on every endpoint of ``edges[a, b]``,
@@ -583,9 +544,7 @@ def _alternating_walk(edges: DataFrame, a: str, b: str,
     norm value)."""
     nodes = (edges.select(F.col(a).alias("node"))
              .union(edges.select(F.col(b).alias("node")))
-             .distinct())
-    if materialize:
-        nodes = nodes.localCheckpoint()
+             .distinct().localCheckpoint())
     broadcast, empty = _resolve_score_gate(nodes, broadcast)
     if empty:
         return nodes.select("node", F.lit(0.0).alias("hub"),
@@ -598,16 +557,14 @@ def _alternating_walk(edges: DataFrame, a: str, b: str,
         raw = (edges.join(side, edges[frm] == side["node"])
                .select(F.col(to).alias("node"), contrib.alias(col))
                .groupBy("node").agg(F.sum(col).alias(out)))
-        if materialize:
-            # snapshot the RAW half-step sums LAZILY: the norm is an
-            # aggregate OF this frame and the normalized scores divide
-            # it again, so without the checkpoint each half-step's
-            # join+agg subtree is planned (and, across the norm's
-            # broadcast build plus the next half-step's score build,
-            # executed) twice; eager=False materializes it inside the
-            # norm's broadcast job instead of paying a separate
-            # synchronous job per half-step
-            raw = raw.localCheckpoint(eager=False)
+        # snapshot the RAW half-step sums LAZILY: the norm is an
+        # aggregate OF this frame and the normalized scores divide it
+        # again, so without the checkpoint each half-step's join+agg
+        # subtree is planned (and, across the norm's broadcast build
+        # plus the next half-step's score build, executed) twice;
+        # eager=False materializes it inside the norm's broadcast job
+        # instead of paying a separate synchronous job per half-step
+        raw = raw.localCheckpoint(eager=False)
         z = raw.agg(norm(F.col(out)).alias("__z"))
         return (raw.crossJoin(F.broadcast(z))
                 .select("node", (F.col(out) / F.col("__z")).alias(out)))
@@ -637,7 +594,6 @@ def _alternating_walk(edges: DataFrame, a: str, b: str,
 def hits(edges: DataFrame, src: str, dst: str,
          iterations: int = 5,
          hub_digits: int | None = None,
-         materialize: bool = True,
          broadcast_scores: bool | None = None,
          weight_col: str | None = None) -> DataFrame:
     """HITS hubs-and-authorities (Kleinberg 1999, public algorithm)
@@ -693,18 +649,16 @@ def hits(edges: DataFrame, src: str, dst: str,
     if weight_col is not None:
         edges = edges.filter(F.col(weight_col).isNotNull()
                              & (F.col(weight_col) > 0))
-    if materialize:
-        edges = edges.localCheckpoint()
+    edges = edges.localCheckpoint()
     w = None if weight_col is None else F.col(weight_col).cast("double")
     return _alternating_walk(edges, src, dst, iterations, w, w,
                              lambda x: F.sqrt(F.sum(x * x)),
-                             materialize, broadcast_scores, hub_digits)
+                             broadcast_scores, hub_digits)
 
 
 def salsa(edges: DataFrame, src: str, dst: str,
           iterations: int = 5,
           score_digits: int | None = None,
-          materialize: bool = True,
           broadcast_scores: bool | None = None) -> DataFrame:
     """SALSA — the Stochastic Approach for Link-Structure Analysis
     (Lempel-Moran 2000, ACM TOIT; public algorithm): HITS' mutual
@@ -753,15 +707,13 @@ def salsa(edges: DataFrame, src: str, dst: str,
                          _WORKING + ("__wa", "__wh", "__od", "__id"))
     require_free_columns("salsa", edges.columns,
                          ("node", "hub", "authority"), kind="output")
+    # the distinct list feeds BOTH degree tables and the weighted
+    # edge build — snapshot once (the cocitation r14 rule)
     el = (edges
           .filter(F.col(src).isNotNull() & F.col(dst).isNotNull()
                   & (F.col(src) != F.col(dst)))
           .select(F.col(src).alias("__a"), F.col(dst).alias("__b"))
-          .distinct())
-    if materialize:
-        # the distinct list feeds BOTH degree tables and the weighted
-        # edge build — snapshot once (the cocitation r14 rule)
-        el = el.localCheckpoint()
+          .distinct().localCheckpoint())
     od = el.groupBy("__a").agg(F.count(F.lit(1)).alias("__od"))
     idg = el.groupBy("__b").agg(F.count(F.lit(1)).alias("__id"))
     # the walk's transition weights ride the cached edge list: one
@@ -769,12 +721,11 @@ def salsa(edges: DataFrame, src: str, dst: str,
     en = (el.join(od, "__a").join(idg, "__b")
           .select("__a", "__b",
                   (F.lit(1.0) / F.col("__od")).alias("__wa"),
-                  (F.lit(1.0) / F.col("__id")).alias("__wh")))
-    if materialize:
-        en = en.localCheckpoint()
+                  (F.lit(1.0) / F.col("__id")).alias("__wh"))
+          .localCheckpoint())
     return _alternating_walk(en, "__a", "__b", iterations,
                              F.col("__wa"), F.col("__wh"), F.sum,
-                             materialize, broadcast_scores, score_digits)
+                             broadcast_scores, score_digits)
 
 
 _LAST_REACH_ROUNDS: int | None = None
@@ -785,7 +736,6 @@ def reachability(edges: DataFrame, src: str, dst: str,
                  seeds: DataFrame,
                  direction: str = "forward",
                  rounds: int = 32, until_stable: bool = True,
-                 materialize: bool = True,
                  broadcast_frontier: bool | None = None,
                  on_cap: str = "silent") -> DataFrame:
     """Seed-set reachability closure over a directed edge list — the
@@ -825,7 +775,7 @@ def reachability(edges: DataFrame, src: str, dst: str,
     diagnostics)."""
     if direction not in ("forward", "backward"):
         raise ValueError("direction must be 'forward' or 'backward'")
-    _check_fixpoint_args(rounds, until_stable, materialize, on_cap)
+    _check_fixpoint_args(rounds, until_stable, on_cap)
     require_free_columns("reachability", edges.columns,
                          _WORKING + ("__a", "__b"))
     require_free_columns("reachability", edges.columns, ("node",),
@@ -835,25 +785,19 @@ def reachability(edges: DataFrame, src: str, dst: str,
           .filter(F.col(src).isNotNull() & F.col(dst).isNotNull()
                   & (F.col(src) != F.col(dst)))
           .select(F.col(a).alias("__a"), F.col(b).alias("__b"))
-          .distinct())
-    if materialize:
-        el = el.localCheckpoint()
+          .distinct().localCheckpoint())
     nodes = (el.select(F.col("__a").alias("node"))
              .union(el.select(F.col("__b").alias("node")))
-             .distinct())
-    if materialize:
-        nodes = nodes.localCheckpoint()
+             .distinct().localCheckpoint())
     broadcast_frontier, _ = _resolve_score_gate(nodes,
                                                 broadcast_frontier,
                                                 need_empty=False)
     seed_col = seeds.columns[0]
+    # lazy: the until_stable baseline count (or round 1's semi-join
+    # side / broadcast build) materializes it — no dedicated job
     reached = (nodes.join(
         seeds.select(F.col(seed_col).alias("node")).distinct(),
-        "node", "left_semi"))
-    if materialize:
-        # lazy: the until_stable baseline count (or round 1's semi-join
-        # side / broadcast build) materializes it — no dedicated job
-        reached = reached.localCheckpoint(eager=False)
+        "node", "left_semi").localCheckpoint(eager=False))
 
     def _hop(reached: DataFrame) -> DataFrame:
         rside = reached.withColumnRenamed("node", "__a")
@@ -866,8 +810,7 @@ def reachability(edges: DataFrame, src: str, dst: str,
     global _LAST_REACH_ROUNDS, _LAST_REACH_CONVERGED
     # the reached set only grows: an unchanged count is the closure
     reached, executed, converged = _until_stable(
-        reached, _hop, lambda df: df.count(), rounds, until_stable,
-        materialize)
+        reached, _hop, lambda df: df.count(), rounds, until_stable)
     _LAST_REACH_ROUNDS, _LAST_REACH_CONVERGED = executed, converged
     if converged is False:
         _on_cap_signal("reachability", rounds, on_cap,
@@ -878,7 +821,6 @@ def reachability(edges: DataFrame, src: str, dst: str,
 
 def label_propagation(edges: DataFrame, src: str, dst: str,
                       iterations: int = 5,
-                      materialize: bool = True,
                       broadcast_labels: bool | None = None) -> DataFrame:
     """Synchronous label propagation (Raghavan-Albert-Kumara 2007,
     public algorithm) over the edge list treated as UNDIRECTED — the
@@ -926,12 +868,11 @@ def label_propagation(edges: DataFrame, src: str, dst: str,
                          _WORKING + ("__a", "__b", "__c"))
     require_free_columns("label_propagation", edges.columns,
                          ("node", "community"), kind="output")
-    nbr = _undirected(edges, src, dst, materialize)
+    nbr = _undirected(edges, src, dst)
     labels = (nbr.select(F.col("__a").alias("node"))
               .distinct()
-              .select("node", F.col("node").alias("community")))
-    if materialize:
-        labels = labels.localCheckpoint()
+              .select("node", F.col("node").alias("community"))
+              .localCheckpoint())
     if broadcast_labels is None:
         # bounded probe (one scalar off the materialized label
         # table) — only paid when the caller leaves the gate on auto
@@ -947,11 +888,10 @@ def label_propagation(edges: DataFrame, src: str, dst: str,
                      F.struct((-F.col("__c")).alias("nc"),
                               F.col("community").alias("l")))
             .alias("community"))
-        if materialize:
-            # LAZY (r16): materializes inside the next iteration's
-            # broadcast build (or the consumer's action) — the eager
-            # form paid one synchronous job per iteration
-            labels = labels.localCheckpoint(eager=False)
+        # LAZY (r16): materializes inside the next iteration's
+        # broadcast build (or the consumer's action) — the eager form
+        # paid one synchronous job per iteration
+        labels = labels.localCheckpoint(eager=False)
     return labels.select("node", "community")
 
 
@@ -960,8 +900,7 @@ def cocitation(edges: DataFrame, src: str, dst: str,
                min_common: int = 1,
                max_linker_degree: int | None = None,
                jaccard_digits: int | None = None,
-               broadcast_degrees: bool | None = None,
-               materialize: bool = True) -> DataFrame:
+               broadcast_degrees: bool | None = None) -> DataFrame:
     """Co-citation / bibliographic-coupling similarity (Small 1973 /
     Kessler 1963, public measures) over a directed edge list — the
     related-host discovery pass: two hosts are CO-CITED when the same
@@ -998,12 +937,11 @@ def cocitation(edges: DataFrame, src: str, dst: str,
     (a different — and on the cocitation shape, far larger —
     cardinality than the item-side degree tables), so its semi-join
     always ships unhinted regardless of the flag; AQE broadcasts it
-    at runtime when it is genuinely small (r14 ADVICE). ``materialize``
-    snapshots the distinct edge list and the degree table once
-    (r14): the plan otherwise re-derives the upstream distinct for
-    BOTH sides of the pair self-join, both degree joins, and the
-    gate probe — the family's standard one-materialization
-    discipline."""
+    at runtime when it is genuinely small (r14 ADVICE). The distinct
+    edge list and the degree table are snapshotted once (r14): the
+    plan otherwise re-derives the upstream distinct for BOTH sides of
+    the pair self-join, both degree joins, and the gate probe — the
+    family's standard one-materialization discipline."""
     if mode not in ("cocitation", "coupling"):
         raise ValueError("mode must be 'cocitation' or 'coupling'")
     if min_common < 1:
@@ -1020,13 +958,9 @@ def cocitation(edges: DataFrame, src: str, dst: str,
           .filter(F.col(src).isNotNull() & F.col(dst).isNotNull()
                   & (F.col(src) != F.col(dst)))
           .select(F.col(linker).alias("__lk"), F.col(item).alias("__it"))
-          .distinct())
-    if materialize:
-        el = el.localCheckpoint()
+          .distinct().localCheckpoint())
     deg = el.groupBy(F.col("__it").alias("node")).agg(
-        F.count(F.lit(1)).alias("__deg"))
-    if materialize:
-        deg = deg.localCheckpoint()
+        F.count(F.lit(1)).alias("__deg")).localCheckpoint()
     if broadcast_degrees is None:
         # bounded probe (one scalar): the degree table is one row per
         # item node, so its count IS the node bound the gate needs
@@ -1070,7 +1004,6 @@ def cocitation(edges: DataFrame, src: str, dst: str,
 
 def k_core(edges: DataFrame, src: str, dst: str, k: int,
            rounds: int = 8, until_stable: bool = False,
-           materialize: bool = True,
            broadcast_survivors: bool | None = None,
            on_cap: str = "silent") -> DataFrame:
     """k-core peeling (Seidman 1983, public algorithm) over the edge
@@ -1091,8 +1024,7 @@ def k_core(edges: DataFrame, src: str, dst: str, k: int,
     are no-ops — a ``rounds`` past the graph's peel depth returns the
     exact k-core. ``until_stable=True`` iterates to that fixpoint
     with ``rounds`` as the cap, checking one bounded count probe per
-    round (the pagerank ``tol`` discipline; requires
-    ``materialize=True``). Self-loops, NULL endpoints, and parallel
+    round (the pagerank ``tol`` discipline). Self-loops, NULL endpoints, and parallel
     edges drop (degree is over the DISTINCT neighbor set).
 
     Scale posture: the symmetric neighbor list is materialized once;
@@ -1124,15 +1056,14 @@ def k_core(edges: DataFrame, src: str, dst: str, k: int,
     silently disarm it."""
     if k < 1:
         raise ValueError("k must be >= 1")
-    _check_fixpoint_args(rounds, until_stable, materialize, on_cap)
+    _check_fixpoint_args(rounds, until_stable, on_cap)
     require_free_columns("k_core", edges.columns,
                          _WORKING + ("__a", "__b"))
     require_free_columns("k_core", edges.columns, ("node", "degree"),
                          kind="output")
-    nbr = _undirected(edges, src, dst, materialize)
-    survivors = nbr.select(F.col("__a").alias("node")).distinct()
-    if materialize:
-        survivors = survivors.localCheckpoint()
+    nbr = _undirected(edges, src, dst)
+    survivors = (nbr.select(F.col("__a").alias("node")).distinct()
+                 .localCheckpoint())
     n_prev = None
     if until_stable or broadcast_survivors is None:
         # one bounded probe serves both the stability baseline and
@@ -1158,7 +1089,7 @@ def k_core(edges: DataFrame, src: str, dst: str, k: int,
         survivors,
         lambda alive: (_alive_degrees(alive)
                        .filter(F.col("degree") >= k).select("node")),
-        lambda df: df.count(), rounds, until_stable, materialize,
+        lambda df: df.count(), rounds, until_stable,
         first_probe=n_prev)
     # diagnostics recorded BEFORE the escalation so a raise still
     # leaves the cap-hit observable
@@ -1181,7 +1112,6 @@ def k_core(edges: DataFrame, src: str, dst: str, k: int,
 
 def triangle_count(edges: DataFrame, src: str, dst: str,
                    coeff_digits: int | None = None,
-                   materialize: bool = True,
                    broadcast_degrees: bool | None = None) -> DataFrame:
     """Per-node triangle count and local clustering coefficient over
     the edge list treated as UNDIRECTED (self-loops/NULLs/parallels
@@ -1215,11 +1145,10 @@ def triangle_count(edges: DataFrame, src: str, dst: str,
     require_free_columns("triangle_count", edges.columns,
                          ("node", "degree", "triangles", "clustering"),
                          kind="output")
-    nbr = _undirected(edges, src, dst, materialize)
+    nbr = _undirected(edges, src, dst)
     deg = (nbr.groupBy(F.col("__a").alias("node"))
-           .agg(F.count(F.lit(1)).alias("__deg")))
-    if materialize:
-        deg = deg.localCheckpoint()
+           .agg(F.count(F.lit(1)).alias("__deg"))
+           .localCheckpoint())
     if broadcast_degrees is None:
         # bounded probe (one scalar off the materialized degree
         # table): one row per node, so its count IS the node bound
@@ -1237,9 +1166,8 @@ def triangle_count(edges: DataFrame, src: str, dst: str,
                            & (F.col("__a") < F.col("__b"))))
                 .select("__a", "__b",
                         F.col("__dega").alias("__oda"),
-                        F.col("__degb").alias("__odb")))
-    if materialize:
-        oriented = oriented.localCheckpoint()
+                        F.col("__degb").alias("__odb"))
+                .localCheckpoint())
     w1 = oriented.select(F.col("__a"), F.col("__b").alias("__w1"),
                          F.col("__odb").alias("__d1"))
     w2 = oriented.select(F.col("__a"), F.col("__b").alias("__w2"),
@@ -1277,7 +1205,6 @@ def triangle_count(edges: DataFrame, src: str, dst: str,
 
 def core_number(edges: DataFrame, src: str, dst: str,
                 rounds: int = 8, until_stable: bool = False,
-                materialize: bool = True,
                 broadcast_values: bool | None = None,
                 on_cap: str = "silent") -> DataFrame:
     """Full core decomposition — per-node core NUMBER (the largest k
@@ -1306,8 +1233,7 @@ def core_number(edges: DataFrame, src: str, dst: str,
     convergence); ``until_stable=True`` iterates to the true
     coreness with ``rounds`` as the cap, probing one bounded scalar
     (the value sum — monotone, so unchanged-sum ⇔ fixed point) per
-    round, the pagerank ``tol`` discipline (requires
-    ``materialize=True``). Edges are undirected; self-loops, NULL
+    round, the pagerank ``tol`` discipline. Edges are undirected; self-loops, NULL
     endpoints, and parallel edges drop (degree over the DISTINCT
     neighbor set).
 
@@ -1334,16 +1260,15 @@ def core_number(edges: DataFrame, src: str, dst: str,
     the combination would silently disarm it)."""
     from pyspark.sql import Window
 
-    _check_fixpoint_args(rounds, until_stable, materialize, on_cap)
+    _check_fixpoint_args(rounds, until_stable, on_cap)
     require_free_columns("core_number", edges.columns,
                          _WORKING + ("__a", "__b", "__c", "__rn"))
     require_free_columns("core_number", edges.columns,
                          ("node", "core"), kind="output")
-    nbr = _undirected(edges, src, dst, materialize)
+    nbr = _undirected(edges, src, dst)
     vals = (nbr.groupBy(F.col("__a").alias("node"))
-            .agg(F.count(F.lit(1)).alias("__c")))
-    if materialize:
-        vals = vals.localCheckpoint()
+            .agg(F.count(F.lit(1)).alias("__c"))
+            .localCheckpoint())
     if broadcast_values is None:
         # bounded probe: the value table is one row per node
         broadcast_values = _gate_broadcast(None, vals.count())
@@ -1367,7 +1292,7 @@ def core_number(edges: DataFrame, src: str, dst: str,
     # value is unchanged — one bounded scalar probe per round
     vals, executed, converged = _until_stable(
         vals, _h_index, lambda df: df.agg(F.sum("__c")).first()[0],
-        rounds, until_stable, materialize)
+        rounds, until_stable)
     # diagnostics recorded BEFORE the escalation so a raise still
     # leaves the cap-hit observable
     _LAST_CORE_ROUNDS, _LAST_CORE_CONVERGED = executed, converged

@@ -436,8 +436,7 @@ def _rep_like(path: Column) -> Column:
 
 
 def robots_decisions(rules: DataFrame, urls: DataFrame, agent: str,
-                     url_col: str = "url",
-                     materialize: bool = True) -> DataFrame:
+                     url_col: str = "url") -> DataFrame:
     """Evaluate ``parse_robots`` output against a URL frontier for one
     crawler product token — RFC 9309 §2.2.1/§2.2.2 semantics:
 
@@ -471,8 +470,7 @@ def robots_decisions(rules: DataFrame, urls: DataFrame, agent: str,
     byte-wise, so the struct min IS the spec's tie-break — never a
     window over the frontier.
 
-    ``materialize`` (default True; r16 OPTIMIZATION): the frontier
-    frame feeds TWO consumers here — the rule-candidate join and the
+    r16 OPTIMIZATION: the frontier frame feeds TWO consumers here — the rule-candidate join and the
     final decision left-join — and Catalyst's exchange reuse is free
     to decline to share them (measured declined in frontier_plan:
     the full sitemap-parse → canonical_url → distinct subtree,
@@ -482,8 +480,7 @@ def robots_decisions(rules: DataFrame, urls: DataFrame, agent: str,
     job — no extra synchronous job) and both consumers read the
     snapshot. Frontier-sized, the same bound the join itself
     carries. Skipped automatically for streaming inputs
-    (localCheckpoint is a batch-only API); pass ``False`` for
-    plan-shape tests or callers managing their own persistence."""
+    (localCheckpoint is a batch-only API)."""
     require_free_columns("robots_decisions", urls.columns,
                          ("__target", "__like", "__len", "__pick",
                           "host", "allowed"), kind="output")
@@ -512,7 +509,7 @@ def robots_decisions(rules: DataFrame, urls: DataFrame, agent: str,
                          F.lit("")),
                      F.lit("/")),
                  r"^(\?)", r"/$1")))
-    if materialize and not u.isStreaming:
+    if not u.isStreaming:
         u = u.localCheckpoint(eager=False)
     cand = (u.select(url_col, "host", "__target")
             .join(F.broadcast(active), "host")
