@@ -68,6 +68,7 @@ _SLOW_TESTS = frozenset({
     "test_coreness_random_graphs_match_reference",
     "test_connected_components_star_two_lobe_property",
     "test_asof_join_property_vs_pandas_merge_asof",
+    "test_driver_lane_matches_distributed_lane_random",
 })
 
 
@@ -94,3 +95,14 @@ def see_through_checkpoints(monkeypatch):
 
     monkeypatch.setattr(DataFrame, "localCheckpoint",
                         lambda self, eager=True, storageLevel=None: self)
+
+
+@pytest.fixture
+def distributed_graph_lane(monkeypatch):
+    """Set ``graph._LOCAL_EDGE_CAP`` to 0 for one test, so every
+    non-empty graph given to k_core, core_number, reachability, hits
+    or salsa takes the distributed lane: its plans, broadcast gates
+    and per-round Spark jobs. Restored at teardown."""
+    from unilever_scraping_etl_spark.operators import graph
+
+    monkeypatch.setattr(graph, "_LOCAL_EDGE_CAP", 0)

@@ -1007,7 +1007,7 @@ def _gate_pairs():
 
 
 def test_structural_family_gate_off_plans_shuffle_join(
-        spark, see_through_checkpoints):
+        spark, see_through_checkpoints, distributed_graph_lane):
     """With the gate explicitly OFF (the >1M page-scale path) and
     Spark's size-based auto-broadcast disabled, every iteration join
     in the family must plan as a shuffle join (SMJ/shuffled-hash) —
@@ -1041,7 +1041,7 @@ def test_structural_family_gate_off_plans_shuffle_join(
 
 
 def test_structural_family_gate_auto_broadcasts_small_graphs(
-        spark, see_through_checkpoints):
+        spark, see_through_checkpoints, distributed_graph_lane):
     """The default (None) gate probes the bounded node count and
     KEEPS the broadcast on host-scale graphs — the fixture passes
     n <= 1M, so the hinted BroadcastHashJoin shape survives (the
@@ -1055,7 +1055,8 @@ def test_structural_family_gate_auto_broadcasts_small_graphs(
         e, "src", "dst"))
 
 
-def test_structural_family_gate_off_results_unchanged(spark):
+def test_structural_family_gate_off_results_unchanged(
+        spark, distributed_graph_lane):
     """The gate changes the physical join strategy only — gated-off
     results must equal the broadcast results row for row."""
     e = _edges(spark, _gate_pairs())
@@ -1218,7 +1219,7 @@ def test_coreness_degenerate_graphs_return_empty(spark):
 
 
 def test_coreness_window_is_node_keyed_never_global(
-        spark, see_through_checkpoints):
+        spark, see_through_checkpoints, distributed_graph_lane):
     """The H-index ranking window partitions BY NODE (one adjacency
     list per partition, degree-bounded) — a global window would
     funnel the whole graph through one partition at page scale."""
@@ -1458,10 +1459,12 @@ def test_cocitation_keep_set_never_force_broadcast(spark):
     assert on == off
 
 
-def test_hits_explicit_gate_skips_probe_and_handles_empty(spark):
-    """With the gate pinned explicitly the bounded count probe is
-    skipped (r14 ADVICE low) — the cheap isEmpty check must still
-    return the empty frame on an empty graph, both flag values."""
+def test_hits_explicit_gate_skips_probe_and_handles_empty(
+        spark, distributed_graph_lane):
+    """With the gate pinned explicitly an empty graph still returns
+    the empty (node, hub, authority) frame, both flag values. An
+    empty graph never exceeds the driver lane's cap, so the lane
+    probe answers it even under this fixture."""
     empty = spark.createDataFrame([], "src long, dst long")
     for flag in (True, False):
         out = graph.hits(empty, "src", "dst", iterations=1,
@@ -1561,7 +1564,8 @@ def test_salsa_resists_tightly_knit_community(spark):
     assert salsa_a[0] == pytest.approx(1 / 6, abs=1e-9)
 
 
-def test_salsa_null_parallel_and_empty_edges(spark):
+def test_salsa_null_parallel_and_empty_edges(spark,
+                                             distributed_graph_lane):
     """NULL endpoints and self-loops drop; parallel edges collapse
     (the walk picks among DISTINCT links); the empty graph returns
     the empty frame under both explicit gate values."""
@@ -1585,7 +1589,8 @@ def test_salsa_null_parallel_and_empty_edges(spark):
         graph.salsa(df, "src", "dst", iterations=0)
 
 
-def test_salsa_gate_plans_and_equality(spark, see_through_checkpoints):
+def test_salsa_gate_plans_and_equality(spark, see_through_checkpoints,
+                                       distributed_graph_lane):
     """salsa follows the family's bounded-probe broadcast gate: with
     the gate off and auto-broadcast disabled the score joins plan as
     shuffle joins (no forced build side at page scale); on the small
@@ -1754,7 +1759,8 @@ def test_reachability_cap_hit_is_lower_bound_and_signals(spark):
 
 
 def test_reachability_gate_plans_both_ways(spark,
-                                           see_through_checkpoints):
+                                           see_through_checkpoints,
+                                           distributed_graph_lane):
     """The family broadcast-gate discipline: gate off + auto-broadcast
     disabled plans the frontier semi-join as a shuffle join; the
     small-graph auto path keeps the hint; results equal."""
@@ -1810,3 +1816,171 @@ try:
 
 except ImportError:
     pass
+
+
+# ---------------------------------------------------------------------------
+# driver lane vs distributed lane: one bounded edge probe picks the lane
+# for k_core / core_number / reachability / hits / salsa; both lanes
+# must return the same rows, rounds and converged verdicts
+# ---------------------------------------------------------------------------
+
+def _random_pairs(seed, n_nodes=10, n_edges=28):
+    """A seeded random multigraph, self-loops and parallel edges
+    included (both lanes must drop or collapse them alike)."""
+    import random
+
+    rng = random.Random(seed)
+    return [(rng.randrange(n_nodes), rng.randrange(n_nodes))
+            for _ in range(n_edges)]
+
+
+# the hand fixtures above as one graph of disjoint components: the
+# gate graph, the bow-tie toy, the 8-path (peels one node per end per
+# round) and the hub whose leaves die in round 1
+_FIXTURE_UNION = (_gate_pairs()
+                  + [(a + 10, b + 10)
+                     for a, b in [(0, 1), (1, 2), (2, 1), (2, 3), (9, 10)]]
+                  + [(i, i + 1) for i in range(30, 37)]
+                  + [(140, i) for i in range(41, 44)] + [(41, 42)])
+
+
+def _lane_rows(spark, pairs, ids, seeds):
+    """``{case: result}`` for every operator call on the two shared
+    loop shapes, each result the sorted rows plus the rounds and
+    converged verdict the call recorded. Scores come unrounded."""
+    def node(v):
+        return v if ids == "long" else f"h{v}"
+
+    e = spark.createDataFrame([(node(a), node(b)) for a, b in pairs],
+                              f"src {ids}, dst {ids}")
+    w = e.withColumn("w", (F.hash("src", "dst") % 5 + 1).cast("double"))
+    s = spark.createDataFrame([(node(v),) for v in seeds], ["s"])
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    def diag(name):
+        return (getattr(graph, f"_LAST_{name}_ROUNDS"),
+                getattr(graph, f"_LAST_{name}_CONVERGED"))
+
+    out = {}
+    for label, kw in (("fixed", {"rounds": 2}),
+                      ("stable", {"rounds": 8, "until_stable": True})):
+        out[f"kcore_{label}"] = (
+            rows(graph.k_core(e, "src", "dst", k=2, **kw)), diag("KCORE"))
+        out[f"core_{label}"] = (
+            rows(graph.core_number(e, "src", "dst", **kw)), diag("CORE"))
+    for label, kw in (("fwd", {}), ("bwd", {"direction": "backward"}),
+                      ("khop", {"rounds": 1, "until_stable": False})):
+        out[f"reach_{label}"] = (
+            rows(graph.reachability(e, "src", "dst", s, **kw)),
+            diag("REACH"))
+    out["hits"] = rows(graph.hits(e, "src", "dst", iterations=5))
+    out["hits_weighted"] = rows(graph.hits(w, "src", "dst", iterations=5,
+                                           weight_col="w"))
+    out["salsa"] = rows(graph.salsa(e, "src", "dst", iterations=5))
+    return out
+
+
+def _assert_lanes_agree(spark, monkeypatch, pairs, ids, seeds):
+    """The driver lane returns the distributed lane's rows, rounds and
+    converged verdicts exactly. Scores agree to 1e-12: the lanes add
+    the same floats in different orders, which moves only the last
+    bits, so at the registered 9 digits they round alike except on an
+    exact decimal tie (j/1024 turns up on small graphs), where the
+    last bit decides either way."""
+    driver = _lane_rows(spark, pairs, ids, seeds)
+    with monkeypatch.context() as m:
+        m.setattr(graph, "_LOCAL_EDGE_CAP", 0)
+        distributed = _lane_rows(spark, pairs, ids, seeds)
+    for case, got in driver.items():
+        want = distributed[case]
+        if case.startswith(("hits", "salsa")):
+            assert [r[0] for r in got] == [r[0] for r in want], case
+            for r, t in zip(got, want):
+                assert r[1:] == pytest.approx(t[1:], abs=1e-12), (case, r)
+        else:
+            assert got == want, (ids, case)
+
+
+@pytest.mark.parametrize("ids", ["long", "string"])
+def test_driver_lane_matches_distributed_lane(spark, monkeypatch, ids):
+    """Both lanes agree on the hand fixtures, seeded in three of their
+    components."""
+    _assert_lanes_agree(spark, monkeypatch, _FIXTURE_UNION, ids,
+                        [0, 11, 30])
+
+
+@pytest.mark.parametrize("seed", [1, 2, 3])
+def test_driver_lane_matches_distributed_lane_random(spark, monkeypatch,
+                                                     seed):
+    """Both lanes agree on three seeded random multigraphs, with long
+    and with string ids."""
+    pairs = _random_pairs(seed)
+    for ids in ("long", "string"):
+        _assert_lanes_agree(spark, monkeypatch, pairs, ids, [pairs[0][0]])
+
+
+def test_driver_lane_cap_hits_signal_in_both_lanes(spark, monkeypatch):
+    """A cap-hit warns under on_cap="warn" and raises under "raise" on
+    either lane, with the cap-hit recorded before the raise."""
+    path = _edges(spark, [(i, i + 1) for i in range(7)])
+    seeds = _seeds(spark, [0])
+    calls = [
+        ("k_core", lambda **kw: graph.k_core(
+            path, "src", "dst", k=2, rounds=1, until_stable=True, **kw),
+         "_LAST_KCORE_CONVERGED"),
+        ("core_number", lambda **kw: graph.core_number(
+            path, "src", "dst", rounds=1, until_stable=True, **kw),
+         "_LAST_CORE_CONVERGED"),
+        ("reachability", lambda **kw: graph.reachability(
+            path, "src", "dst", seeds, rounds=2, **kw),
+         "_LAST_REACH_CONVERGED"),
+    ]
+    for cap in (graph._LOCAL_EDGE_CAP, 0):
+        with monkeypatch.context() as m:
+            m.setattr(graph, "_LOCAL_EDGE_CAP", cap)
+            for name, call, flag in calls:
+                with pytest.warns(RuntimeWarning, match=f"{name}.*cap"):
+                    call(on_cap="warn")
+                with pytest.raises(RuntimeError, match=f"{name}.*cap"):
+                    call(on_cap="raise")
+                assert getattr(graph, flag) is False, (name, cap)
+
+
+def test_driver_lane_chosen_by_edge_count(spark, monkeypatch):
+    """The probe counts the operator's filtered edges: a graph of
+    exactly the cap stays on the driver (its result is a local
+    relation), one edge over it runs distributed."""
+    pairs = _gate_pairs() + [(3, 3), (None, 1)]  # 9 edges once filtered
+    e = _edges(spark, pairs)
+    for cap, local in ((9, True), (8, False)):
+        with monkeypatch.context() as m:
+            m.setattr(graph, "_LOCAL_EDGE_CAP", cap)
+            for out in (graph.k_core(e, "src", "dst", k=2),
+                        graph.core_number(e, "src", "dst"),
+                        graph.salsa(e, "src", "dst"),
+                        graph.reachability(e, "src", "dst",
+                                           _seeds(spark, [0]))):
+                assert _xplan(out).startswith("LocalTableScan") == local, \
+                    (cap, _xplan(out))
+    # hits keeps self-loops, so the same list probes 10 edges for it
+    for cap, local in ((10, True), (9, False)):
+        with monkeypatch.context() as m:
+            m.setattr(graph, "_LOCAL_EDGE_CAP", cap)
+            out = graph.hits(e, "src", "dst")
+            assert _xplan(out).startswith("LocalTableScan") == local, cap
+
+
+def test_kcore_small_graph_runs_at_most_two_jobs(spark):
+    """On the driver lane k_core costs its one edge probe: at most two
+    Spark jobs for the call and its collect, counted by job group."""
+    sc = spark.sparkContext
+    e = _edges(spark, _gate_pairs())
+    sc.setJobGroup("kcore-driver-lane", "k_core job count")
+    try:
+        graph.k_core(e, "src", "dst", k=2, rounds=6).collect()
+        jobs = sc.statusTracker().getJobIdsForGroup("kcore-driver-lane")
+    finally:
+        sc.setJobGroup("", "")
+    assert len(jobs) <= 2, jobs

@@ -1941,7 +1941,7 @@ def test_r12_host_family_plan_shapes(spark):
     assert "BatchEvalPython" not in pa
 
 
-def test_r13_pagerank_family_plan_shapes(spark):
+def test_r13_pagerank_family_plan_shapes(spark, distributed_graph_lane):
     """Round-13 query plan pins: host_rank_weighted keeps the
     one-shuffle-per-iteration shape — the out-weight sum is attached
     to the edge list ONCE before materialization, so the executed
@@ -1983,7 +1983,7 @@ def test_r13_pagerank_family_plan_shapes(spark):
     assert "CartesianProduct" not in pc
 
 
-def test_r13_crawl_family_plan_shapes(spark):
+def test_r13_crawl_family_plan_shapes(spark, distributed_graph_lane):
     """Round-13 crawl-pipeline plan pins. sitemap_ingest must be a
     pure narrow map — ZERO exchanges (the parse is regexp projection
     + explode; nothing shuffles until a consumer aggregates).

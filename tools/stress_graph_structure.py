@@ -26,7 +26,15 @@ point of the probe).
 salsa) runs a subset — the r14 2M-scale runs measured single legs
 with reduced iteration counts rather than the whole family at the
 200k defaults. ``--k`` overrides the iteration count of the iterative
-trio (lpa/hits/salsa; default 5)."""
+trio (lpa/hits/salsa; default 5).
+
+Every leg runs in its own Spark job group and prints its job count,
+and the until_stable legs their rounds, so jobs per iteration can be
+compared across trees. The header prints the edge count the lane
+probe of k_core/core_number/hits/salsa reads against
+``graph._LOCAL_EDGE_CAP`` and the lane that count selects: a stress
+run below the cap measures the numpy driver lane, not the
+distributed one."""
 
 from __future__ import annotations
 
@@ -63,74 +71,93 @@ def main() -> None:
         .filter(F.col("src") != F.col("dst"))
         .localCheckpoint())
     print(f"graph: {edges.count()} edges, target {n} nodes")
+    cap = graph._LOCAL_EDGE_CAP
+    probed = edges.limit(cap + 1).count()
+    print(f"lane probe: {probed} edges read against _LOCAL_EDGE_CAP "
+          f"{cap} -> {'driver' if probed <= cap else 'distributed'} "
+          f"lane for kcore/coreness/hits/salsa")
+    sc = spark.sparkContext
+
+    def leg_jobs(leg: str) -> str:
+        n_jobs = len(sc.statusTracker().getJobIdsForGroup(leg))
+        sc.setJobGroup("", "")
+        return f"{n_jobs} jobs"
+
+    def leg(name: str) -> str:
+        sc.setJobGroup(name, name)
+        return name
 
     if "lpa" in ops:
-        t = time.perf_counter()
+        t, g = time.perf_counter(), leg("lpa")
         lpa = graph.label_propagation(edges, "src", "dst",
                                       iterations=k_iter,
                                       broadcast_labels=bcast)
         comms = lpa.select("community").distinct().count()
         print(f"label_propagation K={k_iter} : "
               f"{time.perf_counter() - t:.1f} s, "
-              f"{comms} communities", flush=True)
+              f"{comms} communities, {leg_jobs(g)}", flush=True)
 
     if "cocitation" in ops:
-        t = time.perf_counter()
+        t, g = time.perf_counter(), leg("cocitation")
         cc = graph.cocitation(edges, "src", "dst", min_common=3,
                               max_linker_degree=64,
                               broadcast_degrees=bcast)
         pairs = cc.count()
         print(f"cocitation cap=64     : "
               f"{time.perf_counter() - t:.1f} s, "
-              f"{pairs} pairs (min_common=3)", flush=True)
+              f"{pairs} pairs (min_common=3), {leg_jobs(g)}",
+              flush=True)
 
     if "triangles" in ops:
-        t = time.perf_counter()
+        t, g = time.perf_counter(), leg("triangles")
         tc = graph.triangle_count(edges, "src", "dst",
                                   broadcast_degrees=bcast)
         tri = tc.agg(F.sum("triangles")).first()[0]
         print(f"triangle_count        : "
               f"{time.perf_counter() - t:.1f} s, "
-              f"{tri} corner-counts", flush=True)
+              f"{tri} corner-counts, {leg_jobs(g)}", flush=True)
 
     if "kcore" in ops:
         for k in (4, 16):
-            t = time.perf_counter()
+            t, g = time.perf_counter(), leg(f"kcore{k}")
             core = graph.k_core(edges, "src", "dst", k=k, rounds=64,
                                 until_stable=True,
                                 broadcast_survivors=bcast)
             nodes = core.count()
             print(f"k_core k={k:<2} stable   : "
                   f"{time.perf_counter() - t:.1f} s, "
-                  f"{nodes} nodes in core", flush=True)
+                  f"{nodes} nodes in core, "
+                  f"{graph._LAST_KCORE_ROUNDS} rounds, {leg_jobs(g)}",
+                  flush=True)
 
     if "hits" in ops:
-        t = time.perf_counter()
+        t, g = time.perf_counter(), leg("hits")
         h = graph.hits(edges, "src", "dst", iterations=k_iter,
                        broadcast_scores=bcast)
         nh = h.count()
         print(f"hits K={k_iter}              : "
               f"{time.perf_counter() - t:.1f} s, "
-              f"{nh} nodes", flush=True)
+              f"{nh} nodes, {leg_jobs(g)}", flush=True)
 
     if "coreness" in ops:
-        t = time.perf_counter()
+        t, g = time.perf_counter(), leg("coreness")
         cn = graph.core_number(edges, "src", "dst", rounds=64,
                                until_stable=True,
                                broadcast_values=bcast)
         mx = cn.agg(F.max("core")).first()[0]
         print(f"core_number stable    : "
               f"{time.perf_counter() - t:.1f} s, "
-              f"max core {mx}", flush=True)
+              f"max core {mx}, {graph._LAST_CORE_ROUNDS} rounds, "
+              f"{leg_jobs(g)}", flush=True)
 
     if "salsa" in ops:
-        t = time.perf_counter()
+        t, g = time.perf_counter(), leg("salsa")
         sa = graph.salsa(edges, "src", "dst", iterations=k_iter,
                          broadcast_scores=bcast)
         ns = sa.count()
         print(f"salsa K={k_iter}             : "
               f"{time.perf_counter() - t:.1f} s, "
-              f"{ns} nodes", flush=True)
+              f"{ns} nodes, {leg_jobs(g)}", flush=True)
 
 
 if __name__ == "__main__":

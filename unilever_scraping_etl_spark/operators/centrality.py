@@ -173,9 +173,8 @@ def _reach_pairs(op: str, edges: DataFrame, src: str, dst: str,
     else:
         nodes = (edges.select(F.col(src).alias("node"))
                  .union(edges.select(F.col(dst).alias("node")))
-                 .distinct())
+                 .distinct().localCheckpoint())
     pairs = pairs.localCheckpoint()
-    nodes = nodes.localCheckpoint()
     seen = pairs.withColumn("__dist", F.lit(1))
     frontier = pairs
     _LAST_HC_ROUNDS = 1

@@ -48,14 +48,33 @@ d per iteration, so K = 5 bounds the error at d^5 ≈ 0.44 of the
 initial gap — pick K from the tolerance, or iterate in an outer loop
 on the returned frame's delta (same bounded-probe discipline as the
 CC convergence checksum).
+
+Small graphs take a driver lane instead. The operators on the two
+shared loop shapes — :func:`_until_stable` (k_core, core_number,
+reachability) and :func:`_alternating_walk` (hits, salsa) — open every
+call with one bounded probe: the operator's filtered edge list,
+collected through ``limit(_LOCAL_EDGE_CAP + 1)``. At or under the cap
+the whole loop runs in numpy on the driver (:class:`_DriverGraph`)
+and the result returns as a local relation, so a host graph of a few
+dozen edges costs the probe's job instead of Spark jobs every round.
+Over the cap the probe's rows are dropped and the distributed lane
+runs as described above. Both lanes execute the same rounds, decide
+convergence on the same probe scalar and round through the same
+``F.round`` projection. PageRank, label propagation, co-citation and
+triangle counting have no driver lane yet.
 """
 
 from __future__ import annotations
 
 from collections.abc import Callable
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import (DataType, DoubleType, LongType, StructField,
+                               StructType)
 
 from unilever_scraping_etl_spark.operators._contracts import (
     require_free_columns,
@@ -122,34 +141,35 @@ def _check_fixpoint_args(rounds: int, until_stable: bool,
                          "so a cap-hit signal could not fire)")
 
 
-def _until_stable(state: DataFrame,
-                  step: Callable[[DataFrame], DataFrame],
-                  probe: Callable[[DataFrame], object],
+def _until_stable(state, step: Callable, probe: Callable,
                   rounds: int, until_stable: bool,
                   first_probe: object = None
-                  ) -> tuple[DataFrame, int, bool | None]:
+                  ) -> tuple[object, int, bool | None]:
     """The bounded-fixpoint loop shared by :func:`reachability`,
-    :func:`k_core` and :func:`core_number`: up to ``rounds`` times,
-    ``state = step(state)``, snapshot it lazily, then (under
-    ``until_stable``) compare ``probe(state)`` — one bounded scalar of
-    a MONOTONE state, so an unchanged value is the fixed point — with
+    :func:`k_core` and :func:`core_number`, in both lanes: up to
+    ``rounds`` times ``state = step(state)``, then (under
+    ``until_stable``) compare ``probe(state)`` — one scalar of a
+    MONOTONE state, so an unchanged value is the fixed point — with
     the previous round's. ``first_probe`` is the baseline when the
     caller already paid for it (k_core's gate count); otherwise the
     initial state is probed here. Returns ``(state, executed,
     converged)``: ``converged`` is None under fixed rounds (no probe
     runs), False when the cap hit with the state still changing.
 
-    The snapshot is LAZY (r16): under until_stable the probe right
-    after it materializes the snapshot in ITS job instead of a
-    separate synchronous one per round (the CC discipline); under
-    fixed rounds the chain materializes once inside the consumer's
-    action cascade (or the next round's broadcast build)."""
+    On the driver lane the state is a numpy array and the probe a
+    numpy reduction, so rounds cost no Spark job. On the distributed
+    lane the state is a frame and each step ends in a LAZY snapshot
+    (r16): under until_stable the bounded count/sum probe right after
+    it materializes the snapshot in ITS job instead of a separate
+    synchronous one per round (the CC discipline); under fixed rounds
+    the chain materializes once inside the consumer's action cascade
+    (or the next round's broadcast build)."""
     prev = first_probe
     if until_stable and prev is None:
         prev = probe(state)
     executed, converged = 0, None
     for _ in range(rounds):
-        state = step(state).localCheckpoint(eager=False)
+        state = step(state)
         executed += 1
         if until_stable:
             now = probe(state)
@@ -160,6 +180,93 @@ def _until_stable(state: DataFrame,
     if until_stable and converged is None:
         converged = False
     return state, executed, converged
+
+
+# The driver lane's size gate: a probed edge list of at most this many
+# rows runs its loop in numpy on the driver. Envelope, per probed edge:
+# the Arrow rows (two 8-byte ids, plus 8 for a weight), the int64
+# endpoint indices, and the doubled int64 keys, pairs and sort
+# permutations of the symmetric or distinct list — under 256 bytes for
+# fixed-width ids, so about 26 MB at the cap; string ids add their
+# UTF-8 bytes. The probe's limit(_LOCAL_EDGE_CAP + 1) enforces it:
+# no more rows than that ever reach the driver.
+_LOCAL_EDGE_CAP = 100_000
+
+
+def _drop_loops(edges: DataFrame, src: str, dst: str) -> DataFrame:
+    """``edges`` without NULL endpoints and self-loops."""
+    return edges.filter(F.col(src).isNotNull() & F.col(dst).isNotNull()
+                        & (F.col(src) != F.col(dst)))
+
+
+class _DriverGraph:
+    """An edge list small enough for the driver lane, indexed for
+    numpy: ``nodes`` holds the distinct endpoint values as an Arrow
+    array (output frames take their node column from it, so ids keep
+    their Spark type), ``a``/``b`` each edge's endpoint positions in
+    ``nodes``, and ``w`` the probed edge weights (None when the probe
+    took none). Edges keep the probe's multiplicity."""
+
+    def __init__(self, spark, table: pa.Table, node_type: DataType):
+        m = table.num_rows
+        enc = pa.concat_arrays([table.column(0).combine_chunks(),
+                                table.column(1).combine_chunks()]
+                               ).dictionary_encode()
+        idx = enc.indices.to_numpy(zero_copy_only=False).astype(np.int64)
+        self.spark, self.node_type = spark, node_type
+        self.nodes, self.a, self.b = enc.dictionary, idx[:m], idx[m:]
+        self.n = len(self.nodes)
+        self.w = (table.column(2).to_numpy() if table.num_columns > 2
+                  else None)
+
+    def distinct(self, symmetric: bool = False
+                 ) -> tuple[np.ndarray, np.ndarray]:
+        """The DISTINCT edge pairs, sorted by ``(a, b)``; with
+        ``symmetric`` each edge also counts reversed (the
+        :func:`_undirected` rule)."""
+        n = self.n
+        key = self.a * n + self.b
+        if symmetric:
+            key = np.concatenate([key, self.b * n + self.a])
+        key = np.unique(key)
+        return key // n, key % n
+
+    def frame(self, keep: np.ndarray | None = None,
+              **cols: np.ndarray) -> DataFrame:
+        """``(node, *cols)`` for the nodes where ``keep`` holds (every
+        node when None) as a local relation; integer columns become
+        long, float columns double."""
+        nodes = self.nodes if keep is None else self.nodes.filter(
+            pa.array(keep))
+        arrays = [nodes] + [pa.array(v if keep is None else v[keep])
+                            for v in cols.values()]
+        schema = StructType(
+            [StructField("node", self.node_type)]
+            + [StructField(k, LongType() if v.dtype.kind in "iu"
+                           else DoubleType())
+               for k, v in cols.items()])
+        return self.spark.createDataFrame(
+            pa.Table.from_arrays(arrays, names=schema.names), schema)
+
+
+def _driver_graph(edges: DataFrame, a: str, b: str,
+                  weight: Column | None = None) -> _DriverGraph | None:
+    """The lane choice: ONE bounded probe collects ``edges[a, b]``
+    (endpoints cast to their common node type, the type a union of
+    the two columns takes), plus ``weight`` when given, through
+    ``limit(_LOCAL_EDGE_CAP + 1)``. Returns the indexed graph when it
+    fits, None when the distributed lane must run. ``edges`` arrives
+    with the operator's own edge filter applied."""
+    node_type = (edges.select(F.col(a).alias("node"))
+                 .union(edges.select(F.col(b).alias("node")))
+                 .schema["node"].dataType)
+    cols = [F.col(a).cast(node_type), F.col(b).cast(node_type)]
+    t = (edges.select(*cols, *([] if weight is None else [weight]))
+         .limit(_LOCAL_EDGE_CAP + 1).toArrow())
+    if t.num_rows > _LOCAL_EDGE_CAP:
+        return None
+    return _DriverGraph(edges.sparkSession, t, node_type)
+
 
 # The bounded-probe broadcast discipline (pagerank, round 11), shared
 # by the whole structural family since round 14: every iterative
@@ -182,35 +289,12 @@ def _gate_broadcast(flag: bool | None, n: int) -> bool:
     return (n <= _BROADCAST_NODE_CAP) if flag is None else bool(flag)
 
 
-def _resolve_score_gate(nodes: DataFrame,
-                        flag: bool | None,
-                        need_empty: bool = True) -> tuple[bool, bool]:
-    """Shared gate resolution for the score-propagation operators
-    (hits, salsa) — ONE source of truth for the probe-or-isEmpty
-    discipline (r14 ADVICE low): the bounded node-count probe is
-    paid only when the gate is on auto; an explicit flag uses the
-    cheap isEmpty check for the empty-graph early return. Returns
-    (broadcast, empty).
-
-    ``need_empty=False`` (r15 ADVICE low): callers that never consult
-    the empty signal — reachability, whose seed semi-join against an
-    empty graph is already empty — skip the isEmpty action entirely
-    on the explicit-flag path instead of paying a Spark job for a
-    value they discard."""
-    if flag is None:
-        n = nodes.count()
-        return _gate_broadcast(None, n), n == 0
-    return bool(flag), (nodes.isEmpty() if need_empty else False)
-
-
 def _undirected(edges: DataFrame, src: str, dst: str) -> DataFrame:
     """The symmetric neighbor list ``(__a, __b)`` of the edge list read
     as UNDIRECTED: NULL endpoints and self-loops drop, every edge
     appears in both directions, parallel edges collapse. Snapshotted
     once — every caller joins it per round."""
-    nbr = (edges
-           .filter(F.col(src).isNotNull() & F.col(dst).isNotNull()
-                   & (F.col(src) != F.col(dst)))
+    nbr = (_drop_loops(edges, src, dst)
            .select(F.col(src).alias("__a"), F.col(dst).alias("__b")))
     return (nbr.union(nbr.select(F.col("__b").alias("__a"),
                                  F.col("__a").alias("__b")))
@@ -503,8 +587,7 @@ def _alternating_walk(edges: DataFrame, a: str, b: str,
                       iterations: int, w_fwd: Column | None,
                       w_bwd: Column | None,
                       norm: Callable[[Column], Column],
-                      broadcast: bool | None,
-                      digits: int | None) -> DataFrame:
+                      broadcast: bool | None) -> DataFrame:
     """The alternating sparse half-step walk shared by :func:`hits`
     and :func:`salsa`. From h₀ ≡ 1 on every endpoint of ``edges[a, b]``,
     each iteration runs
@@ -513,10 +596,12 @@ def _alternating_walk(edges: DataFrame, a: str, b: str,
         h(u) = Σ_{u→v} a(v) · w_bwd,   then h /= norm(h)
 
     over ``edges[a, b]`` (``None`` weights multiply nothing, so an
-    unweighted plan carries no 1.0-multiply noise), and returns
-    ``(node, hub, authority)`` for every node, rounded to ``digits``.
-    The caller owns validation and its edge preparation; an empty
-    edge list returns the empty frame.
+    unweighted plan carries no 1.0-multiply noise), and returns the
+    unrounded ``(node, hub, authority)`` for every node;
+    :func:`_round_scores` rounds both lanes. This is the distributed
+    lane: the caller has probed the edge list over the driver lane's
+    cap (:func:`_driver_walk` runs the same walk under it), so the
+    graph is never empty here.
 
     Scale posture: the edge list arrives materialized (the caller
     snapshots it once) and the node set is snapshotted here; each
@@ -545,10 +630,8 @@ def _alternating_walk(edges: DataFrame, a: str, b: str,
     nodes = (edges.select(F.col(a).alias("node"))
              .union(edges.select(F.col(b).alias("node")))
              .distinct().localCheckpoint())
-    broadcast, empty = _resolve_score_gate(nodes, broadcast)
-    if empty:
-        return nodes.select("node", F.lit(0.0).alias("hub"),
-                            F.lit(0.0).alias("authority"))
+    if broadcast is None:
+        broadcast = _gate_broadcast(None, nodes.count())
 
     def _half_step(score: DataFrame, frm: str, to: str, col: str,
                    out: str, w: Column | None) -> DataFrame:
@@ -577,18 +660,47 @@ def _alternating_walk(edges: DataFrame, a: str, b: str,
     # dense completion ONCE: every graph node appears in the output,
     # nodes that never received mass at exactly 0.0 (the value the
     # per-half-step dense form carried for them all along)
-    dense = (nodes
-             .join(hub, "node", "left")
-             .join(auth, "node", "left")
-             .select("node",
-                     F.coalesce(F.col("hub"), F.lit(0.0)).alias("hub"),
-                     F.coalesce(F.col("authority"), F.lit(0.0))
-                     .alias("authority")))
-    if digits is not None:
-        dense = dense.select("node", F.round("hub", digits).alias("hub"),
-                             F.round("authority", digits)
-                             .alias("authority"))
-    return dense.select("node", "hub", "authority")
+    return (nodes
+            .join(hub, "node", "left")
+            .join(auth, "node", "left")
+            .select("node",
+                    F.coalesce(F.col("hub"), F.lit(0.0)).alias("hub"),
+                    F.coalesce(F.col("authority"), F.lit(0.0))
+                    .alias("authority")))
+
+
+def _driver_walk(g: _DriverGraph, a: np.ndarray, b: np.ndarray,
+                 iterations: int, w_fwd: np.ndarray | None,
+                 w_bwd: np.ndarray | None,
+                 norm: Callable[[np.ndarray], float]) -> DataFrame:
+    """:func:`_alternating_walk` on the driver lane, over the edge
+    index arrays ``a``→``b`` of ``g``: the same half-steps with the
+    same per-edge products, summed per node by ``np.bincount`` and
+    divided by ``norm`` of the sums. The score vectors are dense from
+    the start — a node that received no mass holds exactly 0.0, the
+    value the distributed lane's dense completion gives it, and 0.0
+    adds nothing to a sum or a norm. Returns the unrounded ``(node,
+    hub, authority)`` local relation."""
+    def _half_step(score, frm, to, w):
+        contrib = score[frm] if w is None else score[frm] * w
+        raw = np.bincount(to, weights=contrib, minlength=g.n)
+        return raw / norm(raw)
+
+    hub = np.ones(g.n)
+    auth = np.zeros(g.n)
+    for _ in range(iterations):
+        auth = _half_step(hub, a, b, w_fwd)
+        hub = _half_step(auth, b, a, w_bwd)
+    return g.frame(hub=hub, authority=auth)
+
+
+def _round_scores(dense: DataFrame, digits: int | None) -> DataFrame:
+    """The walk's output projection, shared by both lanes so they
+    round through one expression."""
+    if digits is None:
+        return dense
+    return dense.select("node", F.round("hub", digits).alias("hub"),
+                        F.round("authority", digits).alias("authority"))
 
 
 def hits(edges: DataFrame, src: str, dst: str,
@@ -635,9 +747,11 @@ def hits(edges: DataFrame, src: str, dst: str,
     form — the scale factor cancels in every norm
     (property-tested).
 
-    Scale posture: the edge list is materialized once and the walk
-    runs in :func:`_alternating_walk`;
-    ``broadcast_scores`` is its bounded-probe gate.
+    Scale posture: one bounded probe picks the lane (module
+    docstring). Up to ``_LOCAL_EDGE_CAP`` edges the walk runs on the
+    driver (:func:`_driver_walk`); above it the edge list is
+    materialized once and the walk runs in :func:`_alternating_walk`,
+    with ``broadcast_scores`` as its bounded-probe gate.
     """
     if iterations < 1:
         raise ValueError("iterations must be >= 1")
@@ -649,11 +763,17 @@ def hits(edges: DataFrame, src: str, dst: str,
     if weight_col is not None:
         edges = edges.filter(F.col(weight_col).isNotNull()
                              & (F.col(weight_col) > 0))
-    edges = edges.localCheckpoint()
     w = None if weight_col is None else F.col(weight_col).cast("double")
-    return _alternating_walk(edges, src, dst, iterations, w, w,
-                             lambda x: F.sqrt(F.sum(x * x)),
-                             broadcast_scores, hub_digits)
+    g = _driver_graph(edges, src, dst, w)
+    if g is not None:
+        dense = _driver_walk(g, g.a, g.b, iterations, g.w, g.w,
+                             lambda x: np.sqrt(np.sum(x * x)))
+    else:
+        dense = _alternating_walk(edges.localCheckpoint(), src, dst,
+                                  iterations, w, w,
+                                  lambda x: F.sqrt(F.sum(x * x)),
+                                  broadcast_scores)
+    return _round_scores(dense, hub_digits)
 
 
 def salsa(edges: DataFrame, src: str, dst: str,
@@ -694,10 +814,13 @@ def salsa(edges: DataFrame, src: str, dst: str,
     edge list. ``score_digits`` rounds both scores (the cross-engine
     float-sum rule).
 
-    Scale posture: the distinct edge list is materialized ONCE
-    carrying its two reciprocal-degree columns (1/outdeg(src) for the
-    authority step, 1/indeg(dst) for the hub step), and the walk runs
-    in :func:`_alternating_walk` with ``broadcast_scores`` as its
+    Scale posture: one bounded probe picks the lane (module
+    docstring). Up to ``_LOCAL_EDGE_CAP`` edges the walk runs on the
+    driver (:func:`_driver_walk`) with the same reciprocal degrees.
+    Above it the distinct edge list is materialized ONCE carrying its
+    two reciprocal-degree columns (1/outdeg(src) for the authority
+    step, 1/indeg(dst) for the hub step), and the walk runs in
+    :func:`_alternating_walk` with ``broadcast_scores`` as its
     bounded-probe gate. The one-time degree joins that build the edge
     weights ship unhinted (AQE decides — they are paid once, the
     keep-set rule)."""
@@ -707,12 +830,18 @@ def salsa(edges: DataFrame, src: str, dst: str,
                          _WORKING + ("__wa", "__wh", "__od", "__id"))
     require_free_columns("salsa", edges.columns,
                          ("node", "hub", "authority"), kind="output")
+    edges = _drop_loops(edges, src, dst)
+    g = _driver_graph(edges, src, dst)
+    if g is not None:
+        a, b = g.distinct()
+        od = np.bincount(a, minlength=g.n)
+        idg = np.bincount(b, minlength=g.n)
+        return _round_scores(
+            _driver_walk(g, a, b, iterations, 1.0 / od[a], 1.0 / idg[b],
+                         np.sum), score_digits)
     # the distinct list feeds BOTH degree tables and the weighted
     # edge build — snapshot once (the cocitation r14 rule)
-    el = (edges
-          .filter(F.col(src).isNotNull() & F.col(dst).isNotNull()
-                  & (F.col(src) != F.col(dst)))
-          .select(F.col(src).alias("__a"), F.col(dst).alias("__b"))
+    el = (edges.select(F.col(src).alias("__a"), F.col(dst).alias("__b"))
           .distinct().localCheckpoint())
     od = el.groupBy("__a").agg(F.count(F.lit(1)).alias("__od"))
     idg = el.groupBy("__b").agg(F.count(F.lit(1)).alias("__id"))
@@ -723,9 +852,10 @@ def salsa(edges: DataFrame, src: str, dst: str,
                   (F.lit(1.0) / F.col("__od")).alias("__wa"),
                   (F.lit(1.0) / F.col("__id")).alias("__wh"))
           .localCheckpoint())
-    return _alternating_walk(en, "__a", "__b", iterations,
-                             F.col("__wa"), F.col("__wh"), F.sum,
-                             broadcast_scores, score_digits)
+    return _round_scores(
+        _alternating_walk(en, "__a", "__b", iterations, F.col("__wa"),
+                          F.col("__wh"), F.sum, broadcast_scores),
+        score_digits)
 
 
 _LAST_REACH_ROUNDS: int | None = None
@@ -772,7 +902,10 @@ def reachability(edges: DataFrame, src: str, dst: str,
     ``until_stable=True`` to be meaningful, enforced);
     ``_LAST_REACH_ROUNDS``/``_LAST_REACH_CONVERGED`` record the
     run (same thread-unsafety caveat as the family's other
-    diagnostics)."""
+    diagnostics). Up to ``_LOCAL_EDGE_CAP`` edges the rounds run on
+    the driver (module docstring); the seeds are still matched to
+    graph nodes by a Spark semi-join, so seed values compare under
+    Spark's type coercion in both lanes."""
     if direction not in ("forward", "backward"):
         raise ValueError("direction must be 'forward' or 'backward'")
     _check_fixpoint_args(rounds, until_stable, on_cap)
@@ -781,42 +914,57 @@ def reachability(edges: DataFrame, src: str, dst: str,
     require_free_columns("reachability", edges.columns, ("node",),
                          kind="output")
     a, b = (src, dst) if direction == "forward" else (dst, src)
-    el = (edges
-          .filter(F.col(src).isNotNull() & F.col(dst).isNotNull()
-                  & (F.col(src) != F.col(dst)))
-          .select(F.col(a).alias("__a"), F.col(b).alias("__b"))
-          .distinct().localCheckpoint())
-    nodes = (el.select(F.col("__a").alias("node"))
-             .union(el.select(F.col("__b").alias("node")))
-             .distinct().localCheckpoint())
-    broadcast_frontier, _ = _resolve_score_gate(nodes,
-                                                broadcast_frontier,
-                                                need_empty=False)
-    seed_col = seeds.columns[0]
-    # lazy: the until_stable baseline count (or round 1's semi-join
-    # side / broadcast build) materializes it — no dedicated job
-    reached = (nodes.join(
-        seeds.select(F.col(seed_col).alias("node")).distinct(),
-        "node", "left_semi").localCheckpoint(eager=False))
+    edges = _drop_loops(edges, src, dst)
+    seed_nodes = seeds.select(F.col(seeds.columns[0]).alias("node")
+                              ).distinct()
+    g = _driver_graph(edges, a, b)
+    if g is not None:
+        hit = (g.frame().join(seed_nodes, "node", "left_semi")
+               .toArrow().column(0).combine_chunks())
+        start = pc.is_in(g.nodes, value_set=hit.cast(g.nodes.type))
 
-    def _hop(reached: DataFrame) -> DataFrame:
-        rside = reached.withColumnRenamed("node", "__a")
-        if broadcast_frontier:
-            rside = F.broadcast(rside)
-        step = (el.join(rside, "__a", "left_semi")
-                .select(F.col("__b").alias("node")))
-        return reached.union(step).distinct()
+        def _hop(reached: np.ndarray) -> np.ndarray:
+            out = reached.copy()
+            out[g.b[reached[g.a]]] = True
+            return out
 
+        reached, executed, converged = _until_stable(
+            start.to_numpy(zero_copy_only=False), _hop, np.count_nonzero,
+            rounds, until_stable)
+        out = g.frame(reached)
+    else:
+        el = (edges.select(F.col(a).alias("__a"), F.col(b).alias("__b"))
+              .distinct().localCheckpoint())
+        nodes = (el.select(F.col("__a").alias("node"))
+                 .union(el.select(F.col("__b").alias("node")))
+                 .distinct().localCheckpoint())
+        if broadcast_frontier is None:
+            broadcast_frontier = _gate_broadcast(None, nodes.count())
+        # lazy: the until_stable baseline count (or round 1's semi-join
+        # side / broadcast build) materializes it — no dedicated job
+        reached = (nodes.join(seed_nodes, "node", "left_semi")
+                   .localCheckpoint(eager=False))
+
+        def _hop(reached: DataFrame) -> DataFrame:
+            rside = reached.withColumnRenamed("node", "__a")
+            if broadcast_frontier:
+                rside = F.broadcast(rside)
+            step = (el.join(rside, "__a", "left_semi")
+                    .select(F.col("__b").alias("node")))
+            return (reached.union(step).distinct()
+                    .localCheckpoint(eager=False))
+
+        # the reached set only grows: an unchanged count is the closure
+        reached, executed, converged = _until_stable(
+            reached, _hop, lambda df: df.count(), rounds, until_stable)
+        out = reached.select("node")
     global _LAST_REACH_ROUNDS, _LAST_REACH_CONVERGED
-    # the reached set only grows: an unchanged count is the closure
-    reached, executed, converged = _until_stable(
-        reached, _hop, lambda df: df.count(), rounds, until_stable)
     _LAST_REACH_ROUNDS, _LAST_REACH_CONVERGED = executed, converged
     if converged is False:
         _on_cap_signal("reachability", rounds, on_cap,
                        bound="a monotone LOWER bound (the ≤rounds-hop "
                              "neighborhood, a subset of the closure)")
-    return reached.select("node")
+    return out
 
 
 def label_propagation(edges: DataFrame, src: str, dst: str,
@@ -1027,7 +1175,10 @@ def k_core(edges: DataFrame, src: str, dst: str, k: int,
     round (the pagerank ``tol`` discipline). Self-loops, NULL endpoints, and parallel
     edges drop (degree is over the DISTINCT neighbor set).
 
-    Scale posture: the symmetric neighbor list is materialized once;
+    Scale posture: one bounded probe picks the lane (module
+    docstring). Up to ``_LOCAL_EDGE_CAP`` edges the peel runs on the
+    driver, each round a numpy mask and ``bincount``. Above it the
+    symmetric neighbor list is materialized once;
     each round is two semi-joins of the cached neighbor list against
     the (node-bounded) survivor set plus one partial-aggregated
     degree count — O(rounds) shuffles, survivor state one row per
@@ -1061,53 +1212,70 @@ def k_core(edges: DataFrame, src: str, dst: str, k: int,
                          _WORKING + ("__a", "__b"))
     require_free_columns("k_core", edges.columns, ("node", "degree"),
                          kind="output")
-    nbr = _undirected(edges, src, dst)
-    survivors = (nbr.select(F.col("__a").alias("node")).distinct()
-                 .localCheckpoint())
-    n_prev = None
-    if until_stable or broadcast_survivors is None:
-        # one bounded probe serves both the stability baseline and
-        # the broadcast gate — survivor sets only shrink, so the
-        # initial count bounds every round's build side
-        n_prev = survivors.count()
-    broadcast_survivors = _gate_broadcast(
-        broadcast_survivors, n_prev if n_prev is not None else 0)
+    # The final degree is recounted over the final survivors with a
+    # LEFT join from the survivor set (bincount over every node on the
+    # driver lane): under fixed rounds a survivor can lose its last
+    # surviving neighbor in the final round (kept at round R because
+    # its count over survivors_{R-1} cleared k, recounted over
+    # survivors_R). It must REPORT degree 0, not silently vanish — at
+    # the true fixpoint the two forms coincide (every degree >= k),
+    # but the fixed-rounds contract promises one row per survivor.
+    # Pinned by the hub-and-leaves test.
+    g = _driver_graph(_drop_loops(edges, src, dst), src, dst)
+    if g is not None:
+        na, nb = g.distinct(symmetric=True)
 
-    def _alive_degrees(alive: DataFrame) -> DataFrame:
-        sa = alive.withColumnRenamed("node", "__a")
-        sb = alive.withColumnRenamed("node", "__b")
-        if broadcast_survivors:
-            sa, sb = F.broadcast(sa), F.broadcast(sb)
-        return (nbr
-                .join(sa, "__a", "left_semi")
-                .join(sb, "__b", "left_semi")
-                .groupBy(F.col("__a").alias("node"))
-                .agg(F.count(F.lit(1)).alias("degree")))
+        def _alive_degrees(alive: np.ndarray) -> np.ndarray:
+            both = alive[na] & alive[nb]
+            return np.bincount(na[both], minlength=g.n)
 
-    global _LAST_KCORE_ROUNDS, _LAST_KCORE_CONVERGED
-    survivors, executed, converged = _until_stable(
-        survivors,
-        lambda alive: (_alive_degrees(alive)
-                       .filter(F.col("degree") >= k).select("node")),
-        lambda df: df.count(), rounds, until_stable,
-        first_probe=n_prev)
+        survivors, executed, converged = _until_stable(
+            np.ones(g.n, dtype=bool),
+            lambda alive: _alive_degrees(alive) >= k,
+            np.count_nonzero, rounds, until_stable)
+        out = g.frame(survivors, degree=_alive_degrees(survivors))
+    else:
+        nbr = _undirected(edges, src, dst)
+        survivors = (nbr.select(F.col("__a").alias("node")).distinct()
+                     .localCheckpoint())
+        n_prev = None
+        if until_stable or broadcast_survivors is None:
+            # one bounded probe serves both the stability baseline and
+            # the broadcast gate — survivor sets only shrink, so the
+            # initial count bounds every round's build side
+            n_prev = survivors.count()
+        broadcast_survivors = _gate_broadcast(
+            broadcast_survivors, n_prev if n_prev is not None else 0)
+
+        def _alive_degrees(alive: DataFrame) -> DataFrame:
+            sa = alive.withColumnRenamed("node", "__a")
+            sb = alive.withColumnRenamed("node", "__b")
+            if broadcast_survivors:
+                sa, sb = F.broadcast(sa), F.broadcast(sb)
+            return (nbr
+                    .join(sa, "__a", "left_semi")
+                    .join(sb, "__b", "left_semi")
+                    .groupBy(F.col("__a").alias("node"))
+                    .agg(F.count(F.lit(1)).alias("degree")))
+
+        survivors, executed, converged = _until_stable(
+            survivors,
+            lambda alive: (_alive_degrees(alive)
+                           .filter(F.col("degree") >= k).select("node")
+                           .localCheckpoint(eager=False)),
+            lambda df: df.count(), rounds, until_stable,
+            first_probe=n_prev)
+        out = (survivors.join(_alive_degrees(survivors), "node", "left")
+               .select("node",
+                       F.coalesce(F.col("degree"), F.lit(0).cast("long"))
+                       .alias("degree")))
     # diagnostics recorded BEFORE the escalation so a raise still
     # leaves the cap-hit observable
+    global _LAST_KCORE_ROUNDS, _LAST_KCORE_CONVERGED
     _LAST_KCORE_ROUNDS, _LAST_KCORE_CONVERGED = executed, converged
     if converged is False:
         _on_cap_signal("k_core", rounds, on_cap)
-    # LEFT join from the survivor set: under fixed rounds a survivor
-    # can lose its last surviving neighbor in the final round (kept
-    # at round R because its count over survivors_{R-1} cleared k,
-    # recounted over survivors_R). It must REPORT degree 0, not
-    # silently vanish — at the true fixpoint the two forms coincide
-    # (every degree >= k), but the fixed-rounds contract promises one
-    # row per survivor. Caught by this round's self-review; pinned by
-    # the hub-and-leaves test.
-    return (survivors.join(_alive_degrees(survivors), "node", "left")
-            .select("node",
-                    F.coalesce(F.col("degree"), F.lit(0).cast("long"))
-                    .alias("degree")))
+    return out
 
 
 def triangle_count(edges: DataFrame, src: str, dst: str,
@@ -1237,7 +1405,11 @@ def core_number(edges: DataFrame, src: str, dst: str,
     endpoints, and parallel edges drop (degree over the DISTINCT
     neighbor set).
 
-    Scale posture: the symmetric neighbor list is materialized once;
+    Scale posture: one bounded probe picks the lane (module
+    docstring). Up to ``_LOCAL_EDGE_CAP`` edges the rounds run on the
+    driver, each one ``lexsort`` of the neighbor values plus a
+    per-node ``maximum.reduceat``. Above it the symmetric neighbor
+    list is materialized once;
     each round is one join of the (node-bounded) value table onto
     the cached neighbor list, a DEGREE-bounded keyed window (the
     H-index is max(min(rank_desc, value)) over each node's neighbor
@@ -1265,37 +1437,59 @@ def core_number(edges: DataFrame, src: str, dst: str,
                          _WORKING + ("__a", "__b", "__c", "__rn"))
     require_free_columns("core_number", edges.columns,
                          ("node", "core"), kind="output")
-    nbr = _undirected(edges, src, dst)
-    vals = (nbr.groupBy(F.col("__a").alias("node"))
-            .agg(F.count(F.lit(1)).alias("__c"))
-            .localCheckpoint())
-    if broadcast_values is None:
-        # bounded probe: the value table is one row per node
-        broadcast_values = _gate_broadcast(None, vals.count())
-    w = (Window.partitionBy("__a")
-         .orderBy(F.col("__c").desc(), F.col("__b")))
+    # H-index of a neighbor multiset: sort its values descending, rank
+    # them from 1, take max(min(rank, value)). Values are monotone
+    # non-increasing, so an unchanged sum means every value is
+    # unchanged — one scalar probe per round.
+    g = _driver_graph(_drop_loops(edges, src, dst), src, dst)
+    if g is not None:
+        na, nb = g.distinct(symmetric=True)
+        # na is sorted and every node has a neighbor, so each node's
+        # adjacency is one contiguous run, in node order
+        first = np.flatnonzero(np.diff(na, prepend=-1))
+        rank = np.arange(1, len(na) + 1) - np.repeat(
+            first, np.diff(first, append=len(na)))
 
-    def _h_index(vals: DataFrame) -> DataFrame:
-        vside = F.broadcast(vals) if broadcast_values else vals
-        # H-index of the neighbor multiset: sort desc, rank, take
-        # max(min(rank, value)) — a window over ONE adjacency list
-        return (nbr.join(vside, nbr["__b"] == vside["node"])
-                .select("__a", "__b", "__c")
-                .withColumn("__rn", F.row_number().over(w))
-                .groupBy(F.col("__a").alias("node"))
-                .agg(F.max(F.least(F.col("__rn").cast("long"),
-                                   F.col("__c")))
-                     .alias("__c")))
+        def _h_index(vals: np.ndarray) -> np.ndarray:
+            v = vals[nb]
+            desc = v[np.lexsort((-v, na))]
+            return np.maximum.reduceat(np.minimum(rank, desc), first)
 
-    global _LAST_CORE_ROUNDS, _LAST_CORE_CONVERGED
-    # monotone non-increasing values: an unchanged sum means every
-    # value is unchanged — one bounded scalar probe per round
-    vals, executed, converged = _until_stable(
-        vals, _h_index, lambda df: df.agg(F.sum("__c")).first()[0],
-        rounds, until_stable)
+        vals, executed, converged = _until_stable(
+            np.bincount(na, minlength=g.n), _h_index,
+            lambda v: int(v.sum()), rounds, until_stable)
+        out = g.frame(core=vals)
+    else:
+        nbr = _undirected(edges, src, dst)
+        vals = (nbr.groupBy(F.col("__a").alias("node"))
+                .agg(F.count(F.lit(1)).alias("__c"))
+                .localCheckpoint())
+        if broadcast_values is None:
+            # bounded probe: the value table is one row per node
+            broadcast_values = _gate_broadcast(None, vals.count())
+        w = (Window.partitionBy("__a")
+             .orderBy(F.col("__c").desc(), F.col("__b")))
+
+        def _h_index(vals: DataFrame) -> DataFrame:
+            vside = F.broadcast(vals) if broadcast_values else vals
+            # a window over ONE adjacency list
+            return (nbr.join(vside, nbr["__b"] == vside["node"])
+                    .select("__a", "__b", "__c")
+                    .withColumn("__rn", F.row_number().over(w))
+                    .groupBy(F.col("__a").alias("node"))
+                    .agg(F.max(F.least(F.col("__rn").cast("long"),
+                                       F.col("__c")))
+                         .alias("__c"))
+                    .localCheckpoint(eager=False))
+
+        vals, executed, converged = _until_stable(
+            vals, _h_index, lambda df: df.agg(F.sum("__c")).first()[0],
+            rounds, until_stable)
+        out = vals.select("node", F.col("__c").alias("core"))
     # diagnostics recorded BEFORE the escalation so a raise still
     # leaves the cap-hit observable
+    global _LAST_CORE_ROUNDS, _LAST_CORE_CONVERGED
     _LAST_CORE_ROUNDS, _LAST_CORE_CONVERGED = executed, converged
     if converged is False:
         _on_cap_signal("core_number", rounds, on_cap)
-    return vals.select("node", F.col("__c").alias("core"))
+    return out

@@ -6611,26 +6611,10 @@ def host_bowtie(spark: SparkSession, sf_dir: str) -> DataFrame:
     # misclassify nodes and surface only as an opaque oracle hash
     # mismatch — fail loudly at the operator instead, matching
     # connected_components' non-convergence discipline (r15 ADVICE).
-    # The two closures are INDEPENDENT eager BFS loops over the same
-    # checkpointed edge list (each round a semi-join + a bounded probe
-    # job), and at any scale each round's tail leaves most executors
-    # idle — so run them from two driver threads and let the
-    # scheduler interleave their per-round jobs (guide §2.6, overlap
-    # independent jobs; job-group props are thread-local, results are
-    # sets so interleaving cannot change them). Measured at sf0.1:
-    # host_bowtie 4.47 -> 2.86 s isolated, same total work —
-    # overlapped barriers (pool-thread jobs leave the probe's job
-    # group, so per-group job counts undercount here). Both threads
-    # write graph._LAST_REACH_ROUNDS/_CONVERGED, so after this block
-    # those diagnostics hold whichever closure finished last; the
-    # on_cap="raise" signal is per call and unaffected.
-    from concurrent.futures import ThreadPoolExecutor
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_fw = pool.submit(graph.reachability, edges, "src", "dst",
-                           pivot, direction="forward", on_cap="raise")
-        f_bw = pool.submit(graph.reachability, edges, "src", "dst",
-                           pivot, direction="backward", on_cap="raise")
-        fw, bw = f_fw.result(), f_bw.result()
+    fw = graph.reachability(edges, "src", "dst", pivot,
+                            direction="forward", on_cap="raise")
+    bw = graph.reachability(edges, "src", "dst", pivot,
+                            direction="backward", on_cap="raise")
     nodes = (edges.select(F.col("src").alias("node"))
              .union(edges.select(F.col("dst").alias("node")))
              .distinct())
