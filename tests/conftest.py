@@ -106,3 +106,37 @@ def distributed_graph_lane(monkeypatch):
     from unilever_scraping_etl_spark.operators import graph
 
     monkeypatch.setattr(graph, "_LOCAL_EDGE_CAP", 0)
+
+
+@pytest.fixture
+def graph_broadcast_gate(monkeypatch):
+    """Return ``set_gate(on)``, which sets ``graph._BROADCAST_NODE_CAP``
+    for the rest of the test: ``on=False`` makes it -1, so every
+    graph operator called afterwards ships its node-bounded joins
+    unhinted (the page-scale shuffle-join plan); ``on=True`` restores
+    the default cap. The gate is read when an operator is called, so
+    frames built before a switch keep their plan. Restored at
+    teardown."""
+    from unilever_scraping_etl_spark.operators import graph
+
+    default = graph._BROADCAST_NODE_CAP
+
+    def set_gate(on: bool) -> None:
+        monkeypatch.setattr(graph, "_BROADCAST_NODE_CAP",
+                            default if on else -1)
+    return set_gate
+
+
+@pytest.fixture
+def cc_local_bound(monkeypatch):
+    """Return ``set_bound(n)``, which sets
+    ``dedup._CC_LOCAL_EDGES_DEFAULT`` to ``n`` for the rest of the
+    test: ``connected_components`` calls made afterwards run the
+    single-task union-find when the edge list has at most ``n`` rows
+    and the distributed loop otherwise (``n=0``: every non-empty
+    graph). Restored at teardown."""
+    from unilever_scraping_etl_spark.operators import dedup
+
+    def set_bound(n: int) -> None:
+        monkeypatch.setattr(dedup, "_CC_LOCAL_EDGES_DEFAULT", n)
+    return set_bound

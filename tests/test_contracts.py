@@ -303,7 +303,11 @@ def test_operators_take_no_execution_strategy_options():
     from unilever_scraping_etl_spark.operators import dedup
 
     banned = {"materialize", "checkpoint", "checkpoint_every",
-              "use_arrow", "broadcast_ranks"}
+              "use_arrow", "broadcast_ranks", "broadcast_scores",
+              "broadcast_frontier", "broadcast_labels",
+              "broadcast_degrees", "broadcast_survivors",
+              "broadcast_values", "local_edges", "jumps", "block_col",
+              "sanity_cap"}
     found = []
     for info in pkgutil.iter_modules(operators.__path__):
         if info.name.startswith("_"):

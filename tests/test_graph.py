@@ -1007,8 +1007,9 @@ def _gate_pairs():
 
 
 def test_structural_family_gate_off_plans_shuffle_join(
-        spark, see_through_checkpoints, distributed_graph_lane):
-    """With the gate explicitly OFF (the >1M page-scale path) and
+        spark, see_through_checkpoints, distributed_graph_lane,
+        graph_broadcast_gate):
+    """With the gate OFF (the >1M page-scale path) and
     Spark's size-based auto-broadcast disabled, every iteration join
     in the family must plan as a shuffle join (SMJ/shuffled-hash) —
     proving the F.broadcast hint is really gone: a hint would force
@@ -1017,21 +1018,17 @@ def test_structural_family_gate_off_plans_shuffle_join(
     runtime from observed sizes — that is the design: the decision
     moves to the optimizer instead of being forced."""
     e = _edges(spark, _gate_pairs())
+    graph_broadcast_gate(False)
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
         plans = {
-            "hits": _xplan(graph.hits(
-                e, "src", "dst", iterations=1, broadcast_scores=False)),
+            "hits": _xplan(graph.hits(e, "src", "dst", iterations=1)),
             "lpa": _xplan(graph.label_propagation(
-                e, "src", "dst", iterations=1, broadcast_labels=False)),
-            "kcore": _xplan(graph.k_core(
-                e, "src", "dst", k=2, rounds=1,
-                broadcast_survivors=False)),
-            "tri": _xplan(graph.triangle_count(
-                e, "src", "dst", broadcast_degrees=False)),
-            "coc": _xplan(graph.cocitation(
-                e, "src", "dst", broadcast_degrees=False)),
+                e, "src", "dst", iterations=1)),
+            "kcore": _xplan(graph.k_core(e, "src", "dst", k=2, rounds=1)),
+            "tri": _xplan(graph.triangle_count(e, "src", "dst")),
+            "coc": _xplan(graph.cocitation(e, "src", "dst")),
         }
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
@@ -1042,7 +1039,7 @@ def test_structural_family_gate_off_plans_shuffle_join(
 
 def test_structural_family_gate_auto_broadcasts_small_graphs(
         spark, see_through_checkpoints, distributed_graph_lane):
-    """The default (None) gate probes the bounded node count and
+    """The default gate probes the bounded node count and
     KEEPS the broadcast on host-scale graphs — the fixture passes
     n <= 1M, so the hinted BroadcastHashJoin shape survives (the
     r13 stress showed the hint costs nothing where it is right)."""
@@ -1056,34 +1053,21 @@ def test_structural_family_gate_auto_broadcasts_small_graphs(
 
 
 def test_structural_family_gate_off_results_unchanged(
-        spark, distributed_graph_lane):
+        spark, distributed_graph_lane, graph_broadcast_gate):
     """The gate changes the physical join strategy only — gated-off
     results must equal the broadcast results row for row."""
     e = _edges(spark, _gate_pairs())
-    for on, off in (
-        (graph.hits(e, "src", "dst", iterations=3, hub_digits=9,
-                    broadcast_scores=True),
-         graph.hits(e, "src", "dst", iterations=3, hub_digits=9,
-                    broadcast_scores=False)),
-        (graph.label_propagation(e, "src", "dst", iterations=3,
-                                 broadcast_labels=True),
-         graph.label_propagation(e, "src", "dst", iterations=3,
-                                 broadcast_labels=False)),
-        (graph.k_core(e, "src", "dst", k=2, rounds=4,
-                      broadcast_survivors=True),
-         graph.k_core(e, "src", "dst", k=2, rounds=4,
-                      broadcast_survivors=False)),
-        (graph.triangle_count(e, "src", "dst", coeff_digits=9,
-                              broadcast_degrees=True),
-         graph.triangle_count(e, "src", "dst", coeff_digits=9,
-                              broadcast_degrees=False)),
-        (graph.cocitation(e, "src", "dst", jaccard_digits=9,
-                          broadcast_degrees=True),
-         graph.cocitation(e, "src", "dst", jaccard_digits=9,
-                          broadcast_degrees=False)),
+    for call in (
+        lambda: graph.hits(e, "src", "dst", iterations=3, hub_digits=9),
+        lambda: graph.label_propagation(e, "src", "dst", iterations=3),
+        lambda: graph.k_core(e, "src", "dst", k=2, rounds=4),
+        lambda: graph.triangle_count(e, "src", "dst", coeff_digits=9),
+        lambda: graph.cocitation(e, "src", "dst", jaccard_digits=9),
     ):
-        rows_on = {tuple(r) for r in on.collect()}
-        rows_off = {tuple(r) for r in off.collect()}
+        graph_broadcast_gate(True)
+        rows_on = {tuple(r) for r in call().collect()}
+        graph_broadcast_gate(False)
+        rows_off = {tuple(r) for r in call().collect()}
         assert rows_on == rows_off
 
 
@@ -1426,9 +1410,10 @@ def test_core_number_until_stable_cap_hit_signals(spark):
 # probe must never force its broadcast
 # ---------------------------------------------------------------------------
 
-def test_cocitation_keep_set_never_force_broadcast(spark):
-    """With auto-broadcast disabled and the degree gate ON (auto or
-    explicit), the max_linker_degree semi-join must plan WITHOUT a
+def test_cocitation_keep_set_never_force_broadcast(
+        spark, graph_broadcast_gate):
+    """With auto-broadcast disabled and the degree gate ON, the
+    max_linker_degree semi-join must plan WITHOUT a
     forced broadcast: the keep-set is linker-cardinality (90M on the
     docstring's page-scale shape) while the probe that enables the
     gate reads the ITEM count. The da/db degree joins keep the hint;
@@ -1438,37 +1423,34 @@ def test_cocitation_keep_set_never_force_broadcast(spark):
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        for flag in (None, True):
-            p = _xplan(graph.cocitation(e, "src", "dst",
-                                        max_linker_degree=5,
-                                        broadcast_degrees=flag))
-            semi = [ln for ln in p.splitlines() if "LeftSemi" in ln]
-            assert semi, p  # the keep-set semi-join is in the plan
-            assert all("BroadcastHashJoin" not in ln for ln in semi), p
-            # the item-bounded degree joins still carry the hint
-            assert "BroadcastHashJoin" in p
+        p = _xplan(graph.cocitation(e, "src", "dst",
+                                    max_linker_degree=5))
+        semi = [ln for ln in p.splitlines() if "LeftSemi" in ln]
+        assert semi, p  # the keep-set semi-join is in the plan
+        assert all("BroadcastHashJoin" not in ln for ln in semi), p
+        # the item-bounded degree joins still carry the hint
+        assert "BroadcastHashJoin" in p
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
     # and the capped results are unchanged by the gate setting
     on = {tuple(r) for r in graph.cocitation(
-        e, "src", "dst", max_linker_degree=5, jaccard_digits=9,
-        broadcast_degrees=True).collect()}
+        e, "src", "dst", max_linker_degree=5, jaccard_digits=9).collect()}
+    graph_broadcast_gate(False)
     off = {tuple(r) for r in graph.cocitation(
-        e, "src", "dst", max_linker_degree=5, jaccard_digits=9,
-        broadcast_degrees=False).collect()}
+        e, "src", "dst", max_linker_degree=5, jaccard_digits=9).collect()}
     assert on == off
 
 
 def test_hits_explicit_gate_skips_probe_and_handles_empty(
-        spark, distributed_graph_lane):
-    """With the gate pinned explicitly an empty graph still returns
-    the empty (node, hub, authority) frame, both flag values. An
-    empty graph never exceeds the driver lane's cap, so the lane
-    probe answers it even under this fixture."""
+        spark, distributed_graph_lane, graph_broadcast_gate):
+    """With the broadcast gate on or off an empty graph still returns
+    the empty (node, hub, authority) frame. An empty graph never
+    exceeds the driver lane's cap, so the lane probe answers it even
+    under this fixture."""
     empty = spark.createDataFrame([], "src long, dst long")
-    for flag in (True, False):
-        out = graph.hits(empty, "src", "dst", iterations=1,
-                         broadcast_scores=flag)
+    for on in (True, False):
+        graph_broadcast_gate(on)
+        out = graph.hits(empty, "src", "dst", iterations=1)
         assert out.count() == 0
         assert out.columns == ["node", "hub", "authority"]
 
@@ -1565,10 +1547,11 @@ def test_salsa_resists_tightly_knit_community(spark):
 
 
 def test_salsa_null_parallel_and_empty_edges(spark,
-                                             distributed_graph_lane):
+                                             distributed_graph_lane,
+                                             graph_broadcast_gate):
     """NULL endpoints and self-loops drop; parallel edges collapse
     (the walk picks among DISTINCT links); the empty graph returns
-    the empty frame under both explicit gate values."""
+    the empty frame with the broadcast gate on and off."""
     rows = [(0, 1), (0, 1), (0, 0), (None, 1), (0, None), (1, 2)]
     df = spark.createDataFrame(
         [(a, b) for a, b in rows], "src long, dst long")
@@ -1580,9 +1563,9 @@ def test_salsa_null_parallel_and_empty_edges(spark,
     for v in h:
         assert out[v] == (pytest.approx(h[v]), pytest.approx(a[v]))
     empty = spark.createDataFrame([], "src long, dst long")
-    for flag in (None, True, False):
-        got = graph.salsa(empty, "src", "dst", iterations=1,
-                          broadcast_scores=flag)
+    for on in (True, False):
+        graph_broadcast_gate(on)
+        got = graph.salsa(empty, "src", "dst", iterations=1)
         assert got.count() == 0
         assert got.columns == ["node", "hub", "authority"]
     with pytest.raises(ValueError, match="iterations"):
@@ -1590,7 +1573,8 @@ def test_salsa_null_parallel_and_empty_edges(spark,
 
 
 def test_salsa_gate_plans_and_equality(spark, see_through_checkpoints,
-                                       distributed_graph_lane):
+                                       distributed_graph_lane,
+                                       graph_broadcast_gate):
     """salsa follows the family's bounded-probe broadcast gate: with
     the gate off and auto-broadcast disabled the score joins plan as
     shuffle joins (no forced build side at page scale); on the small
@@ -1600,20 +1584,22 @@ def test_salsa_gate_plans_and_equality(spark, see_through_checkpoints,
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        off = _xplan(graph.salsa(e, "src", "dst", iterations=1,
-                                 broadcast_scores=False))
+        graph_broadcast_gate(False)
+        off = _xplan(graph.salsa(e, "src", "dst", iterations=1))
         assert "BroadcastHashJoin" not in off
         assert ("SortMergeJoin" in off) or ("ShuffledHashJoin" in off)
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+    graph_broadcast_gate(True)
     assert "BroadcastHashJoin" in _xplan(
         graph.salsa(e, "src", "dst", iterations=1))
     rows_on = {(r["node"], round(r["hub"], 9), round(r["authority"], 9))
-               for r in graph.salsa(e, "src", "dst", iterations=3,
-                                    broadcast_scores=True).collect()}
+               for r in graph.salsa(e, "src", "dst",
+                                    iterations=3).collect()}
+    graph_broadcast_gate(False)
     rows_off = {(r["node"], round(r["hub"], 9), round(r["authority"], 9))
-                for r in graph.salsa(e, "src", "dst", iterations=3,
-                                     broadcast_scores=False).collect()}
+                for r in graph.salsa(e, "src", "dst",
+                                     iterations=3).collect()}
     assert rows_on == rows_off
 
 
@@ -1760,7 +1746,8 @@ def test_reachability_cap_hit_is_lower_bound_and_signals(spark):
 
 def test_reachability_gate_plans_both_ways(spark,
                                            see_through_checkpoints,
-                                           distributed_graph_lane):
+                                           distributed_graph_lane,
+                                           graph_broadcast_gate):
     """The family broadcast-gate discipline: gate off + auto-broadcast
     disabled plans the frontier semi-join as a shuffle join; the
     small-graph auto path keeps the hint; results equal."""
@@ -1769,17 +1756,19 @@ def test_reachability_gate_plans_both_ways(spark,
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
+        graph_broadcast_gate(False)
         off = _xplan(graph.reachability(e, "src", "dst", s, rounds=1,
-                                        until_stable=False,
-                                        broadcast_frontier=False))
+                                        until_stable=False))
         assert "BroadcastHashJoin" not in off
         assert ("SortMergeJoin" in off) or ("ShuffledHashJoin" in off)
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+    graph_broadcast_gate(True)
     on = {r["node"] for r in graph.reachability(
-        e, "src", "dst", s, broadcast_frontier=True).collect()}
+        e, "src", "dst", s).collect()}
+    graph_broadcast_gate(False)
     off_r = {r["node"] for r in graph.reachability(
-        e, "src", "dst", s, broadcast_frontier=False).collect()}
+        e, "src", "dst", s).collect()}
     assert on == off_r
 
 

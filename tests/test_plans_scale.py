@@ -577,9 +577,10 @@ def test_connected_components_direction_insensitive(spark):
     assert got == {(1, 1), (5, 1), (9, 1)}
 
 
-def test_connected_components_local_fast_path(spark):
-    """r17 OPTIMIZATION: below the ``local_edges`` bound the operator
-    runs a single-task union-find instead of the distributed loop.
+def test_connected_components_local_fast_path(spark, cc_local_bound):
+    """r17 OPTIMIZATION: below the ``_CC_LOCAL_EDGES_DEFAULT`` bound the
+    operator runs a single-task union-find instead of the distributed
+    loop.
     Pins (1) label equality with the distributed pointer-jump path on
     a 500-edge random multigraph with dup edges, self-loops, and a
     long chain; (2) the bound semantics — above the bound the
@@ -595,23 +596,23 @@ def test_connected_components_local_fast_path(spark):
     local = {(r["node"], r["component"]) for r in
              dedup.connected_components(df, "id_a", "id_b").collect()}
     assert dedup._LAST_CC_ROUNDS == 0  # fast path taken
+    cc_local_bound(0)
     dist = {(r["node"], r["component"]) for r in
-            dedup.connected_components(df, "id_a", "id_b",
-                                       local_edges=0).collect()}
+            dedup.connected_components(df, "id_a", "id_b").collect()}
     assert dedup._LAST_CC_ROUNDS > 0   # distributed loop ran
     assert local == dist and len(local) > 0
     # Bound is an edge-count comparison on the materialized edge list.
-    dedup.connected_components(df, "id_a", "id_b",
-                               local_edges=len(edges) - 1).collect()
+    cc_local_bound(len(edges) - 1)
+    dedup.connected_components(df, "id_a", "id_b").collect()
     assert dedup._LAST_CC_ROUNDS > 0
-    dedup.connected_components(df, "id_a", "id_b",
-                               local_edges=len(edges)).collect()
+    cc_local_bound(len(edges))
+    dedup.connected_components(df, "id_a", "id_b").collect()
     assert dedup._LAST_CC_ROUNDS == 0
     empty = spark.createDataFrame([], "id_a long, id_b long")
     assert dedup.connected_components(empty, "id_a", "id_b").count() == 0
 
 
-def test_connected_components_star_variant(spark):
+def test_connected_components_star_variant(spark, cc_local_bound):
     """r7 VERDICT item 5: the large-star/small-star variant
     (algorithm='star', Kiveris et al. SoCC 2014) must return the
     identical (node, component) table as the pointer-jump default —
@@ -625,17 +626,18 @@ def test_connected_components_star_variant(spark):
         [(a, b) for a in range(1, 6) for b in range(a + 1, 6)],  # clique
         [(i, i + 1) for i in range(20)],       # chain, diameter 20
     ]
+    default_bound = dedup._CC_LOCAL_EDGES_DEFAULT
     for edges in cases:
         df = spark.createDataFrame(edges, "id_a long, id_b long")
-        # local_edges=0: this test pins the DISTRIBUTED algorithms
-        # against each other (the r17 fast path would intercept both).
+        # bound 0: this test pins the DISTRIBUTED algorithms against
+        # each other (the r17 fast path would intercept both).
+        cc_local_bound(0)
         pj = {(r["node"], r["component"]) for r in
-              dedup.connected_components(df, "id_a", "id_b",
-                                         local_edges=0).collect()}
+              dedup.connected_components(df, "id_a", "id_b").collect()}
         st = {(r["node"], r["component"]) for r in
               dedup.connected_components(df, "id_a", "id_b",
-                                         algorithm="star",
-                                         local_edges=0).collect()}
+                                         algorithm="star").collect()}
+        cc_local_bound(default_bound)
         uf = {(r["node"], r["component"]) for r in
               dedup.connected_components(df, "id_a", "id_b").collect()}
         assert st == pj == uf and len(st) > 0, edges
@@ -646,7 +648,8 @@ def test_connected_components_star_variant(spark):
             "id_a", "id_b", algorithm="labelprop")
 
 
-def test_connected_components_star_two_lobe_regression(spark):
+def test_connected_components_star_two_lobe_regression(spark,
+                                                      cc_local_bound):
     """r8 VERDICT "What's wrong" repro, verbatim: a sparse two-lobe
     graph (one component, min 0) where node 2 ends a round holding
     edges to TWO root parents (0 and 1). The old convergence test
@@ -659,16 +662,16 @@ def test_connected_components_star_two_lobe_regression(spark):
     edges = [(10, 1), (10, 30), (20, 2), (20, 30), (15, 0), (15, 40),
              (25, 2), (25, 40), (11, 1), (11, 20), (12, 0), (12, 25)]
     df = spark.createDataFrame(edges, "id_a long, id_b long")
+    cc_local_bound(0)
     rows = dedup.connected_components(df, "id_a", "id_b",
-                                      algorithm="star",
-                                      local_edges=0).collect()
+                                      algorithm="star").collect()
     assert len(rows) == 11                      # one row per node
     assert {r["node"] for r in rows} == {0, 1, 2, 10, 11, 12,
                                          15, 20, 25, 30, 40}
     assert {r["component"] for r in rows} == {0}  # ONE component
 
 
-def test_connected_components_rounds_log_diameter(spark):
+def test_connected_components_rounds_log_diameter(spark, cc_local_bound):
     """Pins the measured O(log d) round bound that justifies
     max_iterations=30 (r7 VERDICT item 5): a worst-case chain of
     diameter 256 must converge in exactly log2(256) = 8 rounds under
@@ -678,19 +681,18 @@ def test_connected_components_rounds_log_diameter(spark):
     d = 256
     edges = spark.range(d).select(
         F.col("id").alias("id_a"), (F.col("id") + 1).alias("id_b"))
+    # bound 0 opts out of the r17 single-task fast path: this test pins
+    # the DISTRIBUTED loops' round bound.
+    cc_local_bound(0)
     for algo in ("pointer_jump", "star"):
-        # local_edges=0 opts out of the r17 single-task fast path: this
-        # test pins the DISTRIBUTED loops' round bound.
         out = dedup.connected_components(edges, "id_a", "id_b",
-                                         max_iterations=9, algorithm=algo,
-                                         local_edges=0)
+                                         max_iterations=9, algorithm=algo)
         assert out.filter("component = 0").count() == d + 1, algo
         assert dedup._LAST_CC_ROUNDS == 8, (algo, dedup._LAST_CC_ROUNDS)
     import pytest
     with pytest.raises(RuntimeError, match="did not converge"):
         dedup.connected_components(edges, "id_a", "id_b",
-                                   max_iterations=3, algorithm="star",
-                                   local_edges=0)
+                                   max_iterations=3, algorithm="star")
 
 
 def test_ivf_recall_vs_brute_force(spark):
@@ -1053,38 +1055,17 @@ def test_simhash_band_recall_complete_at_max_hamming(spark):
         assert banded == truth, f"max_hamming={h}"
 
 
-def test_connected_components_jumps_param(spark):
-    """r16 optimization knob: extra pointer jumps per round quarter the
-    label paths on CHAIN-bound graphs (rounds ~log_{2^jumps}(d)) and
-    never change the labels. Pins the measured 8 -> 5 round drop on the
-    256-chain for jumps=2 and the jumps >= 1 validation."""
-    import pytest as _pytest
-
-    d = 256
-    edges = spark.range(d).select(
-        F.col("id").alias("id_a"), (F.col("id") + 1).alias("id_b"))
-    out = dedup.connected_components(edges, "id_a", "id_b", jumps=2,
-                                     local_edges=0)
-    assert out.filter("component = 0").count() == d + 1
-    # Pin the SPEEDUP, not the exact schedule (r16 ADVICE): jumps=2
-    # must beat the 8 rounds jumps=1 needs on this chain; any
-    # convergence-check or init change that keeps labels right and
-    # rounds below that bound is acceptable.
-    assert dedup._LAST_CC_ROUNDS < 8, dedup._LAST_CC_ROUNDS
-    with _pytest.raises(ValueError, match="jumps must be >= 1"):
-        dedup.connected_components(edges, "id_a", "id_b", jumps=0)
-
-
-def test_connected_components_raises_when_unconverged(spark):
+def test_connected_components_raises_when_unconverged(spark,
+                                                     cc_local_bound):
     # A long-diameter chain with too few rounds must raise, not return
     # silently-wrong labels (min-label propagation moves one hop/round).
     import pytest as _pytest
 
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(1, 12)], "id_a long, id_b long")
+    cc_local_bound(0)
     with _pytest.raises(RuntimeError, match="did not converge"):
-        dedup.connected_components(edges, "id_a", "id_b", max_iterations=2,
-                                   local_edges=0)
+        dedup.connected_components(edges, "id_a", "id_b", max_iterations=2)
 
 
 def test_decode_images_output_chunking_and_no_conf_mutation(spark):

@@ -13,7 +13,9 @@ At the default 2M/10M the edge count reads past the 1M fast-path
 bound, so pointer/star exercise the DISTRIBUTED loops the fast path
 must never shadow; ``local`` additionally subsamples the edge list to
 exactly the bound and runs the single-task union-find vs the pointer
-loop on the SAME subgraph (label checksums compared)."""
+loop on the SAME subgraph (label checksums compared), reaching the
+pointer loop by setting ``dedup._CC_LOCAL_EDGES_DEFAULT`` to 0. Each
+leg prints the bound it ran with."""
 
 from __future__ import annotations
 
@@ -50,7 +52,8 @@ def main() -> None:
         F.floor(F.pow(u, 2.0) * n).cast("long").alias("dst"))
         .filter(F.col("src") != F.col("dst"))
         .localCheckpoint())
-    print(f"graph: {edges.count()} edges, target {n} nodes")
+    print(f"graph: {edges.count()} edges, target {n} nodes; "
+          f"_CC_LOCAL_EDGES_DEFAULT {dedup._CC_LOCAL_EDGES_DEFAULT}")
 
     sums = {}
     if "pointer" in ops:
@@ -74,17 +77,18 @@ def main() -> None:
     if "local" in ops:
         bound = dedup._CC_LOCAL_EDGES_DEFAULT
         sub = edges.limit(bound).localCheckpoint()
-        print(f"subgraph at fast-path bound: {sub.count()} edges")
+        print(f"subgraph at fast-path bound {bound}: {sub.count()} edges")
         t = time.perf_counter()
         loc = checksum(dedup.connected_components(sub, "src", "dst"))
         tl = time.perf_counter() - t
         assert dedup._LAST_CC_ROUNDS == 0
+        dedup._CC_LOCAL_EDGES_DEFAULT = 0
         t = time.perf_counter()
-        dist = checksum(dedup.connected_components(sub, "src", "dst",
-                                                   local_edges=0))
+        dist = checksum(dedup.connected_components(sub, "src", "dst"))
         td = time.perf_counter() - t
+        dedup._CC_LOCAL_EDGES_DEFAULT = bound
         print(f"local union-find      : {tl:.1f} s vs distributed "
-              f"{td:.1f} s (rounds={dedup._LAST_CC_ROUNDS}); "
+              f"(bound 0) {td:.1f} s (rounds={dedup._LAST_CC_ROUNDS}); "
               f"checksums {'EQUAL' if loc == dist else 'MISMATCH'} {loc}",
               flush=True)
         if loc != dist:

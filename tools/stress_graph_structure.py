@@ -16,11 +16,12 @@ Usage: python tools/stress_graph_structure.py [nodes] [edges]
                                               [--ops=lpa,cocitation,...]
                                               [--k=N]
 
-``--no-broadcast`` forces the r14 bounded-probe gate OFF for the whole
-family — the >1M page-scale plan shape (shuffle joins, AQE decides) —
-so the gated-on vs gated-off cost can be A/B'd at a scale where both
-are feasible (at 200k the auto gate keeps the broadcast, which is the
-point of the probe).
+``--no-broadcast`` sets ``graph._BROADCAST_NODE_CAP`` to -1, which
+turns the r14 bounded-probe gate OFF for the whole family — the >1M
+page-scale plan shape (shuffle joins, AQE decides) — so the gated-on
+vs gated-off cost can be A/B'd at a scale where both are feasible (at
+200k the default gate keeps the broadcast, which is the point of the
+probe). The header prints the cap the run used.
 
 ``--ops`` (names: lpa, cocitation, triangles, kcore, hits, coreness,
 salsa) runs a subset — the r14 2M-scale runs measured single legs
@@ -51,7 +52,8 @@ from unilever_scraping_etl_spark.session import get_session  # noqa: E402
 
 def main() -> None:
     args = [a for a in sys.argv[1:] if not a.startswith("--")]
-    bcast = None if "--no-broadcast" not in sys.argv else False
+    if "--no-broadcast" in sys.argv:
+        graph._BROADCAST_NODE_CAP = -1
     ops = {"lpa", "cocitation", "triangles", "kcore", "hits",
            "coreness", "salsa"}
     k_iter = 5
@@ -63,7 +65,8 @@ def main() -> None:
     n = int(args[0]) if len(args) > 0 else 200_000
     m = int(args[1]) if len(args) > 1 else 1_000_000
     spark = get_session()
-    print(f"broadcast gate: {'auto (n-probe)' if bcast is None else bcast}")
+    print(f"broadcast gate: node probe <= _BROADCAST_NODE_CAP "
+          f"{graph._BROADCAST_NODE_CAP}")
     u = F.pmod(F.xxhash64(F.col("id") + m), 1_000_000) / 1_000_000.0
     edges = (spark.range(m).select(
         F.pmod(F.xxhash64(F.col("id")), n).alias("src"),
@@ -90,8 +93,7 @@ def main() -> None:
     if "lpa" in ops:
         t, g = time.perf_counter(), leg("lpa")
         lpa = graph.label_propagation(edges, "src", "dst",
-                                      iterations=k_iter,
-                                      broadcast_labels=bcast)
+                                      iterations=k_iter)
         comms = lpa.select("community").distinct().count()
         print(f"label_propagation K={k_iter} : "
               f"{time.perf_counter() - t:.1f} s, "
@@ -100,8 +102,7 @@ def main() -> None:
     if "cocitation" in ops:
         t, g = time.perf_counter(), leg("cocitation")
         cc = graph.cocitation(edges, "src", "dst", min_common=3,
-                              max_linker_degree=64,
-                              broadcast_degrees=bcast)
+                              max_linker_degree=64)
         pairs = cc.count()
         print(f"cocitation cap=64     : "
               f"{time.perf_counter() - t:.1f} s, "
@@ -110,8 +111,7 @@ def main() -> None:
 
     if "triangles" in ops:
         t, g = time.perf_counter(), leg("triangles")
-        tc = graph.triangle_count(edges, "src", "dst",
-                                  broadcast_degrees=bcast)
+        tc = graph.triangle_count(edges, "src", "dst")
         tri = tc.agg(F.sum("triangles")).first()[0]
         print(f"triangle_count        : "
               f"{time.perf_counter() - t:.1f} s, "
@@ -121,8 +121,7 @@ def main() -> None:
         for k in (4, 16):
             t, g = time.perf_counter(), leg(f"kcore{k}")
             core = graph.k_core(edges, "src", "dst", k=k, rounds=64,
-                                until_stable=True,
-                                broadcast_survivors=bcast)
+                                until_stable=True)
             nodes = core.count()
             print(f"k_core k={k:<2} stable   : "
                   f"{time.perf_counter() - t:.1f} s, "
@@ -132,8 +131,7 @@ def main() -> None:
 
     if "hits" in ops:
         t, g = time.perf_counter(), leg("hits")
-        h = graph.hits(edges, "src", "dst", iterations=k_iter,
-                       broadcast_scores=bcast)
+        h = graph.hits(edges, "src", "dst", iterations=k_iter)
         nh = h.count()
         print(f"hits K={k_iter}              : "
               f"{time.perf_counter() - t:.1f} s, "
@@ -142,8 +140,7 @@ def main() -> None:
     if "coreness" in ops:
         t, g = time.perf_counter(), leg("coreness")
         cn = graph.core_number(edges, "src", "dst", rounds=64,
-                               until_stable=True,
-                               broadcast_values=bcast)
+                               until_stable=True)
         mx = cn.agg(F.max("core")).first()[0]
         print(f"core_number stable    : "
               f"{time.perf_counter() - t:.1f} s, "
@@ -152,8 +149,7 @@ def main() -> None:
 
     if "salsa" in ops:
         t, g = time.perf_counter(), leg("salsa")
-        sa = graph.salsa(edges, "src", "dst", iterations=k_iter,
-                         broadcast_scores=bcast)
+        sa = graph.salsa(edges, "src", "dst", iterations=k_iter)
         ns = sa.count()
         print(f"salsa K={k_iter}             : "
               f"{time.perf_counter() - t:.1f} s, "

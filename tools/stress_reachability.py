@@ -20,10 +20,12 @@ class counts from intersecting the two closures.
 Usage: python tools/stress_reachability.py [nodes] [edges]
                                            [--no-broadcast]
 
-``--no-broadcast`` forces the bounded-probe gate OFF (the >1M
-page-scale plan shape — shuffle semi-joins, AQE decides) so gated-on
-vs gated-off can be A/B'd at 200k; at 2M nodes the auto probe reads
-past the 1M cap and the two settings coincide by design.
+``--no-broadcast`` sets ``graph._BROADCAST_NODE_CAP`` to -1, which
+turns the bounded-probe gate OFF (the >1M page-scale plan shape —
+shuffle semi-joins, AQE decides) so gated-on vs gated-off can be A/B'd
+at 200k; at 2M nodes the probe reads past the default 1M cap and the
+two settings coincide by design. The header prints the cap the run
+used.
 """
 
 from __future__ import annotations
@@ -41,11 +43,13 @@ from unilever_scraping_etl_spark.session import get_session  # noqa: E402
 
 def main() -> None:
     args = [a for a in sys.argv[1:] if not a.startswith("--")]
-    bcast = None if "--no-broadcast" not in sys.argv else False
+    if "--no-broadcast" in sys.argv:
+        graph._BROADCAST_NODE_CAP = -1
     n = int(args[0]) if len(args) > 0 else 200_000
     m = int(args[1]) if len(args) > 1 else 1_000_000
     spark = get_session()
-    print(f"broadcast gate: {'auto (n-probe)' if bcast is None else bcast}")
+    print(f"broadcast gate: node probe <= _BROADCAST_NODE_CAP "
+          f"{graph._BROADCAST_NODE_CAP}")
     u = F.pmod(F.xxhash64(F.col("id") + m), 1_000_000) / 1_000_000.0
     edges = (spark.range(m).select(
         F.pmod(F.xxhash64(F.col("id")), n).alias("src"),
@@ -66,9 +70,7 @@ def main() -> None:
         t = time.perf_counter()
         r = graph.reachability(edges, "src", "dst", pivot,
                                direction=direction, rounds=64,
-                               until_stable=True,
-                               broadcast_frontier=bcast,
-                               on_cap="warn")
+                               until_stable=True, on_cap="warn")
         cnt = r.count()
         print(f"reachability {direction:<8}: "
               f"{time.perf_counter() - t:.1f} s, {cnt} nodes, "

@@ -606,31 +606,22 @@ def simhash_near_pairs(df: DataFrame, id_col: str, text_col: str,
 
 def embedding_near_pairs(emb: DataFrame, id_col: str, vec_col: str,
                          threshold: float = 0.95,
-                         block_col: str | None = None,
                          round_digits: int = 4) -> DataFrame:
     """Embedding-cosine near-dup pairs via an expression-level pair join.
     Oracle-identical float semantics (sequential fold dot product), but
     O(pairs * dim) inside codegen — prefer embedding_near_pairs_grid for
-    bulk work. Pass ``block_col`` (e.g. an LSH bucket from
-    similarity.hyperplane_bucket) to turn the cross into a blocked
-    equi-join at production scale."""
+    bulk work."""
     from ..functions.vectors import dot, norm
     # Per-row norm hoisted out of the pair expression (bit-identical to
     # vectors.cosine — same norm formula, evaluated once per ROW in an
     # earlier Project instead of twice per PAIR): cuts the per-pair
     # work from three O(dim) array folds to the dot alone.
-    cols = [F.col(id_col).alias("id"), F.col(vec_col).alias("v"),
-            norm(F.col(vec_col)).alias("n")]
-    if block_col:
-        cols.append(F.col(block_col).alias("blk"))
-    x = emb.select(*cols)
+    x = emb.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"),
+                   norm(F.col(vec_col)).alias("n"))
     a, b = x.alias("a"), x.alias("b")
-    cond = [F.col("a.id") < F.col("b.id")]
-    if block_col:
-        cond.append(F.col("a.blk") == F.col("b.blk"))
     # Round BEFORE thresholding: makes the pair set stable under float
     # accumulation-order differences (and oracle-comparable).
-    return (a.join(b, cond)
+    return (a.join(b, F.col("a.id") < F.col("b.id"))
              .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"),
                      F.round(dot(F.col("a.v"), F.col("b.v"))
                              / (F.col("a.n") * F.col("b.n")),
@@ -761,16 +752,21 @@ convergence tests — not part of the operator contract."""
 
 
 _CC_LOCAL_EDGES_DEFAULT = 1_000_000
-"""Default edge-count bound for the single-task union-find fast path
-(see connected_components). Overridable per call (``local_edges``);
-0 disables."""
+"""Edge-count bound for the single-task union-find fast path (see
+connected_components). Memory envelope, in the one Python worker:
+about 250 bytes per edge above an idle worker — the Arrow batches,
+the concatenated endpoint arrays, ``np.unique``'s sort and inverse,
+and the Python ``parent`` list over up to two nodes per edge.
+Measured at the bound with ``tools/stress_cc.py 2000000 1100000
+--ops=local`` (1,000,000 edges, 1,132,411 nodes; 4-core host): the
+worker peaked at 294 MiB against 47 MiB idle. The ``count()`` probe
+on the materialized edge list enforces it: no edge list longer than
+this bound reaches the single task, and no call can raise it."""
 
 
 def connected_components(edges: DataFrame, src: str, dst: str,
                          max_iterations: int = 30,
-                         algorithm: str = "pointer_jump",
-                         jumps: int = 1,
-                         local_edges: int | None = None) -> DataFrame:
+                         algorithm: str = "pointer_jump") -> DataFrame:
     """Connected components over an undirected edge list by iterative
     min-label propagation: every node starts labeled with
     min(own id, min neighbor id) — a free one-hop head start, since
@@ -822,19 +818,17 @@ def connected_components(edges: DataFrame, src: str, dst: str,
     instead of d (Kiveris et al., "Connected Components in MapReduce
     and Beyond", SoCC 2014 — same round bound as large-star/small-star
     with a simpler per-round shape; r4 verdict flagged diameter-bound
-    rounds as the 100 TB risk). ``jumps`` applies the shortcut that
-    many times per round — on LABEL-CHAIN-bound graphs (long paths
-    with monotone ids) paths shrink 2^jumps x per round, so rounds
-    fall to ~log_{2^jumps}(d): measured 8 -> 5 -> 4 rounds on the
-    256-chain for jumps 1/2/3. The default stays 1 because real dedup
-    pair graphs are HOP-bound, not chain-bound (r16 OPTIMIZATION,
-    measured + simulated on the sf0.1 embedding pair graph: 10 rounds
-    regardless of jumps — labels point at nearby LOCAL minima whose
-    own labels are self-referential until the true minimum arrives
-    hop by hop, so extra jumps buy nothing and each costs a
-    |nodes|-row self-join per round). For a long-diameter graph,
-    prefer ``algorithm="star"`` first; raise ``jumps`` only when
-    measurement shows label chains are the binding constraint. The jump preserves correctness: a
+    rounds as the 100 TB risk). The shortcut runs ONCE per round.
+    Repeating it shrinks label paths 2^j x per round on LABEL-CHAIN-
+    bound graphs (long paths with monotone ids: measured 8 -> 5 -> 4
+    rounds on the 256-chain for 1/2/3 jumps), but real dedup pair
+    graphs are HOP-bound, not chain-bound (r16 OPTIMIZATION, measured
+    + simulated on the sf0.1 embedding pair graph: 10 rounds whatever
+    the jump count — labels point at nearby LOCAL minima whose own
+    labels are self-referential until the true minimum arrives hop by
+    hop, so extra jumps buy nothing and each costs a |nodes|-row
+    self-join per round). For a long-diameter graph, use
+    ``algorithm="star"``. The jump preserves correctness: a
     node's label is always the id of a node in the SAME component
     (edges never cross components, initial labels are own ids), so
     label(label(n)) is too, and min-labels only decrease. A converged
@@ -850,8 +844,6 @@ def connected_components(edges: DataFrame, src: str, dst: str,
     if algorithm not in ("pointer_jump", "star"):
         raise ValueError(f"unknown algorithm {algorithm!r}: expected "
                          f"'pointer_jump' or 'star'")
-    if jumps < 1:
-        raise ValueError("jumps must be >= 1")
     # Materialize the DIRECTED edge list BEFORE symmetrizing: without
     # it, the union's two branches both reference the upstream pair
     # pipeline (minhash + verify, or the GEMM grid) — the most
@@ -880,12 +872,10 @@ def connected_components(edges: DataFrame, src: str, dst: str,
     # shuffles, one job. The bound is data-derived (edge count), not
     # core-count-derived, so it behaves identically at any
     # parallelism; at 100 TB a pair graph past the bound takes the
-    # distributed loop unchanged. ~1M edges is ~1-2 s and ~100 MB in
-    # one Python worker — far under one distributed round's barrier
-    # cost at that scale. ``local_edges=0`` disables; tests that pin
-    # distributed round counts use that.
-    limit = _CC_LOCAL_EDGES_DEFAULT if local_edges is None else local_edges
-    if limit and directed.count() <= limit:
+    # distributed loop unchanged. 1M edges took 6.2 s in one Python
+    # worker against 125.8 s for the distributed loop (4-core host);
+    # the worker's memory envelope is stated at the bound.
+    if directed.count() <= _CC_LOCAL_EDGES_DEFAULT:
         _LAST_CC_ROUNDS = 0
         return _local_components(directed)
     if algorithm == "star":
@@ -917,32 +907,19 @@ def connected_components(edges: DataFrame, src: str, dst: str,
         # from the same closed node set), so the left join misses only
         # when component == node already (self-label) — coalesce keeps
         # it. least() guards the (impossible by monotonicity, cheap to
-        # pin) case of a jump ever increasing a label. Applied ``jumps``
-        # times per round (r16 optimization): each application composes
-        # the label table with itself, so label paths shrink by
-        # 2^jumps per round and convergence takes ~log_{2^jumps}(d)
-        # EDGE-JOIN rounds instead of log2(d) — each extra jump is one
-        # |nodes|-row self-join, far cheaper than the |edges|-row hop
-        # shuffle (and, locally, than a full round's job barrage) it
-        # replaces. Correctness is round-count-independent: every jump
-        # preserves "label = id of a node in the same component" and
-        # labels only decrease, so the fixed point (and the sum-based
-        # convergence test below) is the same for any jumps >= 1.
-        new_labels = hopped
-        for _ in range(jumps):
-            jmp = new_labels.select(F.col("node").alias("jnode"),
-                                    F.col("component").alias("jcomp"))
-            new_labels = (new_labels.join(
-                              jmp,
-                              new_labels["component"] == jmp["jnode"],
-                              "left")
-                          .select(new_labels["node"],
-                                  F.least(
-                                      new_labels["component"],
+        # pin) case of a jump ever increasing a label. One jump per
+        # round: on hop-bound pair graphs a second buys no round (see
+        # the docstring).
+        jmp = hopped.select(F.col("node").alias("jnode"),
+                            F.col("component").alias("jcomp"))
+        new_labels = (hopped.join(jmp, hopped["component"] == jmp["jnode"],
+                                  "left")
+                      .select(hopped["node"],
+                              F.least(hopped["component"],
                                       F.coalesce(jmp["jcomp"],
-                                                 new_labels["component"]))
-                                   .alias("component")))
-        new_labels = new_labels.localCheckpoint(eager=False)
+                                                 hopped["component"]))
+                               .alias("component"))
+                      .localCheckpoint(eager=False))
         cur = tuple(new_labels.agg(
             F.sum(F.col("component").cast("decimal(38,0)")),
             F.count(F.lit(1))).collect()[0])

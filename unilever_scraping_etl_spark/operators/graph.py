@@ -276,17 +276,16 @@ def _driver_graph(edges: DataFrame, a: str, b: str,
 # removes the edge-side exchange entirely; on PAGE-level graphs the
 # same frame is 90M+ rows and a forced F.broadcast is a multi-GB
 # build per iteration — driver/executor OOM, and a hint AQE cannot
-# demote. So: `None` (the default everywhere) probes the bounded node
-# count once and broadcasts only when it reads <= this cap; above it
-# the join ships unhinted and AQE picks the strategy at runtime.
+# demote. So every operator probes the bounded node count once and
+# broadcasts only when it reads <= this cap; above it the join ships
+# unhinted and AQE picks the strategy at runtime.
 _BROADCAST_NODE_CAP = 1_000_000
 
 
-def _gate_broadcast(flag: bool | None, n: int) -> bool:
-    """Resolve a tri-state broadcast flag against the bounded node
-    probe ``n``: explicit True/False wins; ``None`` auto-enables only
-    when ``n <= _BROADCAST_NODE_CAP``."""
-    return (n <= _BROADCAST_NODE_CAP) if flag is None else bool(flag)
+def _gate_broadcast(n: int) -> bool:
+    """Whether the bounded node probe ``n`` is small enough to hint
+    the node-bounded side of a join as a broadcast."""
+    return n <= _BROADCAST_NODE_CAP
 
 
 def _undirected(edges: DataFrame, src: str, dst: str) -> DataFrame:
@@ -440,7 +439,7 @@ def pagerank(edges: DataFrame, src: str, dst: str,
         dangling = nodes.join(
             edges.select(F.col(src).alias("node")).distinct(),
             "node", "left_anti").localCheckpoint()
-    broadcast = _gate_broadcast(None, n)
+    broadcast = _gate_broadcast(n)
     if warm_start is not None:
         # defensive seed aggregation (r12 ADVICE): duplicate node rows
         # in the seed would otherwise fan out through the left join and
@@ -586,8 +585,7 @@ def pagerank(edges: DataFrame, src: str, dst: str,
 def _alternating_walk(edges: DataFrame, a: str, b: str,
                       iterations: int, w_fwd: Column | None,
                       w_bwd: Column | None,
-                      norm: Callable[[Column], Column],
-                      broadcast: bool | None) -> DataFrame:
+                      norm: Callable[[Column], Column]) -> DataFrame:
     """The alternating sparse half-step walk shared by :func:`hits`
     and :func:`salsa`. From h₀ ≡ 1 on every endpoint of ``edges[a, b]``,
     each iteration runs
@@ -610,12 +608,13 @@ def _alternating_walk(edges: DataFrame, a: str, b: str,
     normalization is a 1-row
     aggregate entering the plan as a broadcast (never a driver
     collect, never a SinglePartition funnel of the score table).
-    ``broadcast`` follows pagerank's bounded-probe discipline (r13
-    VERDICT #1): ``None`` broadcasts the score side of each half-step
-    join only when the node count reads ≤ 1M — host graphs get the
-    exchange-free plan, page-level graphs ship the join unhinted and
-    let AQE pick (a forced 90M-row broadcast per half-step would OOM
-    the build side). Iterations are O(K) shuffles total either way.
+    The score side of each half-step join follows pagerank's
+    bounded-probe discipline (r13 VERDICT #1): it is broadcast only
+    when the node count reads ≤ ``_BROADCAST_NODE_CAP`` — host graphs
+    get the exchange-free plan, page-level graphs ship the join
+    unhinted and let AQE pick (a forced 90M-row broadcast per
+    half-step would OOM the build side). Iterations are O(K) shuffles
+    total either way.
 
     The loop runs on SPARSE score frames — only nodes that received
     mass this half-step. Nodes absent from a sparse frame have score
@@ -630,8 +629,7 @@ def _alternating_walk(edges: DataFrame, a: str, b: str,
     nodes = (edges.select(F.col(a).alias("node"))
              .union(edges.select(F.col(b).alias("node")))
              .distinct().localCheckpoint())
-    if broadcast is None:
-        broadcast = _gate_broadcast(None, nodes.count())
+    broadcast = _gate_broadcast(nodes.count())
 
     def _half_step(score: DataFrame, frm: str, to: str, col: str,
                    out: str, w: Column | None) -> DataFrame:
@@ -706,7 +704,6 @@ def _round_scores(dense: DataFrame, digits: int | None) -> DataFrame:
 def hits(edges: DataFrame, src: str, dst: str,
          iterations: int = 5,
          hub_digits: int | None = None,
-         broadcast_scores: bool | None = None,
          weight_col: str | None = None) -> DataFrame:
     """HITS hubs-and-authorities (Kleinberg 1999, public algorithm)
     over the directed edge list ``edges[src, dst]`` — the classic
@@ -750,8 +747,7 @@ def hits(edges: DataFrame, src: str, dst: str,
     Scale posture: one bounded probe picks the lane (module
     docstring). Up to ``_LOCAL_EDGE_CAP`` edges the walk runs on the
     driver (:func:`_driver_walk`); above it the edge list is
-    materialized once and the walk runs in :func:`_alternating_walk`,
-    with ``broadcast_scores`` as its bounded-probe gate.
+    materialized once and the walk runs in :func:`_alternating_walk`.
     """
     if iterations < 1:
         raise ValueError("iterations must be >= 1")
@@ -771,15 +767,13 @@ def hits(edges: DataFrame, src: str, dst: str,
     else:
         dense = _alternating_walk(edges.localCheckpoint(), src, dst,
                                   iterations, w, w,
-                                  lambda x: F.sqrt(F.sum(x * x)),
-                                  broadcast_scores)
+                                  lambda x: F.sqrt(F.sum(x * x)))
     return _round_scores(dense, hub_digits)
 
 
 def salsa(edges: DataFrame, src: str, dst: str,
           iterations: int = 5,
-          score_digits: int | None = None,
-          broadcast_scores: bool | None = None) -> DataFrame:
+          score_digits: int | None = None) -> DataFrame:
     """SALSA — the Stochastic Approach for Link-Structure Analysis
     (Lempel-Moran 2000, ACM TOIT; public algorithm): HITS' mutual
     recursion on the ROW/COLUMN-NORMALIZED adjacency instead of the
@@ -820,10 +814,9 @@ def salsa(edges: DataFrame, src: str, dst: str,
     Above it the distinct edge list is materialized ONCE carrying its
     two reciprocal-degree columns (1/outdeg(src) for the authority
     step, 1/indeg(dst) for the hub step), and the walk runs in
-    :func:`_alternating_walk` with ``broadcast_scores`` as its
-    bounded-probe gate. The one-time degree joins that build the edge
-    weights ship unhinted (AQE decides — they are paid once, the
-    keep-set rule)."""
+    :func:`_alternating_walk`. The one-time degree joins that build
+    the edge weights ship unhinted (AQE decides — they are paid once,
+    the keep-set rule)."""
     if iterations < 1:
         raise ValueError("iterations must be >= 1")
     require_free_columns("salsa", edges.columns,
@@ -854,7 +847,7 @@ def salsa(edges: DataFrame, src: str, dst: str,
           .localCheckpoint())
     return _round_scores(
         _alternating_walk(en, "__a", "__b", iterations, F.col("__wa"),
-                          F.col("__wh"), F.sum, broadcast_scores),
+                          F.col("__wh"), F.sum),
         score_digits)
 
 
@@ -866,7 +859,6 @@ def reachability(edges: DataFrame, src: str, dst: str,
                  seeds: DataFrame,
                  direction: str = "forward",
                  rounds: int = 32, until_stable: bool = True,
-                 broadcast_frontier: bool | None = None,
                  on_cap: str = "silent") -> DataFrame:
     """Seed-set reachability closure over a directed edge list — the
     BFS primitive under Broder et al. 2000's bow-tie measurement
@@ -893,11 +885,12 @@ def reachability(edges: DataFrame, src: str, dst: str,
     diameter at worst) — NOT the condensation depth that makes
     peeling-style SCC loops unbounded; this is why the bow-tie
     query composes two reachability calls instead of a full SCC
-    decomposition. ``broadcast_frontier`` follows the family's
-    bounded-probe gate (the reached frame is one row per node;
-    ``None`` probes the graph's node count once and broadcasts only
-    ≤ 1M). ``on_cap`` escalates a cap-hit exactly like
-    :func:`k_core` (the result is then a ≤rounds-hop LOWER bound of
+    decomposition. The frontier join follows the family's
+    bounded-probe gate (the reached frame is one row per node: the
+    graph's node count is probed once and the frame broadcast only
+    when it reads ≤ ``_BROADCAST_NODE_CAP``). ``on_cap`` escalates a
+    cap-hit exactly like :func:`k_core` (the result is then a
+    ≤rounds-hop LOWER bound of
     the closure — monotone, unverified; requires
     ``until_stable=True`` to be meaningful, enforced);
     ``_LAST_REACH_ROUNDS``/``_LAST_REACH_CONVERGED`` record the
@@ -915,8 +908,9 @@ def reachability(edges: DataFrame, src: str, dst: str,
                          kind="output")
     a, b = (src, dst) if direction == "forward" else (dst, src)
     edges = _drop_loops(edges, src, dst)
-    seed_nodes = seeds.select(F.col(seeds.columns[0]).alias("node")
-                              ).distinct()
+    # no distinct: both lanes match seeds by a semi-join, which keeps
+    # each node once however many seed rows equal it
+    seed_nodes = seeds.select(F.col(seeds.columns[0]).alias("node"))
     g = _driver_graph(edges, a, b)
     if g is not None:
         hit = (g.frame().join(seed_nodes, "node", "left_semi")
@@ -938,8 +932,7 @@ def reachability(edges: DataFrame, src: str, dst: str,
         nodes = (el.select(F.col("__a").alias("node"))
                  .union(el.select(F.col("__b").alias("node")))
                  .distinct().localCheckpoint())
-        if broadcast_frontier is None:
-            broadcast_frontier = _gate_broadcast(None, nodes.count())
+        broadcast = _gate_broadcast(nodes.count())
         # lazy: the until_stable baseline count (or round 1's semi-join
         # side / broadcast build) materializes it — no dedicated job
         reached = (nodes.join(seed_nodes, "node", "left_semi")
@@ -947,7 +940,7 @@ def reachability(edges: DataFrame, src: str, dst: str,
 
         def _hop(reached: DataFrame) -> DataFrame:
             rside = reached.withColumnRenamed("node", "__a")
-            if broadcast_frontier:
+            if broadcast:
                 rside = F.broadcast(rside)
             step = (el.join(rside, "__a", "left_semi")
                     .select(F.col("__b").alias("node")))
@@ -968,8 +961,7 @@ def reachability(edges: DataFrame, src: str, dst: str,
 
 
 def label_propagation(edges: DataFrame, src: str, dst: str,
-                      iterations: int = 5,
-                      broadcast_labels: bool | None = None) -> DataFrame:
+                      iterations: int = 5) -> DataFrame:
     """Synchronous label propagation (Raghavan-Albert-Kumara 2007,
     public algorithm) over the edge list treated as UNDIRECTED — the
     community-detection pass a corpus-curation pipeline runs on the
@@ -1004,12 +996,12 @@ def label_propagation(edges: DataFrame, src: str, dst: str,
     ``struct(-count, label)``, an ordinary partial-aggregatable
     aggregate, NOT a global window. O(K) shuffles total; per-node
     state is one row, so a 90M-host graph carries 90M label rows per
-    iteration. ``broadcast_labels`` follows pagerank's bounded-probe
-    discipline (r13 VERDICT #1): ``None`` broadcasts the label side
-    of each iteration's join only when the node count reads ≤ 1M;
-    above that the join ships unhinted (AQE decides) — forcing a
-    90M-row broadcast per round would OOM, and a hint cannot be
-    demoted at runtime."""
+    iteration. The label side of each iteration's join follows
+    pagerank's bounded-probe discipline (r13 VERDICT #1): it is
+    broadcast only when the node count reads ≤
+    ``_BROADCAST_NODE_CAP``; above that the join ships unhinted (AQE
+    decides) — forcing a 90M-row broadcast per round would OOM, and a
+    hint cannot be demoted at runtime."""
     if iterations < 1:
         raise ValueError("iterations must be >= 1")
     require_free_columns("label_propagation", edges.columns,
@@ -1021,12 +1013,10 @@ def label_propagation(edges: DataFrame, src: str, dst: str,
               .distinct()
               .select("node", F.col("node").alias("community"))
               .localCheckpoint())
-    if broadcast_labels is None:
-        # bounded probe (one scalar off the materialized label
-        # table) — only paid when the caller leaves the gate on auto
-        broadcast_labels = _gate_broadcast(None, labels.count())
+    # bounded probe: one scalar off the materialized label table
+    broadcast = _gate_broadcast(labels.count())
     for _ in range(iterations):
-        lbl = F.broadcast(labels) if broadcast_labels else labels
+        lbl = F.broadcast(labels) if broadcast else labels
         counts = (nbr.join(lbl, nbr["__b"] == lbl["node"])
                   .groupBy(F.col("__a").alias("node"),
                            F.col("community"))
@@ -1047,8 +1037,7 @@ def cocitation(edges: DataFrame, src: str, dst: str,
                mode: str = "cocitation",
                min_common: int = 1,
                max_linker_degree: int | None = None,
-               jaccard_digits: int | None = None,
-               broadcast_degrees: bool | None = None) -> DataFrame:
+               jaccard_digits: int | None = None) -> DataFrame:
     """Co-citation / bibliographic-coupling similarity (Small 1973 /
     Kessler 1963, public measures) over a directed edge list — the
     related-host discovery pass: two hosts are CO-CITED when the same
@@ -1076,15 +1065,15 @@ def cocitation(edges: DataFrame, src: str, dst: str,
     endorsement is vacuous). Degrees for the Jaccard are computed
     BEFORE the cap (the true set sizes) and join back onto the pair
     aggregation, which is one partial-aggregated shuffle keyed by
-    the pair. ``broadcast_degrees`` follows pagerank's bounded-probe
-    discipline (r13 VERDICT #1): ``None`` broadcasts the degree
-    tables only when the bounded node probe reads ≤ 1M — on a
-    page-scale graph those frames are 90M+ rows and a forced
+    the pair. The degree joins follow pagerank's bounded-probe
+    discipline (r13 VERDICT #1): the degree tables are broadcast only
+    when the bounded node probe reads ≤ ``_BROADCAST_NODE_CAP`` — on
+    a page-scale graph those frames are 90M+ rows and a forced
     broadcast would OOM the build side; the unhinted join lets AQE
     decide. The ``max_linker_degree`` keep-set is LINKER-bounded
     (a different — and on the cocitation shape, far larger —
     cardinality than the item-side degree tables), so its semi-join
-    always ships unhinted regardless of the flag; AQE broadcasts it
+    always ships unhinted whatever the probe reads; AQE broadcasts it
     at runtime when it is genuinely small (r14 ADVICE). The distinct
     edge list and the degree table are snapshotted once (r14): the
     plan otherwise re-derives the upstream distinct for BOTH sides of
@@ -1109,10 +1098,9 @@ def cocitation(edges: DataFrame, src: str, dst: str,
           .distinct().localCheckpoint())
     deg = el.groupBy(F.col("__it").alias("node")).agg(
         F.count(F.lit(1)).alias("__deg")).localCheckpoint()
-    if broadcast_degrees is None:
-        # bounded probe (one scalar): the degree table is one row per
-        # item node, so its count IS the node bound the gate needs
-        broadcast_degrees = _gate_broadcast(None, deg.count())
+    # bounded probe (one scalar): the degree table is one row per item
+    # node, so its count IS the node bound the gate needs
+    broadcast = _gate_broadcast(deg.count())
     gen = el
     if max_linker_degree is not None:
         keep = (el.groupBy("__lk")
@@ -1140,7 +1128,7 @@ def cocitation(edges: DataFrame, src: str, dst: str,
           .withColumnRenamed("__deg", "__da"))
     db = (deg.withColumnRenamed("node", "node_b")
           .withColumnRenamed("__deg", "__db"))
-    if broadcast_degrees:
+    if broadcast:
         da, db = F.broadcast(da), F.broadcast(db)
     jac = (F.col("common")
            / (F.col("__da") + F.col("__db") - F.col("common")))
@@ -1152,7 +1140,6 @@ def cocitation(edges: DataFrame, src: str, dst: str,
 
 def k_core(edges: DataFrame, src: str, dst: str, k: int,
            rounds: int = 8, until_stable: bool = False,
-           broadcast_survivors: bool | None = None,
            on_cap: str = "silent") -> DataFrame:
     """k-core peeling (Seidman 1983, public algorithm) over the edge
     list treated as UNDIRECTED: repeatedly remove every node whose
@@ -1184,13 +1171,13 @@ def k_core(edges: DataFrame, src: str, dst: str, k: int,
     degree count — O(rounds) shuffles, survivor state one row per
     node. Peel depth on real webgraphs is far below the worst case
     (a path graph peels one node per round from each end);
-    ``until_stable`` stops at the true depth. ``broadcast_survivors``
-    follows pagerank's bounded-probe discipline (r13 VERDICT #1):
-    ``None`` broadcasts the survivor set into the per-round
-    semi-joins only when the initial node count reads ≤ 1M (survivor
-    sets only SHRINK, so the initial count bounds every round);
-    above that the semi-joins ship unhinted — a forced 90M-row
-    broadcast twice per peel round would OOM the build side.
+    ``until_stable`` stops at the true depth. The survivor set follows
+    pagerank's bounded-probe discipline (r13 VERDICT #1): it is
+    broadcast into the per-round semi-joins only when the initial
+    node count reads ≤ ``_BROADCAST_NODE_CAP`` (survivor sets only
+    SHRINK, so the initial count bounds every round); above that the
+    semi-joins ship unhinted — a forced 90M-row broadcast twice per
+    peel round would OOM the build side.
 
     Convergence visibility (r14 VERDICT #2): the module diagnostics
     ``_LAST_KCORE_ROUNDS`` / ``_LAST_KCORE_CONVERGED`` record the
@@ -1238,19 +1225,16 @@ def k_core(edges: DataFrame, src: str, dst: str, k: int,
         nbr = _undirected(edges, src, dst)
         survivors = (nbr.select(F.col("__a").alias("node")).distinct()
                      .localCheckpoint())
-        n_prev = None
-        if until_stable or broadcast_survivors is None:
-            # one bounded probe serves both the stability baseline and
-            # the broadcast gate — survivor sets only shrink, so the
-            # initial count bounds every round's build side
-            n_prev = survivors.count()
-        broadcast_survivors = _gate_broadcast(
-            broadcast_survivors, n_prev if n_prev is not None else 0)
+        # one bounded probe serves both the stability baseline and the
+        # broadcast gate — survivor sets only shrink, so the initial
+        # count bounds every round's build side
+        n_prev = survivors.count()
+        broadcast = _gate_broadcast(n_prev)
 
         def _alive_degrees(alive: DataFrame) -> DataFrame:
             sa = alive.withColumnRenamed("node", "__a")
             sb = alive.withColumnRenamed("node", "__b")
-            if broadcast_survivors:
+            if broadcast:
                 sa, sb = F.broadcast(sa), F.broadcast(sb)
             return (nbr
                     .join(sa, "__a", "left_semi")
@@ -1279,8 +1263,7 @@ def k_core(edges: DataFrame, src: str, dst: str, k: int,
 
 
 def triangle_count(edges: DataFrame, src: str, dst: str,
-                   coeff_digits: int | None = None,
-                   broadcast_degrees: bool | None = None) -> DataFrame:
+                   coeff_digits: int | None = None) -> DataFrame:
     """Per-node triangle count and local clustering coefficient over
     the edge list treated as UNDIRECTED (self-loops/NULLs/parallels
     drop) — the density signal next to k-core: a host whose
@@ -1303,11 +1286,11 @@ def triangle_count(edges: DataFrame, src: str, dst: str,
     generates no wedges; its LOW-degree neighbors claim them) plus
     one equi-join probe for the closing edge. Three shuffles total:
     the wedge self-join, the closing probe, and the per-corner
-    count. ``broadcast_degrees`` follows pagerank's bounded-probe
-    discipline (r13 VERDICT #1): ``None`` broadcasts the degree
-    table into the orientation join only when the bounded node
-    probe reads ≤ 1M; above that the join ships unhinted (AQE
-    decides) — a forced 90M-row degree broadcast would OOM."""
+    count. The orientation join follows pagerank's bounded-probe
+    discipline (r13 VERDICT #1): the degree table is broadcast only
+    when the bounded node probe reads ≤ ``_BROADCAST_NODE_CAP``;
+    above that the join ships unhinted (AQE decides) — a forced
+    90M-row degree broadcast would OOM."""
     require_free_columns("triangle_count", edges.columns,
                          _WORKING + ("__a", "__b", "__c", "__deg"))
     require_free_columns("triangle_count", edges.columns,
@@ -1317,16 +1300,15 @@ def triangle_count(edges: DataFrame, src: str, dst: str,
     deg = (nbr.groupBy(F.col("__a").alias("node"))
            .agg(F.count(F.lit(1)).alias("__deg"))
            .localCheckpoint())
-    if broadcast_degrees is None:
-        # bounded probe (one scalar off the materialized degree
-        # table): one row per node, so its count IS the node bound
-        broadcast_degrees = _gate_broadcast(None, deg.count())
+    # bounded probe (one scalar off the materialized degree table):
+    # one row per node, so its count IS the node bound
+    broadcast = _gate_broadcast(deg.count())
     # orient low -> high in the (degree, node) total order
     da = deg.select(F.col("node").alias("__a"),
                     F.col("__deg").alias("__dega"))
     db = deg.select(F.col("node").alias("__b"),
                     F.col("__deg").alias("__degb"))
-    if broadcast_degrees:
+    if broadcast:
         da, db = F.broadcast(da), F.broadcast(db)
     oriented = (nbr.join(da, "__a").join(db, "__b")
                 .filter((F.col("__dega") < F.col("__degb"))
@@ -1373,7 +1355,6 @@ def triangle_count(edges: DataFrame, src: str, dst: str,
 
 def core_number(edges: DataFrame, src: str, dst: str,
                 rounds: int = 8, until_stable: bool = False,
-                broadcast_values: bool | None = None,
                 on_cap: str = "silent") -> DataFrame:
     """Full core decomposition — per-node core NUMBER (the largest k
     for which the node survives k-core peeling) via the iterated
@@ -1415,10 +1396,10 @@ def core_number(edges: DataFrame, src: str, dst: str,
     H-index is max(min(rank_desc, value)) over each node's neighbor
     values — partitioned BY NODE, so the partition is one
     adjacency list, never the graph), and a partial-aggregated max.
-    O(rounds) shuffles. ``broadcast_values`` is the family's
-    bounded-probe gate (r13 VERDICT #1): ``None`` broadcasts the
-    value table only when the node count reads ≤ 1M; above that the
-    join ships unhinted and AQE decides.
+    O(rounds) shuffles. The value table follows the family's
+    bounded-probe gate (r13 VERDICT #1): it is broadcast only when the
+    node count reads ≤ ``_BROADCAST_NODE_CAP``; above that the join
+    ships unhinted and AQE decides.
 
     Convergence visibility (r14 VERDICT #2): the module diagnostics
     ``_LAST_CORE_ROUNDS`` / ``_LAST_CORE_CONVERGED`` record the
@@ -1464,14 +1445,13 @@ def core_number(edges: DataFrame, src: str, dst: str,
         vals = (nbr.groupBy(F.col("__a").alias("node"))
                 .agg(F.count(F.lit(1)).alias("__c"))
                 .localCheckpoint())
-        if broadcast_values is None:
-            # bounded probe: the value table is one row per node
-            broadcast_values = _gate_broadcast(None, vals.count())
+        # bounded probe: the value table is one row per node
+        broadcast = _gate_broadcast(vals.count())
         w = (Window.partitionBy("__a")
              .orderBy(F.col("__c").desc(), F.col("__b")))
 
         def _h_index(vals: DataFrame) -> DataFrame:
-            vside = F.broadcast(vals) if broadcast_values else vals
+            vside = F.broadcast(vals) if broadcast else vals
             # a window over ONE adjacency list
             return (nbr.join(vside, nbr["__b"] == vside["node"])
                     .select("__a", "__b", "__c")

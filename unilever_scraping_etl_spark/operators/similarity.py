@@ -157,8 +157,7 @@ def ivf_topk(queries: DataFrame, corpus: DataFrame, k: int, nlist: int = 16,
 def hyperplane_bucket(vec_col, n_planes: int = 8, dim: int = 64,
                       seed: int = 42):
     """Random-hyperplane LSH bucket id (deterministic: plane weights are
-    a fixed arithmetic pattern keyed by ``seed``, not RNG state). Use as
-    ``block_col`` for dedup.embedding_near_pairs at scale."""
+    a fixed arithmetic pattern keyed by ``seed``, not RNG state)."""
     bits = []
     for p in range(n_planes):
         # Fixed pseudo-weights w_ij = cos(seed + p*dim + j) pattern via
@@ -207,17 +206,21 @@ def adaptive_n_blocks(df: DataFrame, target_block_bytes: int = 64 << 20,
     return max(1, min(max_blocks, math.ceil(size / target_block_bytes)))
 
 
-def plan_size_bytes(df: DataFrame, sanity_cap: int = 1 << 50) -> int | None:
+_PLAN_SIZE_SANITY_CAP = 1 << 50  # ≈ 1 PiB
+
+
+def plan_size_bytes(df: DataFrame) -> int | None:
     """Catalyst's optimized-plan size estimate, or None when the engine
     has no real stats: missing-stat sources report defaultSizeInBytes
-    (Long.MaxValue — any value above ``sanity_cap`` ≈ 1 PiB is treated
-    as 'unknown', not 'huge') and Spark Connect has no ``_jdf``."""
+    (Long.MaxValue — any value at or above ``_PLAN_SIZE_SANITY_CAP`` is
+    treated as 'unknown', not 'huge') and Spark Connect has no
+    ``_jdf``."""
     try:
         stats = df._jdf.queryExecution().optimizedPlan().stats()
         size = int(stats.sizeInBytes())
     except Exception:
         return None
-    return size if 0 <= size < sanity_cap else None
+    return size if 0 <= size < _PLAN_SIZE_SANITY_CAP else None
 
 
 def hyperplane_band_buckets(n_bands: int, n_planes: int, dim: int = 64,

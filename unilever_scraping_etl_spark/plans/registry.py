@@ -6606,7 +6606,12 @@ def host_bowtie(spark: SparkSession, sf_dir: str) -> DataFrame:
     deg = (edges.select(F.col("src").alias("node"))
            .unionAll(edges.select(F.col("dst").alias("node")))
            .groupBy("node").agg(F.count(F.lit(1)).alias("d")))
-    pivot = deg.orderBy(F.col("d").desc(), "node").limit(1).select("node")
+    # snapshot the one-row pivot, lazily: the first closure's seed
+    # semi-join materializes it in its own jobs and the second reads
+    # the snapshot instead of recomputing the degree aggregation and
+    # its top-1 sort
+    pivot = (deg.orderBy(F.col("d").desc(), "node").limit(1)
+             .select("node").localCheckpoint(eager=False))
     # on_cap="raise": a closure truncated by the round cap would
     # misclassify nodes and surface only as an opaque oracle hash
     # mismatch — fail loudly at the operator instead, matching
