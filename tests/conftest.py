@@ -54,7 +54,6 @@ _SLOW_TESTS = frozenset({
     "test_versions_commit_monotonically_and_old_readable",
     "test_canonical_url_matches_python_reference",
     "test_minhash_guard_connectivity_property",
-    "test_connected_components_star_property_vs_union_find",
     "test_apply_in_pandas_with_state_running_totals",
     "test_dangling_redistribution_conserves_total_mass",
     "test_exact_matches_python_reference",

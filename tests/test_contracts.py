@@ -307,7 +307,7 @@ def test_operators_take_no_execution_strategy_options():
               "broadcast_frontier", "broadcast_labels",
               "broadcast_degrees", "broadcast_survivors",
               "broadcast_values", "local_edges", "jumps", "block_col",
-              "sanity_cap"}
+              "sanity_cap", "algorithm", "max_iterations", "length_band"}
     found = []
     for info in pkgutil.iter_modules(operators.__path__):
         if info.name.startswith("_"):

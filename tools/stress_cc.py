@@ -1,21 +1,22 @@
-"""Round-17 stress: connected_components at page scale — the
-pointer-jump and star distributed loops past the union-find fast
-path's edge bound, and the fast path itself at its upper bound.
+"""Connected-components stress at page scale — the distributed
+large-star/small-star loop past the union-find fast path's edge bound,
+and the fast path itself at its upper bound.
 
 Graph: the standing deterministic xxhash64 web-skew edge list
 (dst ∝ u² — heavy authority head) of tools/stress_graph_structure,
 whose giant component plus long tail is the realistic dedup-pair
 shape at crawl scale.
 
-Usage: python tools/stress_cc.py [nodes] [edges] [--ops=pointer,star,local]
+Usage: python tools/stress_cc.py [nodes] [edges] [--ops=dist,local]
 
 At the default 2M/10M the edge count reads past the 1M fast-path
-bound, so pointer/star exercise the DISTRIBUTED loops the fast path
-must never shadow; ``local`` additionally subsamples the edge list to
-exactly the bound and runs the single-task union-find vs the pointer
-loop on the SAME subgraph (label checksums compared), reaching the
-pointer loop by setting ``dedup._CC_LOCAL_EDGES_DEFAULT`` to 0. Each
-leg prints the bound it ran with."""
+bound, so ``dist`` exercises the DISTRIBUTED loop the fast path must
+never shadow; ``local`` additionally subsamples the edge list to
+exactly the bound and runs the single-task union-find vs the
+distributed loop on the SAME subgraph (label checksums compared),
+reaching the loop by setting ``dedup._CC_LOCAL_EDGES_DEFAULT`` to 0.
+Each leg prints the bound and the round budget ``_CC_MAX_ROUNDS`` it
+ran with."""
 
 from __future__ import annotations
 
@@ -39,7 +40,7 @@ def checksum(labels):
 
 def main() -> None:
     args = [a for a in sys.argv[1:] if not a.startswith("--")]
-    ops = {"pointer", "star", "local"}
+    ops = {"dist", "local"}
     for a in sys.argv[1:]:
         if a.startswith("--ops="):
             ops = set(a.split("=", 1)[1].split(","))
@@ -52,32 +53,25 @@ def main() -> None:
         F.floor(F.pow(u, 2.0) * n).cast("long").alias("dst"))
         .filter(F.col("src") != F.col("dst"))
         .localCheckpoint())
-    print(f"graph: {edges.count()} edges, target {n} nodes; "
-          f"_CC_LOCAL_EDGES_DEFAULT {dedup._CC_LOCAL_EDGES_DEFAULT}")
+    print(f"graph: {edges.count()} edges, target {n} nodes", flush=True)
 
-    sums = {}
-    if "pointer" in ops:
+    if "dist" in ops:
+        print(f"[dist] _CC_LOCAL_EDGES_DEFAULT "
+              f"{dedup._CC_LOCAL_EDGES_DEFAULT}, _CC_MAX_ROUNDS "
+              f"{dedup._CC_MAX_ROUNDS}")
         t = time.perf_counter()
-        cc = dedup.connected_components(edges, "src", "dst")
-        sums["pointer"] = checksum(cc)
-        print(f"pointer_jump          : {time.perf_counter() - t:.1f} s, "
-              f"rounds={dedup._LAST_CC_ROUNDS}, "
-              f"(sum,n,comps)={sums['pointer']}", flush=True)
-    if "star" in ops:
-        t = time.perf_counter()
-        cc = dedup.connected_components(edges, "src", "dst",
-                                        algorithm="star")
-        sums["star"] = checksum(cc)
-        print(f"star                  : {time.perf_counter() - t:.1f} s, "
-              f"rounds={dedup._LAST_CC_ROUNDS}, "
-              f"(sum,n,comps)={sums['star']}", flush=True)
-    if len(sums) == 2 and len(set(sums.values())) != 1:
-        raise SystemExit(f"LABEL MISMATCH: {sums}")
+        sums = checksum(dedup.connected_components(edges, "src", "dst"))
+        print(f"distributed           : {time.perf_counter() - t:.1f} s, "
+              f"rounds={dedup._LAST_CC_ROUNDS}, (sum,n,comps)={sums}",
+              flush=True)
 
     if "local" in ops:
         bound = dedup._CC_LOCAL_EDGES_DEFAULT
         sub = edges.limit(bound).localCheckpoint()
-        print(f"subgraph at fast-path bound {bound}: {sub.count()} edges")
+        print(f"[local] subgraph at fast-path bound {bound}: "
+              f"{sub.count()} edges; distributed leg at "
+              f"_CC_LOCAL_EDGES_DEFAULT 0, _CC_MAX_ROUNDS "
+              f"{dedup._CC_MAX_ROUNDS}")
         t = time.perf_counter()
         loc = checksum(dedup.connected_components(sub, "src", "dst"))
         tl = time.perf_counter() - t

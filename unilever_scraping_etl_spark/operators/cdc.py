@@ -119,7 +119,7 @@ def merge_upsert(snapshot: DataFrame, changes: DataFrame,
     NULL-version + duplicate-version probe as ONE eager 1-row job over
     the changes aggregate BEFORE the merge (the changes side is the
     small one in a CDC batch; same bounded-probe discipline as the
-    pointer-jump convergence checksum). Pass ``validate=False`` ONLY
+    connected-components convergence test). Pass ``validate=False`` ONLY
     when the feed is version-unique and non-null by construction and
     the extra scan matters.
     """

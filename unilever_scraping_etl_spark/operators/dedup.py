@@ -402,8 +402,7 @@ def ngram_jaccard_pairs_prefix(df: DataFrame, id_col: str, text_col: str,
 
 
 def editdist_pairs(df: DataFrame, id_col: str, text_col: str,
-                   block_cols: list[str], max_dist: int,
-                   length_band: bool = True) -> DataFrame:
+                   block_cols: list[str], max_dist: int) -> DataFrame:
     """Edit-distance near-dup pairs under key blocking, with a
     LENGTH-BAND sub-block that is output-identical to plain blocking:
     levenshtein(a, b) <= d implies abs(len(a) - len(b)) <= d, so with
@@ -415,22 +414,13 @@ def editdist_pairs(df: DataFrame, id_col: str, text_col: str,
     instead of going quadratic in one reducer; a hot block of
     same-length strings is irreducibly quadratic for EXACT edit
     distance — route such corpora to ngram_jaccard_pairs_prefix.
+    The band is always an equi key, so even ``block_cols=[]`` never
+    plans a corpus-wide cross join.
 
     The verify uses Spark's thresholded levenshtein (early-exits the
     DP once the running distance exceeds ``max_dist`` — O(d * min_len)
     instead of O(len_a * len_b) per pair). Returns
-    (id_a, id_b, dist <= max_dist).
-
-    ``block_cols=[]`` is rejected when ``length_band`` is also off:
-    with no equi key at all the join degenerates to the corpus-wide
-    nested-loop cross this function exists to avoid (length bands
-    alone still give an equi key, so that combination is allowed)."""
-    if not block_cols and not length_band:
-        raise ValueError(
-            "editdist_pairs with block_cols=[] and length_band=False has "
-            "no equi join key — the plan would be an all-pairs cross "
-            "join; pass at least one block column or leave length_band "
-            "on")
+    (id_a, id_b, dist <= max_dist)."""
     w = max_dist + 1
     a = df.select(F.col(id_col).alias("id_a"),
                   F.col(text_col).alias("txt_a"),
@@ -438,16 +428,13 @@ def editdist_pairs(df: DataFrame, id_col: str, text_col: str,
     b = df.select(F.col(id_col).alias("id_b"),
                   F.col(text_col).alias("txt_b"),
                   *[F.col(c).alias(f"blk_{c}") for c in block_cols])
-    if length_band:
-        band_a = F.floor(F.length("txt_a") / w)
-        band_b = F.floor(F.length("txt_b") / w)
-        a = a.withColumn("band", band_a)
-        b = (b.withColumn(
-                "band",
-                F.explode(F.array(band_b - 1, band_b, band_b + 1))))
+    band_a = F.floor(F.length("txt_a") / w)
+    band_b = F.floor(F.length("txt_b") / w)
+    a = a.withColumn("band", band_a)
+    b = b.withColumn("band",
+                     F.explode(F.array(band_b - 1, band_b, band_b + 1)))
     cond = [a[f"blk_{c}"] == b[f"blk_{c}"] for c in block_cols]
-    if length_band:
-        cond.append(a["band"] == b["band"])
+    cond.append(a["band"] == b["band"])
     cond.append(a["id_a"] < b["id_b"])
     joined = a.join(b, cond)
     dist = F.levenshtein(F.col("txt_a"), F.col("txt_b"), max_dist)
@@ -764,43 +751,18 @@ on the materialized edge list enforces it: no edge list longer than
 this bound reaches the single task, and no call can raise it."""
 
 
-def connected_components(edges: DataFrame, src: str, dst: str,
-                         max_iterations: int = 30,
-                         algorithm: str = "pointer_jump") -> DataFrame:
-    """Connected components over an undirected edge list by iterative
-    min-label propagation: every node starts labeled with
-    min(own id, min neighbor id) — a free one-hop head start, since
-    enumerating the nodes costs the same aggregation; each round a
-    node takes the min of its label and its neighbors' labels;
-    converged when no label changes. Returns (node, component)
-    with component = min node id in the component.
+_CC_MAX_ROUNDS = 30
+"""Round budget of connected_components' distributed loop, read at
+call time. Large-star/small-star converges in O(log d) rounds
+(measured: exactly log2(d) on worst-case chain graphs, 6 on the
+1.1M-edge web-skew stress graph; BASELINE.md), so 30 covers diameter
+~2^29 — beyond any dedup pair graph. Past it the call raises rather
+than return wrong labels."""
 
-    ``algorithm`` selects the round structure (r7 VERDICT item 5):
 
-    - ``"pointer_jump"`` (default): the hop + pointer-jump loop below —
-      O(log d) rounds (measured: ceil(log2 d) + ~2 on worst-case chain
-      graphs, BASELINE.md), each round one edge-join shuffle plus one
-      |nodes|-sized label self-join. ``max_iterations=30`` therefore
-      covers diameter ~2^27 — beyond any dedup pair graph — and
-      non-convergence raises rather than returning wrong labels.
-    - ``"star"``: alternating large-star/small-star edge contraction
-      (Kiveris et al., "Connected Components in MapReduce and Beyond",
-      SoCC 2014 — public algorithm): large-star hangs every
-      larger-than-self neighbor under the neighborhood minimum,
-      small-star re-parents the smaller neighbors; the edge set
-      converges to one star per component whose center is the
-      component minimum. Rounds shrink the EDGE LIST itself (not a
-      label table), so a pathological long-diameter graph that
-      exhausts the pointer-jump budget can be rerun on this variant;
-      its per-round windows partition by node id, so a hub's
-      neighborhood lands in one partition for one round and is then
-      flattened — the hub-shrinking behavior is the algorithm's point.
-      Measured trade (BASELINE.md round-9 stress): on bushy LSH pair
-      graphs star converges in fewer rounds (1 vs 2 at the 10× corpus,
-      25% faster end-to-end, identical labels); on worst-case chains
-      it pays 1.4–1.8× wall at identical log2(d) round counts (the
-      full edge rewrite + convergence aggregates cost more per round
-      than one join + checksum).
+def connected_components(edges: DataFrame, src: str, dst: str) -> DataFrame:
+    """Connected components over an undirected edge list. Returns
+    (node, component) with component = min node id in the component.
 
     This is the clustering step a dedup pipeline needs AFTER pair
     detection: near-dup PAIRS (minhash/simhash/Jaccard) form a graph
@@ -809,49 +771,56 @@ def connected_components(edges: DataFrame, src: str, dst: str,
     dedup surface is implicit in the (name, platform, createdate)
     snapshot key, SURVEY.md §1.1.)
 
-    Scale: each round is ONE job — a message-passing shuffle join
-    (edges ⋈ labels on the neighbor key) unioned with the nodes' own
-    labels into a single partial-agg min, then a POINTER-JUMPING
-    shortcut (label <- label's label: a self-join of the label table,
-    which is |nodes| rows — far smaller than the edge join) so label
-    paths halve every round and convergence takes O(log d) rounds
-    instead of d (Kiveris et al., "Connected Components in MapReduce
-    and Beyond", SoCC 2014 — same round bound as large-star/small-star
-    with a simpler per-round shape; r4 verdict flagged diameter-bound
-    rounds as the 100 TB risk). The shortcut runs ONCE per round.
-    Repeating it shrinks label paths 2^j x per round on LABEL-CHAIN-
-    bound graphs (long paths with monotone ids: measured 8 -> 5 -> 4
-    rounds on the 256-chain for 1/2/3 jumps), but real dedup pair
-    graphs are HOP-bound, not chain-bound (r16 OPTIMIZATION, measured
-    + simulated on the sf0.1 embedding pair graph: 10 rounds whatever
-    the jump count — labels point at nearby LOCAL minima whose own
-    labels are self-referential until the true minimum arrives hop by
-    hop, so extra jumps buy nothing and each costs a |nodes|-row
-    self-join per round). For a long-diameter graph, use
-    ``algorithm="star"``. The jump preserves correctness: a
-    node's label is always the id of a node in the SAME component
-    (edges never cross components, initial labels are own ids), so
-    label(label(n)) is too, and min-labels only decrease. A converged
-    (hop+jump)-round implies a converged hop-round, whose fixed point
-    is label constancy on every edge = exact components. Each round
-    ends in a LAZY localCheckpoint and one combined (sum, count)
-    action that both materializes it and detects convergence: labels
-    only ever decrease, so an unchanged exact sum over a constant node
-    set ⇔ no label changed. The sum runs in DECIMAL(38,0) so it cannot
-    overflow at any node-count x id-magnitude.
+    Edge lists of at most ``_CC_LOCAL_EDGES_DEFAULT`` rows run as one
+    union-find task (see the fast-path note below). Longer ones run
+    alternating large-star/small-star edge contraction (Kiveris et al.,
+    "Connected Components in MapReduce and Beyond", SoCC 2014 — public
+    algorithm), which rewrites the EDGE SET each round:
+
+    - large-star, per node u over its full (symmetrized) neighborhood:
+      m = min({u} ∪ Γ(u)); emit (v, m) for every neighbor v > u. The
+      output is canonically oriented (v > u ≥ m, and v == m is
+      impossible), so every edge is (child, parent) with child > parent.
+    - small-star, per node u over its SMALLER neighbors (exactly the
+      b-side of the oriented edges): m = min Γ⁻(u); emit (u, m) and
+      (v, m) for every smaller neighbor v != m.
+
+    Rounds shrink the edge list itself, not a label table; the
+    per-round windows partition by node id, so a hub's neighborhood
+    lands in one partition for one round and is then flattened — the
+    hub-shrinking behavior is the algorithm's point. Measured
+    (BASELINE.md): 6 rounds on the web-skew stress graph past the
+    fast-path bound, 1 round on bushy LSH pair graphs, exactly log2(d)
+    on worst-case chains. ``_CC_MAX_ROUNDS`` bounds the loop, and
+    non-convergence raises rather than returning wrong labels.
+
+    Both operations preserve the graph's connected components; the
+    fixed point is a union of stars, one per component, centered at
+    the component minimum — which gives an EXACT convergence test with
+    no label checksum: the edge set is converged iff no parent ever
+    appears as a child AND no child carries two distinct parents
+    (a few tiny aggregates per round, checked on the per-round
+    localCheckpoint that also cuts the growing lineage). Both
+    conjuncts are required: small_star's reparent branch emits
+    (b, m_a) from EVERY partition a where b is a non-minimal smaller
+    neighbor, so one child can end the round with two different
+    parents; if both parents are roots, "no parent is a child" alone
+    would stop early with the component split in two (and the child
+    emitted twice, violating the one-row-per-node contract). The next
+    large-star round sees the multi-parent child's full neighborhood
+    and merges the roots, so requiring single-parenthood is exactly
+    the missing fixed-point condition. Star centers and nodes whose
+    only edge was a self-loop carry no (child, parent) edge at the
+    fixed point; they are reattached from the original node set and
+    self-label.
     """
     global _LAST_CC_ROUNDS
-    if algorithm not in ("pointer_jump", "star"):
-        raise ValueError(f"unknown algorithm {algorithm!r}: expected "
-                         f"'pointer_jump' or 'star'")
-    # Materialize the DIRECTED edge list BEFORE symmetrizing: without
-    # it, the union's two branches both reference the upstream pair
-    # pipeline (minhash + verify, or the GEMM grid) — the most
-    # expensive subtree in every registered CC query — and computing
-    # it once is left to exchange reuse, which AQE is free to decline.
-    # Checkpointing |E| rows first makes single-computation a
-    # GUARANTEE (measured neutral locally where reuse already fired;
-    # the guarantee is what matters on a 100 TB pair plan).
+    # Materialize the DIRECTED edge list once: it feeds the count
+    # probe, the first round and the final node reattachment, and all
+    # three would otherwise re-run the upstream pair pipeline (minhash
+    # + verify, or the GEMM grid) — the most expensive subtree in every
+    # registered CC query — leaving single computation to exchange
+    # reuse, which AQE is free to decline.
     directed = edges.select(F.col(src).cast("long").alias("a"),
                             F.col(dst).cast("long").alias("b"))
     directed = directed.localCheckpoint()
@@ -862,7 +831,7 @@ def connected_components(edges: DataFrame, src: str, dst: str,
     # after verification — the corpus is near-dup-sparse by
     # construction of the thresholds) the loop is pure scheduling
     # overhead: measured at sf0.1, the 256-edge ngram pair graph paid
-    # ~2 s / ~8 jobs for 2 pointer rounds plus checkpoints. When the
+    # ~2 s / ~8 jobs for 2 distributed rounds plus checkpoints. When the
     # VERIFIED edge list (already materialized above — the count is a
     # metadata-cheap job over the checkpointed RDD, never a plan
     # re-execution) fits one task, an exact single-task union-find in
@@ -872,73 +841,69 @@ def connected_components(edges: DataFrame, src: str, dst: str,
     # shuffles, one job. The bound is data-derived (edge count), not
     # core-count-derived, so it behaves identically at any
     # parallelism; at 100 TB a pair graph past the bound takes the
-    # distributed loop unchanged. 1M edges took 6.2 s in one Python
-    # worker against 125.8 s for the distributed loop (4-core host);
-    # the worker's memory envelope is stated at the bound.
+    # distributed loop unchanged. 1M edges took 7.0 s in one Python
+    # worker against 41.1 s for the distributed loop (4-core host,
+    # tools/stress_cc.py); the worker's memory envelope is stated at
+    # the bound.
     if directed.count() <= _CC_LOCAL_EDGES_DEFAULT:
         _LAST_CC_ROUNDS = 0
         return _local_components(directed)
-    if algorithm == "star":
-        return _star_components(directed, max_iterations)
-    sym = directed.union(directed.select(F.col("b").alias("a"),
-                                         F.col("a").alias("b"))).distinct()
-    sym = sym.localCheckpoint()  # reused every round — cut the upstream plan
-    # One-hop head start for FREE: the node list needs a groupBy("a")
-    # anyway (sym is symmetric, so every node appears as "a"), and
-    # aggregating min(neighbor) in the same pass starts every label at
-    # min(node, min neighbor) — one full propagation round ahead of
-    # the identity init at identical shuffle cost. Correctness is the
-    # same monotonic argument: the init label is the min over a set of
-    # same-component node ids, so it never crosses components and
-    # never undershoots the component minimum.
-    labels = (sym.groupBy("a")
-              .agg(F.min("b").alias("min_nb"))
-              .select(F.col("a").alias("node"),
-                      F.least("a", "min_nb").alias("component")))
-    prev_sum, converged = None, False
-    for round_i in range(max_iterations):
-        msgs = (sym.join(labels, sym["b"] == labels["node"])
-                .select(sym["a"].alias("node"), "component"))
-        hopped = (labels.unionByName(msgs)
-                  .groupBy("node")
-                  .agg(F.min("component").alias("component")))
-        # pointer jump: component <- label(component). Every component
-        # value is a node id present in `hopped` (labels are node ids
-        # from the same closed node set), so the left join misses only
-        # when component == node already (self-label) — coalesce keeps
-        # it. least() guards the (impossible by monotonicity, cheap to
-        # pin) case of a jump ever increasing a label. One jump per
-        # round: on hop-bound pair graphs a second buys no round (see
-        # the docstring).
-        jmp = hopped.select(F.col("node").alias("jnode"),
-                            F.col("component").alias("jcomp"))
-        new_labels = (hopped.join(jmp, hopped["component"] == jmp["jnode"],
-                                  "left")
-                      .select(hopped["node"],
-                              F.least(hopped["component"],
-                                      F.coalesce(jmp["jcomp"],
-                                                 hopped["component"]))
-                               .alias("component"))
-                      .localCheckpoint(eager=False))
-        cur = tuple(new_labels.agg(
-            F.sum(F.col("component").cast("decimal(38,0)")),
-            F.count(F.lit(1))).collect()[0])
-        labels = new_labels
-        if cur == prev_sum:
-            converged = True
-            break
-        prev_sum = cur
+
+    from pyspark.sql import Window
+
+    wa = Window.partitionBy("a")
+
+    def large_star(e: DataFrame) -> DataFrame:
+        sym = e.union(e.select(F.col("b").alias("a"),
+                               F.col("a").alias("b")))
+        m = F.least(F.col("a"), F.min("b").over(wa))
+        return (sym.withColumn("m", m)
+                .filter(F.col("b") > F.col("a"))
+                .select(F.col("b").alias("a"), F.col("m").alias("b"))
+                .distinct())
+
+    def small_star(e: DataFrame) -> DataFrame:
+        withm = e.withColumn("m", F.min("b").over(wa))
+        reparent = (withm.filter(F.col("b") != F.col("m"))
+                    .select(F.col("b").alias("a"), F.col("m").alias("b")))
+        own = withm.select("a", F.col("m").alias("b"))
+        return reparent.union(own).distinct()
+
+    stars = directed.filter(F.col("a") != F.col("b"))
+    converged = False
+    for round_i in range(_CC_MAX_ROUNDS):
+        stars = small_star(large_star(stars)).localCheckpoint()
+        # Exact star test: converged iff no parent is also a child AND
+        # every child has exactly one distinct parent (see docstring —
+        # the first conjunct alone stops early on two-lobe graphs where
+        # a shared child holds edges to two root parents).
+        parent_is_child = (stars.select("b").join(
+            stars.select(F.col("a").alias("b")), "b", "left_semi")
+            .limit(1).count())
+        if parent_is_child == 0:
+            multi_parent = (stars.groupBy("a")
+                            .agg(F.count_distinct("b").alias("np"))
+                            .filter(F.col("np") > 1).limit(1).count())
+            if multi_parent == 0:
+                converged = True
+                break
     if not converged:
-        # Unconverged labels are WRONG (a long-diameter chain merges
-        # components only one hop per round); silent truncation would
-        # yield incorrect duplicate clusters at scale with no signal.
+        # Unconverged stars are WRONG labels (a component can still be
+        # split across several roots); silent truncation would yield
+        # incorrect duplicate clusters at scale with no signal.
         raise RuntimeError(
             f"connected_components did not converge within "
-            f"{max_iterations} iterations; raise max_iterations or "
-            f"rerun with algorithm='star' (large-star/small-star) for "
-            f"long-diameter graphs")
+            f"_CC_MAX_ROUNDS={_CC_MAX_ROUNDS} rounds")
     _LAST_CC_ROUNDS = round_i + 1
-    return labels
+    # Reattach every node from the ORIGINAL edge list: star centers
+    # appear only as parents, and self-loop-only nodes carry no edge
+    # through the contraction at all — both self-label.
+    nodes = (directed.select(F.col("a").alias("node"))
+             .union(directed.select(F.col("b").alias("node"))).distinct())
+    mapping = stars.select(F.col("a").alias("node"),
+                           F.col("b").alias("mapped"))
+    return (nodes.join(mapping, "node", "left")
+            .select("node", F.coalesce("mapped", "node").alias("component")))
 
 
 def _local_components(directed: DataFrame) -> DataFrame:
@@ -954,7 +919,7 @@ def _local_components(directed: DataFrame) -> DataFrame:
     where each node is its own root; a union re-roots both sets at
     min(root_a, root_b), which is <= every member of either), and the
     component minimum is a member, so root == min — exactly the
-    pointer-jump/star label contract, independent of edge order.
+    distributed loop's label contract, independent of edge order.
     Self-loops and duplicate edges are no-ops by construction."""
     import numpy as np
 
@@ -991,95 +956,6 @@ def _local_components(directed: DataFrame) -> DataFrame:
         yield pd.DataFrame({"node": nodes, "component": comp})
 
     return directed.coalesce(1).mapInPandas(uf, "node long, component long")
-
-
-def _star_components(directed: DataFrame, max_iterations: int) -> DataFrame:
-    """Alternating large-star/small-star contraction (Kiveris et al.,
-    SoCC 2014) over a checkpointed directed edge list with long-typed
-    columns (a, b). See connected_components(algorithm="star").
-
-    Each round rewrites the EDGE SET:
-
-    - large-star, per node u over its full (symmetrized) neighborhood:
-      m = min({u} ∪ Γ(u)); emit (v, m) for every neighbor v > u. The
-      output is canonically oriented (v > u ≥ m, and v == m is
-      impossible), so every edge is (child, parent) with child > parent.
-    - small-star, per node u over its SMALLER neighbors (exactly the
-      b-side of the oriented edges): m = min Γ⁻(u); emit (u, m) and
-      (v, m) for every smaller neighbor v != m.
-
-    Both operations preserve the graph's connected components; the
-    fixed point is a union of stars, one per component, centered at
-    the component minimum — which gives an EXACT convergence test with
-    no label checksum: the edge set is converged iff no parent ever
-    appears as a child AND no child carries two distinct parents
-    (a few tiny aggregates per round, checked on the per-round
-    localCheckpoint that also cuts the growing lineage). Both
-    conjuncts are required: small_star's reparent branch emits
-    (b, m_a) from EVERY partition a where b is a non-minimal smaller
-    neighbor, so one child can end the round with two different
-    parents; if both parents are roots, "no parent is a child" alone
-    would stop early with the component split in two (and the child
-    emitted twice, violating the one-row-per-node contract). The next
-    large-star round sees the multi-parent child's full neighborhood
-    and merges the roots, so requiring single-parenthood is exactly
-    the missing fixed-point condition.
-    Returns the same (node, component) contract as the pointer-jump
-    form, including self-labeled star centers and nodes whose only
-    edge was a self-loop (reattached from the original node set)."""
-    from pyspark.sql import Window
-
-    wa = Window.partitionBy("a")
-
-    def large_star(e: DataFrame) -> DataFrame:
-        sym = e.union(e.select(F.col("b").alias("a"),
-                               F.col("a").alias("b")))
-        m = F.least(F.col("a"), F.min("b").over(wa))
-        return (sym.withColumn("m", m)
-                .filter(F.col("b") > F.col("a"))
-                .select(F.col("b").alias("a"), F.col("m").alias("b"))
-                .distinct())
-
-    def small_star(e: DataFrame) -> DataFrame:
-        withm = e.withColumn("m", F.min("b").over(wa))
-        reparent = (withm.filter(F.col("b") != F.col("m"))
-                    .select(F.col("b").alias("a"), F.col("m").alias("b")))
-        own = withm.select("a", F.col("m").alias("b"))
-        return reparent.union(own).distinct()
-
-    edges = directed.filter(F.col("a") != F.col("b"))
-    converged = False
-    for round_i in range(max_iterations):
-        edges = small_star(large_star(edges)).localCheckpoint()
-        # Exact star test: converged iff no parent is also a child AND
-        # every child has exactly one distinct parent (see docstring —
-        # the first conjunct alone stops early on two-lobe graphs where
-        # a shared child holds edges to two root parents).
-        parent_is_child = (edges.select("b").join(
-            edges.select(F.col("a").alias("b")), "b", "left_semi")
-            .limit(1).count())
-        if parent_is_child == 0:
-            multi_parent = (edges.groupBy("a")
-                            .agg(F.count_distinct("b").alias("np"))
-                            .filter(F.col("np") > 1).limit(1).count())
-            if multi_parent == 0:
-                converged = True
-                break
-    if not converged:
-        raise RuntimeError(
-            f"connected_components(algorithm='star') did not converge "
-            f"within {max_iterations} iterations; raise max_iterations")
-    global _LAST_CC_ROUNDS
-    _LAST_CC_ROUNDS = round_i + 1
-    # Reattach every node from the ORIGINAL edge list: star centers
-    # appear only as parents, and self-loop-only nodes carry no edge
-    # through the contraction at all — both self-label.
-    nodes = (directed.select(F.col("a").alias("node"))
-             .union(directed.select(F.col("b").alias("node"))).distinct())
-    mapping = edges.select(F.col("a").alias("node"),
-                           F.col("b").alias("mapped"))
-    return (nodes.join(mapping, "node", "left")
-            .select("node", F.coalesce("mapped", "node").alias("component")))
 
 
 def embedding_near_pairs_grid(emb: DataFrame, id_col: str, vec_col: str,

@@ -1192,8 +1192,8 @@ WHERE levenshtein(a.p_name, b.p_name) <= 8
 """, doc="L2 edit-distance near-dup over product names, blocked on "
          "(brand, size) AND length-banded (operators/dedup.editdist_"
          "pairs): levenshtein <= 8 implies a length difference <= 8, so "
-         "bands of width 9 with neighbor-band replication are output-"
-         "identical to plain blocking (test-pinned) while a length-"
+         "bands of width 9 with neighbor-band replication lose no pair "
+         "(tested against a pure-Python Levenshtein) while a length-"
          "heterogeneous hot block splits across bands instead of going "
          "quadratic in one reducer. The verify is Spark's THRESHOLDED "
          "levenshtein (early-exit DP, O(d*min_len) per pair), JVM-side "
@@ -1919,7 +1919,7 @@ FROM (
          "along as naive_split, making the audit ('how many docs "
          "would a doc-keyed split have leaked?') a one-filter "
          "follow-up. Scale: the pair/CC machinery is dedup_clusters' "
-         "(guarded candidates, pointer-jump CC); the split itself is "
+         "(guarded candidates, min-id CC); the split itself is "
          "a narrow map — no new shuffle beyond the cluster join. "
          "Oracle reproduces components with the recursive-CTE "
          "closure and both bucket expressions verbatim.")
@@ -2881,19 +2881,7 @@ def dedup_embedding_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = dedup.embedding_near_pairs_grid(
         emb, "vec_id", "embedding", threshold=0.4,
         n_blocks=similarity.adaptive_n_blocks(emb)).select("id_a", "id_b")
-    # algorithm="star" (r16 OPTIMIZATION, measured): the 0.4-threshold
-    # embedding pair graph is sparse with many local-minimum labels
-    # (268 components, diameter ~22 at sf0.1), where min-label
-    # propagation is HOP-bound — pointer jumping cannot accelerate it
-    # (10 rounds with 1, 2, or 3 jumps/round; simulated AND engine-
-    # measured) — while star contraction converges in 5 rounds.
-    # Isolated A/B at sf0.1: star 2.96-4.06 s vs pointer 5.61+ s,
-    # labels identical (both yield the component min). The ngram-pair
-    # consumers keep pointer_jump: their bushy duplicate-clique graphs
-    # converge in 2 rounds, where star's pricier rounds lose
-    # (measured, same session: 1.6-2.6 s vs 2.9-6.9 s).
-    comp = dedup.connected_components(pairs, "id_a", "id_b",
-                                      algorithm="star")
+    comp = dedup.connected_components(pairs, "id_a", "id_b")
     return (emb.join(comp, emb["vec_id"] == comp["node"], "left")
             .select(emb["vec_id"],
                     F.coalesce("component", "vec_id").alias("cluster_id"))
@@ -8346,7 +8334,7 @@ FROM assigned JOIN csz USING (cluster_id)
          "of sampling mass (sum of weights per cluster = 1) and "
          "singletons keep weight 1. Reuses the full dedup_clusters "
          "pipeline (prefix-filtered exact Jaccard pairs -> "
-         "pointer-jumped CC); the size frame joins back by "
+         "min-id CC); the size frame joins back by "
          "cluster_id — AQE picks broadcast vs shuffle by its actual "
          "size (cluster count is corpus-order, NOT bounded — no "
          "forced broadcast). The oracle reproduces the clusters with "
