@@ -290,6 +290,29 @@ def test_graph_loops_live_in_the_shared_cores():
     assert src.count(msg) == 1, "fixpoint argument checks copied again"
 
 
+def test_pagerank_keeps_one_fixed_iteration_loop():
+    """PageRank runs exactly ``iterations`` rounds at the constant
+    ``graph._DAMPING``: no early-stop tolerance, dangling-mass
+    redistribution or per-call damping (no registered query or CLI
+    path set them), no second loop for them to select, and no
+    module-global iteration counter."""
+    import ast
+    import inspect
+
+    from unilever_scraping_etl_spark.operators import graph
+
+    params = set(inspect.signature(graph.pagerank).parameters)
+    assert not params & {"tol", "redistribute_dangling", "damping"}
+    assert not hasattr(graph, "_LAST_PR_ITERATIONS")
+    tree = ast.parse(Path(graph.__file__).read_text())
+    fn = next(node for node in tree.body
+              if isinstance(node, ast.FunctionDef)
+              and node.name == "pagerank")
+    loops = [n.lineno for n in ast.walk(fn)
+             if isinstance(n, (ast.For, ast.AsyncFor, ast.While))]
+    assert len(loops) == 1, f"graph.pagerank loops at {loops}"
+
+
 def test_operators_take_no_execution_strategy_options():
     """A strategy flag that no registered query or CLI path sets is a
     second code path kept alive only by its tests. These were deleted

@@ -14,22 +14,38 @@ def _edges(spark, pairs):
     return spark.createDataFrame(pairs, "src long, dst long")
 
 
-def _reference(pairs, iterations, d=0.85, redistribute_dangling=False):
-    nodes = sorted({u for u, _ in pairs} | {v for _, v in pairs})
+def _reference(edges, iterations, init=None, sv=None):
+    """Python twin of the recurrence: ``edges`` are ``(u, v)`` pairs
+    or weighted ``(u, v, w)`` triples, ``init`` a warm-start seed
+    (graph nodes it misses enter at 1/N, then renormalized to mass 1)
+    and ``sv`` a personalization seed (teleport base (1−d)·s(v));
+    mass arriving at dangling nodes drops."""
+    d = 0.85
+    edges = [e if len(e) == 3 else (*e, 1.0) for e in edges]
+    nodes = sorted({u for u, _, _ in edges} | {v for _, v, _ in edges})
     n = len(nodes)
-    outdeg = {}
-    for u, _ in pairs:
-        outdeg[u] = outdeg.get(u, 0) + 1
+    out = {}
+    for u, _, w in edges:
+        out[u] = out.get(u, 0.0) + w
     rank = {v: 1.0 / n for v in nodes}
+    if init is not None:
+        rank = {v: init.get(v, 1.0 / n) for v in nodes}
+        tot = sum(rank.values())
+        rank = {v: r / tot for v, r in rank.items()}
+    s = {v: 1.0 / n for v in nodes}
+    if sv is not None:
+        tot = sum(sv.get(v, 0.0) for v in nodes)
+        s = {v: sv.get(v, 0.0) / tot for v in nodes}
     for _ in range(iterations):
         contrib = {v: 0.0 for v in nodes}
-        for u, v in pairs:
-            contrib[v] += rank[u] / outdeg[u]
-        dmass = (sum(rank[v] for v in nodes if v not in outdeg)
-                 if redistribute_dangling else 0.0)
-        rank = {v: (1 - d) / n + d * (contrib[v] + dmass / n)
-                for v in nodes}
+        for u, v, w in edges:
+            contrib[v] += rank[u] * w / out[u]
+        rank = {v: (1 - d) * s[v] + d * contrib[v] for v in nodes}
     return rank
+
+
+def _l1(a, b):
+    return sum(abs(a[v] - b[v]) for v in b)
 
 
 def test_cycle_stays_uniform(spark):
@@ -85,92 +101,8 @@ def test_validation(spark):
     e = _edges(spark, [(0, 1)])
     with pytest.raises(ValueError, match="iterations"):
         graph.pagerank(e, "src", "dst", iterations=0)
-    with pytest.raises(ValueError, match="damping"):
-        graph.pagerank(e, "src", "dst", damping=1.0)
     with pytest.raises(ValueError, match="reserved"):
         graph.pagerank(e.withColumn("rank", F.lit(1)), "src", "dst")
-    with pytest.raises(ValueError, match="tol"):
-        graph.pagerank(e, "src", "dst", tol=-0.1)
-
-
-def test_dangling_redistribution_conserves_total_mass(spark):
-    """0->1, 1->2, 2 dangling: plain formulation leaks node 2's mass;
-    redistribute_dangling must hold the total at exactly 1 at any K,
-    and match the python reference node by node."""
-    pairs = [(0, 1), (1, 2), (0, 2)]
-    out = graph.pagerank(_edges(spark, pairs), "src", "dst",
-                         iterations=6, redistribute_dangling=True)
-    total = out.agg(F.sum("rank")).first()[0]
-    assert total == pytest.approx(1.0, abs=1e-9)
-    exp = _reference(pairs, 6, redistribute_dangling=True)
-    got = {r["node"]: r["rank"] for r in out.collect()}
-    for v, r in exp.items():
-        assert got[v] == pytest.approx(r, abs=1e-10)
-    # and the default (drop) run leaks mass on this graph — the two
-    # modes are genuinely different here
-    plain = (graph.pagerank(_edges(spark, pairs), "src", "dst",
-                            iterations=6)
-             .agg(F.sum("rank")).first()[0])
-    assert plain < 0.999
-
-
-def test_tol_stops_early_on_cycle(spark):
-    """A directed cycle is at its fixed point from iteration 0, so the
-    first delta probe reads 0 and tol stops the loop after ONE
-    iteration despite a cap of 7."""
-    pairs = [(i, (i + 1) % 5) for i in range(5)]
-    out = graph.pagerank(_edges(spark, pairs), "src", "dst",
-                         iterations=7, tol=0.0).collect()
-    assert graph._LAST_PR_ITERATIONS == 1
-    for r in out:
-        assert r["rank"] == pytest.approx(0.2, abs=1e-12)
-
-
-def test_tol_converged_result_matches_reference(spark):
-    """tol early-stop on a strongly-connected graph: stops before the
-    cap, matches the python reference at EXACTLY the iteration count
-    it reports, and sits within ~tol of the converged fixed point
-    (d=0.5 so contraction reaches 1e-8 in ~27 rounds — a deep
-    un-checkpointed Spark run is not a usable comparator)."""
-    pairs = [(0, 1), (1, 2), (2, 0), (0, 2), (2, 1), (1, 0)]
-    conv = {r["node"]: r["rank"]
-            for r in graph.pagerank(_edges(spark, pairs), "src", "dst",
-                                    iterations=60, tol=1e-8,
-                                    damping=0.5).collect()}
-    used = graph._LAST_PR_ITERATIONS
-    assert used < 60
-    exact = _reference(pairs, used, d=0.5)
-    fixed = _reference(pairs, 200, d=0.5)
-    for v, r in conv.items():
-        assert r == pytest.approx(exact[v], abs=1e-10)
-        assert r == pytest.approx(fixed[v], abs=1e-6)
-
-
-def test_tol_with_dangling_redistribution_composes(spark):
-    """Both flags together: early-stopped ranks match the reference
-    fold (with redistribution) at the reported iteration count, and
-    mass stays 1 — node 2 dangles in this graph."""
-    pairs = [(0, 1), (1, 2), (0, 2), (1, 0)]
-    out = {r["node"]: r["rank"]
-           for r in graph.pagerank(_edges(spark, pairs), "src", "dst",
-                                   iterations=60, tol=1e-8, damping=0.5,
-                                   redistribute_dangling=True).collect()}
-    used = graph._LAST_PR_ITERATIONS
-    assert used < 60
-    exp = _reference(pairs, used, d=0.5, redistribute_dangling=True)
-    for v, r in exp.items():
-        assert out[v] == pytest.approx(r, abs=1e-10)
-    assert sum(out.values()) == pytest.approx(1.0, abs=1e-9)
-
-
-def test_tol_cap_still_binds(spark):
-    """An unreachable tolerance runs exactly the cap."""
-    pairs = [(0, 1), (1, 2), (2, 0), (0, 2)]
-    graph.pagerank(_edges(spark, pairs), "src", "dst",
-                   iterations=3, tol=0.0).collect()
-    # this graph is NOT at a fixed point after 3 rounds; tol=0 never
-    # fires, so the cap binds
-    assert graph._LAST_PR_ITERATIONS == 3
 
 
 def _wedges(spark, triples):
@@ -228,78 +160,77 @@ def test_weighted_null_and_nonpositive_edges_drop(spark):
     assert out[1] == pytest.approx(0.5, abs=1e-12)
 
 
-def test_weighted_composes_with_warm_start_and_tol(spark):
-    """The r13-runway composition: weighted + warm_start + tol reach
-    the same weighted fixed point as a cold weighted run."""
+def test_weighted_composes_with_warm_start(spark):
+    """weighted + warm_start: seeded with the weighted fixed point,
+    the run stays on it, while a cold run at the same K is still far
+    from it."""
     triples = [(i, (i * 5 + 2) % 19, float(1 + i % 3))
                for i in range(19)]
     triples += [(i, (i * 7 + 1) % 19, 1.0) for i in range(19)]
     triples = [(a, b, w) for a, b, w in triples if a != b]
     e = _wedges(spark, triples)
-    cold = {r["node"]: r["rank"]
-            for r in graph.pagerank(e, "src", "dst", iterations=200,
-                                    tol=1e-9,
-                                    weight_col="w").collect()}
-    seed = spark.createDataFrame([(k, v) for k, v in cold.items()],
+    fixed = _reference(triples, 300)
+    seed = spark.createDataFrame(list(fixed.items()),
                                  "node long, rank double")
     warm = {r["node"]: r["rank"]
-            for r in graph.pagerank(e, "src", "dst", iterations=200,
-                                    tol=1e-9, weight_col="w",
+            for r in graph.pagerank(e, "src", "dst", iterations=3,
+                                    weight_col="w",
                                     warm_start=seed).collect()}
-    assert graph._LAST_PR_ITERATIONS <= 2  # already at the fixed point
-    for v in cold:
-        assert warm[v] == pytest.approx(cold[v], abs=1e-8)
+    assert set(warm) == set(fixed)
+    for v in fixed:
+        assert warm[v] == pytest.approx(fixed[v], abs=1e-12)
+    assert _l1(_reference(triples, 3), fixed) > 1e-3
 
 
 def test_warm_start_same_fixed_point_fewer_iterations(spark):
-    """The incremental re-rank drift bound (SURVEY 7.8): after a
-    small edge delta, warm-starting from the previous snapshot's
-    ranks converges to the SAME fixed point as a cold start (the
-    fixed point is independent of the start) in strictly fewer
-    iterations."""
+    """The incremental re-rank (SURVEY 7.8), in the registered shape:
+    K=5 on the old graph, then after a small edge delta K=3 more on
+    the new graph seeded from those ranks. The warm run matches the
+    python twin seeded the same way, and at the same K its ranks sit
+    closer (L1) to the new graph's fixed point than a cold start's —
+    the fixed point is start-independent, so the warm run needs fewer
+    iterations to reach a given error."""
     base = [(i, (i * 7 + 1) % 40) for i in range(40)]
     base += [(i, (i * 3 + 2) % 40) for i in range(40)]
     base = [(a, b) for a, b in base if a != b]
     prior = graph.pagerank(_edges(spark, base), "src", "dst",
-                           iterations=200, tol=1e-8)
+                           iterations=5)
     # the delta: five fresh links plus one new node entering the graph
     delta = [(0, 17), (5, 23), (11, 2), (40, 3), (8, 40)]
     new = list(dict.fromkeys(base + delta))
-    cold = graph.pagerank(_edges(spark, new), "src", "dst",
-                          iterations=200, tol=1e-8)
-    i_cold = graph._LAST_PR_ITERATIONS
-    warm = graph.pagerank(_edges(spark, new), "src", "dst",
-                          iterations=200, tol=1e-8, warm_start=prior)
-    i_warm = graph._LAST_PR_ITERATIONS
-    c = {r["node"]: r["rank"] for r in cold.collect()}
-    w = {r["node"]: r["rank"] for r in warm.collect()}
-    assert set(w) == set(c)
-    # both stopped at max-delta <= 1e-8; the fixed points agree
-    # within tol / (1 - d) of each other
-    for v in c:
-        assert w[v] == pytest.approx(c[v], abs=1e-7)
-    assert i_warm < i_cold, (i_warm, i_cold)
+    cold = {r["node"]: r["rank"]
+            for r in graph.pagerank(_edges(spark, new), "src", "dst",
+                                    iterations=3).collect()}
+    warm = {r["node"]: r["rank"]
+            for r in graph.pagerank(_edges(spark, new), "src", "dst",
+                                    iterations=3,
+                                    warm_start=prior).collect()}
+    exp_cold = _reference(new, 3)
+    exp_warm = _reference(new, 3, init=_reference(base, 5))
+    assert set(warm) == set(cold) == set(exp_warm)
+    for v in exp_warm:
+        assert cold[v] == pytest.approx(exp_cold[v], abs=1e-12)
+        assert warm[v] == pytest.approx(exp_warm[v], abs=1e-12)
+    fixed = _reference(new, 300)
+    assert _l1(warm, fixed) < _l1(cold, fixed)
 
 
 def test_warm_start_new_nodes_and_renormalization(spark):
-    """Warm frames that miss nodes (they enter at 1/N) or carry
-    unnormalized mass (renormalized to 1) still converge to the
-    plain result."""
+    """Warm frames that miss nodes (they enter at 1/N) and carry
+    unnormalized mass (renormalized to 1) start exactly where the
+    python twin's seed handling puts them."""
     pairs = [(0, 1), (1, 2), (2, 0), (0, 2), (3, 0)]
-    plain = {r["node"]: r["rank"]
-             for r in graph.pagerank(_edges(spark, pairs), "src",
-                                     "dst", iterations=300,
-                                     tol=1e-10).collect()}
     # warm frame: only two nodes, scaled 100x, arbitrary column names
     ws = spark.createDataFrame([(0, 40.0), (1, 25.0)],
                                "vertex long, weight double")
     warm = {r["node"]: r["rank"]
             for r in graph.pagerank(_edges(spark, pairs), "src",
-                                    "dst", iterations=300, tol=1e-10,
+                                    "dst", iterations=4,
                                     warm_start=ws).collect()}
-    assert set(warm) == set(plain)
-    for v in plain:
-        assert warm[v] == pytest.approx(plain[v], abs=1e-8)
+    exp = _reference(pairs, 4, init={0: 40.0, 1: 25.0})
+    assert set(warm) == set(exp)
+    for v in exp:
+        assert warm[v] == pytest.approx(exp[v], abs=1e-12)
 
 
 def test_warm_start_duplicate_seed_rows_sum_not_fan_out(spark):
@@ -334,28 +265,6 @@ def test_warm_start_nonpositive_total_mass_raises(spark):
                            iterations=1, warm_start=ws)
 
 
-def _personalized_reference(pairs, sv, iterations, d=0.85,
-                            redistribute_dangling=False):
-    """Python twin of the personalized recurrence: base = (1−d)·s(v),
-    dangling mass re-enters per s(v)."""
-    nodes = sorted({u for u, _ in pairs} | {v for _, v in pairs})
-    outdeg = {}
-    for u, _ in pairs:
-        outdeg[u] = outdeg.get(u, 0) + 1
-    tot = sum(sv.get(v, 0.0) for v in nodes)
-    s = {v: sv.get(v, 0.0) / tot for v in nodes}
-    rank = {v: 1.0 / len(nodes) for v in nodes}
-    for _ in range(iterations):
-        contrib = {v: 0.0 for v in nodes}
-        for u, v in pairs:
-            contrib[v] += rank[u] / outdeg[u]
-        dmass = (sum(rank[v] for v in nodes if v not in outdeg)
-                 if redistribute_dangling else 0.0)
-        rank = {v: (1 - d) * s[v] + d * (contrib[v] + dmass * s[v])
-                for v in nodes}
-    return rank
-
-
 def _seed(spark, rows):
     return spark.createDataFrame(rows, "node long, w double")
 
@@ -379,33 +288,21 @@ def test_personalized_uniform_seed_matches_standard(spark):
 
 
 def test_personalized_matches_python_reference(spark):
-    """Skewed seed over a small graph, checked against the python
-    twin, with and without dangling redistribution."""
+    """Skewed seed over a small graph with a dangling node, checked
+    against the python twin with and without the seed: the mass
+    arriving at the dangling node drops in both."""
     pairs = [(0, 1), (1, 2), (2, 0), (0, 2), (3, 0), (0, 4)]  # 4 dangles
-    sv = {0: 5.0, 2: 1.0}
-    for rd in (False, True):
-        ref = _personalized_reference(pairs, sv, 4,
-                                      redistribute_dangling=rd)
+    for sv in (None, {0: 5.0, 2: 1.0}):
+        ref = _reference(pairs, 4, sv=sv)
+        seed = None if sv is None else _seed(spark, list(sv.items()))
         out = {r["node"]: r["rank"]
                for r in graph.pagerank(
                    _edges(spark, pairs), "src", "dst", iterations=4,
-                   personalize=_seed(spark, list(sv.items())),
-                   redistribute_dangling=rd).collect()}
+                   personalize=seed).collect()}
         assert set(out) == set(ref)
         for v in ref:
-            assert out[v] == pytest.approx(ref[v], abs=1e-12), rd
-
-
-def test_personalized_dangling_redistribution_conserves_mass(spark):
-    """With redistribute_dangling the personalized run keeps total
-    mass at exactly 1 on a dangling-heavy graph."""
-    pairs = [(0, 1), (0, 2), (3, 2)]  # 1 and 2 dangle
-    out = graph.pagerank(_edges(spark, pairs), "src", "dst",
-                         iterations=6,
-                         personalize=_seed(spark, [(0, 1.0), (3, 1.0)]),
-                         redistribute_dangling=True)
-    total = out.agg(F.sum("rank")).first()[0]
-    assert total == pytest.approx(1.0, abs=1e-9)
+            assert out[v] == pytest.approx(ref[v], abs=1e-12), sv
+        assert sum(out.values()) < 0.999, sv
 
 
 def test_personalized_seed_hygiene(spark):
@@ -440,30 +337,34 @@ def test_personalized_no_positive_in_graph_mass_raises(spark):
                        personalize=_seed(spark, [(99, 1.0)]))
 
 
-def test_personalized_composes_with_weight_warm_and_tol(spark):
-    """personalize + weight_col + warm_start + tol reach the same
-    personalized-weighted fixed point as the cold run, faster."""
+def test_personalized_composes_with_weight_and_warm(spark):
+    """personalize + weight_col match the python twin at fixed K, and
+    adding warm_start seeded with their fixed point stays on it."""
     triples = [(i, (i * 5 + 2) % 19, float(1 + i % 3))
                for i in range(19)]
     triples += [(i, (i * 7 + 1) % 19, 1.0) for i in range(19)]
     triples = [(a, b, w) for a, b, w in triples if a != b]
     e = _wedges(spark, triples)
-    seed = _seed(spark, [(0, 1.0), (7, 2.0)])
+    sv = {0: 1.0, 7: 2.0}
+    seed = _seed(spark, list(sv.items()))
     cold = {r["node"]: r["rank"]
-            for r in graph.pagerank(e, "src", "dst", iterations=200,
-                                    tol=1e-9, weight_col="w",
+            for r in graph.pagerank(e, "src", "dst", iterations=3,
+                                    weight_col="w",
                                     personalize=seed).collect()}
-    i_cold = graph._LAST_PR_ITERATIONS
-    ws = spark.createDataFrame(list(cold.items()),
+    exp = _reference(triples, 3, sv=sv)
+    assert set(cold) == set(exp)
+    for v in exp:
+        assert cold[v] == pytest.approx(exp[v], abs=1e-12)
+    fixed = _reference(triples, 300, sv=sv)
+    ws = spark.createDataFrame(list(fixed.items()),
                                "node long, rank double")
     warm = {r["node"]: r["rank"]
-            for r in graph.pagerank(e, "src", "dst", iterations=200,
-                                    tol=1e-9, weight_col="w",
-                                    personalize=seed,
+            for r in graph.pagerank(e, "src", "dst", iterations=3,
+                                    weight_col="w", personalize=seed,
                                     warm_start=ws).collect()}
-    assert graph._LAST_PR_ITERATIONS < i_cold
-    for v in cold:
-        assert warm[v] == pytest.approx(cold[v], abs=1e-8)
+    for v in fixed:
+        assert warm[v] == pytest.approx(fixed[v], abs=1e-12)
+    assert _l1(cold, fixed) > 1e-3
 
 
 def _hits_reference(pairs, iterations):
@@ -556,23 +457,6 @@ try:
         assert set(out) == set(exp)
         for v, r in exp.items():
             assert out[v] == pytest.approx(r, abs=1e-10)
-
-    @settings(max_examples=10, deadline=None)
-    @given(st.lists(_pair, min_size=1, max_size=15))
-    def test_dangling_redistribution_matches_python_reference(pairs):
-        """Random small graphs routinely contain dangling nodes (any
-        dst that never appears as src) — the redistribution recurrence
-        must match the reference fold node by node, and conserve mass
-        to 1 exactly (the property the flag exists for)."""
-        spark = _hyp_spark[0]
-        exp = _reference(pairs, iterations=4, redistribute_dangling=True)
-        res = graph.pagerank(_edges(spark, pairs), "src", "dst",
-                             iterations=4, redistribute_dangling=True)
-        out = {r["node"]: r["rank"] for r in res.collect()}
-        assert set(out) == set(exp)
-        for v, r in exp.items():
-            assert out[v] == pytest.approx(r, abs=1e-10)
-        assert sum(out.values()) == pytest.approx(1.0, abs=1e-9)
 
     _hyp_spark = [None]
 

@@ -10,7 +10,11 @@ from the edge id; the personalization seed is the 100 lowest node
 ids (the "trusted hosts" — they sit in the authority head, the
 realistic curation case).
 
+Every variant runs the fixed-iteration loop for K iterations (default
+5, the K the registered PageRank queries run; ``--k=N`` overrides).
+
 Usage: python tools/stress_pagerank_variants.py [nodes] [edges]
+    [--k=N] [--plain-only]
 """
 
 from __future__ import annotations
@@ -29,14 +33,10 @@ from unilever_scraping_etl_spark.session import get_session  # noqa: E402
 def main() -> None:
     n = int(sys.argv[1]) if len(sys.argv) > 1 else 200_000
     m = int(sys.argv[2]) if len(sys.argv) > 2 else 1_000_000
-    # --k=N runs the FIXED-iteration sparse loop (the r16-optimized
-    # shape) for N iterations instead of tol=1e-8 to the fixed point —
-    # the bounded form the 2M-scale 8-vs-32-core scaling runs need
-    # (the tol path at 2M/10M is ~44 iterations per variant).
-    fixed_k = None
+    k = 5
     for a in sys.argv[1:]:
         if a.startswith("--k="):
-            fixed_k = int(a.split("=", 1)[1])
+            k = int(a.split("=", 1)[1])
     spark = get_session()
     u = F.pmod(F.xxhash64(F.col("id") + m), 1_000_000) / 1_000_000.0
     edges = (spark.range(m).select(
@@ -50,20 +50,11 @@ def main() -> None:
 
     def run(label, **kw):
         t = time.perf_counter()
-        if fixed_k is not None:
-            out = graph.pagerank(edges, "src", "dst",
-                                 iterations=fixed_k, **kw)
-            it = fixed_k
-        else:
-            out = graph.pagerank(edges, "src", "dst", iterations=200,
-                                 tol=1e-8, **kw)
-            it = graph._LAST_PR_ITERATIONS
+        out = graph.pagerank(edges, "src", "dst", iterations=k, **kw)
         nodes = out.count()
         wall = time.perf_counter() - t
-        if fixed_k is None:
-            it = graph._LAST_PR_ITERATIONS
-        print(f"{label}: {it} iters, {wall:.1f} s "
-              f"({wall / it:.2f} s/iter), {nodes} nodes", flush=True)
+        print(f"{label}: {k} iters, {wall:.1f} s "
+              f"({wall / k:.2f} s/iter), {nodes} nodes", flush=True)
         return out
 
     run("plain          ")

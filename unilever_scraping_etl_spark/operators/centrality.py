@@ -52,7 +52,7 @@ from unilever_scraping_etl_spark.operators._contracts import (
 _WORKING = ("__u", "__v", "__dist", "__reg", "__val", "__est", "__t")
 
 # diagnostic: rounds the last exact call actually expanded (early exit
-# on an empty frontier) — same pattern as graph._LAST_PR_ITERATIONS
+# on an empty frontier) — same pattern as dedup._LAST_CC_ROUNDS
 _LAST_HC_ROUNDS = 0
 
 

@@ -18,24 +18,11 @@ distribution s(v) — Brin & Page's non-uniform E vector — giving the
 topic-focused variant; see the parameter docs.)
 
 Nodes with no in-links keep the (1−d)/N floor; mass arriving at
-dangling nodes (no out-links) is dropped by default, matching the
-plain fixed-iteration formulation the oracle unrolls (symmetric edge
-lists — the co-occurrence graphs this engine derives — have no
-dangling nodes, so the two definitions coincide there).
-``redistribute_dangling=True`` opts into the textbook correction
-instead: each iteration the rank mass sitting on dangling nodes is
-spread uniformly, ``rank'(v) = (1−d)/N + d·(contrib(v) + m/N)`` with
-``m = Σ_{u dangling} rank(u)`` — total mass is then conserved at
-exactly 1 on ANY graph. The dangling mass enters the plan as a 1-row
-broadcast (agg → crossJoin), never a driver collect.
-
-Convergence: ``iterations`` is the fixed K by default; passing
-``tol`` turns it into a CAP and stops early once ``max|Δrank|`` over
-the nodes falls to ``tol`` or below. Each tol check is one bounded
-driver probe (a single max-abs-delta scalar — the same discipline as
-connected components' convergence checksum) and each checked
-iteration is localCheckpointed, so the probe never re-executes the
-iteration chain.
+dangling nodes (no out-links) is dropped, matching the plain
+fixed-iteration formulation the oracle unrolls (symmetric edge lists —
+the co-occurrence graphs this engine derives — have no dangling nodes,
+so the dropped mass is zero there). d is the module constant
+``_DAMPING`` (0.85), the value every oracle CTE unrolls.
 
 Scale posture: the edge list, node set, and out-degrees are
 MATERIALIZED once up front — a lazy plan would re-derive the whole
@@ -45,9 +32,8 @@ same reason. Each iteration is
 then ONE shuffle of the rank table against the cached edges.
 Convergence is the caller's choice of K: PageRank contracts at rate
 d per iteration, so K = 5 bounds the error at d^5 ≈ 0.44 of the
-initial gap — pick K from the tolerance, or iterate in an outer loop
-on the returned frame's delta (same bounded-probe discipline as the
-CC convergence checksum).
+initial gap — pick K from the tolerance, or seed the run from a
+published snapshot's ranks (``warm_start``) to start closer.
 
 Small graphs take a driver lane instead. The operators on the two
 shared loop shapes — :func:`_until_stable` (k_core, core_number,
@@ -80,13 +66,10 @@ from unilever_scraping_etl_spark.operators._contracts import (
     require_free_columns,
 )
 
-_WORKING = ("__outdeg", "__contrib", "__rank", "__dmass", "__prev",
-            "__wr", "__wtot", "__sv", "__cn", "__esv")
+_WORKING = ("__outdeg", "__contrib", "__wr", "__sv", "__cn", "__esv")
 
-# diagnostic: iterations the last pagerank() call actually ran (the
-# tol early-stop is otherwise invisible) — same pattern as connected
-# components' _LAST_CC_ROUNDS
-_LAST_PR_ITERATIONS = 0
+# PageRank's damping factor d (module docstring)
+_DAMPING = 0.85
 
 # Diagnostics for the until_stable peeling family (r14 VERDICT #2):
 # rounds the last k_core() / core_number() call actually executed,
@@ -97,9 +80,9 @@ _LAST_PR_ITERATIONS = 0
 # previously could not distinguish from convergence. Set on every
 # call (fixed-rounds runs record rounds executed, converged=None
 # since no probe runs); not part of the operator contract. Like
-# _LAST_PR_ITERATIONS and dedup's _LAST_CC_ROUNDS these are plain
-# module globals with no thread affinity — concurrent driver threads
-# overwrite each other's verdicts; a caller that needs a race-free
+# dedup's _LAST_CC_ROUNDS these are plain module globals with no
+# thread affinity — concurrent driver threads overwrite each other's
+# verdicts; a caller that needs a race-free
 # signal uses on_cap="raise"/"warn" (delivered on the calling
 # thread), not the globals.
 _LAST_KCORE_ROUNDS: int | None = None
@@ -301,27 +284,22 @@ def _undirected(edges: DataFrame, src: str, dst: str) -> DataFrame:
 
 
 def pagerank(edges: DataFrame, src: str, dst: str,
-             iterations: int = 5, damping: float = 0.85,
+             iterations: int = 5,
              rank_digits: int | None = None,
-             tol: float | None = None,
-             redistribute_dangling: bool = False,
              warm_start: DataFrame | None = None,
              weight_col: str | None = None,
              personalize: DataFrame | None = None) -> DataFrame:
-    """Fixed-iteration PageRank over the directed edge list
-    ``edges[src, dst]`` (parallel duplicate edges count once per
-    occurrence — pre-DISTINCT the list if that is not intended).
-    Returns ``(node, rank)`` for every node appearing as a source or
-    destination; ranks start uniform at 1/N. ``rank_digits`` rounds
-    the final rank (engines disagree in the last ulp of float sums —
-    round on BOTH sides when comparing cross-engine). Edges with a
-    NULL endpoint are dropped (a NULL key would otherwise surface as
-    a phantom node with the base rank).
+    """Fixed-iteration PageRank at damping ``_DAMPING`` over the
+    directed edge list ``edges[src, dst]`` (parallel duplicate edges
+    count once per occurrence — pre-DISTINCT the list if that is not
+    intended). Returns ``(node, rank)`` for every node appearing as a
+    source or destination after exactly ``iterations`` rounds; ranks
+    start uniform at 1/N. ``rank_digits`` rounds the final rank
+    (engines disagree in the last ulp of float sums — round on BOTH
+    sides when comparing cross-engine). Edges with a NULL endpoint are
+    dropped (a NULL key would otherwise surface as a phantom node with
+    the base rank).
 
-    ``tol``: stop as soon as ``max|Δrank| <= tol`` between successive
-    iterations, with ``iterations`` as the cap.
-    ``redistribute_dangling``: conserve dangling-node mass by uniform
-    redistribution instead of dropping it (module docstring).
     The (node, rank) side of each iteration's join is broadcast,
     removing the edge-side exchange entirely — measured ~11% at sf0.1
     and a bigger first-iteration win (BASELINE.md round-11) — only
@@ -331,14 +309,12 @@ def pagerank(edges: DataFrame, src: str, dst: str,
     names are positional) seeding the iteration instead of the
     uniform start — the INCREMENTAL re-rank path: when the graph is
     a small delta away from a snapshot whose ranks are already
-    published, warm-starting from them reaches the same fixed point
-    in far fewer iterations (PageRank's fixed point is independent
-    of the start; only convergence speed changes — drift-bound
-    property-tested in tests/test_graph.py). Nodes absent from the
-    warm frame (new hosts in the delta) enter at 1/N; the seed is
-    renormalized to total mass 1 (one bounded 1-row broadcast). Pair
-    with ``tol`` so the saved iterations are realized, or with fixed
-    ``iterations`` for the oracle-checkable form.
+    published, warm-starting from them lands closer to the fixed
+    point after the same K (PageRank's fixed point is independent of
+    the start; only convergence speed changes — property-tested in
+    tests/test_graph.py). Nodes absent from the warm frame (new hosts
+    in the delta) enter at 1/N; the seed is renormalized to total
+    mass 1 (one bounded 1-row broadcast).
     ``weight_col``: WEIGHTED PageRank — rank mass flows out of each
     node proportional to the edge weight instead of uniformly,
     ``contrib(v) = Σ_{u→v} rank(u) · w(u,v) / Σ_out w(u,·)`` (the
@@ -359,22 +335,14 @@ def pagerank(edges: DataFrame, src: str, dst: str,
     absent from the graph are ignored (teleporting to a node that
     does not exist would leak rank mass), and the surviving weights
     are renormalized to total 1 — raising if no graph node carries
-    positive weight. With ``redistribute_dangling`` the dangling mass
-    also re-enters per ``s`` (the textbook personalized correction),
-    so total mass stays exactly 1. A seed uniform over all nodes
-    reduces exactly to standard PageRank (property-tested). Composes
-    with ``warm_start``/``tol``/``weight_col``."""
+    positive weight. A seed uniform over all nodes reduces exactly to
+    standard PageRank (property-tested). Composes with
+    ``warm_start``/``weight_col``."""
     if iterations < 1:
         raise ValueError("iterations must be >= 1")
-    if not 0.0 < damping < 1.0:
-        raise ValueError("damping must be in (0, 1)")
-    if tol is not None and tol < 0.0:
-        raise ValueError("tol must be >= 0")
     require_free_columns("pagerank", edges.columns, _WORKING)
     require_free_columns("pagerank", edges.columns, ("node", "rank"),
                          kind="output")
-    global _LAST_PR_ITERATIONS
-    _LAST_PR_ITERATIONS = 0
     edges = edges.filter(F.col(src).isNotNull()
                          & F.col(dst).isNotNull())
     if weight_col is not None:
@@ -429,16 +397,16 @@ def pagerank(edges: DataFrame, src: str, dst: str,
         nodes = nodes.select(
             "node", (F.col("__sv") / F.lit(float(stot))).alias("__sv")
         ).localCheckpoint()
-        base = F.lit(1.0 - damping) * F.col("__sv")
+        base = F.lit(1.0 - _DAMPING) * F.col("__sv")
+        # the closed form below needs base(src) = (1-d)·s(src) inside
+        # the edge join: attach the seed weight to the cached edge
+        # list ONCE
+        esv = nodes.select(F.col("node").alias(src),
+                           F.col("__sv").alias("__esv"))
+        edges = edges.join(esv, src).localCheckpoint()
+        src_base = F.lit(1.0 - _DAMPING) * F.col("__esv")
     else:
-        base = F.lit((1.0 - damping) / n)
-    dangling = None
-    if redistribute_dangling:
-        # nodes with no out-edge, fixed for the whole run: their rank
-        # mass re-enters uniformly each iteration
-        dangling = nodes.join(
-            edges.select(F.col(src).alias("node")).distinct(),
-            "node", "left_anti").localCheckpoint()
+        base = src_base = F.lit((1.0 - _DAMPING) / n)
     broadcast = _gate_broadcast(n)
     if warm_start is not None:
         # defensive seed aggregation (r12 ADVICE): duplicate node rows
@@ -471,70 +439,29 @@ def pagerank(edges: DataFrame, src: str, dst: str,
         ).localCheckpoint()
     else:
         ranks = nodes.select("node", F.lit(1.0 / n).alias("rank"))
-    def _dense(contribs: DataFrame, dmass: DataFrame | None) -> DataFrame:
-        """Complete the sparse contribution frame to the dense
-        (node, rank) frame — the old loop built this EVERY iteration;
-        the sparse loop below builds it once at the end (and the tol
-        path per probe)."""
-        gain = F.coalesce(F.col("__contrib"), F.lit(0.0))
-        new = nodes.join(contribs, "node", "left")
-        if dmass is not None:
-            new = new.crossJoin(F.broadcast(dmass))
-            # personalized runs re-enter dangling mass per the seed
-            # distribution (teleporting it uniformly would bleed
-            # topic-locality every iteration); total mass stays 1
-            # either way
-            gain = gain + (F.col("__dmass") * F.col("__sv")
-                           if personalize is not None
-                           else F.col("__dmass") / F.lit(float(n)))
-        return new.select(
-            "node", (base + F.lit(damping) * gain).alias("rank"))
 
-    # Sparse iteration (the fixed-iteration path): a node's rank is a
-    # CLOSED FORM of its incoming contributions — rank(v) = base(v) +
-    # d·(contrib(v) [+ dangling term]) — so materializing the dense
-    # (node, rank) frame per iteration only to join it back into the
-    # edge list was one redundant |V|-sized join PER ITERATION. The
-    # loop instead carries the sparse contribution frame and inlines
-    # the closed form into the next iteration's edge join (absent
-    # contributions coalesce to the exact 0.0 the dense frame carried);
-    # the dense frame is built ONCE after the loop. Identical
-    # arithmetic per node, identical results. The tol path keeps the
-    # dense per-iteration frame — its convergence probe needs rank
-    # deltas between successive dense frames.
-    if personalize is not None and tol is None:
-        # the closed form needs base(src) = (1-d)·s(src) inside the
-        # edge join: attach the seed weight to the cached edge list
-        # ONCE (replacing the per-iteration dense join that used to
-        # deliver it)
-        esv = nodes.select(F.col("node").alias(src),
-                           F.col("__sv").alias("__esv"))
-        edges = edges.join(esv, src).localCheckpoint()
-    prev: tuple[DataFrame, DataFrame | None] | None = None
-    for i in range(iterations):
-        _LAST_PR_ITERATIONS = i + 1
-        if prev is None:
+    # A node's rank is a CLOSED FORM of its incoming contributions —
+    # rank(v) = base(v) + d·contrib(v) — so the loop carries the sparse
+    # contribution frame and inlines the closed form into the next
+    # iteration's edge join (absent contributions coalesce to 0.0);
+    # the dense (node, rank) frame is built ONCE after the loop rather
+    # than joined back into the edge list every iteration.
+    contribs = None
+    for _ in range(iterations):
+        if contribs is None:
             # first iteration: the explicit init frame (uniform or
             # warm-start seed) is the rank source
             rside = F.broadcast(ranks) if broadcast else ranks
             joined = edges.join(rside, edges[src] == rside["node"])
             rank_u = F.col("rank")
         else:
-            pc, pdm = prev
-            cside = pc.withColumnRenamed("node", "__cn")
+            cside = contribs.withColumnRenamed("node", "__cn")
             if broadcast:
                 cside = F.broadcast(cside)
             joined = edges.join(cside, edges[src] == F.col("__cn"),
                                 "left")
-            g = F.coalesce(F.col("__contrib"), F.lit(0.0))
-            if pdm is not None:
-                joined = joined.crossJoin(F.broadcast(pdm))
-                g = g + (F.col("__dmass") * F.col("__esv")
-                         if personalize is not None
-                         else F.col("__dmass") / F.lit(float(n)))
-            src_base = (F.lit(1.0 - damping) * F.col("__esv")
-                        if personalize is not None else base)
-            rank_u = src_base + F.lit(damping) * g
+            rank_u = src_base + F.lit(_DAMPING) * F.coalesce(
+                F.col("__contrib"), F.lit(0.0))
         share = (rank_u / F.col("__outdeg") if weight_col is None
                  else rank_u
                  * F.col(weight_col).cast("double")
@@ -544,38 +471,9 @@ def pagerank(edges: DataFrame, src: str, dst: str,
                             share.alias("__contrib"))
                     .groupBy("node")
                     .agg(F.sum("__contrib").alias("__contrib")))
-        dmass = None
-        if redistribute_dangling:
-            if prev is None:
-                dsrc = ranks
-            else:
-                # dangling ranks via the same closed form (dangling
-                # derives from `nodes`, so it carries __sv when
-                # personalized)
-                dsrc = _dense(*prev)
-            dmass = (dsrc.join(dangling, "node", "left_semi")
-                     .agg(F.coalesce(F.sum("rank"), F.lit(0.0))
-                          .alias("__dmass")))
-        if tol is not None:
-            new = _dense(contribs, dmass)
-            # probe needs the frame evaluated anyway; checkpointing it
-            # also keeps each probe from re-running the iteration
-            # chain. LAZY (r16): the delta probe right below
-            # materializes it in its own job — no separate
-            # synchronous checkpoint job per probed iteration
-            new = new.localCheckpoint(eager=False)
-            delta = (new.join(ranks.withColumnRenamed("rank", "__prev"),
-                              "node")
-                     .agg(F.max(F.abs(F.col("rank") - F.col("__prev"))))
-                     .first()[0])
-            ranks = new
-            prev = None  # tol path stays dense: next join uses `ranks`
-            if delta is not None and delta <= tol:
-                break
-        else:
-            prev = (contribs, dmass)
-    if tol is None:
-        ranks = _dense(*prev)
+    gain = F.coalesce(F.col("__contrib"), F.lit(0.0))
+    ranks = nodes.join(contribs, "node", "left").select(
+        "node", (base + F.lit(_DAMPING) * gain).alias("rank"))
     if rank_digits is not None:
         ranks = ranks.select("node", F.round("rank", rank_digits)
                              .alias("rank"))
@@ -987,7 +885,7 @@ def label_propagation(edges: DataFrame, src: str, dst: str,
     on bipartite-ish structures can oscillate rather than converge,
     which fixed-K sidesteps — callers wanting convergence iterate on
     the returned frame's label-change count (bounded probe), the
-    pagerank ``tol`` discipline.
+    connected_components convergence discipline.
 
     Scale posture: the symmetric neighbor list is materialized once;
     each iteration is the (node-bounded) label table joined to the
@@ -1159,8 +1057,8 @@ def k_core(edges: DataFrame, src: str, dst: str, k: int,
     are no-ops — a ``rounds`` past the graph's peel depth returns the
     exact k-core. ``until_stable=True`` iterates to that fixpoint
     with ``rounds`` as the cap, checking one bounded count probe per
-    round (the pagerank ``tol`` discipline). Self-loops, NULL endpoints, and parallel
-    edges drop (degree is over the DISTINCT neighbor set).
+    round (the connected_components convergence discipline).
+    Self-loops, NULL endpoints, and parallel edges drop (degree is over the DISTINCT neighbor set).
 
     Scale posture: one bounded probe picks the lane (module
     docstring). Up to ``_LOCAL_EDGE_CAP`` edges the peel runs on the
@@ -1382,8 +1280,8 @@ def core_number(edges: DataFrame, src: str, dst: str,
     convergence); ``until_stable=True`` iterates to the true
     coreness with ``rounds`` as the cap, probing one bounded scalar
     (the value sum — monotone, so unchanged-sum ⇔ fixed point) per
-    round, the pagerank ``tol`` discipline. Edges are undirected; self-loops, NULL
-    endpoints, and parallel edges drop (degree over the DISTINCT
+    round, the connected_components convergence discipline. Edges are
+    undirected; self-loops, NULL endpoints, and parallel edges drop (degree over the DISTINCT
     neighbor set).
 
     Scale posture: one bounded probe picks the lane (module

@@ -27,28 +27,17 @@ def topk_per_group(df: DataFrame, group_cols: list[str], order_by: list[Column],
               .filter(F.col(rank_col) <= k))
 
 
-def asof_latest(df: DataFrame, key_cols: list[str], time_col: str,
-                tiebreak: list[Column] | None = None) -> DataFrame:
-    """J7 — latest row per key as of the max time: the day-over-day
-    price-compare the reference's snapshot-append model exists for
-    (SURVEY.md §1.1). row_number over (key ORDER BY time DESC) then
-    rn=1. One shuffle on the key; with the snapshot table date-partitioned,
-    an upper time bound prunes partitions before the shuffle."""
-    order = [F.col(time_col).desc()] + (tiebreak or [])
-    w = Window.partitionBy(*key_cols).orderBy(*order)
-    return (df.withColumn("__rn", F.row_number().over(w))
-              .filter(F.col("__rn") == 1).drop("__rn"))
-
-
 def asof_latest_agg(df: DataFrame, key_cols: list[str], time_col: str,
                     tiebreak_cols: list[str],
                     value_cols: list[str]) -> DataFrame:
-    """As-of via one aggregation: max_by(values, (time, tiebreaks)).
-    Same semantics as asof_latest when the order tuple is unique, but
-    partial-aggregates map-side — at scale this beats the window form
-    because the shuffle carries one row per key per map task instead of
-    every row. (Struct-ordered max_by plans as SortAggregate — a sort on
-    the grouping key only — which the shuffle-volume win dominates.)"""
+    """J7 — latest row per key as of the max time: the day-over-day
+    price-compare the reference's snapshot-append model exists for
+    (SURVEY.md §1.1), via one aggregation: max_by(values, (time,
+    tiebreaks)). It partial-aggregates map-side, so at scale it beats
+    a row_number window over (key ORDER BY time DESC): the shuffle
+    carries one row per key per map task instead of every row.
+    (Struct-ordered max_by plans as SortAggregate — a sort on the
+    grouping key only — which the shuffle-volume win dominates.)"""
     ord_struct = F.struct(F.col(time_col), *[F.col(c) for c in tiebreak_cols])
     val_struct = F.struct(F.col(time_col), *[F.col(c) for c in value_cols])
     agg = df.groupBy(*key_cols).agg(F.max_by(val_struct, ord_struct).alias("__v"))

@@ -5116,14 +5116,15 @@ SELECT node, round(rank, 9) AS rank FROM q3
        "from the PUBLISHED snapshot ranks, renormalized over the new "
        "node set with absent hosts entering at 1/N. PageRank's fixed "
        "point is start-independent, so warm-starting changes only "
-       "convergence speed — the drift-bound property test "
-       "(tests/test_graph.py) pins same-fixed-point-fewer-iterations "
-       "with tol; the REGISTERED form runs fixed K=3 from the warm "
-       "seed so the oracle can unroll the exact recurrence: 5 "
-       "iterations on the old graph, renormalize, 3 on the new. At "
-       "100 TB this is the nightly path: the host graph moves a few "
-       "percent per segment, and warm-start + tol re-ranks in a "
-       "handful of one-shuffle iterations instead of a cold ~50.")
+       "convergence speed — the property test (tests/test_graph.py) "
+       "pins that at the same K the warm ranks sit closer to the "
+       "fixed point than the cold ones; the REGISTERED form runs "
+       "fixed K=3 from the warm seed so the oracle can unroll the "
+       "exact recurrence: 5 iterations on the old graph, renormalize, "
+       "3 on the new. At 100 TB this is the nightly path: the host "
+       "graph moves a few percent per segment, so a warm start "
+       "reaches a given error in fewer one-shuffle iterations than a "
+       "cold one (BASELINE.md round-12).")
 def host_rank_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     records = _host_fixture_records(spark, sf_dir, "spark_hrinc_")
     old_edges = _host_edges(records)
