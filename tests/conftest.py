@@ -125,9 +125,9 @@ def cc_local_bound(monkeypatch):
     """Return ``set_bound(n)``, which sets
     ``dedup._CC_LOCAL_EDGES_DEFAULT`` to ``n`` for the rest of the
     test: ``connected_components`` calls made afterwards run the
-    single-task union-find when the edge list has at most ``n`` rows
-    and the distributed loop otherwise (``n=0``: every non-empty
-    graph). Restored at teardown."""
+    driver lane when the edge list has at most ``n`` rows and the
+    distributed loop otherwise (``n=0``: every non-empty graph).
+    Restored at teardown."""
     from unilever_scraping_etl_spark.operators import dedup
 
     def set_bound(n: int) -> None:

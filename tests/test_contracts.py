@@ -344,3 +344,54 @@ def test_operators_take_no_execution_strategy_options():
                 found.append(f"{info.name}.{name}: {sorted(taken)}")
     assert not found, f"execution-strategy options back: {found}"
     assert not hasattr(dedup, "simhash64")
+
+
+def test_one_small_graph_lane():
+    """Connected components and the graph operators share one
+    small-graph lane: a bounded ``limit(cap + 1).toArrow()`` probe in
+    ``operators/_driver_lane.py``, then numpy on the driver. No second
+    lane may return: no single-task union-find in ``dedup``, no
+    ``mapInPandas``/``coalesce`` stage or unbounded ``count()`` gate in
+    ``connected_components`` (``count()`` only on a ``limit(...)``
+    probe; ``F.coalesce`` is a column function, not a stage), and no
+    driver collect through ``toArrow()`` outside the shared lane except
+    reachability's seed collect."""
+    import ast
+
+    import unilever_scraping_etl_spark.operators as operators
+    from unilever_scraping_etl_spark.operators import dedup
+
+    assert not hasattr(dedup, "_local_components")
+    tree = ast.parse(Path(dedup.__file__).read_text())
+    fn = next(node for node in tree.body
+              if isinstance(node, ast.FunctionDef)
+              and node.name == "connected_components")
+    bad = []
+    for n in ast.walk(fn):
+        if not (isinstance(n, ast.Call)
+                and isinstance(n.func, ast.Attribute)):
+            continue
+        recv, attr = n.func.value, n.func.attr
+        if attr == "mapInPandas":
+            bad.append((attr, n.lineno))
+        elif attr == "coalesce" and not (isinstance(recv, ast.Name)
+                                         and recv.id == "F"):
+            bad.append((attr, n.lineno))
+        elif attr == "count" and not (
+                isinstance(recv, ast.Call)
+                and isinstance(recv.func, ast.Attribute)
+                and recv.func.attr == "limit"):
+            bad.append((attr, n.lineno))
+    assert not bad, f"dedup.connected_components calls {bad}"
+
+    collects = set()
+    for path in sorted(Path(operators.__file__).parent.glob("*.py")):
+        mod = ast.parse(path.read_text())
+        for top in mod.body:
+            for n in ast.walk(top):
+                if (isinstance(n, ast.Call)
+                        and isinstance(n.func, ast.Attribute)
+                        and n.func.attr == "toArrow"):
+                    collects.add((path.stem, getattr(top, "name", None)))
+    assert collects == {("_driver_lane", "_driver_graph"),
+                        ("graph", "reachability")}, collects

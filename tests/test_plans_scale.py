@@ -578,9 +578,9 @@ def test_connected_components_direction_insensitive(spark):
 
 
 def test_connected_components_local_fast_path(spark, cc_local_bound):
-    """r17 OPTIMIZATION: below the ``_CC_LOCAL_EDGES_DEFAULT`` bound the
-    operator runs a single-task union-find instead of the distributed
-    loop.
+    """At or below the ``_CC_LOCAL_EDGES_DEFAULT`` bound the operator
+    runs the driver lane (one bounded probe, a numpy kernel) instead
+    of the distributed loop.
     Pins (1) label equality with the distributed loop on
     a 500-edge random multigraph with dup edges, self-loops, and a
     long chain; (2) the bound semantics — above the bound the
@@ -601,7 +601,7 @@ def test_connected_components_local_fast_path(spark, cc_local_bound):
             dedup.connected_components(df, "id_a", "id_b").collect()}
     assert dedup._LAST_CC_ROUNDS > 0   # distributed loop ran
     assert local == dist and len(local) > 0
-    # Bound is an edge-count comparison on the materialized edge list.
+    # Bound is an edge-count limit on the materialized edge list.
     cc_local_bound(len(edges) - 1)
     dedup.connected_components(df, "id_a", "id_b").collect()
     assert dedup._LAST_CC_ROUNDS > 0
@@ -615,7 +615,7 @@ def test_connected_components_local_fast_path(spark, cc_local_bound):
 def test_connected_components_star_variant(spark, cc_local_bound):
     """r7 VERDICT item 5: the large-star/small-star loop (Kiveris et
     al. SoCC 2014) must return the identical (node, component) table
-    as the single-task union-find — including the reattachment edge
+    as the driver lane — including the reattachment edge
     cases the contraction drops from the edge set: star centers
     (appear only as parents) and nodes whose only edge is a
     self-loop."""
@@ -629,8 +629,8 @@ def test_connected_components_star_variant(spark, cc_local_bound):
     default_bound = dedup._CC_LOCAL_EDGES_DEFAULT
     for edges in cases:
         df = spark.createDataFrame(edges, "id_a long, id_b long")
-        # bound 0: the distributed loop (the r17 fast path would
-        # intercept it); then the default bound: the union-find.
+        # bound 0: the distributed loop (the driver lane would
+        # intercept it); then the default bound: the driver lane.
         cc_local_bound(0)
         st = {(r["node"], r["component"]) for r in
               dedup.connected_components(df, "id_a", "id_b").collect()}
@@ -669,6 +669,25 @@ def test_connected_components_star_two_lobe_regression(spark,
         dedup.connected_components(df, "id_a", "id_b")
 
 
+def test_connected_components_null_endpoints_both_lanes(spark,
+                                                       cc_local_bound):
+    """One NULL rule in both lanes: an edge with a NULL endpoint links
+    nothing, its non-NULL endpoint still appears and labels itself,
+    an all-NULL edge contributes nothing, and no output row has a
+    NULL node: 3 must not join component 1 through a NULL node."""
+    df = spark.createDataFrame(
+        [(1, 2), (2, None), (None, 3), (4, 4), (None, None)],
+        "id_a long, id_b long")
+    want = {(1, 1), (2, 1), (3, 3), (4, 4)}
+    for bound, rounds_taken in ((dedup._CC_LOCAL_EDGES_DEFAULT, False),
+                                (0, True)):
+        cc_local_bound(bound)
+        rows = dedup.connected_components(df, "id_a", "id_b").collect()
+        assert (dedup._LAST_CC_ROUNDS > 0) == rounds_taken, bound
+        assert len(rows) == len(want), (bound, rows)
+        assert {(r["node"], r["component"]) for r in rows} == want, bound
+
+
 def test_connected_components_rounds_log_diameter(spark, cc_local_bound,
                                                  monkeypatch):
     """Pins the measured O(log d) round bound that justifies
@@ -680,8 +699,8 @@ def test_connected_components_rounds_log_diameter(spark, cc_local_bound,
     d = 256
     edges = spark.range(d).select(
         F.col("id").alias("id_a"), (F.col("id") + 1).alias("id_b"))
-    # bound 0 opts out of the r17 single-task fast path: this test pins
-    # the DISTRIBUTED loop's round bound.
+    # bound 0 opts out of the driver lane: this test pins the
+    # DISTRIBUTED loop's round bound.
     cc_local_bound(0)
     monkeypatch.setattr(dedup, "_CC_MAX_ROUNDS", 9)
     out = dedup.connected_components(edges, "id_a", "id_b")
@@ -1605,36 +1624,49 @@ def _union_find_components(edges):
 
 
 try:
-    from hypothesis import given, settings
+    from hypothesis import example, given, settings
     from hypothesis import strategies as st
+
+    _BIG = 1 << 53
 
     @settings(max_examples=20, deadline=None)
     @given(st.lists(
         st.tuples(st.integers(0, 60), st.integers(0, 60)),
         min_size=1, max_size=20))
+    # first-seen order differs from id order
+    @example([(50, 3), (40, 60), (60, 2), (9, 9)])
+    # negative ids
+    @example([(-5, 10), (10, -20), (-1, -1), (-3, 7)])
+    # ids above 2^53, where a float conversion merges neighbours
+    @example([(_BIG + 3, _BIG + 1), (_BIG + 2, _BIG + 1),
+              ((1 << 62) + 1, -(1 << 62)), (_BIG, _BIG)])
     def test_connected_components_property_vs_union_find(edges):
-        """The distributed large-star/small-star loop must agree with a
-        reference union-find on arbitrary small graphs (chains, cliques,
-        forests, duplicates) — min-id component labels exactly —
-        self-loops INCLUDED (the contraction drops them from the edge
-        set, the node reattachment must restore them self-labeled).
-        SPARSE strategy (≤20 edges over ids 0-60): the r8 judge showed
-        dense 40-edge/31-node examples never reach the two-lobe
-        topologies where the old single-conjunct convergence test
-        stopped early. The fast-path bound is patched to 0 in the body
-        (hypothesis rejects function-scoped fixtures) so every example
-        reaches the distributed loop."""
+        """Both lanes must agree with a reference union-find on
+        arbitrary small graphs (chains, cliques, forests, duplicates) —
+        min-id component labels exactly — self-loops INCLUDED (the
+        contraction drops them from the edge set, the node reattachment
+        must restore them self-labeled). Every example runs the driver
+        lane (the default bound) and the distributed loop (bound 0,
+        patched in the body: hypothesis rejects function-scoped
+        fixtures). SPARSE strategy (≤20 edges over ids 0-60): dense
+        40-edge/31-node examples never reach the two-lobe topologies
+        where the old single-conjunct convergence test stopped early.
+        The explicit examples catch a kernel that takes minimums over
+        first-seen positions or float-converted ids."""
         from unittest import mock
 
         from unilever_scraping_etl_spark.session import get_session
 
         spark = get_session("tests")
         df = spark.createDataFrame(edges, "id_a long, id_b long")
-        with mock.patch.object(dedup, "_CC_LOCAL_EDGES_DEFAULT", 0):
-            got = {r["node"]: r["component"] for r in
-                   dedup.connected_components(df, "id_a", "id_b").collect()}
-        assert dedup._LAST_CC_ROUNDS > 0
-        assert got == _union_find_components(edges)
+        want = _union_find_components(edges)
+        for bound in (dedup._CC_LOCAL_EDGES_DEFAULT, 0):
+            with mock.patch.object(dedup, "_CC_LOCAL_EDGES_DEFAULT", bound):
+                got = {r["node"]: r["component"] for r in
+                       dedup.connected_components(df, "id_a", "id_b")
+                       .collect()}
+            assert (dedup._LAST_CC_ROUNDS > 0) == (bound == 0), bound
+            assert got == want, bound
 
     @settings(max_examples=15, deadline=None)
     @given(st.integers(1, 5), st.integers(1, 5),

@@ -1,6 +1,6 @@
 """Connected-components stress at page scale — the distributed
-large-star/small-star loop past the union-find fast path's edge bound,
-and the fast path itself at its upper bound.
+large-star/small-star loop past the driver lane's edge bound, and the
+driver lane against the distributed loop at and above that bound.
 
 Graph: the standing deterministic xxhash64 web-skew edge list
 (dst ∝ u² — heavy authority head) of tools/stress_graph_structure,
@@ -8,15 +8,21 @@ whose giant component plus long tail is the realistic dedup-pair
 shape at crawl scale.
 
 Usage: python tools/stress_cc.py [nodes] [edges] [--ops=dist,local]
+                                 [--local-edges=N1,N2,...]
 
-At the default 2M/10M the edge count reads past the 1M fast-path
-bound, so ``dist`` exercises the DISTRIBUTED loop the fast path must
-never shadow; ``local`` additionally subsamples the edge list to
-exactly the bound and runs the single-task union-find vs the
-distributed loop on the SAME subgraph (label checksums compared),
-reaching the loop by setting ``dedup._CC_LOCAL_EDGES_DEFAULT`` to 0.
-Each leg prints the bound and the round budget ``_CC_MAX_ROUNDS`` it
-ran with."""
+At the default 2M/10M the edge count reads past the 1M bound, so
+``dist`` exercises the DISTRIBUTED loop the driver lane must never
+shadow. ``local`` subsamples the edge list to each ``--local-edges``
+size (default: the bound) in ascending order and runs, on the SAME
+subgraph, the driver lane (``dedup._CC_LOCAL_EDGES_DEFAULT`` set to
+the size) and the distributed loop (bound set to 0), comparing label
+checksums. Each driver-lane line reports this process's resident set
+before the leg (``VmRSS``) and its peak after it (``VmHWM``, from
+``/proc/self/status``); the difference over the edge count is the
+lane's driver-side bytes per edge. ``VmHWM`` is a high-water mark, so
+sizes run in ascending order and a leg whose peak stays under an
+earlier one says so. Each leg prints the round budget
+``_CC_MAX_ROUNDS`` it ran with."""
 
 from __future__ import annotations
 
@@ -31,6 +37,15 @@ from unilever_scraping_etl_spark.operators import dedup  # noqa: E402
 from unilever_scraping_etl_spark.session import get_session  # noqa: E402
 
 
+def vm_kib(field: str) -> int:
+    """This process's ``field`` (``VmRSS``, ``VmHWM``) in KiB."""
+    with open("/proc/self/status") as f:
+        for line in f:
+            if line.startswith(field + ":"):
+                return int(line.split()[1])
+    raise KeyError(field)
+
+
 def checksum(labels):
     return tuple(labels.agg(
         F.sum(F.col("component").cast("decimal(38,0)")),
@@ -41,9 +56,12 @@ def checksum(labels):
 def main() -> None:
     args = [a for a in sys.argv[1:] if not a.startswith("--")]
     ops = {"dist", "local"}
+    sizes = [dedup._CC_LOCAL_EDGES_DEFAULT]
     for a in sys.argv[1:]:
         if a.startswith("--ops="):
             ops = set(a.split("=", 1)[1].split(","))
+        elif a.startswith("--local-edges="):
+            sizes = sorted(int(x) for x in a.split("=", 1)[1].split(","))
     n = int(args[0]) if len(args) > 0 else 2_000_000
     m = int(args[1]) if len(args) > 1 else 10_000_000
     spark = get_session()
@@ -67,26 +85,34 @@ def main() -> None:
 
     if "local" in ops:
         bound = dedup._CC_LOCAL_EDGES_DEFAULT
-        sub = edges.limit(bound).localCheckpoint()
-        print(f"[local] subgraph at fast-path bound {bound}: "
-              f"{sub.count()} edges; distributed leg at "
-              f"_CC_LOCAL_EDGES_DEFAULT 0, _CC_MAX_ROUNDS "
-              f"{dedup._CC_MAX_ROUNDS}")
-        t = time.perf_counter()
-        loc = checksum(dedup.connected_components(sub, "src", "dst"))
-        tl = time.perf_counter() - t
-        assert dedup._LAST_CC_ROUNDS == 0
-        dedup._CC_LOCAL_EDGES_DEFAULT = 0
-        t = time.perf_counter()
-        dist = checksum(dedup.connected_components(sub, "src", "dst"))
-        td = time.perf_counter() - t
-        dedup._CC_LOCAL_EDGES_DEFAULT = bound
-        print(f"local union-find      : {tl:.1f} s vs distributed "
-              f"(bound 0) {td:.1f} s (rounds={dedup._LAST_CC_ROUNDS}); "
-              f"checksums {'EQUAL' if loc == dist else 'MISMATCH'} {loc}",
-              flush=True)
-        if loc != dist:
-            raise SystemExit(1)
+        for size in sizes:
+            sub = edges.limit(size).localCheckpoint()
+            m_sub = sub.count()
+            print(f"[local] subgraph of {m_sub} edges; driver lane "
+                  f"at _CC_LOCAL_EDGES_DEFAULT {size}, distributed leg at "
+                  f"0, _CC_MAX_ROUNDS {dedup._CC_MAX_ROUNDS}", flush=True)
+            rss0, hwm0 = vm_kib("VmRSS"), vm_kib("VmHWM")
+            dedup._CC_LOCAL_EDGES_DEFAULT = size
+            t = time.perf_counter()
+            loc = checksum(dedup.connected_components(sub, "src", "dst"))
+            tl = time.perf_counter() - t
+            assert dedup._LAST_CC_ROUNDS == 0
+            hwm = vm_kib("VmHWM")
+            dedup._CC_LOCAL_EDGES_DEFAULT = 0
+            t = time.perf_counter()
+            dist = checksum(dedup.connected_components(sub, "src", "dst"))
+            td = time.perf_counter() - t
+            dedup._CC_LOCAL_EDGES_DEFAULT = bound
+            peak = (f"{hwm / 1024:.0f} MiB" if hwm > hwm0
+                    else f"not above the earlier {hwm0 / 1024:.0f} MiB")
+            print(f"driver lane           : {tl:.1f} s, driver VmRSS "
+                  f"{rss0 / 1024:.0f} MiB before, VmHWM {peak} after "
+                  f"({(hwm - rss0) * 1024 / m_sub:.0f} B/edge) vs "
+                  f"distributed {td:.1f} s (rounds={dedup._LAST_CC_ROUNDS}); "
+                  f"checksums {'EQUAL' if loc == dist else 'MISMATCH'} {loc}",
+                  flush=True)
+            if loc != dist:
+                raise SystemExit(1)
 
 
 if __name__ == "__main__":

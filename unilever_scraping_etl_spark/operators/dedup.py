@@ -15,8 +15,13 @@ and scales by shuffle, not by Python.
 
 from __future__ import annotations
 
+import numpy as np
 import pandas as pd  # module-level: pandas_udf type hints resolve here
 from pyspark.sql import DataFrame, functions as F
+
+from unilever_scraping_etl_spark.operators._driver_lane import (
+    _DriverGraph, _driver_graph,
+)
 
 
 def _shuffle_partitions(spark) -> int:
@@ -739,16 +744,17 @@ convergence tests — not part of the operator contract."""
 
 
 _CC_LOCAL_EDGES_DEFAULT = 1_000_000
-"""Edge-count bound for the single-task union-find fast path (see
-connected_components). Memory envelope, in the one Python worker:
-about 250 bytes per edge above an idle worker — the Arrow batches,
-the concatenated endpoint arrays, ``np.unique``'s sort and inverse,
-and the Python ``parent`` list over up to two nodes per edge.
-Measured at the bound with ``tools/stress_cc.py 2000000 1100000
---ops=local`` (1,000,000 edges, 1,132,411 nodes; 4-core host): the
-worker peaked at 294 MiB against 47 MiB idle. The ``count()`` probe
-on the materialized edge list enforces it: no edge list longer than
-this bound reaches the single task, and no call can raise it."""
+"""Edge bound of connected_components' driver lane, read at call
+time. Memory envelope, in the driver's Python process: about 300
+bytes per edge at the bound. The terms are the probed Arrow rows
+(16 bytes per edge), pyarrow's dictionary-encode memo table, the
+largest, which grows with the node count, and the int64 indices,
+ranks and labels. Measured with ``tools/stress_cc.py 2000000 5100000
+--ops=local --local-edges=1000000,2000000,5000000`` (4-core host),
+peak VmHWM over the pre-call VmRSS: 283 MiB at 1,000,000 edges
+(1.13M nodes), 311 MiB at 2M, 405 MiB at 5M (BASELINE.md). The
+probe's ``limit(_CC_LOCAL_EDGES_DEFAULT + 1)`` enforces it: no more
+rows than that ever reach the driver."""
 
 
 _CC_MAX_ROUNDS = 30
@@ -771,8 +777,8 @@ def connected_components(edges: DataFrame, src: str, dst: str) -> DataFrame:
     dedup surface is implicit in the (name, platform, createdate)
     snapshot key, SURVEY.md §1.1.)
 
-    Edge lists of at most ``_CC_LOCAL_EDGES_DEFAULT`` rows run as one
-    union-find task (see the fast-path note below). Longer ones run
+    Edge lists of at most ``_CC_LOCAL_EDGES_DEFAULT`` rows run on the
+    driver lane (see the fast-path note below). Longer ones run
     alternating large-star/small-star edge contraction (Kiveris et al.,
     "Connected Components in MapReduce and Beyond", SoCC 2014 — public
     algorithm), which rewrites the EDGE SET each round:
@@ -813,41 +819,33 @@ def connected_components(edges: DataFrame, src: str, dst: str) -> DataFrame:
     only edge was a self-loop carry no (child, parent) edge at the
     fixed point; they are reattached from the original node set and
     self-label.
+
+    NULL endpoints, in both lanes: an edge with a NULL endpoint links
+    nothing, its non-NULL endpoint still appears, and no output row
+    has a NULL node.
+
+    Fast path: the materialized edge list feeds ONE bounded probe,
+    ``limit(_CC_LOCAL_EDGES_DEFAULT + 1)``, of the driver lane the
+    graph operators share (``_driver_lane.py``). When it fits,
+    :func:`_min_id_labels` labels the nodes in numpy and the table
+    returns as a local relation, with no shuffle and no round; over
+    the bound the fallback re-runs no upstream pipeline.
     """
     global _LAST_CC_ROUNDS
-    # Materialize the DIRECTED edge list once: it feeds the count
-    # probe, the first round and the final node reattachment, and all
-    # three would otherwise re-run the upstream pair pipeline (minhash
-    # + verify, or the GEMM grid) — the most expensive subtree in every
-    # registered CC query — leaving single computation to exchange
-    # reuse, which AQE is free to decline.
-    directed = edges.select(F.col(src).cast("long").alias("a"),
-                            F.col(dst).cast("long").alias("b"))
-    directed = directed.localCheckpoint()
-    # SMALL-GRAPH FAST PATH (r17 OPTIMIZATION, guide §1.2 step 1 /
-    # §2.4): every distributed round below is a full shuffle + stage
-    # barrier over the cluster, and on the pair graphs the registered
-    # dedup queries actually produce (hundreds to thousands of edges
-    # after verification — the corpus is near-dup-sparse by
-    # construction of the thresholds) the loop is pure scheduling
-    # overhead: measured at sf0.1, the 256-edge ngram pair graph paid
-    # ~2 s / ~8 jobs for 2 distributed rounds plus checkpoints. When the
-    # VERIFIED edge list (already materialized above — the count is a
-    # metadata-cheap job over the checkpointed RDD, never a plan
-    # re-execution) fits one task, an exact single-task union-find in
-    # the Arrow lane replaces the loop: same (node, component =
-    # min id) table BY CONSTRUCTION (union-by-min-root keeps every
-    # root the minimum of its set — see _local_components), zero
-    # shuffles, one job. The bound is data-derived (edge count), not
-    # core-count-derived, so it behaves identically at any
-    # parallelism; at 100 TB a pair graph past the bound takes the
-    # distributed loop unchanged. 1M edges took 7.0 s in one Python
-    # worker against 41.1 s for the distributed loop (4-core host,
-    # tools/stress_cc.py); the worker's memory envelope is stated at
-    # the bound.
-    if directed.count() <= _CC_LOCAL_EDGES_DEFAULT:
+    # Materialize the DIRECTED edge list once: the lane probe, the first
+    # round and the node reattachment would each re-run the upstream
+    # pair pipeline otherwise, leaving single computation to exchange
+    # reuse, which AQE is free to decline. A NULL endpoint becomes a
+    # self-loop on the other one; an all-NULL edge drops.
+    a, b = F.col(src).cast("long"), F.col(dst).cast("long")
+    directed = (edges.filter(a.isNotNull() | b.isNotNull())
+                .select(F.coalesce(a, b).alias("a"),
+                        F.coalesce(b, a).alias("b"))
+                .localCheckpoint())
+    g = _driver_graph(directed, "a", "b", _CC_LOCAL_EDGES_DEFAULT)
+    if g is not None:
         _LAST_CC_ROUNDS = 0
-        return _local_components(directed)
+        return g.frame(component=_min_id_labels(g))
 
     from pyspark.sql import Window
 
@@ -906,56 +904,32 @@ def connected_components(edges: DataFrame, src: str, dst: str) -> DataFrame:
             .select("node", F.coalesce("mapped", "node").alias("component")))
 
 
-def _local_components(directed: DataFrame) -> DataFrame:
-    """Exact connected components of a SMALL edge list as one
-    union-find task (see connected_components' fast-path note). The
-    checkpointed (a, b) long frame is coalesced to one partition and
-    streamed through mapInPandas — the engine's Arrow lane, no driver
-    collect; the union-find is index-compressed numpy-backed with
-    path-halving.
-
-    Union-by-min-root makes the final root the component MINIMUM: by
-    induction every root is <= all members of its set (true at init
-    where each node is its own root; a union re-roots both sets at
-    min(root_a, root_b), which is <= every member of either), and the
-    component minimum is a member, so root == min — exactly the
-    distributed loop's label contract, independent of edge order.
-    Self-loops and duplicate edges are no-ops by construction."""
-    import numpy as np
-
-    def uf(batches):
-        import pandas as pd
-        parts = [pdf for pdf in batches if len(pdf)]
-        if not parts:
-            yield pd.DataFrame({"node": pd.Series([], dtype="int64"),
-                                "component": pd.Series([], dtype="int64")})
-            return
-        a = np.concatenate([p["a"].to_numpy() for p in parts])
-        b = np.concatenate([p["b"].to_numpy() for p in parts])
-        # Compact ids to 0..n-1; np.unique sorts, so index order IS id
-        # order and union-by-min-index == union-by-min-id.
-        nodes, inv = np.unique(np.concatenate([a, b]), return_inverse=True)
-        ai, bi = inv[:len(a)], inv[len(a):]
-        parent = list(range(len(nodes)))
-
-        def find(x: int) -> int:
-            while parent[x] != x:
-                parent[x] = parent[parent[x]]  # path halving
-                x = parent[x]
-            return x
-
-        for x, y in zip(ai.tolist(), bi.tolist()):
-            rx, ry = find(x), find(y)
-            if rx != ry:
-                if rx < ry:
-                    parent[ry] = rx
-                else:
-                    parent[rx] = ry
-        comp = nodes[np.fromiter((find(i) for i in range(len(nodes))),
-                                 dtype="int64", count=len(nodes))]
-        yield pd.DataFrame({"node": nodes, "component": comp})
-
-    return directed.coalesce(1).mapInPandas(uf, "node long, component long")
+def _min_id_labels(g: _DriverGraph) -> np.ndarray:
+    """Each node's component label, the minimum node id in it, aligned
+    with ``g.nodes``. Nodes are in first-seen order, so labels are id
+    RANKS (``argsort``), never positions or float ids. Every label
+    ``L[i] <= i`` lies in i's component; per round each edge hooks
+    ``L[a]`` onto ``L[b]`` and back (``np.minimum.at``), then
+    ``L = L[L]`` repeats until every label is a root. Labels only fall,
+    and a round that changes nothing leaves each component on one
+    root: its minimum m, since ``L[m] <= m``."""
+    ids = g.nodes.to_numpy()
+    order = np.argsort(ids, kind="stable")
+    rank = np.empty(g.n, dtype=np.int64)
+    rank[order] = np.arange(g.n)
+    a, b = rank[g.a], rank[g.b]
+    label = np.arange(g.n)
+    while True:
+        prev = label.copy()
+        np.minimum.at(label, label[a], label[b])
+        np.minimum.at(label, label[b], label[a])
+        while True:
+            jumped = label[label]
+            if np.array_equal(jumped, label):
+                break
+            label = jumped
+        if np.array_equal(label, prev):
+            return ids[order[label[rank]]]
 
 
 def embedding_near_pairs_grid(emb: DataFrame, id_col: str, vec_col: str,

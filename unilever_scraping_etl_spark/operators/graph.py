@@ -35,16 +35,17 @@ d per iteration, so K = 5 bounds the error at d^5 ≈ 0.44 of the
 initial gap — pick K from the tolerance, or seed the run from a
 published snapshot's ranks (``warm_start``) to start closer.
 
-Small graphs take a driver lane instead. The operators on the two
-shared loop shapes — :func:`_until_stable` (k_core, core_number,
-reachability) and :func:`_alternating_walk` (hits, salsa) — open every
-call with one bounded probe: the operator's filtered edge list,
-collected through ``limit(_LOCAL_EDGE_CAP + 1)``. At or under the cap
-the whole loop runs in numpy on the driver (:class:`_DriverGraph`)
-and the result returns as a local relation, so a host graph of a few
-dozen edges costs the probe's job instead of Spark jobs every round.
-Over the cap the probe's rows are dropped and the distributed lane
-runs as described above. Both lanes execute the same rounds, decide
+Small graphs take the driver lane of ``_driver_lane.py``, which also
+serves connected components. The operators on the two shared loop
+shapes — :func:`_until_stable` (k_core, core_number, reachability) and
+:func:`_alternating_walk` (hits, salsa) — open every call with one
+bounded probe: the operator's filtered edge list, collected through
+``limit(_LOCAL_EDGE_CAP + 1)``. At or under the cap the whole loop
+runs in numpy on the driver (:class:`_DriverGraph`) and the result
+returns as a local relation, so a host graph of a few dozen edges
+costs the probe's job instead of Spark jobs every round. Over the cap
+the probe's rows are dropped and the distributed lane runs as
+described above. Both lanes execute the same rounds, decide
 convergence on the same probe scalar and round through the same
 ``F.round`` projection. PageRank, label propagation, co-citation and
 triangle counting have no driver lane yet.
@@ -55,15 +56,15 @@ from __future__ import annotations
 from collections.abc import Callable
 
 import numpy as np
-import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import (DataType, DoubleType, LongType, StructField,
-                               StructType)
 
 from unilever_scraping_etl_spark.operators._contracts import (
     require_free_columns,
+)
+from unilever_scraping_etl_spark.operators._driver_lane import (
+    _DriverGraph, _driver_graph,
 )
 
 _WORKING = ("__outdeg", "__contrib", "__wr", "__sv", "__cn", "__esv")
@@ -165,8 +166,9 @@ def _until_stable(state, step: Callable, probe: Callable,
     return state, executed, converged
 
 
-# The driver lane's size gate: a probed edge list of at most this many
-# rows runs its loop in numpy on the driver. Envelope, per probed edge:
+# The graph operators' driver-lane size gate (_driver_lane.py), read at
+# call time: a probed edge list of at most this many rows runs its loop
+# in numpy on the driver. Envelope, per probed edge:
 # the Arrow rows (two 8-byte ids, plus 8 for a weight), the int64
 # endpoint indices, and the doubled int64 keys, pairs and sort
 # permutations of the symmetric or distinct list — under 256 bytes for
@@ -180,75 +182,6 @@ def _drop_loops(edges: DataFrame, src: str, dst: str) -> DataFrame:
     """``edges`` without NULL endpoints and self-loops."""
     return edges.filter(F.col(src).isNotNull() & F.col(dst).isNotNull()
                         & (F.col(src) != F.col(dst)))
-
-
-class _DriverGraph:
-    """An edge list small enough for the driver lane, indexed for
-    numpy: ``nodes`` holds the distinct endpoint values as an Arrow
-    array (output frames take their node column from it, so ids keep
-    their Spark type), ``a``/``b`` each edge's endpoint positions in
-    ``nodes``, and ``w`` the probed edge weights (None when the probe
-    took none). Edges keep the probe's multiplicity."""
-
-    def __init__(self, spark, table: pa.Table, node_type: DataType):
-        m = table.num_rows
-        enc = pa.concat_arrays([table.column(0).combine_chunks(),
-                                table.column(1).combine_chunks()]
-                               ).dictionary_encode()
-        idx = enc.indices.to_numpy(zero_copy_only=False).astype(np.int64)
-        self.spark, self.node_type = spark, node_type
-        self.nodes, self.a, self.b = enc.dictionary, idx[:m], idx[m:]
-        self.n = len(self.nodes)
-        self.w = (table.column(2).to_numpy() if table.num_columns > 2
-                  else None)
-
-    def distinct(self, symmetric: bool = False
-                 ) -> tuple[np.ndarray, np.ndarray]:
-        """The DISTINCT edge pairs, sorted by ``(a, b)``; with
-        ``symmetric`` each edge also counts reversed (the
-        :func:`_undirected` rule)."""
-        n = self.n
-        key = self.a * n + self.b
-        if symmetric:
-            key = np.concatenate([key, self.b * n + self.a])
-        key = np.unique(key)
-        return key // n, key % n
-
-    def frame(self, keep: np.ndarray | None = None,
-              **cols: np.ndarray) -> DataFrame:
-        """``(node, *cols)`` for the nodes where ``keep`` holds (every
-        node when None) as a local relation; integer columns become
-        long, float columns double."""
-        nodes = self.nodes if keep is None else self.nodes.filter(
-            pa.array(keep))
-        arrays = [nodes] + [pa.array(v if keep is None else v[keep])
-                            for v in cols.values()]
-        schema = StructType(
-            [StructField("node", self.node_type)]
-            + [StructField(k, LongType() if v.dtype.kind in "iu"
-                           else DoubleType())
-               for k, v in cols.items()])
-        return self.spark.createDataFrame(
-            pa.Table.from_arrays(arrays, names=schema.names), schema)
-
-
-def _driver_graph(edges: DataFrame, a: str, b: str,
-                  weight: Column | None = None) -> _DriverGraph | None:
-    """The lane choice: ONE bounded probe collects ``edges[a, b]``
-    (endpoints cast to their common node type, the type a union of
-    the two columns takes), plus ``weight`` when given, through
-    ``limit(_LOCAL_EDGE_CAP + 1)``. Returns the indexed graph when it
-    fits, None when the distributed lane must run. ``edges`` arrives
-    with the operator's own edge filter applied."""
-    node_type = (edges.select(F.col(a).alias("node"))
-                 .union(edges.select(F.col(b).alias("node")))
-                 .schema["node"].dataType)
-    cols = [F.col(a).cast(node_type), F.col(b).cast(node_type)]
-    t = (edges.select(*cols, *([] if weight is None else [weight]))
-         .limit(_LOCAL_EDGE_CAP + 1).toArrow())
-    if t.num_rows > _LOCAL_EDGE_CAP:
-        return None
-    return _DriverGraph(edges.sparkSession, t, node_type)
 
 
 # The bounded-probe broadcast discipline (pagerank, round 11), shared
@@ -658,7 +591,7 @@ def hits(edges: DataFrame, src: str, dst: str,
         edges = edges.filter(F.col(weight_col).isNotNull()
                              & (F.col(weight_col) > 0))
     w = None if weight_col is None else F.col(weight_col).cast("double")
-    g = _driver_graph(edges, src, dst, w)
+    g = _driver_graph(edges, src, dst, _LOCAL_EDGE_CAP, w)
     if g is not None:
         dense = _driver_walk(g, g.a, g.b, iterations, g.w, g.w,
                              lambda x: np.sqrt(np.sum(x * x)))
@@ -722,7 +655,7 @@ def salsa(edges: DataFrame, src: str, dst: str,
     require_free_columns("salsa", edges.columns,
                          ("node", "hub", "authority"), kind="output")
     edges = _drop_loops(edges, src, dst)
-    g = _driver_graph(edges, src, dst)
+    g = _driver_graph(edges, src, dst, _LOCAL_EDGE_CAP)
     if g is not None:
         a, b = g.distinct()
         od = np.bincount(a, minlength=g.n)
@@ -809,7 +742,7 @@ def reachability(edges: DataFrame, src: str, dst: str,
     # no distinct: both lanes match seeds by a semi-join, which keeps
     # each node once however many seed rows equal it
     seed_nodes = seeds.select(F.col(seeds.columns[0]).alias("node"))
-    g = _driver_graph(edges, a, b)
+    g = _driver_graph(edges, a, b, _LOCAL_EDGE_CAP)
     if g is not None:
         hit = (g.frame().join(seed_nodes, "node", "left_semi")
                .toArrow().column(0).combine_chunks())
@@ -1106,7 +1039,8 @@ def k_core(edges: DataFrame, src: str, dst: str, k: int,
     # the true fixpoint the two forms coincide (every degree >= k),
     # but the fixed-rounds contract promises one row per survivor.
     # Pinned by the hub-and-leaves test.
-    g = _driver_graph(_drop_loops(edges, src, dst), src, dst)
+    g = _driver_graph(_drop_loops(edges, src, dst), src, dst,
+                      _LOCAL_EDGE_CAP)
     if g is not None:
         na, nb = g.distinct(symmetric=True)
 
@@ -1320,7 +1254,8 @@ def core_number(edges: DataFrame, src: str, dst: str,
     # them from 1, take max(min(rank, value)). Values are monotone
     # non-increasing, so an unchanged sum means every value is
     # unchanged — one scalar probe per round.
-    g = _driver_graph(_drop_loops(edges, src, dst), src, dst)
+    g = _driver_graph(_drop_loops(edges, src, dst), src, dst,
+                      _LOCAL_EDGE_CAP)
     if g is not None:
         na, nb = g.distinct(symmetric=True)
         # na is sorted and every node has a neighbor, so each node's
