@@ -395,3 +395,45 @@ def test_one_small_graph_lane():
                     collects.add((path.stem, getattr(top, "name", None)))
     assert collects == {("_driver_lane", "_driver_graph"),
                         ("graph", "reachability")}, collects
+
+
+def test_one_parquet_read_path():
+    """Every batch parquet read in the package goes through
+    ``schemas.read_parquet``, which infers each input's schema once per
+    memo key: no other code may call ``<...>.read.parquet(...)``,
+    ``<...>.read.schema(...).parquet(...)`` or
+    ``<...>.read.format("parquet").load(...)``."""
+    import ast
+
+    import unilever_scraping_etl_spark as pkg
+
+    def reads_parquet(call):
+        if call.func.attr not in ("parquet", "load"):
+            return False
+        saw_read = saw_format = False
+        node = call.func.value
+        while isinstance(node, (ast.Attribute, ast.Call)):
+            if isinstance(node, ast.Call):
+                if (isinstance(node.func, ast.Attribute)
+                        and node.func.attr == "format"
+                        and any(isinstance(a, ast.Constant)
+                                and a.value == "parquet" for a in node.args)):
+                    saw_format = True
+                node = node.func
+            else:
+                saw_read |= node.attr == "read"
+                node = node.value
+        return saw_read and (call.func.attr == "parquet" or saw_format)
+
+    root = Path(pkg.__file__).parent
+    reads = set()
+    for path in sorted(root.rglob("*.py")):
+        mod = ast.parse(path.read_text())
+        for top in mod.body:
+            for n in ast.walk(top):
+                if (isinstance(n, ast.Call)
+                        and isinstance(n.func, ast.Attribute)
+                        and reads_parquet(n)):
+                    reads.add((str(path.relative_to(root)),
+                               getattr(top, "name", None)))
+    assert reads == {("schemas.py", "read_parquet")}, reads

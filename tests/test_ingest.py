@@ -512,3 +512,138 @@ def test_zorder_clamps_bits_for_many_columns(spark):
     z = with_zorder(li, ["l_partkey", "l_suppkey", "l_linenumber",
                          "l_quantity"])
     assert z.agg(F.min("zorder")).first()[0] >= 0
+
+
+def _jobs_launched(spark, fn):
+    """(result of fn(), number of Spark jobs it launched). Drains the
+    listener bus so the status tracker has seen every job."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize("sf", ["sf0.001", "sf0.01", "sf0.1"])
+def test_load_table_schemas_are_the_declared_schemas(spark, sf):
+    from unilever_scraping_etl_spark.schemas import TEST_TABLES, load_table
+
+    for name, declared in TEST_TABLES.items():
+        got = load_table(spark, f"/root/testdata/{sf}", name).schema
+        assert [(f.name, f.dataType) for f in got] == \
+            [(f.name, f.dataType) for f in declared], (sf, name)
+
+
+def test_load_table_infers_once_per_session(spark, tmp_path):
+    """The first read of a key runs the one inference job; every later
+    read of it runs none."""
+    import shutil
+
+    from unilever_scraping_etl_spark.schemas import load_table
+
+    from .conftest import SF_SMOKE
+
+    shutil.copy(f"{SF_SMOKE}/orders.parquet", tmp_path / "orders.parquet")
+    _, first = _jobs_launched(
+        spark, lambda: load_table(spark, str(tmp_path), "orders"))
+    _, second = _jobs_launched(
+        spark, lambda: load_table(spark, str(tmp_path), "orders"))
+    assert (first, second) == (1, 0)
+    for name in ("lineitem", "events"):
+        load_table(spark, SF_SMOKE, name)
+        _, again = _jobs_launched(
+            spark, lambda: load_table(spark, SF_SMOKE, name))
+        assert again == 0, name
+
+
+def test_memoized_schemas_equal_fresh_inference(spark):
+    from unilever_scraping_etl_spark.schemas import TEST_TABLES, read_parquet
+
+    from .conftest import SF_ORACLE
+
+    for name in TEST_TABLES:
+        path = f"{SF_ORACLE}/{name}.parquet"
+        read_parquet(spark, path)
+        memo, jobs = _jobs_launched(spark, lambda: read_parquet(spark, path))
+        assert jobs == 0, name
+        assert memo.schema == spark.read.parquet(path).schema, name
+
+
+def test_read_parquet_sees_rewritten_file_and_directory(spark, tmp_path):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from unilever_scraping_etl_spark.schemas import read_parquet
+
+    f = str(tmp_path / "one.parquet")
+    pq.write_table(pa.table({"a": pa.array([1, 2], pa.int32())}), f)
+    assert read_parquet(spark, f).dtypes == [("a", "int")]
+    assert read_parquet(spark, f).dtypes == [("a", "int")]
+    pq.write_table(pa.table({"a": ["x"], "b": pa.array([7], pa.int64())}), f)
+    df = read_parquet(spark, f)
+    assert df.dtypes == [("a", "string"), ("b", "bigint")]
+    assert [tuple(r) for r in df.collect()] == [("x", 7)]
+
+    d = str(tmp_path / "parts")
+    spark.range(4).selectExpr("cast(id as int) as k") \
+        .repartition(2).write.parquet(d)
+    assert read_parquet(spark, d).dtypes == [("k", "int")]
+    assert read_parquet(spark, d).dtypes == [("k", "int")]
+    spark.range(4).selectExpr("cast(id as string) as k", "id * 2 as v") \
+        .repartition(2).write.mode("overwrite").parquet(d)
+    df = read_parquet(spark, d)
+    assert df.dtypes == [("k", "string"), ("v", "bigint")]
+    assert sorted(r.v for r in df.collect()) == [0, 2, 4, 6]
+
+
+def test_read_parquet_reinfers_when_an_inference_conf_changes(spark,
+                                                              tmp_path):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from unilever_scraping_etl_spark.schemas import read_parquet
+
+    f = str(tmp_path / "bin.parquet")
+    pq.write_table(pa.table({"b": pa.array([b"hi"], pa.binary())}), f)
+    key = "spark.sql.parquet.binaryAsString"
+    prev = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "false")
+        assert read_parquet(spark, f).dtypes == [("b", "binary")]
+        spark.conf.set(key, "true")
+        assert read_parquet(spark, f).dtypes == [("b", "string")]
+        spark.conf.set(key, "false")
+        assert read_parquet(spark, f).dtypes == [("b", "binary")]
+    finally:
+        spark.conf.set(key, prev)
+
+
+def test_read_parquet_memo_is_bounded(spark, tmp_path, monkeypatch):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from unilever_scraping_etl_spark import schemas
+
+    monkeypatch.setattr(schemas, "_SCHEMA_MEMO_ENTRIES", 2)
+    paths = []
+    for i in range(3):
+        paths.append(str(tmp_path / f"t{i}.parquet"))
+        pq.write_table(pa.table({f"c{i}": [i]}), paths[-1])
+        schemas.read_parquet(spark, paths[-1])
+    assert len(schemas._schema_memo) <= 2
+    assert not any(k[0] == paths[0] for k in schemas._schema_memo)
+    # a file: URI shares the plain path's key
+    df, jobs = _jobs_launched(
+        spark, lambda: schemas.read_parquet(spark, f"file://{paths[2]}"))
+    assert (df.columns, jobs) == (["c2"], 0)
+    # a glob is listed by Spark, not by the memo: plain inference
+    glob = str(tmp_path / "t*.parquet")
+    assert schemas.read_parquet(spark, glob).count() == 3
+    assert not any(k[0] == glob for k in schemas._schema_memo)

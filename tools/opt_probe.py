@@ -1,10 +1,12 @@
 """Optimization-round probe: isolate registered queries, time them with
 the bench's exact methodology (warmed session, noop sink), dump
-``.explain("formatted")`` for the plan record, and count the Spark jobs
-each query launches (eager checkpoints / convergence probes each cost a
-job — the per-iteration overhead signal at local scale) and the codegen
-classes it compiles (nonzero on a warm run means code the compiled-code
-cache could not serve).
+``.explain("formatted")`` for the plan record, and count per run the
+Spark jobs each query launches and the codegen classes it compiles.
+Jobs are split into build jobs, launched while the plan is constructed
+(schema inference, eager checkpoints, convergence probes: the
+per-iteration overhead signal at local scale), and action jobs,
+launched by the noop write. Nonzero compiles on a warm run mean code
+the compiled-code cache could not serve.
 
 Usage:
     python tools/opt_probe.py [--sf DIR] [--runs N] [--plans SUFFIX] q1 q2 ...
@@ -59,10 +61,17 @@ def main() -> None:
     if args.plans:
         plan_dir.mkdir(parents=True, exist_ok=True)
 
+    def group_jobs(group: str) -> int:
+        # The status tracker is fed by the async listener bus: drain it
+        # first so every job launched so far is counted.
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
     for name in args.queries:
         spec = QUERIES[name]
         times = []
-        n_jobs = []
+        n_build_jobs = []
+        n_action_jobs = []
         n_compiled = []
         for run_i in range(args.runs):
             group = f"{name}-run{run_i}"
@@ -72,9 +81,11 @@ def main() -> None:
             t0 = time.perf_counter()
             df = spec.spark(spark, args.sf)
             t_build = time.perf_counter() - t0
+            n_build_jobs.append(group_jobs(group))
+            t1 = time.perf_counter()
             df.write.format("noop").mode("overwrite").save()
-            times.append(time.perf_counter() - t0)
-            n_jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+            times.append(t_build + time.perf_counter() - t1)
+            n_action_jobs.append(group_jobs(group) - n_build_jobs[-1])
             n_compiled.append(classes_compiled(spark) - c0)
             sc.setJobGroup("", "")
             if run_i == 0:
@@ -86,7 +97,8 @@ def main() -> None:
                 .ExplainMode.fromString("formatted"))
             (plan_dir / f"{name}_{args.plans}.txt").write_text(plan)
         print(f"{name:36s} min={min(times):7.3f}s  runs={[round(t,3) for t in times]}"
-              f"  build(run0)={build_s:6.3f}s  jobs/run={n_jobs}"
+              f"  build(run0)={build_s:6.3f}s  build_jobs/run={n_build_jobs}"
+              f"  action_jobs/run={n_action_jobs}"
               f"  compiled/run={n_compiled}")
 
 

@@ -97,8 +97,9 @@ def main(argv: list[str] | None = None) -> int:
     spark = builder.getOrCreate()
 
     if args.cmd == "compact":
+        from .schemas import read_parquet
         from .sources.ingest import with_zorder, write_clustered
-        df = spark.read.parquet(args.in_path)
+        df = read_parquet(spark, args.in_path)
         cols = [c.strip() for c in args.cluster_by.split(",") if c.strip()]
         if args.zorder:
             df = with_zorder(df, cols)
@@ -108,7 +109,7 @@ def main(argv: list[str] | None = None) -> int:
         write_clustered(df, args.out, cluster_cols, n_files=args.files)
         print(json.dumps({"compacted": args.in_path, "out": args.out,
                           "cluster_by": cols, "zorder": args.zorder,
-                          "rows": spark.read.parquet(args.out).count()},
+                          "rows": read_parquet(spark, args.out).count()},
                          sort_keys=True))
         return 0
 

@@ -8,6 +8,14 @@ we make both explicit and checked).
 
 from __future__ import annotations
 
+import copy
+import os
+import pathlib
+import stat
+import threading
+from collections import OrderedDict
+from urllib.parse import urlsplit
+
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
@@ -106,7 +114,7 @@ TEST_TABLES: dict[str, T.StructType] = {
         T.StructField("o_custkey", T.LongType()),
         T.StructField("o_orderstatus", T.StringType()),
         T.StructField("o_totalprice", T.DoubleType()),
-        T.StructField("o_orderdate", T.TimestampType()),
+        T.StructField("o_orderdate", T.TimestampNTZType()),
         T.StructField("o_orderpriority", T.StringType()),
     ]),
     "lineitem": T.StructType([
@@ -120,7 +128,7 @@ TEST_TABLES: dict[str, T.StructType] = {
         T.StructField("l_tax", T.DoubleType()),
         T.StructField("l_returnflag", T.StringType()),
         T.StructField("l_linestatus", T.StringType()),
-        T.StructField("l_shipdate", T.TimestampType()),
+        T.StructField("l_shipdate", T.TimestampNTZType()),
     ]),
     "events": T.StructType([
         T.StructField("event_id", T.LongType()),
@@ -145,10 +153,94 @@ TEST_TABLES: dict[str, T.StructType] = {
 }
 
 
+# Every conf Spark's parquet schema inference (footer read plus
+# partition discovery) consults. Each is read with ``spark.conf.get``
+# (~0.1 ms a call); ``getAll`` costs ~18 ms and would eat the saving.
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.parquet.respectSummaryFiles",
+    "spark.sql.caseSensitive",
+    "spark.sql.sources.partitionColumnTypeInference.enabled",
+)
+_SCHEMA_MEMO_ENTRIES = 256
+_schema_memo: OrderedDict[tuple, T.StructType] = OrderedDict()
+_schema_memo_lock = threading.Lock()
+
+
+def _file_signature(path: str) -> tuple | None:
+    """``(mtime_ns, ctime_ns, size)`` of ``path`` and, for a directory,
+    of every entry under it by relative name — hidden ones too, since
+    ``_metadata``/``_common_metadata`` summaries feed inference. None if
+    the path cannot be listed (a glob, a missing path, a race)."""
+    try:
+        st = os.stat(path)
+        sig = [("", st.st_mtime_ns, st.st_ctime_ns, st.st_size)]
+        if stat.S_ISDIR(st.st_mode):
+            root = pathlib.Path(path)
+            for entry in sorted(root.rglob("*")):
+                est = entry.stat()
+                sig.append((str(entry.relative_to(root)), est.st_mtime_ns,
+                            est.st_ctime_ns, est.st_size))
+    except OSError:
+        return None
+    return tuple(sig)
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` that infers each input's schema once.
+
+    Parquet inference launches a Spark job even for one file (~50 ms
+    against ~10 ms for a read with a given schema). The first read of a
+    key infers and remembers ``df.schema``; each later read passes it to
+    ``spark.read.schema(...)``, so no inference job runs. Spark still
+    lists the files on every read, and the scan's pushdown and column
+    pruning are the same as with inference.
+
+    The memo key holds everything the inferred schema depends on: the
+    absolute local path, its file signature (``_file_signature``: a
+    rewrite or a new part file changes it) and the inference confs in
+    ``_INFERENCE_CONFS``. Each entry is therefore a pure function of
+    its key — no entry depends on which call ran last — and a hit
+    returns exactly what inference would. A non-local URI, a relative
+    path (the JVM resolves it against its own working directory), a
+    glob, or a path that changed during inference is read with plain
+    inference and not remembered. The memo is bounded to
+    ``_SCHEMA_MEMO_ENTRIES`` entries, least recently used first out."""
+    parts = urlsplit(path)
+    local = parts.path if parts.scheme == "file" else path
+    sig = (_file_signature(local)
+           if parts.scheme in ("", "file") and os.path.isabs(local)
+           and not any(c in local for c in "*?[{") else None)
+    if sig is None:
+        return spark.read.parquet(path)
+    key = (local, sig, tuple(spark.conf.get(k) for k in _INFERENCE_CONFS))
+    with _schema_memo_lock:
+        schema = _schema_memo.get(key)
+        if schema is not None:
+            _schema_memo.move_to_end(key)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path)
+    df = spark.read.parquet(path)
+    if _file_signature(local) == sig:
+        with _schema_memo_lock:
+            _schema_memo[key] = copy.deepcopy(df.schema)
+            while len(_schema_memo) > _SCHEMA_MEMO_ENTRIES:
+                _schema_memo.popitem(last=False)
+    return df
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Read one test table. Plain ``spark.read.parquet`` so Catalyst keeps
-    full pushdown/pruning freedom; schemas above are the declared contract
-    and are asserted in tests, not forced onto the scan.
+    """Read one test table through ``read_parquet``: the schema is
+    inferred from the file once per memo key (local path, file
+    signature, inference confs; a non-local URI always infers), and the
+    scan keeps Catalyst's full pushdown and pruning either way. The
+    result's column names and types are ``TEST_TABLES[name]`` — tests
+    pin that at every testdata scale — but the declared schemas are not
+    forced onto the scan.
 
     ``events.ts`` has shipped in two physical encodings across testdata
     generations: TIMESTAMP(NANOS) (which Spark's parquet reader rejects
@@ -159,11 +251,12 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     epoch seconds). Normalize both to session-local TIMESTAMP (the
     session is pinned UTC) so every downstream ``ts.cast('long')`` is
     the same epoch-seconds DuckDB's ``epoch(ts)`` yields on the naive
-    value."""
+    value. The other tables' naive timestamps (``o_orderdate``,
+    ``l_shipdate``) stay TIMESTAMP_NTZ."""
     if name == "events":
         from pyspark.sql import functions as F
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+        df = read_parquet(spark, f"{sf_dir}/{name}.parquet")
         if dict(df.dtypes).get("ts") == "bigint":
             # NANOS generation, read as raw nanos: truncate to µs.
             df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
@@ -174,7 +267,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             # ts.cast('long') (illegal on NTZ under ANSI) works.
             df = df.withColumn("ts", F.to_utc_timestamp(F.col("ts"), "UTC"))
         return df
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    return read_parquet(spark, f"{sf_dir}/{name}.parquet")
 
 
 def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

@@ -35,6 +35,7 @@ import pathlib
 from pyspark.sql import DataFrame, SparkSession
 
 from ..operators.cdc import merge_upsert
+from ..schemas import read_parquet
 
 
 def latest_version(snapshot_root: str) -> int | None:
@@ -61,7 +62,7 @@ def read_snapshot(spark: SparkSession, snapshot_root: str,
         raise FileNotFoundError(
             f"snapshot version {v} not found under {snapshot_root} "
             f"(latest is {latest}; older versions may be vacuumed)")
-    return spark.read.parquet(f"{snapshot_root}/v={v}")
+    return read_parquet(spark, f"{snapshot_root}/v={v}")
 
 
 def vacuum_versions(snapshot_root: str, keep_last: int = 2) -> list[int]:
