@@ -533,10 +533,15 @@ def _jobs_launched(spark, fn):
 
 @pytest.mark.parametrize("sf", ["sf0.001", "sf0.01", "sf0.1"])
 def test_load_table_schemas_are_the_declared_schemas(spark, sf):
+    import os
+
     from unilever_scraping_etl_spark.schemas import TEST_TABLES, load_table
 
+    from .conftest import SF_SMOKE
+
+    sf_dir = os.path.join(os.path.dirname(SF_SMOKE), sf)
     for name, declared in TEST_TABLES.items():
-        got = load_table(spark, f"/root/testdata/{sf}", name).schema
+        got = load_table(spark, sf_dir, name).schema
         assert [(f.name, f.dataType) for f in got] == \
             [(f.name, f.dataType) for f in declared], (sf, name)
 
