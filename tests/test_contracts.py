@@ -330,7 +330,8 @@ def test_operators_take_no_execution_strategy_options():
               "broadcast_frontier", "broadcast_labels",
               "broadcast_degrees", "broadcast_survivors",
               "broadcast_values", "local_edges", "jumps", "block_col",
-              "sanity_cap", "algorithm", "max_iterations", "length_band"}
+              "sanity_cap", "algorithm", "max_iterations", "length_band",
+              "scorer", "centroids"}
     found = []
     for info in pkgutil.iter_modules(operators.__path__):
         if info.name.startswith("_"):
@@ -437,3 +438,57 @@ def test_one_parquet_read_path():
                     reads.add((str(path.relative_to(root)),
                                getattr(top, "name", None)))
     assert reads == {("schemas.py", "read_parquet")}, reads
+
+
+def test_every_public_name_has_a_caller():
+    """A public top-level function or class that no package module,
+    ``bench.py``, ``__spark_entry__.py`` or ``tools/`` script
+    references is a path kept alive only by its tests. References are
+    Name, Attribute and import nodes, so a docstring mention is not a
+    caller; ``@q``-registered queries are reached through the registry.
+    The allowlist is exactly the reference dataflow's own stages that
+    have no caller here: the PostgreSQL load and read-back
+    (``write_jdbc``/``read_jdbc``), the re-scrape day upsert
+    (``upsert_snapshot``), the P4 empty-page predicate
+    (``is_page_empty``, the ``is_empty`` hook of ``FallbackFetcher``)
+    and the scroll-until-marker wait (``ScrollUntilMarker``)."""
+    import ast
+
+    import unilever_scraping_etl_spark as pkg
+
+    kept = {"write_jdbc", "read_jdbc", "upsert_snapshot", "is_page_empty",
+            "ScrollUntilMarker"}
+    root = Path(pkg.__file__).parent
+    repo = root.parent
+    refs: set[str] = set()
+
+    def scan(path):
+        tree = ast.parse(path.read_text())
+        for n in ast.walk(tree):
+            if isinstance(n, ast.Name):
+                refs.add(n.id)
+            elif isinstance(n, ast.Attribute):
+                refs.add(n.attr)
+            elif isinstance(n, (ast.Import, ast.ImportFrom)):
+                refs.update(a.name.rpartition(".")[2] for a in n.names)
+        return tree
+
+    def registered(node):
+        return any(isinstance(d, ast.Call) and isinstance(d.func, ast.Name)
+                   and d.func.id == "q" for d in node.decorator_list)
+
+    public = {}
+    for path in sorted(root.rglob("*.py")):
+        for node in scan(path).body:
+            if (isinstance(node, (ast.FunctionDef, ast.ClassDef))
+                    and not node.name.startswith("_")
+                    and not registered(node)):
+                public[node.name] = f"{path.relative_to(root)}:{node.lineno}"
+    for path in (repo / "bench.py", repo / "__spark_entry__.py",
+                 *sorted((repo / "tools").glob("*.py"))):
+        scan(path)
+    unreferenced = {name for name in public if name not in refs}
+    assert not unreferenced - kept, sorted(
+        public[name] + " " + name for name in unreferenced - kept)
+    assert unreferenced == kept, f"allowlisted names now have callers: " \
+        f"{sorted(kept - unreferenced)}"

@@ -1013,10 +1013,10 @@ def test_parse_sitemaps_amp_double_escape(spark):
     assert rows[0]["loc"] == "http://h/x?q=&lt;tag&gt;"
 
 
-def test_robots_sitemaps_directive_extraction(spark):
-    """Sitemap: lines are group-independent — found above, inside,
-    and below UA groups; comments stripped; case-insensitive; and
-    they never leak into parse_robots' rule output."""
+def test_parse_robots_ignores_sitemap_lines(spark):
+    """Sitemap: lines are group-independent (RFC 9309 §2.3): above,
+    inside or below a UA group, in upper or lower case, they never
+    leak into parse_robots' rule output."""
     body = ("Sitemap: http://h/sitemap-0.xml\n"
             "User-agent: *\n"
             "Disallow: /private/\n"
@@ -1024,10 +1024,6 @@ def test_robots_sitemaps_directive_extraction(spark):
             "sitemap:http://h/sitemap-1.xml\n"
             "# sitemap: http://h/commented-out.xml\n")
     df = spark.createDataFrame([("h", body)], "host string, body string")
-    got = {(r["host"], r["sitemap"])
-           for r in hostgraph.robots_sitemaps(df).collect()}
-    assert got == {("h", "http://h/sitemap-0.xml"),
-                   ("h", "http://h/sitemap-1.xml")}
     rules = {r["path"] for r in hostgraph.parse_robots(df).collect()}
     assert rules == {"/private/"}
 
@@ -1313,10 +1309,11 @@ def test_sitemap_index_recursion_walk(spark):
     fetched = spark.createDataFrame(
         [("h", u, b) for u, b in bodies.items()],
         "host string, url string, body string")
-    rdf = spark.createDataFrame([("h", robots)],
-                                "host string, body string")
-    frontier = hostgraph.robots_sitemaps(rdf) \
-        .select("host", F.col("sitemap").alias("url"))
+    # the robots.txt hop: its Sitemap: lines seed the frontier
+    seeds = [("h", line.split(":", 1)[1].strip())
+             for line in robots.splitlines()
+             if line.lower().startswith("sitemap:")]
+    frontier = spark.createDataFrame(seeds, "host string, url string")
     seen, pages = set(), set()
     for _depth in range(5):  # sitemaps.org caps nesting
         new = [(r["host"], r["url"]) for r in frontier.collect()
@@ -1557,32 +1554,3 @@ try:
 
 except ImportError:
     pass
-
-
-def test_robots_rules_filters_placeholder_rows(spark):
-    """robots_rules (r14 ADVICE): the concrete-rules entry point for
-    callers that iterate patterns directly — identical to
-    parse_robots minus the NULL rule/path placeholder rows that
-    rule-less groups emit for §2.2.1 group-existence selection."""
-    body = ("User-agent: SparkBot\n"
-            "Disallow:\n"            # rule-less group -> placeholder
-            "\n"
-            "User-agent: *\n"
-            "Disallow: /private/\n"
-            "Allow: /private/pub/\n")
-    df = spark.createDataFrame([("h", body)], "host string, body string")
-    full = hostgraph.parse_robots(df).collect()
-    concrete = hostgraph.robots_rules(df).collect()
-    # the placeholder row exists in the full frame only
-    assert any(r["rule"] is None for r in full)
-    assert all(r["rule"] is not None and r["path"] is not None
-               for r in concrete)
-    # same concrete rows, same schema, nothing else dropped
-    key = lambda r: (r["host"], r["group_id"], r["agent"],
-                     r["rule"], r["path"])
-    assert sorted(key(r) for r in full if r["rule"] is not None) \
-        == sorted(key(r) for r in concrete)
-    assert {key(r)[2:] for r in concrete} == {
-        ("*", "disallow", "/private/"),
-        ("*", "allow", "/private/pub/"),
-    }

@@ -568,6 +568,77 @@ def test_load_table_infers_once_per_session(spark, tmp_path):
         assert again == 0, name
 
 
+_NANOS_AS_LONG = "spark.sql.legacy.parquet.nanosAsLong"
+
+
+@pytest.fixture
+def nanos_conf_unset(spark):
+    """Start with ``nanosAsLong`` unset; restore the prior value after."""
+    prior = spark.conf.get(_NANOS_AS_LONG, None)
+    spark.conf.unset(_NANOS_AS_LONG)
+    yield
+    if prior is None:
+        spark.conf.unset(_NANOS_AS_LONG)
+    else:
+        spark.conf.set(_NANOS_AS_LONG, prior)
+
+
+def test_load_table_reads_nanos_events_as_micros(spark, tmp_path,
+                                                 nanos_conf_unset):
+    """A TIMESTAMP(NANOS) ``events.ts`` loads as TIMESTAMP truncated to
+    µs, and the frame still reads after load_table has restored the
+    session conf."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from unilever_scraping_etl_spark.schemas import load_table
+
+    ns = [1_700_000_000_123_456_789, 1_600_000_000_000_000_999]
+    pq.write_table(pa.table({
+        "event_id": pa.array([1, 2], pa.int64()),
+        "ts": pa.array(ns, pa.timestamp("ns"))}),
+        str(tmp_path / "events.parquet"), version="2.6")
+    df = load_table(spark, str(tmp_path), "events")
+    assert spark.conf.get(_NANOS_AS_LONG, None) is None
+    assert dict(df.dtypes)["ts"] == "timestamp"
+    got = [r[0] for r in df.orderBy("event_id")
+           .select(F.unix_micros("ts")).collect()]
+    assert got == [n // 1000 for n in ns]
+
+
+@pytest.mark.parametrize("prior", [None, "false"])
+def test_load_table_leaves_the_session_conf_unchanged(spark, prior,
+                                                      nanos_conf_unset):
+    from unilever_scraping_etl_spark.schemas import TEST_TABLES, load_table
+
+    from .conftest import SF_ORACLE
+
+    if prior is not None:
+        spark.conf.set(_NANOS_AS_LONG, prior)
+    for name in TEST_TABLES:
+        load_table(spark, SF_ORACLE, name)
+    assert spark.conf.get(_NANOS_AS_LONG, None) == prior
+
+
+def test_events_read_keeps_other_schemas_memoized(spark, tmp_path,
+                                                  nanos_conf_unset):
+    """Reading events does not change the inference confs, so a table
+    read before and after it is inferred once."""
+    import shutil
+
+    from unilever_scraping_etl_spark.schemas import load_table
+
+    from .conftest import SF_SMOKE
+
+    shutil.copy(f"{SF_SMOKE}/orders.parquet", tmp_path / "orders.parquet")
+    _, first = _jobs_launched(
+        spark, lambda: load_table(spark, str(tmp_path), "orders"))
+    load_table(spark, SF_SMOKE, "events")
+    _, second = _jobs_launched(
+        spark, lambda: load_table(spark, str(tmp_path), "orders"))
+    assert (first, second) == (1, 0)
+
+
 def test_memoized_schemas_equal_fresh_inference(spark):
     from unilever_scraping_etl_spark.schemas import TEST_TABLES, read_parquet
 

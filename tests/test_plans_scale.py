@@ -20,6 +20,58 @@ def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+def _exact_cosine(emb, qs=None, digits=4):
+    """Exact cosine reference for the similarity kernels: (ids of qs,
+    ids of emb, rounded cosine matrix). Each score is the float64
+    dot(a, b) / (|a| * |b|), rounded with vectors._round_half_up, the
+    oracle's rule."""
+    import numpy as np
+
+    from unilever_scraping_etl_spark.functions.vectors import _round_half_up
+
+    def stack(df):
+        rows = df.select("vec_id", "embedding").orderBy("vec_id").collect()
+        return (np.array([r[0] for r in rows]),
+                np.array([r[1] for r in rows], dtype="float64"))
+
+    cid, cm = stack(emb)
+    qid, qm = (cid, cm) if qs is None else stack(qs)
+    cos = (qm @ cm.T) / np.outer(np.linalg.norm(qm, axis=1),
+                                 np.linalg.norm(cm, axis=1))
+    return qid, cid, _round_half_up(cos, digits)
+
+
+def _exact_near_pairs(emb, threshold):
+    """{(id_a, id_b, cos)} with id_a < id_b and rounded cos >= threshold."""
+    import numpy as np
+
+    ids, _, cos = _exact_cosine(emb)
+    a, b = np.nonzero((cos >= threshold)
+                      & (ids[:, None] < ids[None, :]))
+    return {(int(ids[i]), int(ids[j]), float(cos[i, j]))
+            for i, j in zip(a, b)}
+
+
+def _band_buckets_reference(vec, n_bands, n_planes, seed=42, stride=1000):
+    """Per-row hyperplane-LSH bucket ids: band t, plane p projects the
+    vector onto w[j] = cos(seed + stride*t + 131*p + 0.7*j) with a
+    sequential fold, and bit p is set when the projection is positive."""
+    import math
+
+    out = []
+    for t in range(n_bands):
+        bucket = 0
+        for p in range(n_planes):
+            base = float(seed + stride * t + 131 * p)
+            proj = 0.0
+            for j, x in enumerate(vec):
+                proj += float(x) * math.cos(base + j * 0.7)
+            if proj > 0:
+                bucket |= 1 << p
+        out.append(bucket)
+    return out
+
+
 def test_filter_pushdown_reaches_parquet_scan(spark):
     li = load_table(spark, SF_SMOKE, "lineitem")
     df = (li.filter(F.col("l_shipdate") <= F.to_timestamp(F.lit("1998-09-02")))
@@ -270,7 +322,7 @@ def test_merge_upsert_on_bucketed_snapshot_has_no_snapshot_exchange(
         spark, tmp_path):
     """The composed incremental-warehouse claim (cdc.py docstring:
     'bucketed-snapshot compatible, co-locates shuffle-free'), pinned:
-    merging a CDC batch into a snapshot stored via write_bucketed on
+    merging a CDC batch into a snapshot stored as a table bucketed on
     the merge key plans the full-outer join with ZERO Exchange on the
     snapshot side — the bucketed scan feeds the SortMergeJoin
     directly, and the ONLY exchange in the whole plan is the changes
@@ -279,15 +331,15 @@ def test_merge_upsert_on_bucketed_snapshot_has_no_snapshot_exchange(
     more Exchange. At 100 TB the snapshot is the fat side; this is the
     shuffle the bucketed store exists to delete."""
     from unilever_scraping_etl_spark.operators import cdc
-    from unilever_scraping_etl_spark.sources.ingest import write_bucketed
 
     snap = spark.range(0, 10000).select(
         F.col("id").alias("k"), (F.col("id") * 2.0).alias("val"))
     changes = spark.range(0, 1000).select(
         F.col("id").alias("k"), F.lit(1).alias("version"),
         F.lit("U").alias("op"), (F.col("id") * 3.0).alias("val"))
-    write_bucketed(snap, "b_merge_snap", ["k"], 4, sort_cols=["k"],
-                   path=str(tmp_path / "b_merge_snap"))
+    (snap.write.mode("overwrite").format("parquet").bucketBy(4, "k")
+     .sortBy("k").option("path", str(tmp_path / "b_merge_snap"))
+     .saveAsTable("b_merge_snap"))
     try:
         bucketed = _plan(cdc.merge_upsert(spark.table("b_merge_snap"),
                                           changes, ["k"], "version",
@@ -303,31 +355,6 @@ def test_merge_upsert_on_bucketed_snapshot_has_no_snapshot_exchange(
         assert "Exchange" not in scan_side.split("SortMergeJoin")[-1]
     finally:
         spark.sql("DROP TABLE IF EXISTS b_merge_snap")
-
-
-def test_bucketed_join_has_no_shuffle(spark, tmp_path):
-    """Two tables bucketed on the join key must sort-merge join with NO
-    Exchange on either side — the co-located-join contract bucketing
-    exists for (at 100 TB this removes the dominant shuffle)."""
-    from unilever_scraping_etl_spark.sources.ingest import write_bucketed
-
-    orders = load_table(spark, SF_SMOKE, "orders").select("o_orderkey", "o_totalprice")
-    li = load_table(spark, SF_SMOKE, "lineitem").select("l_orderkey", "l_quantity")
-    write_bucketed(orders, "b_orders", ["o_orderkey"], 4,
-                   sort_cols=["o_orderkey"], path=str(tmp_path / "b_orders"))
-    write_bucketed(li, "b_lineitem", ["l_orderkey"], 4,
-                   sort_cols=["l_orderkey"], path=str(tmp_path / "b_lineitem"))
-    try:
-        bo = spark.table("b_orders")
-        bl = spark.table("b_lineitem")
-        joined = bl.join(bo.hint("merge"),
-                         bl.l_orderkey == bo.o_orderkey)
-        plan = _plan(joined)
-        assert "SortMergeJoin" in plan
-        assert "Exchange" not in plan
-    finally:
-        spark.sql("DROP TABLE IF EXISTS b_orders")
-        spark.sql("DROP TABLE IF EXISTS b_lineitem")
 
 
 def test_interval_join_equals_naive_theta(spark):
@@ -450,39 +477,6 @@ def test_interval_join_hot_bin_gets_aqe_skew_split(spark):
                 spark.conf.unset(k)
             else:
                 spark.conf.set(k, v)
-
-
-def test_suggest_bin_width(spark):
-    """The helper returns the requested quantile of valid interval
-    lengths (corrupt s > e and NULL-bounded rows excluded — the same
-    rows the joins drop), raises on no valid intervals and on an
-    all-degenerate quantile, and its suggestion feeds straight back
-    into interval_join unchanged."""
-    import pytest
-    from unilever_scraping_etl_spark.operators.relational import (
-        interval_join, suggest_bin_width)
-
-    iv = spark.createDataFrame(
-        [(1, 0.0, 7.0), (2, 10.0, 17.0), (3, 100.0, 107.0),
-         (4, 0.0, 70.0),           # one long outlier
-         (5, 50.0, 20.0),          # corrupt: excluded
-         (6, None, 9.0)],          # NULL bound: excluded
-        "iid long, s double, e double")
-    w = suggest_bin_width(iv, "s", "e")        # median of {7,7,7,70}
-    assert w == 7.0
-    assert suggest_bin_width(iv, "s", "e", quantile=1.0) == 70.0
-    p = spark.createDataFrame([(1, 3.0), (2, 104.0)], "pid long, v double")
-    got = sorted((r.pid, r.iid) for r in
-                 interval_join(p, iv, "v", "s", "e", bin_width=w).collect())
-    assert got == [(1, 1), (1, 4), (2, 3)]
-    with pytest.raises(ValueError, match="quantile"):
-        suggest_bin_width(iv, "s", "e", quantile=0.0)
-    with pytest.raises(ValueError, match="no valid intervals"):
-        suggest_bin_width(iv.filter("iid = 5"), "s", "e")
-    all_zero = spark.createDataFrame([(1, 4.0, 4.0), (2, 9.0, 9.0)],
-                                     "iid long, s double, e double")
-    with pytest.raises(ValueError, match="degenerate"):
-        suggest_bin_width(all_zero, "s", "e")
 
 
 def test_interval_overlap_join_equals_naive_theta(spark):
@@ -756,18 +750,16 @@ def test_upsert_snapshot_replaces_only_touched_partitions(spark, tmp_path):
                    (3, 33.0, "2024-01-02"), (4, 40.0, "2024-01-02")}
 
 
-def test_grid_gemm_pairs_equal_one_block_and_expression(spark):
+def test_grid_gemm_pairs_equal_one_block_and_exact(spark):
     # the 4-block grid (diagonal and off-diagonal cells) must produce
     # the same pairs as the single cell — same float64 kernel, same
-    # rounding, same orientation — and as the expression pair join.
+    # rounding, same orientation — and as the exact cosine pairs.
     emb = load_table(spark, SF_SMOKE, "embeddings")
     one = {tuple(r) for r in dedup.embedding_near_pairs_grid(
         emb, "vec_id", "embedding", threshold=0.4, n_blocks=1).collect()}
     gr = {tuple(r) for r in dedup.embedding_near_pairs_grid(
         emb, "vec_id", "embedding", threshold=0.4, n_blocks=4).collect()}
-    ex = {tuple(r) for r in dedup.embedding_near_pairs(
-        emb, "vec_id", "embedding", threshold=0.4).collect()}
-    assert one == gr == ex and len(gr) > 0
+    assert one == gr == _exact_near_pairs(emb, 0.4) and len(gr) > 0
 
 
 def test_simhash_guard_identity_below_cap(spark):
@@ -958,21 +950,25 @@ def test_grid_topk_equals_expression_topk(spark):
     assert ex == gr and len(gr) == 40
 
 
-def test_grid_range_search_equals_broadcast_range_search(spark):
+def test_grid_range_search_equals_exact_range_search(spark):
     """r5 VERDICT item 4: the distributed range-search grid (corpus
     hashed into blocks, one GEMM + threshold per cell, NO merge window)
-    must be byte-identical to the broadcast range_search twin — same
-    rounding, same self-exclusion — so the registered sim_range_search
-    keeps its DuckDB oracle after the re-registration."""
+    must equal the exact range search — the oracle's rounding, self
+    pairs excluded — which the registered sim_range_search's DuckDB
+    oracle states."""
+    import numpy as np
+
     from unilever_scraping_etl_spark.operators import similarity
 
     emb = load_table(spark, SF_SMOKE, "embeddings")
     qs = emb.filter(F.col("vec_id") % 50 == 0)
-    bc = {tuple(r) for r in similarity.range_search(
-        qs, emb, threshold=0.35).collect()}
+    qid, cid, cos = _exact_cosine(emb, qs)
+    qi, ci = np.nonzero((cos >= 0.35) & (qid[:, None] != cid[None, :]))
+    want = {(int(qid[i]), int(cid[j]), float(cos[i, j]))
+            for i, j in zip(qi, ci)}
     gr = {tuple(r) for r in similarity.range_search_grid(
         qs, emb, threshold=0.35, n_blocks=4).collect()}
-    assert bc == gr and len(gr) > 0
+    assert want == gr and len(gr) > 0
 
 
 def test_grid_multi_block_scale_smoke(spark):
@@ -1007,32 +1003,6 @@ def test_grid_multi_block_scale_smoke(spark):
     assert one_topk == four_topk and len(four_topk) > 0
 
 
-def test_kmeans_quantizer_deterministic_and_recall(spark):
-    # Trained IVF quantizer: deterministic (no RNG — two runs give
-    # byte-identical centroids) and no recall regression vs the exact
-    # top-5 (measured 0.90 at sf0.001/sf0.01 on the near-uniform
-    # synthetic embeddings; real clustered distributions are where
-    # k-means beats the first-k quantizer).
-    from unilever_scraping_etl_spark.operators import similarity
-
-    emb = load_table(spark, SF_SMOKE, "embeddings")
-    c1 = {(r["bucket"], tuple(r["centroid"]))
-          for r in similarity.kmeans_centroids(emb, k=8, n_iter=3).collect()}
-    c2 = {(r["bucket"], tuple(r["centroid"]))
-          for r in similarity.kmeans_centroids(emb, k=8, n_iter=3).collect()}
-    assert c1 == c2 and len(c1) == 8
-
-    qs = emb.filter(F.col("vec_id") < 8)
-    exact = {(r[0], r[1])
-             for r in similarity.brute_force_topk(qs, emb, k=5)
-             .select("query_id", "neighbor_id").collect()}
-    cent = similarity.kmeans_centroids(emb, k=16, n_iter=5)
-    approx = {(r[0], r[1])
-              for r in similarity.ivf_topk(qs, emb, k=5, centroids=cent)
-              .select("query_id", "neighbor_id").collect()}
-    assert len(exact & approx) / len(exact) >= 0.75
-
-
 def test_sketch_rollup_accuracy(spark):
     # merged day-sketches must estimate within 5% of the exact
     # distinct count (HLL lgK default gives ~1-2% typical error).
@@ -1051,15 +1021,15 @@ def test_sketch_rollup_accuracy(spark):
 
 
 def test_hyperplane_bucket_runs_and_is_deterministic(spark):
-    # Regression: F.lit(1) << p raised TypeError (Column has no <<);
-    # the bucket id must evaluate, land in [0, 2^n_planes), and be
+    # The bucket id must evaluate, land in [0, 2^n_planes), and be
     # identical across invocations (fixed pseudo-weights, no RNG).
     from unilever_scraping_etl_spark.operators.similarity import \
-        hyperplane_bucket
+        hyperplane_band_buckets
 
     emb = load_table(spark, SF_SMOKE, "embeddings")
     out = emb.select("vec_id",
-                     hyperplane_bucket(F.col("embedding")).alias("bkt"))
+                     hyperplane_band_buckets(1, 8)(F.col("embedding"))[0]
+                     .alias("bkt"))
     rows = {(r["vec_id"], r["bkt"]) for r in out.collect()}
     assert all(0 <= b < 256 for _, b in rows)
     assert len({b for _, b in rows}) > 1  # planes actually split the corpus
@@ -1242,9 +1212,7 @@ def test_embedding_lsh_is_subset_of_exact(spark):
     # Verification step means zero false positives vs the exact rounded
     # cosine pair set at the same threshold.
     emb = load_table(spark, SF_SMOKE, "embeddings")
-    exact = {(r["id_a"], r["id_b"]) for r in
-             dedup.embedding_near_pairs(emb, "vec_id", "embedding",
-                                        threshold=0.4).collect()}
+    exact = {(a, b) for a, b, _ in _exact_near_pairs(emb, 0.4)}
     lsh = {(r["id_a"], r["id_b"]) for r in
            dedup.embedding_lsh_pairs(emb, "vec_id", "embedding",
                                      threshold=0.4).collect()}
@@ -1289,29 +1257,24 @@ def test_adaptive_n_blocks_sizes_grid_to_data(spark):
     assert adaptive_n_blocks(emb, target_block_bytes=1, max_blocks=16) == 16
 
 
-def test_band_buckets_gemm_matches_expression_form(spark):
+def test_band_buckets_gemm_matches_per_row_reference(spark):
     """VERDICT r2 item 2: the one-GEMM pandas-UDF bucket computation
-    must produce the SAME bucket ids as the per-band expression folds
-    (identical cos-pattern weights; a divergence is possible only for a
+    must produce the SAME bucket ids as per-band sequential folds over
+    the same cos-pattern weights (a divergence is possible only for a
     projection within float noise of zero, which this corpus doesn't
     have)."""
-    from unilever_scraping_etl_spark.operators.similarity import (
-        hyperplane_band_buckets, hyperplane_bucket)
+    from unilever_scraping_etl_spark.operators.similarity import \
+        hyperplane_band_buckets
 
     emb = load_table(spark, SF_SMOKE, "embeddings").limit(200)
     n_bands, n_planes = 4, 6
-    gemm = {r["vec_id"]: r["bks"] for r in
-            emb.select("vec_id",
-                       hyperplane_band_buckets(n_bands, n_planes)(
-                           F.col("embedding")).alias("bks")).collect()}
-    for t in range(n_bands):
-        expr = {r["vec_id"]: r["bkt"] for r in
-                emb.select("vec_id",
-                           hyperplane_bucket(F.col("embedding"),
-                                             n_planes=n_planes,
-                                             seed=42 + 1000 * t)
-                           .alias("bkt")).collect()}
-        assert all(gemm[v][t] == b for v, b in expr.items()), f"band {t}"
+    rows = emb.select("embedding",
+                      hyperplane_band_buckets(n_bands, n_planes)(
+                          F.col("embedding")).alias("bks")).collect()
+    assert len(rows) == 200
+    for r in rows:
+        assert list(r["bks"]) == _band_buckets_reference(
+            r["embedding"], n_bands, n_planes)
 
 
 def test_tfidf_builds_with_no_driver_side_job(spark, monkeypatch):
@@ -1349,8 +1312,7 @@ def test_decode_images_warns_on_oversized_arrow_batches(spark):
             multimodal.decode_images(media)
         assert any(issubclass(w.category, ResourceWarning) for w in caught)
 
-        multimodal.cap_arrow_batches(spark, 256)
-        assert spark.conf.get(key) == "256"
+        spark.conf.set(key, "256")
         with warnings.catch_warnings(record=True) as caught:
             warnings.simplefilter("always")
             multimodal.decode_images(media)

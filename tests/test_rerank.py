@@ -1,9 +1,9 @@
 """Cross-encoder-style reranking (operators/rerank.py) — r7 VERDICT
 item 7's first named extension, registered on the driver surface in
 round 9 (`rerank_topk` oracle-checked, `retrieve_and_rerank`
-rows-only). Covers correctness vs a pandas reference, scorer
-injectability, determinism, and the plan-shape discipline
-(Arrow-batched scorer, partitioned window, no cartesian)."""
+rows-only). Covers correctness vs a per-row Python reference,
+determinism, and the plan-shape discipline (built-in expressions,
+partitioned window, no cartesian)."""
 
 from __future__ import annotations
 
@@ -11,6 +11,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from unilever_scraping_etl_spark.functions.vectors import _round_half_up
 from unilever_scraping_etl_spark.operators import rerank, similarity
 from unilever_scraping_etl_spark.schemas import load_table
 
@@ -34,49 +35,18 @@ def _mk_candidates(spark):
     return spark.createDataFrame(rows, "query_id long, neighbor_id long")
 
 
-def test_token_overlap_scorer_reference_values():
-    q = pd.Series(["apple banana cherry", "apple banana cherry", "", None])
-    d = pd.Series(["apple banana", "zzz", "apple", "apple"])
-    got = rerank.token_overlap_scorer(q, d)
-    # doc1: inter=2, p=2/2, r=2/3 -> F1 = 0.8
-    assert got[0] == pytest.approx(0.8)
-    assert got[1] == 0.0 and got[2] == 0.0 and got[3] == 0.0
-
-
-try:
-    from hypothesis import given, settings
-    from hypothesis import strategies as st
-
-    _words = st.lists(st.sampled_from(
-        ["apple", "banana", "cherry", "date", "fig", "Fig", "APPLE", ""]),
-        min_size=0, max_size=6).map(" ".join)
-
-    @settings(max_examples=40, deadline=None)
-    @given(st.lists(st.tuples(_words | st.none(), _words | st.none()),
-                    min_size=1, max_size=12))
-    def test_token_overlap_scorer_matches_per_row_reference(pairs):
-        """The vectorized scorer (pandas str accessors, r8 ADVICE) must
-        equal the straightforward per-row token-set F1 bit-for-bit —
-        including None, empty, repeated-token, and case-folding rows
-        (the oracle's IEEE bit-identity depends on this exact op
-        tree)."""
-        def ref(q, d):
-            qs = set(str(q).lower().split()) if q is not None else set()
-            ds = set(str(d).lower().split()) if d is not None else set()
-            inter = len(qs & ds)
-            if not qs or not ds or inter == 0:
-                return 0.0
-            p, r = inter / len(ds), inter / len(qs)
-            return 2.0 * p * r / (p + r)
-
-        q = pd.Series([a for a, _ in pairs], dtype="object")
-        d = pd.Series([b for _, b in pairs], dtype="object")
-        got = rerank.token_overlap_scorer(q, d)
-        want = [ref(a, b) for a, b in pairs]
-        assert list(got) == want  # exact equality, not approx
-
-except ImportError:  # hypothesis ships in this container; belt+braces
-    pass
+def _f1(q, d):
+    """Per-row token-set F1 reference: the harmonic mean of precision
+    |q & d| / |d| and recall |q & d| / |q| over set(text.lower().split()),
+    0.0 when either set or their overlap is empty, in the operation
+    order the registered oracles use."""
+    qs = set(q.lower().split()) if q is not None else set()
+    ds = set(d.lower().split()) if d is not None else set()
+    inter = len(qs & ds)
+    if not qs or not ds or inter == 0:
+        return 0.0
+    p, r = inter / len(ds), inter / len(qs)
+    return 2.0 * p * r / (p + r)
 
 
 def test_rerank_topk_matches_pandas_reference(spark):
@@ -89,29 +59,18 @@ def test_rerank_topk_matches_pandas_reference(spark):
     texts = {1: "apple banana cherry", 2: "apple banana",
              3: "cherry date elderberry fig",
              4: "apple banana cherry date", 5: "unrelated words entirely different"}
-    scores = {n: rerank.token_overlap_scorer(
-        pd.Series([texts[1]]), pd.Series([texts[n]]))[0] for n in (2, 3, 4, 5)}
+    scores = {n: _round_half_up(_f1(texts[1], texts[n]), 6)
+              for n in (2, 3, 4, 5)}
+    assert scores[2] == 0.8  # inter=2, p=2/2, r=2/3
     want = sorted(scores.items(), key=lambda kv: (-kv[1], kv[0]))[:2]
     assert list(out["neighbor_id"]) == [n for n, _ in want]
-    assert list(out["score"]) == pytest.approx([round(s, 6) for _, s in want])
+    assert list(out["score"]) == [s for _, s in want]
     assert list(out["rank"]) == [1, 2]
-
-
-def test_rerank_scorer_injectable_and_deterministic(spark):
-    docs = _mk_corpus(spark)
-    cand = _mk_candidates(spark)
-
-    def neg_id_scorer(q: pd.Series, d: pd.Series) -> pd.Series:
-        # score independent of text: longer doc text wins (injectability probe)
-        return d.str.len().astype("float64")
-
-    out = rerank.rerank_topk(cand, docs, docs, m=1, scorer=neg_id_scorer,
-                             queries_id="doc_id", corpus_id="doc_id").toPandas()
-    assert list(out["neighbor_id"]) == [5]  # longest text
-    # determinism: same call twice, identical frames
-    out2 = rerank.rerank_topk(cand, docs, docs, m=1, scorer=neg_id_scorer,
-                              queries_id="doc_id", corpus_id="doc_id").toPandas()
-    pd.testing.assert_frame_equal(out, out2)
+    # deterministic: the same call again gives the identical frame
+    again = rerank.rerank_topk(cand, docs, docs, m=2,
+                               queries_id="doc_id", corpus_id="doc_id") \
+                  .orderBy("rank").toPandas()
+    pd.testing.assert_frame_equal(out, again)
 
 
 def test_rerank_tie_break_by_neighbor_id(spark):
@@ -126,11 +85,9 @@ def test_rerank_tie_break_by_neighbor_id(spark):
 
 
 def test_rerank_plan_shape(spark):
-    """Default scorer runs as BUILT-IN expressions — NO Python
-    boundary at all (r16; was an Arrow-batched pandas UDF, eliminated
-    per the guide's UDF rule since token-set F1 is expressible with
-    array functions, verified bit-identical). Window partitioned by
-    query (never global), no cartesian product."""
+    """The scorer runs as BUILT-IN expressions — NO Python boundary
+    at all (token-set F1 is expressible with array functions). Window
+    partitioned by query (never global), no cartesian product."""
     docs = _mk_corpus(spark)
     cand = _mk_candidates(spark)
     df = rerank.rerank_topk(cand, docs, docs, m=2,
@@ -142,41 +99,26 @@ def test_rerank_plan_shape(spark):
     assert "windowspecdefinition(query_id" in plan
 
 
-def test_rerank_injected_scorer_plan_is_arrow(spark):
-    """An INJECTED scorer still rides the Arrow-batched pandas-UDF
-    path (never BatchEvalPython) — the injectability contract is
-    unchanged by the builtin default."""
-    docs = _mk_corpus(spark)
-    cand = _mk_candidates(spark)
-    df = rerank.rerank_topk(cand, docs, docs, m=2,
-                            scorer=rerank.token_overlap_scorer,
-                            queries_id="doc_id", corpus_id="doc_id")
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "ArrowEvalPython" in plan
-    assert "BatchEvalPython" not in plan
-
-
-def test_rerank_builtin_default_matches_pandas_scorer_exactly(spark):
-    """The builtin default and an explicitly injected
-    token_overlap_scorer must agree BIT-FOR-BIT (no rounding) —
-    including whitespace runs, leading/trailing whitespace, empty,
-    NULL, and case-folding payloads."""
+def test_rerank_scores_match_per_row_reference_exactly(spark):
+    """Every pair's unrounded score equals the per-row
+    set(text.lower().split()) F1 BIT-FOR-BIT (the oracle's IEEE
+    identity depends on it) — including whitespace runs, leading/
+    trailing whitespace, empty, NULL, repeated-token and case-folding
+    payloads."""
     rows = [(1, "apple banana cherry"), (2, "  apple\tbanana  "),
             (3, ""), (4, None), (5, "APPLE Apple apple"),
-            (6, "a  b   c"), (7, "\n\napple\n"), (8, "date fig")]
+            (6, "a  b   c"), (7, "\n\napple\n"), (8, "date fig"),
+            (9, "fig Fig date date")]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     cand = docs.select(F.col("doc_id").alias("query_id")).crossJoin(
         docs.select(F.col("doc_id").alias("neighbor_id")))
-    kw = dict(queries_id="doc_id", corpus_id="doc_id",
-              round_digits=None)
-    new = (rerank.rerank_topk(cand, docs, docs, m=8, **kw)
-           .toPandas().sort_values(["query_id", "rank"])
-           .reset_index(drop=True))
-    old = (rerank.rerank_topk(cand, docs, docs, m=8,
-                              scorer=rerank.token_overlap_scorer, **kw)
-           .toPandas().sort_values(["query_id", "rank"])
-           .reset_index(drop=True))
-    pd.testing.assert_frame_equal(new, old)
+    out = rerank.rerank_topk(cand, docs, docs, m=len(rows),
+                             queries_id="doc_id", corpus_id="doc_id",
+                             round_digits=None).collect()
+    text = dict(rows)
+    got = {(r["query_id"], r["neighbor_id"]): r["score"] for r in out}
+    want = {(q, n): _f1(text[q], text[n]) for q in text for n in text}
+    assert got == want  # exact equality, not approx
 
 
 def test_retrieve_and_rerank_end_to_end(spark):

@@ -128,17 +128,6 @@ def test_probe_plan_builds_fast(spark, monkeypatch):
     assert "[" + ",".join(map(str, words)) + "]" in plan
 
 
-def test_suggest_bloom_bits():
-    m, k = rf.suggest_bloom_bits(1000, 0.01)
-    assert m % 64 == 0 and 9000 <= m <= 10240
-    assert k in (6, 7)
-    assert rf.suggest_bloom_bits(10 ** 12, 0.01)[0] == rf.MAX_BITS
-    with pytest.raises(ValueError):
-        rf.suggest_bloom_bits(0)
-    with pytest.raises(ValueError):
-        rf.suggest_bloom_bits(10, 1.5)
-
-
 def test_build_validates_args(spark):
     keys = spark.range(3).select(F.col("id").alias("k"))
     with pytest.raises(ValueError, match="multiple of 64"):

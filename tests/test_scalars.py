@@ -44,21 +44,16 @@ def test_parse_percent(spark, raw, expected):
 @settings(max_examples=5, deadline=None)
 @given(st.lists(st.integers(min_value=0, max_value=10**12), min_size=1, max_size=50))
 def test_rupiah_roundtrip_property(ns):
-    # one Spark job per example batch (fixture can't pass through @given)
+    # one Spark job per example batch (fixture can't pass through @given);
+    # the price text is formatted the way the scraped pages print it,
+    # "Rp" plus dot-grouped thousands
     from unilever_scraping_etl_spark.session import get_session
     spark = get_session("tests")
-    df = spark.createDataFrame([(n,) for n in ns], "n long")
-    out = df.select(
-        F.col("n"),
-        scalars.parse_rupiah(scalars.format_rupiah(F.col("n"))).alias("rt"))
+    df = spark.createDataFrame(
+        [(n, "Rp" + f"{n:,}".replace(",", ".")) for n in ns],
+        "n long, s string")
+    out = df.select(F.col("n"), scalars.parse_rupiah(F.col("s")).alias("rt"))
     assert all(r["rt"] == r["n"] for r in out.collect())
-
-
-def test_format_rupiah_grouping(spark):
-    assert _one(spark, scalars.format_rupiah(F.lit(1234567))) == "Rp1.234.567"
-    assert _one(spark, scalars.format_rupiah(F.lit(7))) == "Rp7"
-    assert _one(spark, scalars.format_rupiah(F.lit(100))) == "Rp100"
-    assert _one(spark, scalars.format_rupiah(F.lit(1000))) == "Rp1.000"
 
 
 def test_page_url(spark):
@@ -67,15 +62,6 @@ def test_page_url(spark):
                      .alias("u")).collect()
     assert [r["u"] for r in rows] == [
         "https://x.com/shop", "https://x.com/shop/page/2", "https://x.com/shop/page/10"]
-
-
-def test_discount_consistency(spark):
-    df = spark.createDataFrame([(80, 100, 0.2), (90, 100, 0.05)],
-                               "p long, o long, d double")
-    rows = df.select(scalars.discount_consistency(
-        F.col("p"), F.col("o"), F.col("d")).alias("err")).collect()
-    assert rows[0]["err"] == pytest.approx(0.0)
-    assert rows[1]["err"] == pytest.approx(0.05)
 
 
 # ---------------------------------------------------------------------------

@@ -181,55 +181,6 @@ def test_stream_foreach_batch_upsert_snapshot(spark, events_stream_source,
     assert got.select("event_id").distinct().count() == batch.count()
 
 
-def test_transform_with_state_sessionize(spark, events_stream_source):
-    """transformWithStateInPandas sessionizer (Spark 4 StatefulProcessor):
-    where protobuf is available, the CLOSED sessions it emits with one
-    availableNow batch must equal the batch plan's non-final sessions;
-    where it is not (this container), the operator must fail at BUILD
-    time with an actionable ImportError — both branches assert real,
-    documented behavior for the environment, so neither skips."""
-    from unilever_scraping_etl_spark.streaming.stateful import (
-        streaming_sessionize, transform_with_state_available)
-
-    path, batch = events_stream_source
-    if not transform_with_state_available():
-        with pytest.raises(ImportError, match="protobuf"):
-            streaming_sessionize(
-                spark.readStream.schema(batch.schema).parquet(path))
-        return
-
-    key = "spark.sql.streaming.stateStore.providerClass"
-    rocks = ("org.apache.spark.sql.execution.streaming."
-             "state.RocksDBStateStoreProvider")
-    before = spark.conf.get(key, None)
-    spark.conf.set(key, rocks)
-    try:
-        src = spark.readStream.schema(batch.schema).parquet(path)
-        out = _run_stream_append(
-            spark, streaming_sessionize(src, gap_sec=1800), "t_tws_sess")
-        got = sorted((r["user_id"], r["n_events"], r["duration_sec"],
-                      round(r["session_value"], 6))
-                     for r in out.collect())
-    finally:
-        if before is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, before)
-
-    # batch expectation: every session except each user's last (still
-    # open when input ends)
-    from pyspark.sql import Window
-    from unilever_scraping_etl_spark.plans.registry import QUERIES
-    sess = QUERIES["sessionize_events"].spark(spark, SF_SMOKE)
-    w = Window.partitionBy("user_id")
-    closed = (sess.withColumn("last_sid", F.max("session_id").over(w))
-              .filter(F.col("session_id") < F.col("last_sid")))
-    want = sorted((r["user_id"], r["n_events"], r["duration_sec"],
-                   round(r["session_value"], 6))
-                  for r in closed.collect())
-    assert got == want
-
-
 def test_apply_in_pandas_with_state_sessionize_closed(
         spark, events_stream_source):
     """The in-container sessionizer (applyInPandasWithState, no protobuf

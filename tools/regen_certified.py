@@ -103,7 +103,7 @@ def fp(spec):
     src = inspect.getsource(real_fn(spec.spark))
     for h in ("_spread", "_parse_bytes",
               "_host_fixture_records", "_host_edges",
-              "_anchor_queries"):
+              "_anchor_queries", "_scratch_dir"):
         helper = getattr(registry, h, None)
         if helper is not None and f"{h}(" in src:
             src += inspect.getsource(helper)

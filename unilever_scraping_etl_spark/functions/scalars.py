@@ -13,11 +13,6 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
-def strip_text(c: Column) -> Column:
-    """F1 — whitespace trim, as get_text(strip=True) (SCRAPER:251-262)."""
-    return F.trim(c)
-
-
 def parse_rupiah(c: Column) -> Column:
     """F2 — ``"Rp12.345" -> 12345``: strip the currency prefix and the
     thousands separators, cast to long (SCRAPER:256,258 does two literal
@@ -27,15 +22,6 @@ def parse_rupiah(c: Column) -> Column:
     not here."""
     return F.replace(F.replace(F.trim(c), F.lit("Rp"), F.lit("")),
                      F.lit("."), F.lit("")).try_cast("long")
-
-
-def format_rupiah(c: Column) -> Column:
-    """Inverse of parse_rupiah (engine-side, for round-trip property
-    tests): 12345 -> "Rp12.345" with thousands dots."""
-    grouped = F.regexp_replace(
-        F.reverse(c.cast("string")), r"(\d{3})(?=\d)", r"$1."
-    )
-    return F.concat(F.lit("Rp"), F.reverse(grouped))
 
 
 def parse_percent(c: Column) -> Column:
@@ -49,14 +35,6 @@ def scrape_date() -> Column:
     module import (SCRAPER:23) which splits across forked workers; we use
     the query-constant ``current_date()`` (SURVEY.md §7.4)."""
     return F.current_date()
-
-
-def discount_consistency(price: Column, originalprice: Column,
-                         stored_discount: Column) -> Column:
-    """F9 — |stored − (1 − price/originalprice)|, the invariant linking
-    the three price fields the reference extracts (SCRAPER:256-264)."""
-    recomputed = F.lit(1.0) - price.cast("double") / originalprice.cast("double")
-    return F.abs(stored_discount - recomputed)
 
 
 def page_url(base: Column, page: Column) -> Column:

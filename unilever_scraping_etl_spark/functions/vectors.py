@@ -1,7 +1,8 @@
 """Vector math over ``array<float>`` embedding columns (SURVEY.md §2.10
 L3), in two forms.
 
-The expression forms (``dot``, ``norm``, ``cosine``, ``l2_distance``)
+The expression forms (``dot``, ``norm``; an expression cosine is
+``dot(a, b) / (norm(a) * norm(b))`` with the norms hoisted per row)
 are JVM-side higher-order functions — the Catalyst-native way to do
 per-row linear algebra without leaving codegen. Accumulation is in
 double precision and strictly left-to-right (``F.aggregate`` is a
@@ -30,17 +31,6 @@ def dot(a: Column, b: Column) -> Column:
 def norm(a: Column) -> Column:
     sq = F.transform(a, lambda x: x.cast("double") * x.cast("double"))
     return F.sqrt(F.aggregate(sq, F.lit(0.0), lambda acc, x: acc + x))
-
-
-def cosine(a: Column, b: Column) -> Column:
-    return dot(a, b) / (norm(a) * norm(b))
-
-
-def l2_distance(a: Column, b: Column) -> Column:
-    diffs = F.zip_with(
-        a, b, lambda x, y: (x.cast("double") - y.cast("double"))
-        * (x.cast("double") - y.cast("double")))
-    return F.sqrt(F.aggregate(diffs, F.lit(0.0), lambda acc, x: acc + x))
 
 
 COSINE_BLOCK_ROWS = 8192

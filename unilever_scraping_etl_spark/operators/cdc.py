@@ -23,8 +23,9 @@ warehouse answer, re-expressed Spark-first:
   struct-max aggregation (partial-aggregable map-side, one shuffle)
   rather than a row_number window (full sort per key), then joins
   changes to the snapshot with a single full-outer equi-join. When the
-  snapshot lives in a bucketed store (``ingest.write_bucketed``) that
-  join co-locates shuffle-free.
+  snapshot is a table bucketed on the merge key
+  (``df.write.bucketBy(n, *keys).saveAsTable(...)``), that join reads
+  the snapshot side without an exchange.
 """
 
 from __future__ import annotations

@@ -336,7 +336,7 @@ def semdedup(emb: DataFrame, id_col: str, vec_col: str,
     # Hoist each vector's L2 norm into a per-row column computed ONCE:
     # cosine(a, b) = dot(a, b) / (norm(a) * norm(b)), and the norm
     # factors depend only on their own row — recomputing them per
-    # crossed/paired row (the naive vectors.cosine form) costs 2 extra
+    # crossed/paired row costs 2 extra
     # O(dim) array folds per pair, i.e. 3x the FLOPs of the dot alone.
     # The hoisted product is the SAME expression tree (norm evaluated
     # by the identical formula, just in an earlier Project), so every
@@ -380,9 +380,9 @@ def semdedup(emb: DataFrame, id_col: str, vec_col: str,
                                            round_pair)
     else:
         a, b = av.alias("a"), av.alias("b")
-        # Hoisted-norm pair cosine (bit-identical to vectors.cosine:
-        # the dot is symmetric in its zip order and the norm product
-        # commutes).
+        # Hoisted-norm pair cosine (bit-identical to the per-pair
+        # dot(a, b) / (norm(a) * norm(b)): the dot is symmetric in its
+        # zip order and the norm product commutes).
         pair_cos = (F.round(vectors.dot(F.col("a.__e"), F.col("b.__e"))
                             / (F.col("a.__n") * F.col("b.__n")),
                             round_pair))

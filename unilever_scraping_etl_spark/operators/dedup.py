@@ -596,31 +596,6 @@ def simhash_near_pairs(df: DataFrame, id_col: str, text_col: str,
             .filter(F.col("hamming") <= max_hamming))
 
 
-def embedding_near_pairs(emb: DataFrame, id_col: str, vec_col: str,
-                         threshold: float = 0.95,
-                         round_digits: int = 4) -> DataFrame:
-    """Embedding-cosine near-dup pairs via an expression-level pair join.
-    Oracle-identical float semantics (sequential fold dot product), but
-    O(pairs * dim) inside codegen — prefer embedding_near_pairs_grid for
-    bulk work."""
-    from ..functions.vectors import dot, norm
-    # Per-row norm hoisted out of the pair expression (bit-identical to
-    # vectors.cosine — same norm formula, evaluated once per ROW in an
-    # earlier Project instead of twice per PAIR): cuts the per-pair
-    # work from three O(dim) array folds to the dot alone.
-    x = emb.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"),
-                   norm(F.col(vec_col)).alias("n"))
-    a, b = x.alias("a"), x.alias("b")
-    # Round BEFORE thresholding: makes the pair set stable under float
-    # accumulation-order differences (and oracle-comparable).
-    return (a.join(b, F.col("a.id") < F.col("b.id"))
-             .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"),
-                     F.round(dot(F.col("a.v"), F.col("b.v"))
-                             / (F.col("a.n") * F.col("b.n")),
-                             round_digits).alias("cos"))
-             .filter(F.col("cos") >= threshold))
-
-
 def hyperplane_lsh_candidates(emb: DataFrame, id_col: str, vec_col: str,
                               n_bands: int = 8, n_planes: int = 6,
                               dim: int = 64,
@@ -656,8 +631,8 @@ def embedding_lsh_pairs(emb: DataFrame, id_col: str, vec_col: str,
     approximate.
 
     All n_bands*n_planes projections are computed in ONE Arrow-batched
-    GEMM per batch (hyperplane_band_buckets — same deterministic
-    cos-pattern weights as the expression-level hyperplane_bucket), so
+    GEMM per batch (hyperplane_band_buckets — deterministic
+    cos-pattern plane weights, no RNG), so
     the bucket step costs one BLAS call per batch instead of ~6k
     sequential expression ops per row. The exact-cosine verify is
     likewise an Arrow-batched numpy kernel (vectors.cosine_blocks'
@@ -936,11 +911,11 @@ def embedding_near_pairs_grid(emb: DataFrame, id_col: str, vec_col: str,
                               threshold: float = 0.95, n_blocks: int = 4,
                               round_digits: int = 4) -> DataFrame:
     """Embedding-cosine near-pairs as a DISTRIBUTED block-grid GEMM —
-    the numpy-kernel form of embedding_near_pairs, with no driver-side
-    collect and no corpus broadcast. The corpus is hashed into
-    ``n_blocks`` blocks; every unordered block pair (ba <= bb) becomes
-    one cogroup task whose two pandas frames are the two blocks, scored
-    with vectors.cosine_blocks. Each row is shuffled to ~n_blocks grid
+    every pair whose rounded cosine clears ``threshold``, with no
+    driver-side collect and no corpus broadcast. The corpus is hashed
+    into ``n_blocks`` blocks; every unordered block pair (ba <= bb)
+    becomes one cogroup task whose two pandas frames are the two
+    blocks, scored with vectors.cosine_blocks. Each row is shuffled to ~n_blocks grid
     cells, so shuffle volume is O(N * n_blocks) — size n_blocks so one
     block (N/n_blocks rows x dim floats) fits executor memory; the pair
     space never materializes outside a task, and inside one it is

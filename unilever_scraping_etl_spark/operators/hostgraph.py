@@ -268,9 +268,8 @@ def parse_robots(bodies: DataFrame, host_col: str = "host",
     the star group). Such groups emit one row with NULL
     ``rule``/``path`` (r13 ADVICE fix); :func:`robots_decisions`
     selects groups over ALL rows and filters the NULL placeholders
-    out before matching. Callers that iterate rules directly and do
-    NOT need group-existence semantics should use
-    :func:`robots_rules`, which filters the placeholders.
+    out before matching; a caller that iterates rules directly filters
+    ``rule IS NOT NULL`` the same way.
 
     Scale posture: one posexplode of the line list, a JVM regexp per
     line, and two windows KEYED BY HOST (lag + running sum build the
@@ -291,21 +290,6 @@ def parse_robots(bodies: DataFrame, host_col: str = "host",
     # product-token selection sees it — RFC 9309 §2.2.1 group
     # precedence is decided by group EXISTENCE, not rule presence
     return agents.join(rules, ["host", "group_id"], "left")
-
-
-def robots_rules(bodies: DataFrame, host_col: str = "host",
-                 body_col: str = "body") -> DataFrame:
-    """Concrete-rules view of :func:`parse_robots`: the same
-    ``(host, group_id, agent, rule, path)`` frame MINUS the NULL
-    ``rule``/``path`` placeholder rows that rule-less groups emit for
-    product-token selection (RFC 9309 §2.2.1). The entry point for
-    callers that iterate rules directly — e.g. feed ``path`` patterns
-    into matching logic, where a NULL pattern would raise or
-    mis-match (r14 ADVICE). Use :func:`parse_robots` itself when
-    group EXISTENCE matters (:func:`robots_decisions` does — a
-    matching group supersedes ``*`` even with no applicable rules)."""
-    return (parse_robots(bodies, host_col, body_col)
-            .filter(F.col("rule").isNotNull()))
 
 
 def _robots_groups(bodies: DataFrame, host_col: str,
@@ -399,30 +383,6 @@ def robots_delays(bodies: DataFrame, agent: str,
     return (delays.join(F.broadcast(chosen), ["host", "group_id"])
             .groupBy("host")
             .agg(F.max("delay_seconds").alias("delay_seconds")))
-
-
-def robots_sitemaps(bodies: DataFrame, host_col: str = "host",
-                    body_col: str = "body") -> DataFrame:
-    """Extract ``Sitemap:`` directives from robots.txt bodies —
-    RFC 9309 §2.3's group-INDEPENDENT lines (they apply regardless of
-    user-agent, so they never enter ``parse_robots``' group grammar).
-    This is how a crawl DISCOVERS the sitemaps ``parse_sitemaps``
-    then ingests: robots.txt → sitemap URLs → frontier entries.
-    Output: ``(host, sitemap)`` distinct, comment-stripped, one JVM
-    regexp per line, no shuffle beyond the final distinct."""
-    require_free_columns("robots_sitemaps", (host_col, body_col),
-                         ("__line", "sitemap"))
-    pat = r"(?i)^sitemap\s*:\s*(\S+)\s*$"
-    return (bodies
-            .select(F.col(host_col).alias("host"),
-                    F.explode(F.split(F.col(body_col), r"\r\n|\r|\n"))
-                    .alias("__line"))
-            .select("host",
-                    F.regexp_extract(
-                        F.trim(F.regexp_replace("__line", r"#.*$", "")),
-                        pat, 1).alias("sitemap"))
-            .filter(F.col("sitemap") != "")
-            .distinct())
 
 
 def _rep_like(path: Column) -> Column:

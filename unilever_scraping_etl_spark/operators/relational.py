@@ -131,9 +131,9 @@ def interval_join(points: DataFrame, intervals: DataFrame, point_col: str,
     is never replicated — pick ``bin_width`` near the TYPICAL interval
     length (smaller W = finer shuffle distribution but more interval
     copies; larger W = fewer copies but hotter bins, since every point
-    in a bin lands in one shuffle partition's hash bucket);
-    `suggest_bin_width` computes that typical length from the data in
-    one approx-quantile pass.
+    in a bin lands in one shuffle partition's hash bucket). A median
+    of end - start over the valid intervals (one ``approxQuantile``
+    pass) is a good starting point.
     ``max_bins_per_interval`` turns a mis-sized W (or a corrupt
     open-ended interval — the silent-explosion risk at scale) into a
     loud executor-side raise instead of an OOM. Intervals with
@@ -254,47 +254,6 @@ def interval_overlap_join(left: DataFrame, right: DataFrame,
     return (lb.join(rb, cond)
             .drop(lb["__bin"]).drop(rb["__bin"])
             .drop(lb["__sbin"]).drop(rb["__sbin"]))
-
-
-def suggest_bin_width(intervals: DataFrame, start_col: str, end_col: str,
-                      quantile: float = 0.5,
-                      relative_error: float = 0.01) -> float:
-    """Data-driven ``bin_width`` for the binned interval joins — the
-    one parameter a user can genuinely mis-size (too small explodes
-    interval replication, too big concentrates every point of a wide
-    bin into one shuffle hash bucket). The docstring cost model says
-    "pick W near the TYPICAL interval length"; this helper computes
-    exactly that: the ``quantile`` (default median) of end - start over
-    the valid intervals, via `approxQuantile` (Greenwald-Khanna, one
-    pass, no sort — a single cheap job even on a 100 TB table, and an
-    EXPLICIT driver-side action, called once at plan-build time like
-    the boundary probe in sources/ingest.py, never inside a plan).
-
-    A median-length bin bounds replication (a typical interval copies
-    to ~2 bins) while keeping bins fine enough that no single bin
-    swallows a constant fraction of the domain. Skewed length
-    distributions are the caller's veto: a 0.9 quantile of wildly
-    mixed lengths trades hotter bins for less replication of the long
-    tail. Degenerate inputs raise: no valid intervals, or an all-
-    zero-length quantile (every interval [x, x)) — there is no
-    meaningful width to suggest from either."""
-    if not 0.0 < quantile <= 1.0:
-        raise ValueError(f"quantile must be in (0, 1], got {quantile}")
-    lengths = (intervals
-               .filter(F.col(start_col) <= F.col(end_col))
-               .select((F.col(end_col).cast("double")
-                        - F.col(start_col).cast("double")).alias("__len")))
-    got = lengths.approxQuantile("__len", [quantile], relative_error)
-    if not got:
-        raise ValueError("suggest_bin_width: no valid intervals "
-                         f"(need {start_col} <= {end_col}, non-NULL)")
-    width = float(got[0])
-    if width <= 0.0:
-        raise ValueError(
-            f"suggest_bin_width: the {quantile} quantile of interval "
-            f"lengths is {width} — all-degenerate intervals have no "
-            f"typical width; pass bin_width explicitly")
-    return width
 
 
 def asof_join(left: DataFrame, right: DataFrame, on: list[str],

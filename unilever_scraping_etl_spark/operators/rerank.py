@@ -15,78 +15,37 @@ Spark-first layout (all sizes are the 100 TB posture):
 - candidates are Q×k rows — bounded by construction, never the
   corpus; both payload joins are plain equi-joins (broadcast when the
   payload table is small, shuffle otherwise — Catalyst's choice).
-- the DEFAULT scorer (token-set F1) runs as pure built-in column
-  expressions — no Python boundary at all (r16 optimization; verified
-  bit-identical to the pandas form). An INJECTED scorer runs as an
-  Arrow-batched pandas UDF over the two payload columns (never
-  row-at-a-time Python; the suite linter rejects BatchEvalPython).
+- the scorer (token-set F1) runs as pure built-in column expressions
+  — no Python boundary at all.
 - re-ranking is a row_number window PARTITIONED by query (group size
   <= k, bounded — WindowGroupLimit-eligible, never global).
 
-The scorer is INJECTABLE: any ``(pd.Series, pd.Series) -> pd.Series``
-of doubles. No transformer runtime exists in this container, so the
-default is an honest deterministic lexical cross-scorer
-(``token_overlap_scorer`` — whitespace-token F1 between query and
-document text, a real reranking signal, not a dummy), mirroring the
-multimodal-codec stub discipline: real Spark plumbing, swappable
-kernel. Reference parity: the reference repo has no retrieval stage
+No transformer runtime exists in this container, so the scorer is an
+honest deterministic lexical cross-scorer: whitespace-token F1 between
+query and document text, a real reranking signal that sees both texts,
+not a dummy. Reference parity: the reference repo has no retrieval stage
 (scrap_tokopedia.py is scrape-only); this operator serves the
 LLM-data-pipeline brief, not a reference feature.
 """
 
 from __future__ import annotations
 
-from typing import Callable
-
-import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-Scorer = Callable[[pd.Series, pd.Series], pd.Series]
-
 
 def _token_set(col: Column) -> Column:
-    """Builtin twin of ``token_overlap_scorer``'s tokenization:
-    lowercase, split on whitespace runs, drop empty tokens (leading/
-    trailing whitespace and repeated separators), distinct — the array
-    form of ``set(text.lower().split())``. NULL -> empty array."""
+    """The scorer's tokenization: lowercase, split on whitespace runs,
+    drop empty tokens (leading/trailing whitespace and repeated
+    separators), distinct — the array form of
+    ``set(text.lower().split())``. NULL -> empty array."""
     return F.array_distinct(F.filter(
         F.split(F.lower(F.coalesce(col, F.lit(""))), r"\s+"),
         lambda t: t != F.lit("")))
 
 
-def token_overlap_scorer(q_text: pd.Series, d_text: pd.Series) -> pd.Series:
-    """Deterministic lexical cross-scorer: token-set F1 (harmonic mean
-    of precision/recall of the whitespace-token overlap, lowercased).
-    A real cross-signal — it sees BOTH texts, unlike an embedding dot
-    product — and the in-container stand-in for a model-backed
-    cross-encoder. Empty-token edge cases score 0.0.
-
-    Tokenization rides pandas' vectorized str accessors (r8 ADVICE);
-    the set-F1 combine keeps the exact operation tree
-    ``2.0 * (i/|d|) * (i/|q|) / (i/|d| + i/|q|)`` so the registered
-    oracle's identical DuckDB expression is IEEE-bit-identical (the
-    registry's no-rounding rule for per-row floats)."""
-    qs = (q_text.fillna("").astype(str).str.lower().str.split()
-          .map(set, na_action="ignore"))
-    ds = (d_text.fillna("").astype(str).str.lower().str.split()
-          .map(set, na_action="ignore"))
-
-    def f1(pair):
-        a, b = pair
-        inter = len(a & b)
-        if not a or not b or inter == 0:
-            return 0.0
-        p, r = inter / len(b), inter / len(a)
-        return 2.0 * p * r / (p + r)
-
-    return pd.Series(map(f1, zip(qs, ds)), index=q_text.index,
-                     dtype="float64")
-
-
 def rerank_topk(candidates: DataFrame, queries: DataFrame,
                 corpus: DataFrame, m: int,
-                scorer: Scorer | None = None,
                 query_id: str = "query_id",
                 neighbor_id: str = "neighbor_id",
                 query_payload: str = "text",
@@ -94,11 +53,11 @@ def rerank_topk(candidates: DataFrame, queries: DataFrame,
                 queries_id: str | None = None,
                 corpus_id: str | None = None,
                 round_digits: int | None = 6) -> DataFrame:
-    """Re-score ``candidates`` (query_id, neighbor_id[, ...]) with a
-    pairwise cross-scorer over the joined payloads and keep the top
+    """Re-score ``candidates`` (query_id, neighbor_id[, ...]) with the
+    token-set F1 cross-scorer over the joined payloads and keep the top
     ``m`` per query. Returns (query_id, neighbor_id, score, rank)
     with rank 1..m per query, ties broken by neighbor_id — fully
-    deterministic for a deterministic scorer.
+    deterministic.
 
     ``round_digits`` rounds the score BEFORE ranking so the ranking is
     stable under float noise across plans (same discipline as
@@ -109,11 +68,10 @@ def rerank_topk(candidates: DataFrame, queries: DataFrame,
     (candidates are Q×k by construction); AQE's skew join handles the
     residue.
 
-    ``scorer=None`` (the default) evaluates the token-set F1 as
-    built-in array expressions — zero Python in the row path, scores
-    bit-identical to ``token_overlap_scorer`` (pinned by test). Pass a
-    scorer (including ``token_overlap_scorer`` itself) to run the
-    Arrow-batched pandas-UDF path instead."""
+    The F1 is evaluated as built-in array expressions — zero Python in
+    the row path. Its score is bit-identical to the per-row
+    ``set(text.lower().split())`` F1 (pinned by test) and to the
+    registered oracles' DuckDB expression."""
     qid = queries_id if queries_id is not None else query_id
     qp = queries.select(F.col(qid).alias("__qid"),
                         F.col(query_payload).alias("__qp"))
@@ -123,42 +81,28 @@ def rerank_topk(candidates: DataFrame, queries: DataFrame,
     paired = (candidates
               .join(qp, F.col(query_id) == F.col("__qid"), "inner")
               .join(cp, F.col(neighbor_id) == F.col("__nid"), "inner"))
-    if scorer is None:
-        # Default token-set F1 evaluated as BUILT-IN column expressions
-        # — no Python boundary at all (r16; an injected scorer still
-        # rides the Arrow path below). Same IEEE op tree as
-        # token_overlap_scorer: p = i/|d|, r = i/|q|,
-        # ((2.0*p)*r)/(p+r), int sizes widened to double by the
-        # divide, so the scores are bit-identical to the pandas form
-        # (and to the registered oracles' DuckDB expression).
-        # Tokenization twin: split on whitespace runs, drop empties,
-        # set()-semantics via array_distinct; NULL payload -> empty
-        # set -> 0.0, matching the scorer's fillna("").
-        # each non-cheap array expression lands in its OWN projection
-        # (CollapseProject keeps multi-use non-cheap exprs separate),
-        # so the token sets and the intersection are each computed
-        # ONCE per row — the score arithmetic below runs on plain
-        # attribute references
-        paired = paired.withColumn(
-            "__qt", _token_set(F.col("__qp"))).withColumn(
-            "__dt", _token_set(F.col("__np")))
-        paired = (paired
-                  .withColumn("__ni", F.size(F.array_intersect(
-                      F.col("__qt"), F.col("__dt"))))
-                  .withColumn("__nq", F.size(F.col("__qt")))
-                  .withColumn("__nd", F.size(F.col("__dt"))))
-        p = F.col("__ni") / F.col("__nd")
-        r = F.col("__ni") / F.col("__nq")
-        score = (F.when((F.col("__nq") == 0) | (F.col("__nd") == 0)
-                        | (F.col("__ni") == 0), F.lit(0.0))
-                 .otherwise(F.lit(2.0) * p * r / (p + r)))
-        scored = paired.withColumn("score", score)
-    else:
-        @F.pandas_udf("double")
-        def cross_score(q: pd.Series, d: pd.Series) -> pd.Series:
-            return scorer(q, d).astype("float64")
-
-        scored = paired.withColumn("score", cross_score("__qp", "__np"))
+    # Token-set F1 as BUILT-IN column expressions: p = i/|d|,
+    # r = i/|q|, ((2.0*p)*r)/(p+r), int sizes widened to double by the
+    # divide — the registered oracles' DuckDB expression, bit for bit.
+    # NULL payload -> empty set -> 0.0. Each non-cheap array expression
+    # lands in its OWN projection (CollapseProject keeps multi-use
+    # non-cheap exprs separate), so the token sets and the intersection
+    # are each computed ONCE per row — the score arithmetic below runs
+    # on plain attribute references.
+    paired = paired.withColumn(
+        "__qt", _token_set(F.col("__qp"))).withColumn(
+        "__dt", _token_set(F.col("__np")))
+    paired = (paired
+              .withColumn("__ni", F.size(F.array_intersect(
+                  F.col("__qt"), F.col("__dt"))))
+              .withColumn("__nq", F.size(F.col("__qt")))
+              .withColumn("__nd", F.size(F.col("__dt"))))
+    p = F.col("__ni") / F.col("__nd")
+    r = F.col("__ni") / F.col("__nq")
+    score = (F.when((F.col("__nq") == 0) | (F.col("__nd") == 0)
+                    | (F.col("__ni") == 0), F.lit(0.0))
+             .otherwise(F.lit(2.0) * p * r / (p + r)))
+    scored = paired.withColumn("score", score)
     if round_digits is not None:
         scored = scored.withColumn("score", F.round("score", round_digits))
     w = Window.partitionBy(query_id).orderBy(F.col("score").desc(),
@@ -171,7 +115,6 @@ def rerank_topk(candidates: DataFrame, queries: DataFrame,
 
 def retrieve_and_rerank(queries: DataFrame, corpus: DataFrame,
                         k: int, m: int,
-                        scorer: Scorer | None = None,
                         id_col: str = "vec_id",
                         vec_col: str = "embedding",
                         text_df: DataFrame | None = None,
@@ -197,6 +140,6 @@ def retrieve_and_rerank(queries: DataFrame, corpus: DataFrame,
                                        id_col=id_col, vec_col=vec_col)
     payloads = text_df if text_df is not None else corpus
     pid = text_id if text_df is not None else id_col
-    return rerank_topk(cand, payloads, payloads, m, scorer=scorer,
+    return rerank_topk(cand, payloads, payloads, m,
                        query_payload=text_col, corpus_payload=text_col,
                        queries_id=pid, corpus_id=pid)

@@ -32,14 +32,13 @@ Mechanics (all JVM-side, no Python in the row path):
   join (bloom filters have no false negatives), which is exactly what
   its oracle checks.
 
-Sizing: ``suggest_bloom_bits`` applies the standard
-``m = -n ln p / (ln 2)^2``, ``k = (m/n) ln 2`` formulas (same
-data-driven-helper pattern as ``relational.suggest_bin_width``).
+Sizing: for ``n`` distinct dim keys at false-positive rate ``p`` the
+standard formulas are ``m = -n ln p / (ln 2)^2`` bits and
+``k = (m/n) ln 2`` hashes; ``bloom_build`` takes at most ``MAX_BITS``.
 """
 
 from __future__ import annotations
 
-import math
 from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame
@@ -48,22 +47,6 @@ from pyspark.sql import functions as F
 # The sketch travels as a plan literal; cap it well below anything that
 # would bloat the plan tree (2^24 bits = 2 MiB of longs).
 MAX_BITS = 1 << 24
-
-
-def suggest_bloom_bits(n_keys: int, fp_rate: float = 0.01
-                       ) -> tuple[int, int]:
-    """(num_bits, num_hashes) for ``n_keys`` distinct keys at
-    ``fp_rate`` — standard bloom sizing, clamped to [64, MAX_BITS]
-    bits (a 100 TB fact side is fine; it's the DISTINCT DIM KEY count
-    that must fit: 1M keys @1% ≈ 1.2 MiB, the ceiling ≈ 14M keys)."""
-    if n_keys <= 0:
-        raise ValueError("n_keys must be positive")
-    if not 0.0 < fp_rate < 1.0:
-        raise ValueError("fp_rate must be in (0, 1)")
-    m = -n_keys * math.log(fp_rate) / (math.log(2) ** 2)
-    m = min(max(64, 64 * math.ceil(m / 64)), MAX_BITS)
-    k = max(1, round(m / n_keys * math.log(2)))
-    return m, k
 
 
 @dataclass(frozen=True)

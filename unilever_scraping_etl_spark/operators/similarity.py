@@ -52,51 +52,21 @@ def brute_force_topk(queries: DataFrame, corpus: DataFrame, k: int,
                   .select("query_id", "neighbor_id", "cos", "rank"))
 
 
-def range_search(queries: DataFrame, corpus: DataFrame, threshold: float,
-                 id_col: str = "vec_id", vec_col: str = "embedding",
-                 round_digits: int = 4) -> DataFrame:
-    """All corpus neighbors with cosine >= threshold per query (range
-    search — the radius companion to top-k; retrieval filters and
-    near-dup audits want "everything this similar", not a fixed k).
-
-    The corpus side is broadcast the same way brute_force_topk does it:
-    queries are the streamed (large-scalable) side, so at 100 TB a
-    billion-row query table still works as a narrow map against a
-    broadcast-able corpus block; for larger corpora compose the same
-    predicate over brute_force_topk_grid's cell layout. The threshold is
-    applied to the ROUNDED score so the result set is stable under
-    float-accumulation-order differences (oracle-comparable)."""
-    # Same hoisted-norm rewrite as brute_force_topk (bit-identical).
-    q = queries.select(F.col(id_col).alias("query_id"),
-                       F.col(vec_col).alias("qv"),
-                       norm(F.col(vec_col)).alias("__qn"))
-    c = corpus.select(F.col(id_col).alias("neighbor_id"),
-                      F.col(vec_col).alias("cv"),
-                      norm(F.col(vec_col)).alias("__cn"))
-    return (q.join(F.broadcast(c), F.col("query_id") != F.col("neighbor_id"))
-             .withColumn("cos", F.round(dot(F.col("qv"), F.col("cv"))
-                                        / (F.col("__qn") * F.col("__cn")),
-                                        round_digits))
-             .filter(F.col("cos") >= threshold)
-             .select("query_id", "neighbor_id", "cos"))
-
-
 def assign_ivf_buckets(emb: DataFrame, nlist: int = 16,
-                       id_col: str = "vec_id", vec_col: str = "embedding",
-                       centroids: DataFrame | None = None) -> tuple[DataFrame, DataFrame]:
-    """Deterministic IVF coarse quantizer. Default centroids = the nlist
-    lowest-id vectors (reproducible); pass ``centroids`` (bucket,
-    centroid) — e.g. from kmeans_centroids — for the trained quantizer;
-    the assignment plumbing is identical. Returns (centroids, corpus
-    with ``bucket``). Assignment broadcasts the centroid table and picks
-    argmax cosine per row — a narrow map over the corpus, no shuffle."""
-    cent = centroids if centroids is not None else (
-        emb.orderBy(id_col).limit(nlist)
-           # global (unpartitioned) window over <= nlist rows by
-           # construction (the limit above) — the WindowExec warning it
-           # logs is benign; this never sees corpus-scale data.
-           .withColumn("bucket", F.row_number().over(Window.orderBy(id_col)) - 1)
-           .select("bucket", F.col(vec_col).alias("centroid")))
+                       id_col: str = "vec_id", vec_col: str = "embedding"
+                       ) -> tuple[DataFrame, DataFrame]:
+    """Deterministic IVF coarse quantizer: the centroids are the nlist
+    lowest-id vectors (reproducible, no training pass). Returns
+    (centroids, corpus with ``bucket``). Assignment broadcasts the
+    centroid table and picks argmax cosine per row — a narrow map over
+    the corpus, no shuffle."""
+    cent = (emb.orderBy(id_col).limit(nlist)
+            # global (unpartitioned) window over <= nlist rows by
+            # construction (the limit above) — the WindowExec warning it
+            # logs is benign; this never sees corpus-scale data.
+            .withColumn("bucket",
+                        F.row_number().over(Window.orderBy(id_col)) - 1)
+            .select("bucket", F.col(vec_col).alias("centroid")))
     # Hoisted-norm cosine (bit-identical, see brute_force_topk): the
     # centroid norms ride the broadcast k-row frame, the row norm is
     # computed once per corpus row instead of once per (row, centroid).
@@ -115,15 +85,12 @@ def assign_ivf_buckets(emb: DataFrame, nlist: int = 16,
 
 def ivf_topk(queries: DataFrame, corpus: DataFrame, k: int, nlist: int = 16,
              nprobe: int = 4, id_col: str = "vec_id",
-             vec_col: str = "embedding",
-             centroids: DataFrame | None = None) -> DataFrame:
+             vec_col: str = "embedding") -> DataFrame:
     """ANN top-k: probe the ``nprobe`` closest IVF buckets per query,
     brute-force inside them. Candidate join is an equi-join on bucket —
     at 100 TB the corpus is bucketed+sorted on this key so the probe is
-    a partition-pruned scan, not a shuffle. Pass ``centroids`` from
-    kmeans_centroids for the trained quantizer."""
-    cent, assigned = assign_ivf_buckets(corpus, nlist, id_col, vec_col,
-                                        centroids)
+    a partition-pruned scan, not a shuffle."""
+    cent, assigned = assign_ivf_buckets(corpus, nlist, id_col, vec_col)
     # Hoisted-norm cosine throughout (bit-identical, see
     # brute_force_topk): query norms are computed once and carried
     # through the probe selection into the candidate scoring.
@@ -152,29 +119,6 @@ def ivf_topk(queries: DataFrame, corpus: DataFrame, k: int, nlist: int = 16,
     return (cand.withColumn("rank", F.row_number().over(w))
                 .filter(F.col("rank") <= k)
                 .select("query_id", "neighbor_id", "cos", "rank"))
-
-
-def hyperplane_bucket(vec_col, n_planes: int = 8, dim: int = 64,
-                      seed: int = 42):
-    """Random-hyperplane LSH bucket id (deterministic: plane weights are
-    a fixed arithmetic pattern keyed by ``seed``, not RNG state)."""
-    bits = []
-    for p in range(n_planes):
-        # Fixed pseudo-weights w_ij = cos(seed + p*dim + j) pattern via
-        # deterministic arithmetic; avoids shipping a weight matrix.
-        proj = F.aggregate(
-            F.zip_with(
-                vec_col,
-                F.sequence(F.lit(0), F.lit(dim - 1)),
-                lambda x, j: x.cast("double")
-                * F.cos((F.lit(float(seed + p * 131)) + j.cast("double") * 0.7)),
-            ),
-            F.lit(0.0), lambda acc, x: acc + x)
-        bits.append(F.when(proj > 0, F.lit(1 << p)).otherwise(F.lit(0)))
-    out = bits[0]
-    for b in bits[1:]:
-        out = out.bitwiseOR(b)
-    return out
 
 
 def adaptive_n_blocks(df: DataFrame, target_block_bytes: int = 64 << 20,
@@ -228,17 +172,16 @@ def hyperplane_band_buckets(n_bands: int, n_planes: int, dim: int = 64,
     """All ``n_bands`` hyperplane-LSH bucket ids in ONE Arrow-batched
     pandas UDF: the (batch x dim) embedding block multiplies a fixed
     (dim x n_bands*n_planes) plane matrix in a single GEMM and the sign
-    bits pack into one int bucket per band. This is the vectorized form
-    of calling :func:`hyperplane_bucket` once per band — identical
-    deterministic pseudo-weights (w[j] for band t, plane p =
+    bits pack into one int bucket per band (bit p set when plane p's
+    projection is positive). The plane weights are deterministic
+    pseudo-weights (w[j] for band t, plane p =
     cos(seed + band_seed_stride*t + 131*p + 0.7*j), no RNG, nothing
-    shipped to executors but the closure) — replacing n_bands*n_planes
-    sequential expression folds per row (~6k array ops at 16x6x64) with
-    one BLAS call per batch. A bucket can differ from the expression
-    form only when a projection sits within float-accumulation noise of
-    zero, which is immaterial for LSH: either side of the hyperplane is
-    a valid bucket, and the exact-cosine verify downstream keeps
-    precision at 1.0 regardless.
+    shipped to executors but the closure), so one BLAS call per batch
+    replaces n_bands*n_planes sequential folds per row. A bucket can
+    differ from a per-row sequential fold only when a projection sits
+    within float-accumulation noise of zero, which is immaterial for
+    LSH: either side of the hyperplane is a valid bucket, and the
+    exact-cosine verify downstream keeps precision at 1.0 regardless.
 
     Returns a pandas UDF usable as ``buckets(F.col(vec_col))`` yielding
     ``array<int>`` of length ``n_bands``."""
@@ -334,27 +277,23 @@ def range_search_grid(queries: DataFrame, corpus: DataFrame,
                       threshold: float, n_blocks: int = 4,
                       id_col: str = "vec_id", vec_col: str = "embedding",
                       round_digits: int = 4) -> DataFrame:
-    """Cosine range search at cluster scale — the thresholded twin of
-    brute_force_topk_grid, closing range_search's broadcast-corpus
-    limit (that form streams queries against a broadcast corpus, so the
-    CORPUS side could never outgrow a broadcast). Here the corpus is
+    """All corpus neighbors whose rounded cosine clears ``threshold``
+    per query (range search — the radius companion to top-k; retrieval
+    filters and near-dup audits want "everything this similar", not a
+    fixed k), at cluster scale: the thresholded twin of
+    brute_force_topk_grid, with no corpus broadcast. The corpus is
     hashed into ``n_blocks`` blocks and queries replicate to every
     block (queries are the small side); each cogroup cell scores its
     block with vectors.cosine_blocks and emits every pair whose
     ROUNDED cosine clears the threshold. Unlike top-k there is no
     global merge at all: the corpus blocks partition the corpus, so
     the union of cell outputs IS the exact answer — no window, no
-    second shuffle. Results equal range_search's for NONZERO vectors
-    at POSITIVE thresholds (same self-exclusion; test-pinned), except
-    on a cosine landing on a shortest-decimal tie, where F.round and
-    the kernel's oracle rule part ways (vectors._round_half_up); the
-    same DuckDB oracle covers both. Degenerate inputs diverge by
-    design (r6 ADVICE): on a zero-norm vector range_search's
-    expression-level cosine divides by zero -> NULL -> row filtered,
-    while this kernel's 1e-300 norm floor scores cos = 0.0, which a
-    threshold <= 0 would admit. The floor is the right scale behavior
-    (a zero embedding is a data bug, not a reason for NULL-sensitive
-    output); the equality pin is scoped accordingly."""
+    second shuffle. Self pairs are excluded. Scores round with the
+    oracle's rule (vectors._round_half_up). A zero-norm vector scores
+    cos = 0.0 under the kernel's 1e-300 norm floor (where a per-pair
+    expression cosine would divide by zero to NULL), which a threshold
+    <= 0 would admit: a zero embedding is a data bug, not a reason for
+    NULL-sensitive output."""
     from pyspark.sql import types as T
 
     spark = queries.sparkSession
@@ -395,62 +334,3 @@ def range_search_grid(queries: DataFrame, corpus: DataFrame,
     return (q.groupby("blk").cogroup(c.groupby("blk"))
             .applyInPandas(cell_range, out_schema))
 
-
-def kmeans_centroids(emb: DataFrame, k: int, n_iter: int = 5,
-                     id_col: str = "vec_id",
-                     vec_col: str = "embedding") -> DataFrame:
-    """Distributed Lloyd's k-means for the IVF coarse quantizer —
-    deterministic: init = the k lowest-id vectors (no RNG), fixed
-    iteration count. Each iteration is one narrow map (assign to the
-    argmin-distance broadcast centroid) plus one shuffle of N rows
-    (groupBy cluster -> numpy mean per group via applyInPandas); the
-    centroid table itself is k rows, the only thing that ever touches
-    the driver. Returns (bucket, centroid) like the first-k quantizer,
-    so it drops into assign_ivf_buckets/ivf_topk unchanged.
-
-    Empty clusters keep their previous centroid (standard Lloyd's
-    fallback), so the output always has exactly k rows."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    spark = emb.sparkSession
-    x = emb.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
-    cent = (x.orderBy("id").limit(k)
-            # global window over <= k rows by construction (the limit
-            # above) — the WindowExec no-partition warning is benign.
-            .withColumn("bucket", F.row_number().over(Window.orderBy("id")) - 1)
-            .select("bucket", F.col("v").alias("centroid")))
-
-    mean_schema = T.StructType([
-        T.StructField("bucket", T.IntegerType()),
-        T.StructField("centroid", T.ArrayType(T.DoubleType())),
-    ])
-
-    def group_mean(pdf):
-        m = np.vstack(pdf["v"].to_numpy()).astype("float64")
-        return pd.DataFrame({"bucket": [int(pdf["bucket"].iloc[0])],
-                             "centroid": [m.mean(axis=0).tolist()]})
-
-    for _ in range(n_iter):
-        # assign: argmin squared euclidean over the broadcast centroids
-        # (narrow map — sq-dist ranks identically to true distance)
-        assigned = (x.join(F.broadcast(cent))
-                    .withColumn("d", F.aggregate(
-                        F.zip_with("v", "centroid",
-                                   lambda a, b: (a.cast("double") - b)
-                                   * (a.cast("double") - b)),
-                        F.lit(0.0), lambda acc, e: acc + e))
-                    .withColumn("rn", F.row_number().over(
-                        Window.partitionBy("id").orderBy("d", "bucket")))
-                    .filter(F.col("rn") == 1)
-                    .select("bucket", "v"))
-        new_cent = (assigned.groupby("bucket")
-                    .applyInPandas(group_mean, mean_schema)
-                    .withColumnRenamed("centroid", "new_centroid"))
-        cent = (cent.join(new_cent, "bucket", "left")
-                .select("bucket",
-                        F.coalesce("new_centroid", "centroid")
-                         .alias("centroid"))
-                .localCheckpoint())
-    return cent

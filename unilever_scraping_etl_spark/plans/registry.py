@@ -71,6 +71,21 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return load_table(spark, sf_dir, name)
 
 
+def _scratch_dir(prefix: str) -> str:
+    """A fresh temporary directory for one call of a fixture query,
+    removed at process exit. It cannot be removed sooner: the frame the
+    query returns is lazy and reads the directory when it runs. Listed
+    in _REGISTRY_HELPERS so each query's certification fingerprint
+    tracks this source."""
+    import atexit
+    import shutil
+    import tempfile
+
+    tmp = tempfile.mkdtemp(prefix=prefix)
+    atexit.register(shutil.rmtree, tmp, ignore_errors=True)
+    return tmp
+
+
 def _spread(df: DataFrame) -> DataFrame:
     """Rebalance a small scan before CPU-heavy narrow maps.
 
@@ -1302,7 +1317,7 @@ SELECT query_id, neighbor_id, cos FROM (
          "replicated to each block, one GEMM + threshold per cell — "
          "no corpus broadcast, no driver collect, and (unlike top-k) "
          "no merge window at all, because the corpus blocks partition "
-         "the output disjointly. Equal to the expression range_search "
+         "the output disjointly. Equal to an exact numpy range search "
          "(test-pinned); thresholding on the rounded score keeps the "
          "result set stable under accumulation-order differences.")
 def sim_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1342,8 +1357,8 @@ FROM s QUALIFY rank <= 5
          "r8 VERDICT item 2) over a FIXED deterministic candidate table: "
          "every 25th document queries its next 16 doc_ids (Qx16 rows by "
          "construction — the bounded two-stage-retrieval shape), the "
-         "default token-set-F1 cross-scorer re-scores each pair in one "
-         "Arrow-batched pandas UDF, and a per-query bounded window keeps "
+         "token-set-F1 cross-scorer re-scores each pair with built-in "
+         "array expressions, and a per-query bounded window keeps "
          "the top 5 (id tiebreak). round_digits=None: the per-row F1 is "
          "the identical IEEE operation tree on both engines "
          "(2*(i/|d|)*(i/|q|) / (i/|d| + i/|q|) from integer set sizes), "
@@ -1371,9 +1386,8 @@ def rerank_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
        "embeddings corpus, stage 2 joins the documents payloads "
        "(vec_id <-> doc_id) and keeps the top m=5 per query by the "
        "token-set-F1 cross-score. The float cosine stage's rounded "
-       "ranking feeds a pandas-UDF scorer — not SQL-expressible as one "
-       "deterministic DuckDB tree, so rows-only (same class as "
-       "sim_ann_ivf).")
+       "ranking is not SQL-expressible as one deterministic DuckDB "
+       "tree, so rows-only (same class as sim_ann_ivf).")
 def retrieve_and_rerank_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _t(spark, sf_dir, "embeddings")
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
@@ -4595,8 +4609,8 @@ FROM scored QUALIFY rank <= 5
          "over-fetches 20 candidates per query (deterministic cut — "
          "rounded score, id tiebreak — so both engines agree on the "
          "candidate SET, not just its order), stage 2 re-scores each "
-         "pair with the token-set-F1 cross-scorer (one Arrow-batched "
-         "pandas UDF over the joined payloads; bit-identical IEEE "
+         "pair with the token-set-F1 cross-scorer (built-in array "
+         "expressions over the joined payloads; bit-identical IEEE "
          "tree, no rounding) and keeps the top 5. The dense twin is "
          "retrieve_and_rerank (cosine stage 1, rows-only); this one "
          "is fully oracle-checked end to end because BOTH stages are "
@@ -4756,16 +4770,12 @@ WHERE text IS NOT NULL
          "(exactly one), then the clean rows must equal the source "
          "table: write → escape → parse → filter is lossless.")
 def jsonl_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import atexit
     import pathlib
-    import shutil
-    import tempfile
 
     docs = (_t(spark, sf_dir, "documents")
             .select("doc_id", "text", "lang", "n_chars")
             .filter(F.col("text").isNotNull()))
-    tmp = tempfile.mkdtemp(prefix="spark_jsonl_")
-    atexit.register(shutil.rmtree, tmp, ignore_errors=True)
+    tmp = _scratch_dir("spark_jsonl_")
     docs.write.mode("overwrite").json(f"{tmp}/corpus")
     # one deliberately corrupt line: the quarantine path must be LIVE
     # in this plan, not just configured
@@ -4807,15 +4817,11 @@ SELECT doc_id, lang, n_chars FROM documents
          "unsplittable; columnar or JSONL carries text at scale), so "
          "this trip certifies the metadata columns.")
 def csv_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import atexit
     import pathlib
-    import shutil
-    import tempfile
 
     docs = _t(spark, sf_dir, "documents").select(
         "doc_id", "lang", "n_chars")
-    tmp = tempfile.mkdtemp(prefix="spark_csv_")
-    atexit.register(shutil.rmtree, tmp, ignore_errors=True)
+    tmp = _scratch_dir("spark_csv_")
     docs.write.mode("overwrite").option("header", True).csv(
         f"{tmp}/corpus")
     (pathlib.Path(tmp) / "corpus" / "part-corrupt.csv").write_text(
@@ -4853,14 +4859,9 @@ GROUP BY lang
          "format parity means the PUSHDOWN machinery works, not just "
          "the bytes.")
 def orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import atexit
-    import shutil
-    import tempfile
-
     docs = _t(spark, sf_dir, "documents").select(
         "doc_id", "lang", "n_chars")
-    tmp = tempfile.mkdtemp(prefix="spark_orc_")
-    atexit.register(shutil.rmtree, tmp, ignore_errors=True)
+    tmp = _scratch_dir("spark_orc_")
     docs.write.mode("overwrite").orc(f"{tmp}/corpus")
     back = spark.read.orc(f"{tmp}/corpus")
     return (back.filter(F.col("n_chars") > 100)
@@ -4885,10 +4886,6 @@ WHERE text IS NOT NULL
          "segments, one task each; intra-file parsing is sequential "
          "by format (Content-Length chaining).")
 def warc_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import atexit
-    import shutil
-    import tempfile
-
     # imported under its own name: the certification dep-scanner
     # detects modules by `warc.<attr>` / `from ... warc import` usage,
     # and an alias would hide this query from warc.py edit evictions
@@ -4896,8 +4893,7 @@ def warc_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = (_t(spark, sf_dir, "documents").select("doc_id", "text")
             .filter(F.col("text").isNotNull()))
-    tmp = tempfile.mkdtemp(prefix="spark_warc_")
-    atexit.register(shutil.rmtree, tmp, ignore_errors=True)
+    tmp = _scratch_dir("spark_warc_")
     warc.fixture_archive(docs, "doc_id", "text", tmp)
     return warc.fixture_docs(warc.read_warc(spark, tmp))
 
@@ -4936,16 +4932,11 @@ UNION ALL SELECT '03_exact_deduped', CAST(count(*) AS BIGINT) FROM s3
          "parses, so stages 00/01 equal the doc count and the trip "
          "must be lossless into 02/03).")
 def archive_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import atexit
-    import shutil
-    import tempfile
-
     from ..sources import warc
 
     docs = (_t(spark, sf_dir, "documents").select("doc_id", "text")
             .filter(F.col("text").isNotNull()))
-    tmp = tempfile.mkdtemp(prefix="spark_archfun_")
-    atexit.register(shutil.rmtree, tmp, ignore_errors=True)
+    tmp = _scratch_dir("spark_archfun_")
     warc.fixture_archive(docs, "doc_id", "text", tmp)
     d = warc.fixture_docs(warc.read_warc(spark, tmp))
     # ONE pass over the archive: the four stage counts are conditional
@@ -4975,17 +4966,12 @@ def _host_fixture_records(spark: SparkSession, sf_dir: str,
     five synchronized edits to keep every oracle's analytic rebuild
     honest. Listed in _REGISTRY_HELPERS so each query's certification
     fingerprint tracks this source."""
-    import atexit
-    import shutil
-    import tempfile
-
     from ..operators import hostgraph
     from ..sources import warc
 
     docs = (_t(spark, sf_dir, "documents")
             .filter(F.col("text").isNotNull()).select("doc_id"))
-    tmp = tempfile.mkdtemp(prefix=prefix)
-    atexit.register(shutil.rmtree, tmp, ignore_errors=True)
+    tmp = _scratch_dir(prefix)
     hostgraph.fixture_linked_archive(docs, "doc_id", tmp)
     return warc.read_warc(spark, tmp).filter(F.col("parse_ok"))
 
@@ -5531,10 +5517,6 @@ FROM f GROUP BY lang
          "carries; the lang join is fixture bookkeeping (a real "
          "archive carries its metadata in-record).")
 def noindex_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import atexit
-    import shutil
-    import tempfile
-
     from ..operators import hostgraph
     from ..sources import warc
 
@@ -5556,8 +5538,7 @@ def noindex_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     page = F.concat(F.lit("<html><head>"), meta,
                     F.lit("</head><body>"), F.col("text"),
                     F.lit("</body></html>"))
-    tmp = tempfile.mkdtemp(prefix="spark_noidx_")
-    atexit.register(shutil.rmtree, tmp, ignore_errors=True)
+    tmp = _scratch_dir("spark_noidx_")
     warc.fixture_archive(docs.select("doc_id",
                                      page.alias("page_html")),
                          "doc_id", "page_html", tmp)
@@ -5650,8 +5631,8 @@ FROM scored QUALIFY rank <= 5
          "query vocabulary broadcast-semi-joins the token stream "
          "before any wide shuffle; deterministic cut via rounded "
          "score + id tiebreak). Stage 2: token-set-F1 cross-scorer "
-         "keeps the top 5 (rerank.rerank_topk — Arrow-batched pandas "
-         "UDF over bounded Q×20 pairs). Oracle: the anchor formula + "
+         "keeps the top 5 (rerank.rerank_topk — built-in array "
+         "expressions over bounded Q×20 pairs). Oracle: the anchor formula + "
          "the proven bm25_rerank CTE chain, hash-checked end to end.")
 def anchor_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     anchors, qdf = _anchor_queries(spark, sf_dir, "spark_anchret_")
@@ -5679,17 +5660,12 @@ def _anchor_queries(spark: SparkSession, sf_dir: str,
     ≤ 64-row anchors frame is localCheckpointed: it feeds multiple
     branches (terms, BM25, rerank payload) and the WARC mapInPandas
     would otherwise re-parse the archive per branch."""
-    import atexit
-    import shutil
-    import tempfile
-
     from ..operators import hostgraph
     from ..sources import warc
 
     ids = (_t(spark, sf_dir, "documents")
            .filter(F.col("text").isNotNull()).select("doc_id"))
-    tmp = tempfile.mkdtemp(prefix=prefix)
-    atexit.register(shutil.rmtree, tmp, ignore_errors=True)
+    tmp = _scratch_dir(prefix)
     hostgraph.fixture_anchor_archive(ids, "doc_id", tmp)
     records = warc.read_warc(spark, tmp).filter(F.col("parse_ok"))
     ank = hostgraph.extract_anchor_texts(records)
@@ -5781,8 +5757,8 @@ FROM pos p JOIN neg n USING (query_id) WHERE p.pr = 1
          "score + id tiebreak; exact-IEEE F1 + id tiebreak), so the "
          "full triple set is hash-checked against the oracle's CTE "
          "chain. Same bounded shapes as anchor_retrieval: queries x "
-         "20 candidates, broadcast payload joins, one Arrow-batched "
-         "pandas UDF for the cross-scorer.")
+         "20 candidates, broadcast payload joins, built-in array "
+         "expressions for the cross-scorer.")
 def anchor_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
     anchors, qdf = _anchor_queries(spark, sf_dir, "spark_anchtri_")
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
@@ -6029,10 +6005,6 @@ FROM base WHERE c_custkey % 10 = 5
          "against plain SQL — stronger than the rows-only check the "
          "runway planned.")
 def stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import atexit
-    import shutil
-    import tempfile
-
     from ..streaming import cdc_stream
 
     base = _t(spark, sf_dir, "customer").select(
@@ -6057,12 +6029,7 @@ def stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("c_name"), F.col("c_nationkey"), F.col("c_acctbal"),
         F.col("c_mktsegment"))
     changes = upd.unionByName(dele).unionByName(ins)
-    # the returned DataFrame reads the committed snapshot from this
-    # directory, so it cannot be removed here; clean at process exit
-    # instead (bench/sim re-invoke this query — without the hook every
-    # run would leak parquet copies of the customer table into /tmp)
-    tmp = tempfile.mkdtemp(prefix="spark_cdc_stream_")
-    atexit.register(shutil.rmtree, tmp, ignore_errors=True)
+    tmp = _scratch_dir("spark_cdc_stream_")
     chg_dir, root, ckpt = f"{tmp}/changes", f"{tmp}/snap", f"{tmp}/ckpt"
     changes.repartition(3).write.parquet(chg_dir)
     cdc_stream.init_snapshot(base, root)
@@ -6182,17 +6149,12 @@ def _host_rank_weighted_oracle() -> str:
        "unweighted — the out-weight sum is attached to the edge list "
        "ONCE up front.")
 def host_rank_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import atexit
-    import shutil
-    import tempfile
-
     from ..operators import hostgraph
     from ..sources import warc
 
     docs = (_t(spark, sf_dir, "documents")
             .filter(F.col("text").isNotNull()).select("doc_id"))
-    tmp = tempfile.mkdtemp(prefix="spark_hrw_")
-    atexit.register(shutil.rmtree, tmp, ignore_errors=True)
+    tmp = _scratch_dir("spark_hrw_")
     hostgraph.fixture_weighted_archive(docs, "doc_id", tmp)
     records = warc.read_warc(spark, tmp).filter(F.col("parse_ok"))
     links = hostgraph.extract_link_hosts(records)
@@ -6283,17 +6245,12 @@ edges AS (SELECT DISTINCT src, dst FROM raw WHERE src <> dst)"""
        "~9k-rule broadcast, then the rank iterations run over eTLD+1 "
        "nodes — strictly smaller than the host graph.")
 def domain_authority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import atexit
-    import shutil
-    import tempfile
-
     from ..operators import hostgraph
     from ..sources import warc
 
     docs = (_t(spark, sf_dir, "documents")
             .filter(F.col("text").isNotNull()).select("doc_id"))
-    tmp = tempfile.mkdtemp(prefix="spark_domauth_")
-    atexit.register(shutil.rmtree, tmp, ignore_errors=True)
+    tmp = _scratch_dir("spark_domauth_")
     hostgraph.fixture_subhost_archive(docs, "doc_id", tmp)
     records = warc.read_warc(spark, tmp).filter(F.col("parse_ok"))
     hedges = hostgraph.host_link_graph(records)
@@ -6448,17 +6405,12 @@ def _host_hits_weighted_oracle() -> str:
        "host_hits' exactly — the weight rides the cached edge list, "
        "one gated score join + partial-agg sum per half-step.")
 def host_hits_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import atexit
-    import shutil
-    import tempfile
-
     from ..operators import hostgraph
     from ..sources import warc
 
     docs = (_t(spark, sf_dir, "documents")
             .filter(F.col("text").isNotNull()).select("doc_id"))
-    tmp = tempfile.mkdtemp(prefix="spark_hhw_")
-    atexit.register(shutil.rmtree, tmp, ignore_errors=True)
+    tmp = _scratch_dir("spark_hhw_")
     hostgraph.fixture_weighted_archive(docs, "doc_id", tmp)
     records = warc.read_warc(spark, tmp).filter(F.col("parse_ok"))
     links = hostgraph.extract_link_hosts(records)
@@ -6990,9 +6942,12 @@ def _deps_of(src: str, mods: dict[str, str]) -> set[str]:
     return out
 
 
+# _scratch_dir comes last: the loop in _fingerprint appends each named
+# helper's source as it goes, so a query reaches _scratch_dir through
+# _host_fixture_records or _anchor_queries as well as directly.
 _REGISTRY_HELPERS = ("_spread", "_parse_bytes",
                      "_host_fixture_records", "_host_edges",
-                     "_anchor_queries")
+                     "_anchor_queries", "_scratch_dir")
 
 # Module sources are immutable within a process, and _ordered()/
 # _cert_round() fingerprint every query several times per listing —

@@ -255,8 +255,19 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     ``l_shipdate``) stay TIMESTAMP_NTZ."""
     if name == "events":
         from pyspark.sql import functions as F
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = read_parquet(spark, f"{sf_dir}/{name}.parquet")
+        # nanosAsLong only decides the inferred schema: the frame reads
+        # fine after the conf is restored, so it must not outlive this
+        # read and turn the session's other NANOS columns into bigint.
+        key = "spark.sql.legacy.parquet.nanosAsLong"
+        prior = spark.conf.get(key, None)
+        spark.conf.set(key, "true")
+        try:
+            df = read_parquet(spark, f"{sf_dir}/{name}.parquet")
+        finally:
+            if prior is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, prior)
         if dict(df.dtypes).get("ts") == "bigint":
             # NANOS generation, read as raw nanos: truncate to µs.
             df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
@@ -269,6 +280,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         return df
     return read_parquet(spark, f"{sf_dir}/{name}.parquet")
 
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TEST_TABLES}

@@ -173,13 +173,6 @@ class HttpFetcher:
         return FetchResult(url, status, html, self._name or "http")
 
 
-def http_fetcher(timeout: float = 10.0) -> Fetcher:
-    """Back-compat functional form of :class:`HttpFetcher` (no retries,
-    kept for callers that want the reference's exact single-shot
-    behavior, scrap_tokopedia.py:108-114)."""
-    return HttpFetcher(timeout=timeout, max_retries=0)
-
-
 #: Minimal browser-driver surface BrowserFetcher needs. Selenium's
 #: WebDriver satisfies it; tests inject a scripted fake — no selenium,
 #: no browser, no network ever runs in-sandbox.

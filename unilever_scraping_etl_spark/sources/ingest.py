@@ -208,35 +208,6 @@ def write_clustered(df: DataFrame, path: str, cluster_by: list[str],
        .write.mode("overwrite").parquet(path))
 
 
-def write_bucketed(df: DataFrame, table: str, bucket_cols: list[str],
-                   n_buckets: int, sort_cols: list[str] | None = None,
-                   path: str | None = None) -> None:
-    """Bucketed parquet table: pre-shuffles ONCE at write time into
-    ``n_buckets`` hash buckets on ``bucket_cols`` (optionally sorted
-    within each bucket), so every later equi-join or aggregation on
-    those columns reads the distribution off disk instead of
-    re-exchanging 100 TB per query — Spark plans co-bucketed
-    SortMergeJoins with ZERO Exchange on either side (plan-pinned in
-    tests), and with ``sort_cols`` the per-bucket sort drops too.
-
-    This is the write-time half of the snapshot store's scale story
-    (write_snapshot partitions by date for PRUNING; bucketing
-    distributes by KEY for co-location — they compose). Bucketing
-    metadata lives in the session catalog, so the sink is
-    ``saveAsTable`` (a bare path write has nowhere to record bucket
-    counts); pass ``path`` for an external table location. Both join
-    sides must use the same n_buckets (or a multiple, with
-    spark.sql.bucketing.coalesceBucketsInJoin.enabled) for the
-    exchange-free plan."""
-    w = (df.write.mode("overwrite").format("parquet")
-         .bucketBy(n_buckets, *bucket_cols))
-    if sort_cols:
-        w = w.sortBy(*sort_cols)
-    if path is not None:
-        w = w.option("path", path)
-    w.saveAsTable(table)
-
-
 def with_zorder(df: DataFrame, cols: list[str], bits: int = 16,
                 out_col: str = "zorder") -> DataFrame:
     """Append a Z-order (Morton) key: each column linearly scales to a

@@ -41,22 +41,6 @@ DECODED_IMAGE_SCHEMA = T.StructType([
 ])
 
 
-def read_binary_dir(spark, path: str) -> DataFrame:
-    """Directory of media files -> MEDIA_SCHEMA frame via Spark's
-    binaryFile source (path/length/content columns, pruning-friendly)."""
-    raw = spark.read.format("binaryFile").load(path)
-    return raw.select(
-        F.xxhash64("path").alias("media_id"),
-        F.lit("image").alias("kind"),
-        F.col("content").alias("payload"),
-        F.struct(
-            F.lit("application/octet-stream").alias("content_type"),
-            F.col("length").alias("n_bytes"),
-            F.col("path").alias("source_uri"),
-        ).alias("meta"),
-    )
-
-
 def _fake_decode(payload: bytes | None) -> tuple[int, int, int, list[float]]:
     # STUB: deterministic fake "decode" — dimensions and an 8-dim feature
     # derived purely from payload bytes. Replace with PIL/libav decode in
@@ -76,16 +60,6 @@ def _fake_decode(payload: bytes | None) -> tuple[int, int, int, list[float]]:
 ARROW_BATCH_CONF = "spark.sql.execution.arrow.maxRecordsPerBatch"
 
 
-def cap_arrow_batches(spark, max_records: int = 256):
-    """Session-build helper: cap Arrow input batches for payload-heavy
-    pipelines. With multi-MB binary payloads the 10k-row default means
-    multi-GB Arrow batches per task; call this right after building the
-    session (before any plan executes) so every mapInPandas in the
-    session sees bounded batches. Returns the session for chaining."""
-    spark.conf.set(ARROW_BATCH_CONF, str(max_records))
-    return spark
-
-
 def decode_images(media: DataFrame, strict: bool = False,
                   batch_rows: int = 64,
                   warn_input_batch_rows: int = 4096) -> DataFrame:
@@ -102,9 +76,10 @@ def decode_images(media: DataFrame, strict: bool = False,
     transformation either leaks the setting into the whole session or
     restores it before execution reads it. Callers feeding multi-MB
     payloads should cap that conf at session-build time
-    (:func:`cap_arrow_batches`); if the session value exceeds
-    ``warn_input_batch_rows`` a warning fires here so the risk is
-    surfaced where the payload source is built, not just documented."""
+    (``spark.conf.set(ARROW_BATCH_CONF, "256")``); if the session value
+    exceeds ``warn_input_batch_rows`` a warning fires here so the risk
+    is surfaced where the payload source is built, not just
+    documented."""
     try:
         conf_rows = int(media.sparkSession.conf.get(ARROW_BATCH_CONF))
     except Exception:
@@ -115,7 +90,8 @@ def decode_images(media: DataFrame, strict: bool = False,
             f"decode_images: {ARROW_BATCH_CONF}={conf_rows} exceeds "
             f"{warn_input_batch_rows}; with multi-MB payloads each Arrow "
             f"input batch can reach GBs per task. Cap it at session build "
-            f"time with cap_arrow_batches(spark).", ResourceWarning,
+            f"time, e.g. spark.conf.set({ARROW_BATCH_CONF!r}, '256').",
+            ResourceWarning,
             stacklevel=2)
 
     def run(batches):

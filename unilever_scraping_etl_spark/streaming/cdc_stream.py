@@ -65,27 +65,6 @@ def read_snapshot(spark: SparkSession, snapshot_root: str,
     return read_parquet(spark, f"{snapshot_root}/v={v}")
 
 
-def vacuum_versions(snapshot_root: str, keep_last: int = 2) -> list[int]:
-    """Delete all but the newest ``keep_last`` committed versions
-    (never the pointer's target). Returns the removed version numbers.
-    Retention is the time-travel horizon: a vacuumed version is gone
-    for readers, exactly like VACUUM on a transactional table."""
-    if keep_last < 1:
-        raise ValueError("keep_last must be >= 1")
-    import shutil
-    latest = latest_version(snapshot_root)
-    if latest is None:
-        return []
-    root = pathlib.Path(snapshot_root)
-    versions = sorted(int(p.name[2:]) for p in root.glob("v=*")
-                      if p.is_dir())
-    drop = [v for v in versions if v <= latest][:-keep_last]
-    drop = [v for v in drop if v != latest]
-    for v in drop:
-        shutil.rmtree(root / f"v={v}")
-    return drop
-
-
 def init_snapshot(df: DataFrame, snapshot_root: str) -> None:
     """Write version 0 and commit the pointer."""
     root = pathlib.Path(snapshot_root)

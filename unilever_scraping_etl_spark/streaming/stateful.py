@@ -93,16 +93,16 @@ def sessionize_closed(events: DataFrame, gap_sec: int = 1800,
                       key_col: str = "user_id", ts_col: str = "ts",
                       value_col: str = "value",
                       order_col: str = "event_id") -> DataFrame:
-    """Gap-close streaming sessionizer via ``applyInPandasWithState`` —
-    the in-container twin of ``streaming_sessionize``: same semantics,
-    but on the GroupState API, which needs no protobuf, so it runs (and
-    is asserted end-to-end) in this sandbox. One fixed-width open-session
-    row per key in the state store; an event more than ``gap_sec`` past
-    the key's last event CLOSES the open session and emits it. Sessions
-    still open when input ends stay in state, so with an availableNow
-    harness the emitted set is exactly the batch plan's non-final
-    sessions per key — which is what the batch fallback below returns
-    (unified model, oracle-checkable).
+    """Gap-close streaming sessionizer via ``applyInPandasWithState``,
+    the streaming twin of the batch ``sessionize_events`` plan. The
+    GroupState API needs no protobuf (Spark's newer
+    ``transformWithStateInPandas`` does), so it runs here. One
+    fixed-width open-session row per key in the state store; an event
+    more than ``gap_sec`` past the key's last event CLOSES the open
+    session and emits it. Sessions still open when input ends stay in
+    state, so with an availableNow harness the emitted set is exactly
+    the batch plan's non-final sessions per key — which is what the
+    batch fallback below returns (unified model, oracle-checkable).
 
     Scale posture: state is hash-partitioned by key across executors and
     bounded at one row per distinct key; per-batch work is Arrow-batched
@@ -188,22 +188,6 @@ def sessionize_closed(events: DataFrame, gap_sec: int = 1800,
                                     GroupStateTimeout.NoTimeout))
 
 
-def transform_with_state_available(raise_: bool = False) -> bool:
-    """Whether Spark's transformWithStateInPandas can run here: its
-    state-server protocol imports google.protobuf at the Python driver
-    worker, which is not a pyspark install dependency."""
-    try:
-        import google.protobuf  # noqa: F401  (runtime capability probe)
-        return True
-    except ImportError:
-        if raise_:
-            raise ImportError(
-                "transformWithStateInPandas needs the 'protobuf' package "
-                "(Spark's Python state-server protocol); install protobuf "
-                "or use applyInPandasWithState operators instead")
-        return False
-
-
 SESSION_OUTPUT_SCHEMA = T.StructType([
     T.StructField("user_id", T.LongType()),
     T.StructField("session_start_sec", T.LongType()),
@@ -212,85 +196,3 @@ SESSION_OUTPUT_SCHEMA = T.StructType([
     T.StructField("session_value", T.DoubleType()),
 ])
 
-
-def streaming_sessionize(events: DataFrame, gap_sec: int = 1800,
-                         key_col: str = "user_id", ts_col: str = "ts",
-                         value_col: str = "value") -> DataFrame:
-    """True streaming sessionization via ``transformWithStateInPandas``
-    (Spark 4's StatefulProcessor API) — the streaming twin of the batch
-    ``sessionize_events`` plan: one open-session accumulator per user in
-    the state store; an event further than ``gap_sec`` from the last one
-    CLOSES the open session (emitting it) and opens a new one. Sessions
-    still open when input ends stay in state — in production an
-    event-time timer registered at ``last_ts + gap`` would flush them as
-    the watermark passes; with an availableNow test harness the closed
-    set is the assertable surface (tests compare it against the batch
-    plan's non-final sessions per user).
-
-    State is one fixed-width row per key (same bound as
-    ``running_user_totals``); the value accumulator is integer micros
-    (floor(value*1e6)), so streaming totals equal the batch plan's
-    exactly. Requires the RocksDB state store provider (the
-    transformWithState backend) AND the ``protobuf`` package — Spark's
-    Python<->JVM state protocol for this API is protobuf-encoded. This
-    container ships pyspark without protobuf, so the operator raises
-    ``ImportError`` at build time here (see
-    ``transform_with_state_available()``); the construction below is the
-    real production API, not a stub.
-    """
-    transform_with_state_available(raise_=True)
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor, StatefulProcessorHandle)
-
-    state_schema = T.StructType([
-        T.StructField("start_sec", T.LongType()),
-        T.StructField("last_sec", T.LongType()),
-        T.StructField("n", T.LongType()),
-        T.StructField("v_micros", T.LongType()),
-    ])
-
-    class Sessionizer(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._open = handle.getValueState("open_session", state_schema)
-
-        def handleInputRows(self, key, rows, timerValues):
-            pdfs = [pdf for pdf in rows if not pdf.empty]
-            if not pdfs:
-                return
-            pdf = pd.concat(pdfs).sort_values([ts_col])
-            # tz-aware and tz-naive ts both normalize to epoch seconds
-            secs = (pd.to_datetime(pdf[ts_col], utc=True)
-                    .astype("int64") // 1_000_000_000).to_numpy()
-            # NULL values arrive as NaN: np.floor(NaN).astype(int64)
-            # silently yields INT64_MIN, corrupting the session total —
-            # treat them as 0 contribution like the batch F.sum does.
-            raw = pdf[value_col].to_numpy(dtype="float64")
-            vals = np.where(np.isnan(raw), 0.0,
-                            np.floor(raw * 1000000.0)).astype("int64")
-            if self._open.exists():
-                start, last, n, v = self._open.get()
-            else:
-                start, last, n, v = None, None, 0, 0
-            closed = []
-            for sec, v_mu in zip(secs.tolist(), vals.tolist()):
-                if start is None:
-                    start, last, n, v = sec, sec, 1, v_mu
-                elif sec - last > gap_sec:
-                    closed.append((key[0], start, n, last - start,
-                                   v / 1000000.0))
-                    start, last, n, v = sec, sec, 1, v_mu
-                else:
-                    last, n, v = sec, n + 1, v + v_mu
-            self._open.update((start, last, n, v))
-            if closed:
-                yield pd.DataFrame(
-                    closed, columns=[c.name for c in SESSION_OUTPUT_SCHEMA])
-
-        def close(self) -> None:
-            pass
-
-    return (events.select(key_col, ts_col, value_col)
-            .groupBy(key_col)
-            .transformWithStateInPandas(Sessionizer(),
-                                        SESSION_OUTPUT_SCHEMA,
-                                        "append", "none"))
